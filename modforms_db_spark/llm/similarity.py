@@ -23,9 +23,12 @@ from __future__ import annotations
 
 import os
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from modforms_db_spark import session
 from modforms_db_spark.io import load, spread
 from modforms_db_spark.oracle_dialect import R, R4
 from modforms_db_spark.parity import r4
@@ -241,8 +244,11 @@ def ivf_cell_cs(e: DataFrame, c: DataFrame) -> DataFrame:
     scored against every centroid of ``c`` by rounded cosine, via one
     broadcast nested-loop join. The embedding payload is dropped
     immediately — whatever ranks or groups this frame downstream moves
-    3 scalar columns, never a vector."""
-    cs = F.round(_dot("emb", "cemb") / (F.col("nrm") * F.col("cnrm")), 4)
+    3 scalar columns, never a vector. A zero-norm vector or centroid
+    scores NULL (cosine is undefined), also under ANSI mode."""
+    cs = F.round(
+        F.try_divide(_dot("emb", "cemb"), F.col("nrm") * F.col("cnrm")), 4
+    )
     return e.crossJoin(F.broadcast(c)).select("vec_id", "cid", cs.alias("cs"))
 
 
@@ -378,11 +384,16 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _cell_cs(cell: Column) -> Column:
         # Identical arithmetic to ivf_cell_cs: the rounded cosine fold.
         return F.round(
-            _dot(F.col("emb"), cell["cemb"]) / (F.col("nrm") * cell["cnrm"]),
+            F.try_divide(
+                _dot(F.col("emb"), cell["cemb"]), F.col("nrm") * cell["cnrm"]
+            ),
             4,
         )
 
-    eq = e.where(F.col("vec_id") < 20)
+    # Cosine is undefined for a zero-norm query: it has no neighbors to
+    # rank, so it is excluded here rather than dropped silently by the
+    # probe explode below (every cell score would be NULL).
+    eq = e.where((F.col("vec_id") < 20) & (F.col("nrm") > 0))
     probe = eq.crossJoin(F.broadcast(packed)).select(
         F.col("vec_id").alias("q_id"),
         F.col("emb").alias("q_emb"),
@@ -390,15 +401,14 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(
             F.transform(
                 F.slice(
-                    # Null-score guard (ADVICE r10): a zero-norm centroid
-                    # or query makes cs NULL; array_sort compares a null
-                    # struct field as SMALLEST, so a null-score cell
-                    # would sort FIRST and enter the probe set, whereas
-                    # the old window form (orderBy desc(cs)) put NULLs
-                    # last. Dropping null-score cells before the sort
-                    # restores that ordering contract; with the shipped
-                    # data (no zero-norm embeddings) the filter is an
-                    # identity and the result is bit-identical.
+                    # Null-score guard: a zero-norm centroid makes cs
+                    # NULL; array_sort compares a null struct field as
+                    # SMALLEST, so a null-score cell would sort FIRST
+                    # and enter the probe set, whereas the old window
+                    # form (orderBy desc(cs)) put NULLs last. Dropping
+                    # null-score cells before the sort restores that
+                    # ordering contract; with the shipped data (no
+                    # zero-norm embeddings) the filter is an identity.
                     F.array_sort(
                         F.filter(
                             F.transform(
@@ -422,7 +432,7 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id") != F.col("q_id")
     )
     cos4 = F.round(
-        _dot("q_emb", "emb") / (F.col("q_nrm") * F.col("nrm")), 4
+        F.try_divide(_dot("q_emb", "emb"), F.col("q_nrm") * F.col("nrm")), 4
     ).alias("cos4")
     scored = cand.select("q_id", F.col("vec_id").alias("nb_id"), cos4)
     w = Window.partitionBy("q_id").orderBy(F.desc("cos4"), F.asc("nb_id"))
@@ -941,48 +951,109 @@ def kmeans_assign(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
     )
 
 
+# Driver bytes per collected quantized vector: vec_id plus up to 1024
+# bigint dims, held about three times over by `_kmeans_fit_driver`.
+_KMEANS_ROW_BYTES = 32 * 1024
+
+
+def _kmeans_fit_driver(qv: pa.Table, k: int, iters: int) -> pa.Table | None:
+    """`kmeans_fit`'s integer-exact Lloyd rounds over the collected
+    quantized (vec_id, qe) table, as a (vec_id, cluster, d2q6) table.
+    Same rules as the Spark form: init = the k lowest vec_ids numbered
+    1..k, ties go to the lower cluster id, a cluster that loses every
+    member drops out of later rounds, and centroids are sums divided
+    with truncation toward zero (Spark ``div``). Memory is O(rows ×
+    dims): one loop over the centroids, never an n×k×dims array.
+
+    None for the degenerate inputs whose Spark semantics ride on nulls
+    and empty arrays — no vectors, null ids or cells, ragged or
+    zero-length vectors, k < 1, iters < 1 — which stay with the
+    distributed form."""
+    ids = qv.column("vec_id")
+    qe = qv.column("qe").combine_chunks()
+    cells = qe.flatten()
+    n = len(qe)
+    if k < 1 or iters < 1 or not n or ids.null_count or qe.null_count:
+        return None
+    lengths = qe.value_lengths().to_numpy()
+    if cells.null_count or not lengths[0] or (lengths != lengths[0]).any():
+        return None
+    x = cells.to_numpy().reshape(n, lengths[0])
+    cids = np.arange(1, min(k, n) + 1, dtype=np.int32)
+    cents = x[np.argsort(ids.to_numpy(), kind="stable")[: len(cids)]]
+    for r in range(iters):
+        if r:
+            cids = np.unique(cluster)
+            sums = np.stack([x[cluster == c].sum(axis=0) for c in cids])
+            cnt = np.bincount(cluster)[cids][:, None]
+            cents = np.sign(sums) * (np.abs(sums) // cnt)
+        d2q6 = np.full(n, np.iinfo(np.int64).max)
+        cluster = np.zeros(n, np.int32)
+        for c, cent in zip(cids, cents):
+            diff = x - cent
+            d = np.einsum("ij,ij->i", diff, diff)
+            # Ascending ids with a strict < keep the lower id on ties.
+            better = d < d2q6
+            d2q6[better] = d[better]
+            cluster[better] = c
+    return pa.table(
+        {
+            "vec_id": ids,
+            "cluster": pa.array(cluster, pa.int32()),
+            "d2q6": pa.array(d2q6, pa.int64()),
+        }
+    )
+
+
 def kmeans_fit(vecs: DataFrame, k: int, iters: int) -> DataFrame:
-    """Lloyd's k-means, deterministic AND integer-exact (r7 upgrade —
-    unlocked the SQL oracle on `q_cluster_kmeans`): embeddings quantize
-    once to the ×1000 integer grid (the `q_pca_power` device, Spark-round
-    parity via oracle_dialect.R), centroid updates are exact integer
-    truncating division (Spark ``div`` ≡ DuckDB ``//``, verified both
+    """Lloyd's k-means, deterministic AND integer-exact: embeddings
+    quantize once to the ×1000 integer grid (the `q_pca_power` device,
+    Spark-round parity via oracle_dialect.R), centroid updates are exact
+    integer truncating division (Spark ``div`` ≡ DuckDB ``//``, both
     truncate toward zero), and every argmin compares exact bigints with
-    a cluster-id tiebreak — so 3 chained rounds reproduce bit-for-bit on
+    a cluster-id tiebreak — so chained rounds reproduce bit-for-bit on
     any engine, which fp argmin chains cannot. Init = quantized
     embeddings of the k lowest vec_ids. Returns (vec_id, cluster, d2q6)
     with d2q6 in squared-grid units (10⁻⁶ of embedding units²).
 
-    Scale shape per iteration (r9 rewrite, measured 2.08 → 1.47 s
-    min-of-3 at sf0.1, bit-identical at 3 SFs): assignment is a 1-row
-    broadcast crossJoin + projection (`_kmeans_assign_packed` — the
-    vector side NEVER shuffles); the centroid update is one
-    posexplode → (cluster, dim) partial-agg integer-sum shuffle fused
-    straight into a global 1-row collect_list, and the per-cluster
-    array regroup is a pure expression over those ≤ k·dims structs —
-    so a round is exactly TWO shuffle boundaries (both over ≤ k·dims
-    rows after map-side combine) and zero k-row intermediates. Exact
-    integer centroid on the grid: truncating div (matches DuckDB // —
-    both toward zero; off the fp mean by < 1 grid unit, which the
-    oracle reproduces exactly). State is k·dims bigints per round —
-    O(model), not O(data) — and the whole fit is ONE action with a
-    linearly growing plan (no per-round checkpoint: measured faster
-    than checkpointing at iters=3; bound plan depth with a checkpoint
-    every ~8 rounds if iters grows).
+    Sketch-then-exact: quantization always runs in Spark. When the
+    quantized (vec_id, qe) frame fits the driver budget
+    (`session.driver_row_budget`), one collect and numpy rounds
+    (`_kmeans_fit_driver`) finish the fit; above it the rounds run on
+    the cluster. Both forms apply the same integer rules, so the
+    assignment is identical at any budget; budget 0 is the purely
+    distributed form.
 
-    Measured-dead levers (r9 probes, don't re-try without new data):
-    driver-side per-round centroid collect (2.7 s — round-trip job
-    scheduling dominates), literal centroid arrays baked into the plan
-    (4.6 s — every run recompiles the generated code; column-generic
-    expressions hit the codegen cache), early-convergence stop
-    (centroids never stabilize within 6 rounds at sf0.01 OR sf0.1, so
-    the check is pure overhead on this data)."""
+    Distributed round: assignment is a 1-row broadcast crossJoin +
+    projection (`_kmeans_assign_packed` — the vector side NEVER
+    shuffles); the centroid update is one posexplode → (cluster, dim)
+    partial-agg integer-sum shuffle fused straight into a global 1-row
+    collect_list, and the per-cluster array regroup is a pure expression
+    over those ≤ k·dims structs — so a round is exactly TWO shuffle
+    boundaries (both over ≤ k·dims rows after map-side combine) and zero
+    k-row intermediates. State is k·dims bigints per round — O(model),
+    not O(data) — and the whole fit is ONE action with a linearly
+    growing plan (no per-round checkpoint; bound plan depth with a
+    checkpoint every ~8 rounds if iters grows). Literal centroid arrays
+    baked into the plan were measured slower (every run recompiles the
+    generated code; column-generic expressions hit the codegen cache),
+    and an early-convergence stop is pure overhead here (centroids never
+    stabilize within 6 rounds on the shipped data)."""
+    spark = vecs.sparkSession
     qv = vecs.select(
         "vec_id",
         F.transform(
             "emb", lambda x: F.round(x.cast("double") * 1000, 0).cast("bigint")
         ).alias("qe"),
     ).localCheckpoint(eager=False)  # quantize once; reused every round
+    # The collect attempt fills the checkpoint, so the rounds below do
+    # not quantize again when it does not fit.
+    tbl = session.collect_within_budget(
+        qv, session.driver_row_budget(spark, _KMEANS_ROW_BYTES)
+    )
+    fitted = None if tbl is None else _kmeans_fit_driver(tbl, k, iters)
+    if fitted is not None:
+        return spark.createDataFrame(fitted)
     packed = _pack_centroids(
         qv.orderBy("vec_id")
         .limit(k)

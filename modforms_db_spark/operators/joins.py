@@ -937,8 +937,9 @@ def q_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (round-3 ADVICE item 2; termination pinned by a test).
 
     Scale: pair generation is the blocked join (block-selectivity
-    bound); clustering is O(log n) star rounds over the PAIR graph —
-    orders of magnitude smaller than either table. The compose-don't-
+    bound); clustering runs over the PAIR graph — orders of magnitude
+    smaller than either table — as one collect and a driver union-find
+    when it fits the driver, else O(log n) star rounds. The compose-don't-
     materialize shape is the point: no intermediate table lands
     between match and cluster."""
     prep(spark)

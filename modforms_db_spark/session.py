@@ -9,13 +9,22 @@ Two distinct paths:
   DRIVER owns the session there (__spark_entry__.py contract). Only touches
   runtime-settable confs that correctness depends on (timezone; Arrow for the
   pandas-UDF operators). Never assumes our factory ran.
+
+:func:`collect_within_budget` with :func:`driver_row_budget` is the
+sketch-then-exact switch of the iterative index builds: a frame that fits
+the driver is finished there in one collect instead of a Spark job per
+round.
 """
 
 from __future__ import annotations
 
 import os
+from typing import TYPE_CHECKING
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+
+if TYPE_CHECKING:
+    import pyarrow as pa
 
 
 def get_spark(app_name: str = "modforms-db-spark") -> SparkSession:
@@ -34,6 +43,28 @@ def get_spark(app_name: str = "modforms-db-spark") -> SparkSession:
         .getOrCreate()
     )
     return spark
+
+
+# A driver-side finish may fill this share of the driver JVM's max heap
+# with collected rows; the rest stays with the engine.
+_DRIVER_HEAP_SHARE = 16
+
+
+def driver_row_budget(spark: SparkSession, row_bytes: int) -> int:
+    """Rows of about ``row_bytes`` each that a driver-side finish may
+    collect: 1/16 of the driver's measured max heap
+    (``Runtime.maxMemory()``), so the threshold scales with the driver
+    the session actually has instead of a tuned constant."""
+    heap = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
+    return int(heap) // (_DRIVER_HEAP_SHARE * row_bytes)
+
+
+def collect_within_budget(df: DataFrame, budget: int) -> pa.Table | None:
+    """``df`` as a ``pyarrow.Table`` if it has at most ``budget`` rows,
+    else None. One ``limit(budget + 1).toArrow()`` job either way, so
+    ``budget=0`` is an emptiness test that returns an empty table."""
+    tbl = df.limit(budget + 1).toArrow()
+    return tbl if tbl.num_rows <= budget else None
 
 
 def prep(spark: SparkSession) -> SparkSession:

@@ -63,6 +63,32 @@ def test_ivf_recall(spark):
     assert _topk_recall(spark, "q_sim_ivf_topk") >= 0.7
 
 
+def test_ivf_excludes_zero_norm_query(spark, tmp_path):
+    """Cosine is undefined for a zero-norm vector, so q_sim_ivf_topk
+    leaves such a query out explicitly; every other query keeps its full
+    top-5. Vec 0 is zeroed in a copy of the embeddings table (it is also
+    a seed centroid, so its cell must not break the other probes)."""
+    import os
+
+    from pyspark.sql import functions as F
+
+    e = spark.read.parquet(os.path.join(SF_DIR, "embeddings.parquet"))
+    assert e.where(F.col("vec_id") == 0).count() == 1
+    e.withColumn(
+        "embedding",
+        F.when(
+            F.col("vec_id") == 0, F.transform("embedding", lambda x: x - x)
+        ).otherwise(F.col("embedding")),
+    ).write.parquet(str(tmp_path / "embeddings.parquet"))
+
+    rows = get_registry()["q_sim_ivf_topk"].builder(spark, str(tmp_path)).collect()
+    per_q: dict[int, int] = {}
+    for r in rows:
+        per_q[r.q_id] = per_q.get(r.q_id, 0) + 1
+    assert 0 not in per_q, per_q
+    assert per_q == {q: 5 for q in range(1, 20)}, per_q
+
+
 def test_ann_lsh_recall(spark):
     """Random-hyperplane LSH (16 bits, 4 bands x 4) top-k recall.
 
@@ -295,11 +321,13 @@ def test_pack_sequences_sharded_parallelism(spark):
         assert r.b0 == r.shard_id * _PACK_SHARD_DOCS, r
 
 
-def test_components_star_converges_in_olog_rounds(spark):
+def test_components_star_converges_in_olog_rounds(spark, monkeypatch):
     """Large-star/small-star must label a diameter-63 path graph in
     O(log n) alternations (min-label propagation would need ~63 rounds —
     the VERDICT r1 scale guard), and must agree exactly with the
-    label-propagation baseline on the real near-dup graph."""
+    label-propagation baseline on the real near-dup graph. Budget 0
+    keeps every round on the cluster."""
+    from modforms_db_spark import session
     from modforms_db_spark.io import load
     from modforms_db_spark.llm.dedup import (
         _distinct_tokens,
@@ -308,6 +336,7 @@ def test_components_star_converges_in_olog_rounds(spark):
         jaccard_pairs,
     )
 
+    monkeypatch.setattr(session, "driver_row_budget", lambda *a: 0)
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "d1 long, d2 long"
     )
@@ -326,15 +355,46 @@ def test_components_star_converges_in_olog_rounds(spark):
     assert got == want
 
 
-def test_kmeans_deterministic_total_and_descending(spark):
+def test_components_driver_finish_boundary(spark, monkeypatch):
+    """The driver finish applies exactly at or below the budget: a
+    64-node path graph (63 edges) finishes on the driver with no star
+    round at budget 63, and at budget 62 runs the star rounds on the
+    cluster. Same labels both ways."""
+    from modforms_db_spark import session
+    from modforms_db_spark.llm.dedup import connected_components
+
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "d1 long, d2 long"
+    )
+    want = {(i, 0) for i in range(64)}
+    for budget, on_cluster in ((63, False), (62, True)):
+        monkeypatch.setattr(session, "driver_row_budget", lambda *a: budget)
+        labels, rounds = connected_components(path)
+        assert {(r.doc_id, r.component) for r in labels.collect()} == want
+        assert (rounds >= 1) == on_cluster, (budget, rounds)
+
+
+def _kmeans_both_finishes(monkeypatch, vecs, k, iters):
+    """(driver rows, distributed rows) of one `kmeans_fit`, sorted."""
+    from modforms_db_spark import session
+    from modforms_db_spark.llm.similarity import kmeans_fit
+
+    driver = sorted(map(tuple, kmeans_fit(vecs, k, iters).collect()))
+    with monkeypatch.context() as mp:
+        mp.setattr(session, "driver_row_budget", lambda *a: 0)
+        dist = sorted(map(tuple, kmeans_fit(vecs, k, iters).collect()))
+    return driver, dist
+
+
+def test_kmeans_deterministic_total_and_descending(spark, monkeypatch):
     """Laws beyond the (r7) SQL oracle: reruns are identical, the
     assignment partitions the input (sizes sum to the table count), and
     total inertia is non-increasing in the iteration count (Lloyd
     guarantee — the grid-quantized centroid is off the true mean by < 1
-    unit per dim, so descent carries a ≤ 64·n grid-unit slack)."""
-    from pyspark.sql import functions as F
-
-    from modforms_db_spark.llm.similarity import _emb, kmeans_fit
+    unit per dim, so descent carries a ≤ 64·n grid-unit slack). The
+    driver finish and the distributed rounds (budget 0) assign every
+    vector identically at each iteration count."""
+    from modforms_db_spark.llm.similarity import _emb
 
     reg = get_registry()
     r1 = sorted(map(tuple, reg["q_cluster_kmeans"].builder(spark, SF_DIR).collect()))
@@ -345,9 +405,42 @@ def test_kmeans_deterministic_total_and_descending(spark):
     assert sum(r[1] for r in r1) == total
     inertia = {}
     for iters in (1, 3):
-        a = kmeans_fit(vecs, 8, iters)
-        inertia[iters] = a.agg(F.sum("d2q6").alias("s")).collect()[0].s
+        driver, dist = _kmeans_both_finishes(monkeypatch, vecs, 8, iters)
+        assert driver == dist, iters
+        inertia[iters] = sum(r[2] for r in driver)
     assert inertia[3] <= inertia[1] + 64 * total, inertia
+
+
+def test_kmeans_finishes_agree_on_ties_and_empty_clusters(spark, monkeypatch):
+    """Hand-built grid where the integer rules decide the result: vec 1
+    duplicates vec 0, so clusters 1 and 2 start on the same centroid,
+    every tie goes to cluster 1 and cluster 2 loses all its members —
+    it must drop out of later rounds, as `array_distinct` makes it do
+    in the Spark form. Vec 3 is equidistant from centroids 1 and 3 in
+    round 1 (lower id wins), and cluster 1's x-sum is negative (-503
+    over 5 members), so truncating division (-100) and floor division
+    (-101) give different centroids. Both finishes must agree."""
+    vecs = spark.createDataFrame(
+        [
+            (0, [0.0, 0.0]),
+            (1, [0.0, 0.0]),
+            (2, [1.0, 1.0]),
+            (3, [-0.5, 1.5]),
+            (4, [-0.001, 0.0]),
+            (5, [-0.002, 0.0]),
+            (6, [0.9, 1.0]),
+        ],
+        "vec_id long, emb array<double>",
+    )
+    for iters in (1, 2, 3):
+        driver, dist = _kmeans_both_finishes(monkeypatch, vecs, 3, iters)
+        assert driver == dist, (iters, driver, dist)
+        assert {r[1] for r in driver} == {1, 3}, driver
+    driver, _ = _kmeans_both_finishes(monkeypatch, vecs, 3, 1)
+    assert driver[3] == (3, 1, 2_500_000), driver
+    # Round 2 centroid 1 = (-503 div 5, 1500 div 5) = (-100, 300).
+    driver, _ = _kmeans_both_finishes(monkeypatch, vecs, 3, 2)
+    assert driver[0] == (0, 1, 100**2 + 300**2), driver
 
 
 def test_prefix_filter_shrinks_candidates_but_not_results(spark):

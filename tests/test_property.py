@@ -4,6 +4,7 @@ the driver data nor hand-written fixtures contain (SURVEY.md §5.2)."""
 
 from __future__ import annotations
 
+import pytest
 from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
@@ -413,24 +414,33 @@ graph_edges = st.lists(
 )
 
 
+@pytest.mark.parametrize("finish", ["driver", "distributed"])
 @settings(max_examples=12, deadline=None)
 @given(edges=graph_edges)
 # Boundary pins: self-loop only; a chain; two disjoint pairs.
 @example(edges=[(3, 3)])
 @example(edges=[(0, 1), (1, 2), (2, 3), (3, 4)])
 @example(edges=[(0, 1), (5, 6)])
-def test_star_components_match_union_find(spark, edges):
-    """Alternating large-star/small-star must label every non-isolated
-    node with its component's min id — checked against a plain
-    union-find over the same random edge set. Self-loops are dropped
-    (no component without a real edge), matching the query contract."""
+def test_star_components_match_union_find(spark, finish, edges):
+    """`connected_components` must label every non-isolated node with
+    its component's min id — checked against a plain union-find over
+    the same random edge set, on both finishes: the driver union-find
+    (the default budget fits these graphs) and the alternating
+    large-star/small-star rounds (budget 0). Self-loops are dropped (no
+    component without a real edge), matching the query contract."""
+    from modforms_db_spark import session
     from modforms_db_spark.llm.dedup import connected_components
 
     df = spark.createDataFrame(
         [(a, b) for a, b in edges], "d1 long, d2 long"
     )
-    labels, rounds = connected_components(df)
-    got = {(r.doc_id, r.component) for r in labels.collect()}
+    with pytest.MonkeyPatch.context() as mp:
+        if finish == "distributed":
+            mp.setattr(session, "driver_row_budget", lambda *a: 0)
+        labels, rounds = connected_components(df)
+        got = {(r.doc_id, r.component) for r in labels.collect()}
+    if finish == "driver":
+        assert rounds == 0, rounds
 
     parent: dict[int, int] = {}
 

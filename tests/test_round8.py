@@ -15,14 +15,18 @@ import pyspark.sql.functions as F
 from tests.conftest import SF_DIR
 
 
-def test_star_forest_needs_both_conditions(spark):
+def test_star_forest_needs_both_conditions(spark, monkeypatch):
     """{(0,2),(1,2)} has no chain (no small endpoint reappears on the
     big side) yet is NOT converged — small-star at 2 must still rewire
     1 to 0. The r8 session's first fixpoint cut checked only the chain
     condition and stopped here with node 2 carrying two labels; pin the
-    counterexample permanently (hypothesis found it; examples rotate)."""
+    counterexample permanently (hypothesis found it; examples rotate).
+    Budget 0 keeps the star rounds on the cluster, where the fixpoint
+    test lives."""
+    from modforms_db_spark import session
     from modforms_db_spark.llm.dedup import connected_components
 
+    monkeypatch.setattr(session, "driver_row_budget", lambda *a: 0)
     df = spark.createDataFrame([(0, 2), (1, 2)], "d1 long, d2 long")
     labels, rounds = connected_components(df)
     got = {(r.doc_id, r.component) for r in labels.collect()}
