@@ -16,9 +16,8 @@ parquet footer caches) before timing starts — we measure steady-state
 engine throughput, not first-query JIT noise.
 
 r10 (optimization round): the dedup/kmeans index consumers additionally
-report "<name>__cold" entries — one timed run each with the session
-index caches disabled and cleared (MFDB_LSH_CACHE=0 /
-MFDB_KMEANS_CACHE=0), i.e. a full per-call rebuild from the parquet
+report "<name>__cold" entries — one timed run each right after
+``cache.clear()``, i.e. a full per-call rebuild from the parquet
 inputs — so both the steady-state AND the build cost are on the record
 every round. The original headline names and headline_total are
 unchanged (entries may be added, never removed or renamed).
@@ -451,59 +450,45 @@ def main() -> None:
     ]
     cold_timings: dict[str, float] = {}
     if cold_consumers:
-        from modforms_db_spark.llm.dedup import lsh_core_cache_clear
-        from modforms_db_spark.llm.similarity import kmeans_core_cache_clear
+        from modforms_db_spark import cache
 
-        saved_env = {
-            k: os.environ.get(k) for k in ("MFDB_LSH_CACHE", "MFDB_KMEANS_CACHE")
-        }
-        os.environ["MFDB_LSH_CACHE"] = "0"
-        os.environ["MFDB_KMEANS_CACHE"] = "0"
-        try:
-            # Measurement hygiene (r10 session 4): the cold block runs at
-            # the tail of the whole bench, after ~140 timed executions
-            # have accumulated dead localCheckpoint blocks whose async
-            # cleanup contends with the rebuild — observed as a bimodal
-            # cold signal (fuzzy 7.9 s vs 21-24 s across otherwise-quiet
-            # runs; a standalone session never shows the slow mode).
-            # Drain the garbage BEFORE timing (Python refs → JVM GC →
-            # a beat for the ContextCleaner), and take min-of-2 — both
-            # runs are full rebuilds from parquet (caches are disabled
-            # AND cleared between them), so the claim of the __cold
-            # entries is unchanged; prior single-run numbers live in
-            # BENCH_r*.json / bench_history.json.
-            # r11: drain BETWEEN entries too, not only before the block
-            # — each cold rebuild leaves ~10 dead localCheckpoint RDDs
-            # whose async unpersist contends with the NEXT entry's
-            # rebuild (measured: the same rebuild reads 2.4 s as the
-            # first cold leg of a fresh session and 4-7 s late in a
-            # churning one). The entries' claim is unchanged: every
-            # timed run is a full rebuild from parquet.
-            def _drain() -> None:
-                gc.collect()
-                try:
-                    spark.sparkContext._jvm.System.gc()
-                except Exception:
-                    pass
-                time.sleep(2.0)
+        # Measurement hygiene (r10 session 4): the cold block runs at
+        # the tail of the whole bench, after ~140 timed executions
+        # have accumulated dead localCheckpoint blocks whose async
+        # cleanup contends with the rebuild — observed as a bimodal
+        # cold signal (fuzzy 7.9 s vs 21-24 s across otherwise-quiet
+        # runs; a standalone session never shows the slow mode).
+        # Drain the garbage BEFORE timing (Python refs → JVM GC →
+        # a beat for the ContextCleaner), and take min-of-2 — both
+        # runs are full rebuilds from parquet (the caches are cleared
+        # before each), so the claim of the __cold entries is
+        # unchanged; prior single-run numbers live in
+        # BENCH_r*.json / bench_history.json.
+        # r11: drain BETWEEN entries too, not only before the block
+        # — each cold rebuild leaves ~10 dead localCheckpoint RDDs
+        # whose async unpersist contends with the NEXT entry's
+        # rebuild (measured: the same rebuild reads 2.4 s as the
+        # first cold leg of a fresh session and 4-7 s late in a
+        # churning one). The entries' claim is unchanged: every
+        # timed run is a full rebuild from parquet.
+        def _drain() -> None:
+            gc.collect()
+            try:
+                spark.sparkContext._jvm.System.gc()
+            except Exception:
+                pass
+            time.sleep(2.0)
 
-            _drain()
-            for name in cold_consumers:
-                best = float("inf")
-                for _ in range(2):
-                    lsh_core_cache_clear()
-                    kmeans_core_cache_clear()
-                    _drain()
-                    t0 = time.perf_counter()
-                    reg[name].builder(spark, sf_dir).toPandas()
-                    best = min(best, time.perf_counter() - t0)
-                cold_timings[f"{name}__cold"] = round(best, 4)
-        finally:
-            for k, v in saved_env.items():
-                if v is None:
-                    os.environ.pop(k, None)
-                else:
-                    os.environ[k] = v
+        _drain()
+        for name in cold_consumers:
+            best = float("inf")
+            for _ in range(2):
+                cache.clear()
+                _drain()
+                t0 = time.perf_counter()
+                reg[name].builder(spark, sf_dir).toPandas()
+                best = min(best, time.perf_counter() - t0)
+            cold_timings[f"{name}__cold"] = round(best, 4)
 
     for qn, sec in timings.items():
         _hist_add(qn, sec, main_dir)

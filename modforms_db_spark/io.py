@@ -26,39 +26,21 @@ Spark-native equivalent of "read the metadata without fetching the blob".
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from modforms_db_spark.schemas import SCHEMAS, TABLES
-
-
-def path_for(sf_dir: str, name: str) -> str:
-    return os.path.join(sf_dir, f"{name}.parquet")
-
-
-# Analyzed-plan cache keyed by (applicationId, sf_dir, table). Building a
-# reader (`spark.read.parquet`) costs ~160 ms of driver-side work per call
-# (file listing + footer schema read over Py4J) — pure metadata, re-derived
-# identically every time for the same immutable input. Caching the resolved
-# DataFrame is CATALOG caching (what a metastore gives a real deployment),
-# NOT data caching: no rows are pinned, every execution still scans parquet.
-# The applicationId key scopes entries to one SparkContext, so a restarted
-# session can never see plans from a dead JVM.
-_DF_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+from modforms_db_spark import cache
+from modforms_db_spark.schemas import SCHEMAS, TABLES, path_for
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one driver table, normalized to its canonical schema."""
+    """Read one driver table, normalized to its canonical schema; served
+    from the session catalog (see :mod:`modforms_db_spark.cache`)."""
     if name not in SCHEMAS:
         raise KeyError(f"unknown table {name!r}; known: {TABLES}")
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), name)
-    df = _DF_CACHE.get(key)
-    if df is None:
-        df = _build(spark, sf_dir, name)
-        _DF_CACHE[key] = df
-    return df
+    return cache.get(
+        cache.CATALOG, spark, sf_dir, name, lambda: _build(spark, sf_dir, name), name
+    )
 
 
 def _build(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -80,12 +62,14 @@ def load_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Uncast raw reader for one driver table — for consumers that need
     pre-projection scan facilities (the hidden `_metadata` struct, which
     a `select` projection drops). Same catalog cache as :func:`load`."""
-    key = (spark.sparkContext.applicationId, os.path.abspath(sf_dir), f"_raw:{name}")
-    df = _DF_CACHE.get(key)
-    if df is None:
-        df = spark.read.parquet(path_for(sf_dir, name))
-        _DF_CACHE[key] = df
-    return df
+    return cache.get(
+        cache.CATALOG,
+        spark,
+        sf_dir,
+        name,
+        lambda: spark.read.parquet(path_for(sf_dir, name)),
+        f"_raw:{name}",
+    )
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,14 +22,12 @@ Scale design:
 
 from __future__ import annotations
 
-import os
-
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from modforms_db_spark import session
+from modforms_db_spark import cache, session
 from modforms_db_spark.io import load, spread
 from modforms_db_spark.oracle_dialect import R, R4
 from modforms_db_spark.parity import r4
@@ -457,51 +455,13 @@ def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# (applicationId, normpath(sf_dir)) -> (groups, rep_pairs). The LSH core
-# is the shared substrate of BOTH fuzzy headline queries
-# (`q_dedup_minhash_lsh`, `q_dedup_fuzzy_apply`); in any real deployment
-# it is computed once per corpus snapshot and PERSISTED (the dedup-index
-# artifact every production pipeline keeps), not rebuilt per consumer.
-# This session-scoped cache models that: first consumer materializes the
-# checkpointed frames, later consumers read the blocks (r9, VERDICT r8
-# item 3 — the two headline queries each rebuilt signatures from
-# scratch). Keyed by applicationId so a restarted session (new
-# SparkContext, dead checkpoint blocks) can never serve stale frames;
-# assumes the parquet under sf_dir is immutable for the session's
-# lifetime, which is the driver/test-fixture contract. Disable with
-# MFDB_LSH_CACHE=0 to force per-call rebuilds (cold-path measurement).
-# Bounded FIFO (_LSH_CACHE_MAX) + lsh_core_cache_clear() so a long-lived
-# session driving many datasets releases old entries' checkpoint blocks
-# instead of pinning them for the session lifetime (r9 ADVICE; the
-# 540-name whole-registry drive's tail slowdown was this accumulation).
-_LSH_CORE_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
-# Same key -> component labels over the rep graph (r10): the KEEPER side
-# of the persisted dedup index. A real pipeline stores doc -> keeper,
-# not just candidate pairs — connected components run once per corpus
-# snapshot, every apply/audit consumer reads the labels. Same policy as
-# the core cache: MFDB_LSH_CACHE honors, FIFO bound, cleared together.
-_LSH_LABELS_CACHE: dict[tuple[str, str], DataFrame] = {}
-# Same key -> SemDeDup near-dup component labels (r10): the keeper side
-# of the SEMANTIC dedup index (kmeans blocking -> within-cluster exact
-# cosine -> CC), the embedding-space sibling of _LSH_LABELS_CACHE.
-# Gated by MFDB_KMEANS_CACHE (not MFDB_LSH_CACHE): these labels derive
-# from the kmeans core, so one switch gives the full cold path for the
-# whole semantic family.
-_SEM_LABELS_CACHE: dict[tuple[str, str], DataFrame] = {}
-_LSH_CACHE_MAX = 8  # datasets per session before FIFO eviction
+# Names perfbench reads: trace.py counts builds by this store's len(),
+# worker.py clears the caches through the function.
+_LSH_CORE_CACHE = cache.LSH_CORE
+lsh_core_cache_clear = cache.clear
 
 
-def lsh_core_cache_clear() -> None:
-    """Drop every dedup-module session cache entry: (groups, rep_pairs)
-    cores, rep-graph labels, and semantic labels. The Python-side refs
-    are the only thing pinning the lazily-checkpointed blocks — once
-    dropped, the JVM ContextCleaner reclaims them on the next GC cycle
-    (the bench.py per-query gc.collect() pattern)."""
-    _LSH_CORE_CACHE.clear()
-    _LSH_LABELS_CACHE.clear()
-    _SEM_LABELS_CACHE.clear()
-
-
+@cache.index(cache.LSH_CORE, "documents")
 def _lsh_groups_rep_pairs(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
@@ -534,14 +494,10 @@ def _lsh_groups_rep_pairs(
        df-capped (stop-token guard, `_LSH_MAX_DF_FRAC`); verification
        is NOT capped, so results keep true full-set Jaccard semantics.
 
-    Both returned frames are lazily checkpointed and cached per
-    (session, sf_dir) — see `_LSH_CORE_CACHE` above.
+    Both returned frames are lazily checkpointed; the pair is a session
+    cache entry (see :mod:`modforms_db_spark.cache`).
     """
     prep(spark)
-    cache_on = os.environ.get("MFDB_LSH_CACHE", "1") != "0"
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir))
-    if cache_on and key in _LSH_CORE_CACHE:
-        return _LSH_CORE_CACHE[key]
     d = spread(load(spark, sf_dir, "documents"))
     tokset = d.select(
         "doc_id",
@@ -717,51 +673,19 @@ def _lsh_groups_rep_pairs(
         # rows at sf0.1) — CC iterates over it and the cache serves it
         # to every later consumer without re-running band+verify.
     ).localCheckpoint(eager=False)
-    if cache_on:
-        while len(_LSH_CORE_CACHE) >= _LSH_CACHE_MAX:
-            _LSH_CORE_CACHE.pop(next(iter(_LSH_CORE_CACHE)))
-        _LSH_CORE_CACHE[key] = (groups, rep_pairs)
     return groups, rep_pairs
 
 
-def _lsh_rep_labels(
-    spark: SparkSession,
-    sf_dir: str,
-    core: tuple[DataFrame, DataFrame] | None = None,
-) -> DataFrame:
+@cache.index(cache.LSH_LABELS, "documents")
+def _lsh_rep_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Component labels (doc_id=rep, component=min rep) over the
-    rep-pair graph — the keeper assignment of the dedup index, cached
-    per (session, dataset) like the core it derives from.
-
-    Why this is cached too: the labels are THE product a real dedup
-    pipeline persists (doc -> keeper), built once per corpus snapshot.
-    Same invariants as `_LSH_CORE_CACHE`: applicationId keying, FIFO
-    bound, MFDB_LSH_CACHE=0 forces recompute, cold ≡ cached pinned by
-    tests/test_round9.py::test_lsh_core_cache_cannot_change_results
-    (its fuzzy leg exercises exactly this path)."""
-    cache_on = os.environ.get("MFDB_LSH_CACHE", "1") != "0"
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir))
-    if cache_on and key in _LSH_LABELS_CACHE:
-        return _LSH_LABELS_CACHE[key]
-    # ``core``: a caller that already holds this dataset's
-    # (groups, rep_pairs) passes them through so the COLD path
-    # (MFDB_LSH_CACHE=0, where _lsh_groups_rep_pairs cannot dedupe
-    # via the session cache) derives labels from the frames it
-    # already built instead of running the whole band+verify core a
-    # second time inside one query call — measured 9.6 → ~6 s for a
-    # truly cold q_dedup_fuzzy_apply at sf0.1. With the cache ON the
-    # core lookup already dedupes and this is behavior-identical.
-    _groups, rep_pairs = (
-        core if core is not None else _lsh_groups_rep_pairs(spark, sf_dir)
-    )
+    rep-pair graph — the keeper assignment of the dedup index (doc ->
+    keeper), a session cache entry like the core it derives from."""
+    _groups, rep_pairs = _lsh_groups_rep_pairs(spark, sf_dir)
     labels, _ = connected_components(
         rep_pairs.select(F.col("r1").alias("d1"), F.col("r2").alias("d2")),
         assume_distinct=True,
     )
-    if cache_on:
-        while len(_LSH_LABELS_CACHE) >= _LSH_CACHE_MAX:
-            _LSH_LABELS_CACHE.pop(next(iter(_LSH_LABELS_CACHE)))
-        _LSH_LABELS_CACHE[key] = labels
     return labels
 
 
@@ -784,6 +708,7 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output ≡ the naive per-doc LSH (subset of `q_dedup_jaccard`; recall
     measured in tests), but the quadratic stages see only distinct sets.
     """
+    prep(spark)
     groups, rep_pairs = _lsh_groups_rep_pairs(spark, sf_dir)
 
     # -- Expand back to doc pairs --------------------------------------
@@ -1472,8 +1397,8 @@ def q_dedup_fuzzy_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     The component labels come from `_lsh_rep_labels` — the cached
     keeper side of the dedup index (CC once per corpus snapshot)."""
     prep(spark)
-    groups, _rep_pairs = _lsh_groups_rep_pairs(spark, sf_dir)
-    labels = _lsh_rep_labels(spark, sf_dir, core=(groups, _rep_pairs))
+    groups, _ = _lsh_groups_rep_pairs(spark, sf_dir)
+    labels = _lsh_rep_labels(spark, sf_dir)
     member_rep = groups.select(
         F.explode("members").alias("doc_id"), F.col("rep")
     )
@@ -1837,19 +1762,16 @@ def q_dedup_group_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
+@cache.index(cache.SEM_LABELS, "embeddings")
 def _sem_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup near-dup component labels (doc_id, component) — the
-    keeper side of the semantic dedup index, cached per (session,
-    dataset) like the rep-graph labels it mirrors (`_lsh_rep_labels`).
+    keeper side of the semantic dedup index, a session cache entry like
+    the rep-graph labels it mirrors (`_lsh_rep_labels`).
 
     Pipeline: kmeans blocking (`kmeans_core`, itself cached) →
     within-cluster exact rounded cosine ≥ 0.45 (spread probe side +
     broadcast build side — see q_dedup_semantic's scale note) → CC over
-    the near-dup pairs. Why cached: a production SemDeDup run persists
-    the keeper decisions with the cluster index. Gated by MFDB_KMEANS_CACHE=0
-    (full cold path for the semantic family); cold ≡ cached pinned by
-    tests/test_round10.py::test_kmeans_core_cache_cannot_change_results
-    (its q_dedup_semantic leg runs cold, miss, and hit)."""
+    the near-dup pairs."""
     from modforms_db_spark.llm.similarity import (
         _dot,
         _emb,
@@ -1857,10 +1779,6 @@ def _sem_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         kmeans_core,
     )
 
-    cache_on = os.environ.get("MFDB_KMEANS_CACHE", "1") != "0"
-    key = (spark.sparkContext.applicationId, os.path.normpath(sf_dir))
-    if cache_on and key in _SEM_LABELS_CACHE:
-        return _SEM_LABELS_CACHE[key]
     vecs = (
         _emb(spark, sf_dir)
         .select("vec_id", "emb")
@@ -1891,10 +1809,6 @@ def _sem_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("d1", "d2")
     )
     labels, _rounds = connected_components(pairs, assume_distinct=True)
-    if cache_on:
-        while len(_SEM_LABELS_CACHE) >= _LSH_CACHE_MAX:
-            _SEM_LABELS_CACHE.pop(next(iter(_SEM_LABELS_CACHE)))
-        _SEM_LABELS_CACHE[key] = labels
     return labels
 
 
@@ -1950,9 +1864,8 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-identical at 3 SFs):
 
     - the fit comes from `kmeans_core` — the session-cached fitted
-      assignment shared with `q_cluster_kmeans` (the persisted
-      cluster-index artifact every production pipeline keeps; the
-      `_LSH_CORE_CACHE` precedent, cold ≡ cached pinned by tests).
+      assignment shared with `q_cluster_kmeans` (see
+      :mod:`modforms_db_spark.cache`).
     - the within-cluster pairwise leg was parallelism-starved, not
       shuffle-bound: a join keyed on 8 cluster ids inherits the panel's
       4 shuffle partitions, so ~250k cosine folds ran on ≤4 of 32

@@ -9,6 +9,8 @@ same structural shapes.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -126,3 +128,7 @@ SCHEMAS: dict[str, StructType] = {
 }
 
 TABLES = tuple(SCHEMAS)
+
+
+def path_for(sf_dir: str, name: str) -> str:
+    return os.path.join(sf_dir, f"{name}.parquet")

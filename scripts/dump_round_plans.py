@@ -6,9 +6,7 @@ Usage:
     python scripts/dump_round_plans.py OUTDIR SUFFIX NAME [NAME ...]
 
 writes ``OUTDIR/<name>_<suffix>.txt`` for each query name, using
-``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1). Cold-path
-variants of the cached dedup/kmeans index consumers are produced by
-exporting ``MFDB_LSH_CACHE=0 MFDB_KMEANS_CACHE=0`` before invoking.
+``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1).
 
 The optimization-round before/after protocol: run this once from a
 worktree pinned at the prior round's HEAD (before) and once at the
@@ -49,11 +47,7 @@ def main() -> None:
             df.explain("formatted")
         path = os.path.join(outdir, f"{name}_{suffix}.txt")
         with open(path, "w") as fh:
-            fh.write(f"# {name} — explain('formatted') @ {sf_dir}\n")
-            fh.write(
-                f"# caches: MFDB_LSH_CACHE={os.environ.get('MFDB_LSH_CACHE', '1')}"
-                f" MFDB_KMEANS_CACHE={os.environ.get('MFDB_KMEANS_CACHE', '1')}\n\n"
-            )
+            fh.write(f"# {name} — explain('formatted') @ {sf_dir}\n\n")
             fh.write(buf.getvalue())
         print(f"wrote {path}")
 

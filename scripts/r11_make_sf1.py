@@ -23,9 +23,7 @@ not a degenerate pile of exact duplicates:
   set's data path).
 
 Output: /root/testdata_r11/sf1/<table>.parquet, multiple row groups so
-Spark scan splits exist. This dataset feeds scripts/r11_scaling.py ONLY
-(8-vs-32-core ratios for the data-bound operators); the driver bench
-still runs at /root/testdata/sf0.1 with numbers untouched.
+Spark scan splits exist.
 """
 
 from __future__ import annotations

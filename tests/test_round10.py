@@ -1,139 +1,18 @@
 """Round-10 behavior contracts.
 
 Pins the session's load-bearing claims beyond the generic suites:
-(1) the k-means core cache (the fitted-assignment substrate shared by
-q_cluster_kmeans and q_dedup_semantic) can never change results — cold
-refit ≡ cached serve for BOTH consumers — and is keyed by dataset;
-(2) q_dedup_semantic's within-cluster pairwise leg is a broadcast-hash
+(1) q_dedup_semantic's within-cluster pairwise leg is a broadcast-hash
 join (the probe side's cosine folds run in its spread layout, never in
 the panel's 4 shuffle partitions keyed on 8 cluster ids);
-(3) the session caches are bounded (FIFO) and clearable, so a
-long-lived multi-dataset session releases checkpoint blocks (r9 ADVICE
-on _LSH_CORE_CACHE, applied to both caches);
-(4) kmeans_assign on an EMPTY centroid frame returns zero rows (the
+(2) kmeans_assign on an EMPTY centroid frame returns zero rows (the
 pre-r9 k-row-crossJoin contract), not n all-null rows (r9 ADVICE).
 """
 
 from __future__ import annotations
 
-import os
-
 import pyspark.sql.functions as F
 
 from tests.conftest import SF_DIR
-
-
-def _pin_env(name: str, value: str):
-    prev = os.environ.get(name)
-    os.environ[name] = value
-    return prev
-
-
-def _restore_env(name: str, prev):
-    if prev is None:
-        os.environ.pop(name, None)
-    else:
-        os.environ[name] = prev
-
-
-def test_kmeans_core_cache_cannot_change_results(spark):
-    """MFDB_KMEANS_CACHE=0 (refit per call) and =1 (session cache) are
-    the same function for both consumers; a cache HIT serves the same
-    rows as the MISS that populated it."""
-    import modforms_db_spark.llm.dedup as dd
-    import modforms_db_spark.llm.similarity as sim
-    from modforms_db_spark.registry import get_registry
-
-    reg = get_registry()
-    q_k = reg["q_cluster_kmeans"].builder
-    q_s = reg["q_dedup_semantic"].builder
-    prev = _pin_env("MFDB_KMEANS_CACHE", "0")
-    try:
-        cold_k = sorted(map(tuple, q_k(spark, SF_DIR).collect()))
-        cold_s = sorted(map(tuple, q_s(spark, SF_DIR).collect()))
-        os.environ["MFDB_KMEANS_CACHE"] = "1"
-        sim.kmeans_core_cache_clear()
-        miss_k = sorted(map(tuple, q_k(spark, SF_DIR).collect()))
-        hit_k = sorted(map(tuple, q_k(spark, SF_DIR).collect()))
-        # first semantic call with the cache on = MISS for the
-        # _SEM_LABELS_CACHE (populates it); second = HIT (serves it).
-        miss_s = sorted(map(tuple, q_s(spark, SF_DIR).collect()))
-        hit_s = sorted(map(tuple, q_s(spark, SF_DIR).collect()))
-        assert cold_k == miss_k == hit_k
-        assert cold_s == miss_s == hit_s
-    finally:
-        _restore_env("MFDB_KMEANS_CACHE", prev)
-        sim.kmeans_core_cache_clear()
-        dd.lsh_core_cache_clear()
-
-
-def test_kmeans_core_cache_keyed_by_dataset(spark):
-    """Two sf_dirs never share an entry; trailing slashes normalize onto
-    the same entry. Content check uses sf0.1 (sf0.001 and sf0.01 ship
-    identical embeddings at 500 rows; only the 2000-row tier can
-    distinguish frames by content)."""
-    import modforms_db_spark.llm.similarity as sim
-
-    prev = _pin_env("MFDB_KMEANS_CACHE", "1")
-    try:
-        sim.kmeans_core_cache_clear()
-        a1 = sim.kmeans_core(spark, SF_DIR)
-        a1b = sim.kmeans_core(spark, SF_DIR + "/")
-        assert a1 is a1b, "normpath must collapse trailing-slash duplicates"
-        other = "/root/testdata/sf0.1"
-        if os.path.isdir(other) and os.path.normpath(other) != os.path.normpath(
-            SF_DIR
-        ):
-            a2 = sim.kmeans_core(spark, other)
-            assert a1 is not a2
-            assert a1.count() != a2.count(), "distinct datasets, distinct frames"
-    finally:
-        _restore_env("MFDB_KMEANS_CACHE", prev)
-        sim.kmeans_core_cache_clear()
-
-
-def test_session_caches_bounded_and_clearable(spark):
-    """Both session caches evict FIFO at their bound (a long-lived
-    session driving many datasets must not pin blocks forever) and
-    expose a clear() that empties them."""
-    import modforms_db_spark.llm.dedup as dd
-    import modforms_db_spark.llm.similarity as sim
-
-    prev = _pin_env("MFDB_KMEANS_CACHE", "1")
-    try:
-        sim.kmeans_core_cache_clear()
-        # Synthesize distinct keys cheaply: the cache keys on
-        # normpath(sf_dir) BEFORE reading, and the frames are lazy, so
-        # never-executed entries under fake dirs exercise the eviction
-        # policy without I/O.
-        appid = spark.sparkContext.applicationId
-        for i in range(sim._CACHE_MAX + 3):
-            sim._KMEANS_CORE_CACHE[(appid, f"/nonexistent/sf{i}")] = object()
-            while len(sim._KMEANS_CORE_CACHE) > sim._CACHE_MAX:
-                sim._KMEANS_CORE_CACHE.pop(next(iter(sim._KMEANS_CORE_CACHE)))
-        real = sim.kmeans_core(spark, SF_DIR)
-        assert len(sim._KMEANS_CORE_CACHE) <= sim._CACHE_MAX
-        assert real is sim.kmeans_core(spark, SF_DIR)
-        sim.kmeans_core_cache_clear()
-        assert not sim._KMEANS_CORE_CACHE
-        # LSH cache: same policy, via the real insertion path.
-        dd.lsh_core_cache_clear()
-        g, rp = dd._lsh_groups_rep_pairs(spark, SF_DIR)
-        assert len(dd._LSH_CORE_CACHE) == 1
-        # Pre-fill to the bound with dummies; the next real insert evicts.
-        for i in range(dd._LSH_CACHE_MAX - 1):
-            dd._LSH_CORE_CACHE[(appid, f"/nonexistent/sf{i}")] = (None, None)
-        assert len(dd._LSH_CORE_CACHE) == dd._LSH_CACHE_MAX
-        dd._LSH_CORE_CACHE.pop((appid, os.path.normpath(SF_DIR)))
-        dd._LSH_CORE_CACHE[(appid, "/nonexistent/sfX")] = (None, None)
-        g2, _ = dd._lsh_groups_rep_pairs(spark, SF_DIR)  # insert at bound
-        assert len(dd._LSH_CORE_CACHE) <= dd._LSH_CACHE_MAX
-        dd.lsh_core_cache_clear()
-        assert not dd._LSH_CORE_CACHE
-    finally:
-        _restore_env("MFDB_KMEANS_CACHE", prev)
-        sim.kmeans_core_cache_clear()
-        dd.lsh_core_cache_clear()
 
 
 def test_semantic_pairs_leg_is_broadcast_join(spark):

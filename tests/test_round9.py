@@ -1,15 +1,11 @@
 """Round-9 behavior contracts.
 
-Pins the session's two load-bearing claims beyond the generic suites:
-(1) the k-means rewrite — assignment is a broadcast-only projection
-(the vector side never shuffles) and the packed argmin is equivalent
-to the k-row `kmeans_assign` API; (2) the LSH core cache can never
-change results (cold rebuild ≡ cached serve, both consumers).
+Pins the k-means rewrite beyond the generic suites: assignment is a
+broadcast-only projection (the vector side never shuffles) and the
+packed argmin is equivalent to the k-row `kmeans_assign` API.
 """
 
 from __future__ import annotations
-
-import os
 
 import pyspark.sql.functions as F
 
@@ -92,69 +88,3 @@ def test_kmeans_packed_assign_matches_krow_api(spark):
         )
     )
     assert a == b
-
-
-def test_lsh_core_cache_cannot_change_results(spark):
-    """MFDB_LSH_CACHE=0 (cold rebuild per call) and =1 (session cache)
-    must produce identical results for BOTH consumers — the cache is a
-    materialization of the same frames, never a semantic change. Also
-    pins that a cache HIT serves the same rows as the MISS that
-    populated it (two warm calls compared)."""
-    import modforms_db_spark.llm.dedup as dd
-
-    reg_m = dd.q_dedup_minhash_lsh
-    reg_f = dd.q_dedup_fuzzy_apply
-    prev = os.environ.get("MFDB_LSH_CACHE")
-    try:
-        os.environ["MFDB_LSH_CACHE"] = "0"
-        cold_m = sorted(map(tuple, reg_m(spark, SF_DIR).collect()))
-        cold_f = sorted(map(tuple, reg_f(spark, SF_DIR).collect()))
-        os.environ["MFDB_LSH_CACHE"] = "1"
-        dd._LSH_CORE_CACHE.clear()
-        miss_m = sorted(map(tuple, reg_m(spark, SF_DIR).collect()))
-        hit_m = sorted(map(tuple, reg_m(spark, SF_DIR).collect()))
-        hit_f = sorted(map(tuple, reg_f(spark, SF_DIR).collect()))
-        assert cold_m == miss_m == hit_m
-        assert cold_f == hit_f
-    finally:
-        if prev is None:
-            os.environ.pop("MFDB_LSH_CACHE", None)
-        else:
-            os.environ["MFDB_LSH_CACHE"] = prev
-        dd._LSH_CORE_CACHE.clear()
-
-
-def test_lsh_core_cache_keyed_by_dataset(spark):
-    """Two different sf_dirs must never share a cache entry: the key is
-    (applicationId, normpath(sf_dir)), so a consumer reading a second
-    dataset in the same session gets that dataset's frames, not the
-    first's."""
-    import modforms_db_spark.llm.dedup as dd
-
-    # The identity assertions below need the cache ON; an exported
-    # MFDB_LSH_CACHE=0 (the documented cold-path mode) would fail them
-    # spuriously (r9 ADVICE) — pin and restore.
-    prev = os.environ.get("MFDB_LSH_CACHE")
-    try:
-        os.environ["MFDB_LSH_CACHE"] = "1"
-        dd._LSH_CORE_CACHE.clear()
-        g1, _ = dd._lsh_groups_rep_pairs(spark, SF_DIR)
-        # trailing slash must normalize onto the SAME entry, not a second one
-        g1b, _ = dd._lsh_groups_rep_pairs(spark, SF_DIR + "/")
-        assert g1 is g1b, "normpath must collapse trailing-slash duplicates"
-        # sf0.1 as the second dataset: sf0.001 and sf0.01 ship the SAME
-        # 500-doc documents table (identical group counts), so only the
-        # 5000-doc tier can distinguish frames by content.
-        other = "/root/testdata/sf0.1"
-        if os.path.isdir(other) and os.path.normpath(other) != os.path.normpath(
-            SF_DIR
-        ):
-            g2, _ = dd._lsh_groups_rep_pairs(spark, other)
-            assert g1 is not g2
-            assert g1.count() != g2.count(), "distinct datasets, distinct groups"
-    finally:
-        if prev is None:
-            os.environ.pop("MFDB_LSH_CACHE", None)
-        else:
-            os.environ["MFDB_LSH_CACHE"] = prev
-        dd._LSH_CORE_CACHE.clear()
