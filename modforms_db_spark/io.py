@@ -10,9 +10,11 @@ Timestamp policy (measured this session with pyarrow + Spark 4.1.2):
   with ``isAdjustedToUTC=false`` → Spark reads TIMESTAMP_NTZ natively, which is
   the exact semantic twin of DuckDB's naive TIMESTAMP. No conversion needed.
 - ``events.ts`` is parquet ``timestamp[ns]`` which Spark's reader REJECTS
-  (``PARQUET_TYPE_ILLEGAL: INT64 (TIMESTAMP(NANOS,false))``). We read it via
-  the session conf ``spark.sql.legacy.parquet.nanosAsLong=true`` (runtime
-  settable — verified) and convert ``ns → µs`` with integer division, which
+  (``PARQUET_TYPE_ILLEGAL: INT64 (TIMESTAMP(NANOS,false))``). We resolve the
+  read under ``spark.sql.legacy.parquet.nanosAsLong=true``, scoped to the
+  read (:func:`modforms_db_spark.session.scoped_conf`; the resolved frame
+  keeps its bigint ``ts`` and executes the same once the conf is back),
+  and convert ``ns → µs`` with integer division, which
   truncates identically to DuckDB's ns→µs read (verified on sf0.001: both
   yield e.g. ``.778549`` from ``.778549829ns``). The conversion goes through
   ``timestamp_micros`` (an absolute-instant type) and a cast to NTZ; both
@@ -31,6 +33,7 @@ from pyspark.sql import functions as F
 
 from modforms_db_spark import cache
 from modforms_db_spark.schemas import SCHEMAS, TABLES, path_for
+from modforms_db_spark.session import scoped_conf
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -73,8 +76,8 @@ def load_raw(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path_for(sf_dir, "events"))
+    with scoped_conf(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}):
+        df = spark.read.parquet(path_for(sf_dir, "events"))
     ts_type = df.schema["ts"].dataType.simpleString()
     if ts_type == "bigint":
         # timestamp[ns] physical type: arrives as bigint nanoseconds under

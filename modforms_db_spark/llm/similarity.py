@@ -91,7 +91,7 @@ def q_sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = e.crossJoin(F.broadcast(q)).where(F.col("vec_id") != F.col("q_id"))
     cos4 = F.round(
-        _dot("q_emb", "emb") / (F.col("q_nrm") * F.col("nrm")), 4
+        F.try_divide(_dot("q_emb", "emb"), F.col("q_nrm") * F.col("nrm")), 4
     ).alias("cos4")
     scored = pairs.select("q_id", F.col("vec_id").alias("nb_id"), cos4)
     w = Window.partitionBy("q_id").orderBy(F.desc("cos4"), F.asc("nb_id"))
@@ -122,7 +122,7 @@ def q_sim_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = e.alias("a")
     b = e.alias("b")
     cos4 = F.round(
-        _dot("a.emb", "b.emb") / (F.col("a.nrm") * F.col("b.nrm")), 4
+        F.try_divide(_dot("a.emb", "b.emb"), F.col("a.nrm") * F.col("b.nrm")), 4
     ).alias("cos4")
     return (
         a.join(
@@ -212,7 +212,7 @@ def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = a.join(b, F.col("q_id") != F.col("nb_id"))
     cos4 = F.round(
-        _dot("q_emb", "nb_emb") / (F.col("q_nrm") * F.col("nb_nrm")), 4
+        F.try_divide(_dot("q_emb", "nb_emb"), F.col("q_nrm") * F.col("nb_nrm")), 4
     ).alias("cos4")
     scored = pairs.select("q_id", "nb_id", "nb_label", cos4)
     w = Window.partitionBy("q_id").orderBy(F.desc("cos4"), F.asc("nb_id"))
@@ -575,7 +575,7 @@ def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nb_id",
     )
     cos4 = F.round(
-        _dot("q_emb", "nb_emb") / (F.col("q_nrm") * F.col("nb_nrm")), 4
+        F.try_divide(_dot("q_emb", "nb_emb"), F.col("q_nrm") * F.col("nb_nrm")), 4
     ).alias("cos4")
     scored = pairs.select("q_id", "nb_id", cos4)
     w = Window.partitionBy("q_id").orderBy(F.desc("cos4"), F.asc("nb_id"))
@@ -646,7 +646,7 @@ def q_sim_threshold_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "v2",
     )
-    cos4 = F.round(_dot("e1", "e2") / (F.col("n1") * F.col("n2")), 4).alias(
+    cos4 = F.round(F.try_divide(_dot("e1", "e2"), F.col("n1") * F.col("n2")), 4).alias(
         "cos4"
     )
     return (
@@ -704,7 +704,7 @@ def q_knn_classify_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cand = probe.join(asg, "cid").where(F.col("q_id") != F.col("nb_id"))
     cos4 = F.round(
-        _dot("q_emb", "nb_emb") / (F.col("q_nrm") * F.col("nb_nrm")), 4
+        F.try_divide(_dot("q_emb", "nb_emb"), F.col("q_nrm") * F.col("nb_nrm")), 4
     ).alias("cos4")
     scored = cand.select("q_id", "nb_id", "nb_label", cos4)
     w = Window.partitionBy("q_id").orderBy(F.desc("cos4"), F.asc("nb_id"))
@@ -862,7 +862,7 @@ def q_sim_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             F.col("vec_id").alias("nb_id"),
             F.round(
-                _dot("q_emb", "emb") / (F.col("q_nrm") * F.col("nrm")), 4
+                F.try_divide(_dot("q_emb", "emb"), F.col("q_nrm") * F.col("nrm")), 4
             ).alias("cos4"),
         )
 
@@ -1630,7 +1630,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("q_nrm"),
     )
     cos4 = F.round(
-        _dot("q_emb", "emb") / (F.col("q_nrm") * F.col("nrm")), 4
+        F.try_divide(_dot("q_emb", "emb"), F.col("q_nrm") * F.col("nrm")), 4
     ).alias("cos4")
     pairs = e.crossJoin(F.broadcast(a)).where(
         F.col("vec_id") != F.col("q_id")
@@ -1919,7 +1919,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("label") != F.col("q_label")
     )
     cos4 = F.round(
-        _dot("q_emb", "emb") / (F.col("q_nrm") * F.col("nrm")), 4
+        F.try_divide(_dot("q_emb", "emb"), F.col("q_nrm") * F.col("nrm")), 4
     ).alias("cos4")
     scored = pairs.select(
         "q_id",
@@ -2010,7 +2010,7 @@ def q_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id") != F.col("q_id")
     )
     cos4 = F.round(
-        _dot("q_emb", "emb") / (F.col("q_nrm") * F.col("nrm")), 4
+        F.try_divide(_dot("q_emb", "emb"), F.col("q_nrm") * F.col("nrm")), 4
     ).alias("cos4")
     scored = pairs.select(
         "q_id", "q_label", F.col("label").alias("nb_label"),
@@ -2177,7 +2177,7 @@ def q_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("vec_id").alias("nb_id"),
             "rcell",
             F.round(
-                _dot("q_emb", "emb") / (F.col("q_nrm") * F.col("nrm")), 4
+                F.try_divide(_dot("q_emb", "emb"), F.col("q_nrm") * F.col("nrm")), 4
             ).alias("cos4"),
         )
         .localCheckpoint(eager=False)  # one probe pass, four curve points
@@ -2202,7 +2202,7 @@ def q_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             F.col("vec_id").alias("nb_id"),
             F.round(
-                _dot("q_emb", "emb") / (F.col("q_nrm") * F.col("nrm")), 4
+                F.try_divide(_dot("q_emb", "emb"), F.col("q_nrm") * F.col("nrm")), 4
             ).alias("cos4"),
         )
         .withColumn("rn", F.row_number().over(wx))
@@ -2309,7 +2309,7 @@ def q_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = e.crossJoin(F.broadcast(q)).where(F.col("vec_id") != F.col("q_id"))
     cos4 = F.round(
-        _dot("q_emb", "emb") / (F.col("q_nrm") * F.col("nrm")), 4
+        F.try_divide(_dot("q_emb", "emb"), F.col("q_nrm") * F.col("nrm")), 4
     ).alias("cos4")
     w = Window.partitionBy("q_id").orderBy(F.desc("cos4"), F.asc("nb_id"))
     top5 = (
@@ -2888,7 +2888,7 @@ def q_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("q_nrm"),
     )
     cos4 = F.round(
-        _dot("q_emb", "emb") / (F.col("q_nrm") * F.col("nrm")), 4
+        F.try_divide(_dot("q_emb", "emb"), F.col("q_nrm") * F.col("nrm")), 4
     ).alias("cos4")
     pairs = e.crossJoin(F.broadcast(q)).where(
         F.col("vec_id") != F.col("q_id")
@@ -3008,7 +3008,7 @@ def q_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
             "q_id",
             F.col("vec_id").alias("nb_id"),
             F.round(
-                _dot("q_emb", "emb") / (F.col("q_nrm") * F.col("nrm")), 4
+                F.try_divide(_dot("q_emb", "emb"), F.col("q_nrm") * F.col("nrm")), 4
             ).alias("cos4"),
             F.round(_dot("q_emb", "emb"), 4).alias("ip4"),
         )
@@ -3595,7 +3595,7 @@ def q_reco_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     cos4 = F.round(
-        _dot("q_emb", "emb") / (F.col("q_nrm") * F.col("nrm")), 4
+        F.try_divide(_dot("q_emb", "emb"), F.col("q_nrm") * F.col("nrm")), 4
     )
     w = Window.partitionBy("q_id").orderBy(F.desc("cos4"), F.asc("nb_id"))
     top = (

@@ -2,9 +2,10 @@
 
 Two distinct paths:
 
-- :func:`get_spark` — our own session (tests, bench.py): local[$SPARK_GRAFT_CPUS],
-  AQE on, shuffle partitions sized for single-node SF (SURVEY.md §4: "8-32, not
-  the 200 default"), UTC timezone, Arrow enabled.
+- :func:`get_spark` — our own session (tests, perfbench, scripts):
+  local[$SPARK_GRAFT_CPUS], AQE on, shuffle partitions sized for single-node SF
+  (SURVEY.md §4: "8-32, not the 200 default"), UTC timezone, Arrow enabled.
+  Without the env vars, cores and driver memory come from the host.
 - :func:`prep` — called at the top of every registered query builder, because the
   DRIVER owns the session there (__spark_entry__.py contract). Only touches
   runtime-settable confs that correctness depends on (timezone; Arrow for the
@@ -14,12 +15,21 @@ Two distinct paths:
 sketch-then-exact switch of the iterative index builds: a frame that fits
 the driver is finished there in one collect instead of a Spark job per
 round.
+
+:func:`scratch` is the one place a builder gets a directory to write to,
+and :func:`scoped_conf` the one way a builder changes a session conf for
+the span of a write or a stream run.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
-from typing import TYPE_CHECKING
+import shutil
+import tempfile
+import threading
+from contextlib import contextmanager
+from typing import TYPE_CHECKING, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -27,8 +37,20 @@ if TYPE_CHECKING:
     import pyarrow as pa
 
 
+# Upper bound of the host-derived driver memory default.
+_MAX_DRIVER_MB = 16 * 1024
+
+
+def _host_driver_mem() -> str:
+    """The host's MemTotal from ``/proc/meminfo``, capped at 16g."""
+    with open("/proc/meminfo") as f:
+        kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    return f"{min(kb // 1024, _MAX_DRIVER_MB)}m"
+
+
 def get_spark(app_name: str = "modforms-db-spark") -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
+    mem = os.environ.get("MFDB_DRIVER_MEM") or _host_driver_mem()
     shuffle = os.environ.get("MFDB_SHUFFLE_PARTITIONS", "32")
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
@@ -38,7 +60,7 @@ def get_spark(app_name: str = "modforms-db-spark") -> SparkSession:
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.shuffle.partitions", shuffle)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("MFDB_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", mem)
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
@@ -80,3 +102,69 @@ def prep(spark: SparkSession) -> SparkSession:
     except Exception:
         pass  # conf may be restricted on an unknown session; Arrow is perf-only
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the ``with`` block, then give each
+    key back its prior value, or unset it if it had none."""
+    prior = {k: spark.conf.get(k, None) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+# Scratch roots this process created, and the application they belong to.
+# A root is ``<TMPDIR>/mfdb_spark_<area>/<applicationId>-<pid>``: the
+# applicationId keeps two sessions on one host apart, the pid two
+# processes whose local applications share an id.
+_scratch_roots: set[str] = set()
+_scratch_app: str | None = None
+_scratch_lock = threading.Lock()
+
+
+def scratch_root(spark: SparkSession, area: str) -> str:
+    """This session's scratch root for ``area`` (``sinks`` or ``streams``);
+    perfbench counts bytes under ``mfdb_spark_streams`` as stream
+    checkpoints and everything else as sink output."""
+    app = spark.sparkContext.applicationId
+    return os.path.join(
+        tempfile.gettempdir(), f"mfdb_spark_{area}", f"{app}-{os.getpid()}"
+    )
+
+
+def scratch(spark: SparkSession, area: str, name: str) -> str:
+    """An empty directory ``<scratch_root>/<name>``. A repeat call for a
+    name clears what the previous call left there, so each name holds at
+    most one output. The process's roots are removed when a later
+    application first asks for scratch, and at interpreter exit."""
+    global _scratch_app
+    root = scratch_root(spark, area)
+    app = spark.sparkContext.applicationId
+    with _scratch_lock:
+        if app != _scratch_app:
+            _remove_scratch()
+            _scratch_app = app
+        _scratch_roots.add(root)
+    path = os.path.join(root, name)
+    shutil.rmtree(path, ignore_errors=True)
+    os.makedirs(path)
+    return path
+
+
+@atexit.register
+def _remove_scratch() -> None:
+    for root in _scratch_roots:
+        shutil.rmtree(root, ignore_errors=True)
+        try:
+            os.rmdir(os.path.dirname(root))  # the area, once no process uses it
+        except OSError:
+            pass
+    _scratch_roots.clear()

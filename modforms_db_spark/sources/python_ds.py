@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from modforms_db_spark.io import load
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
+from modforms_db_spark.session import prep, scoped_conf, scratch
 
 try:  # Python DataSource API: Spark 4 (gate for older runtimes)
     from pyspark.sql.datasource import DataSource  # noqa: F401
@@ -203,14 +203,14 @@ def q_source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep(spark)
     spark.dataSource.register(_tick_stream_source())
     ticks = spark.readStream.format("mfdb_ticks").load()
-    from modforms_db_spark.streaming.streams import _stream_shuffle
+    from modforms_db_spark.streaming.streams import _STREAM_CONF
 
     # availableNow only drains the reader's FIRST prefetched batch for
     # simple stream readers (measured: 100 of 500 rows), so this query
     # runs the default micro-batch trigger and drains explicitly:
     # processAllAvailable() blocks until the offset stops advancing —
     # all 5 micro-batches — then the query stops.
-    with _stream_shuffle(spark):
+    with scoped_conf(spark, _STREAM_CONF):
         q = (
             ticks.writeStream.format("memory")
             .outputMode("append")
@@ -388,16 +388,8 @@ def q_sink_python_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-executor push connector."""
     if not _HAVE_PYDS:  # pragma: no cover
         raise NotImplementedError("Python DataSource API requires Spark 4+")
-    import os
-    import shutil
-    import tempfile
-
     prep(spark)
-    out_dir = os.path.join(
-        tempfile.gettempdir(), "mfdb_spark_pyds_sink", "nation_jsonl"
-    )
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir, exist_ok=True)
+    out_dir = scratch(spark, "sinks", "nation_jsonl")
     spark.dataSource.register(_region_sink_source(out_dir))
     nat = load(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")
     nat.write.format("mfdb_jsonl_sink").mode("append").save()

@@ -16,8 +16,6 @@ here filters one partition value to exercise that pruning path.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -27,14 +25,7 @@ from modforms_db_spark.io import load
 from modforms_db_spark.oracle_dialect import R, R2, R4
 from modforms_db_spark.parity import r4
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
-
-_SCRATCH = os.path.join(tempfile.gettempdir(), "mfdb_spark_sinks")
-
-
-def _scratch(name: str) -> str:
-    os.makedirs(_SCRATCH, exist_ok=True)
-    return os.path.join(_SCRATCH, name)
+from modforms_db_spark.session import prep, scratch, scratch_root
 
 
 @register(
@@ -53,7 +44,7 @@ def q_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     group-count. The partition filter ('A','R') prunes the 'N' directory
     entirely (partition pruning, asserted in plan tests)."""
     prep(spark)
-    path = _scratch("lineitem_by_flag")
+    path = scratch(spark, "sinks", "lineitem_by_flag")
     li = load(spark, sf_dir, "lineitem")
     (
         li.select("l_orderkey", "l_extendedprice", "l_returnflag")
@@ -124,7 +115,7 @@ def q_sink_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(*cols)
             .repartition(8, key)
             .write.mode("overwrite")
-            .option("path", _scratch(tbl))
+            .option("path", scratch(spark, "sinks", tbl))
             .bucketBy(8, key)
             .sortBy(key)
             .format("parquet")
@@ -177,7 +168,7 @@ def q_source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     representation keeps the roundtrip exact), props stays a JSON string.
     """
     prep(spark)
-    path = _scratch("events_json")
+    path = scratch(spark, "sinks", "events_json")
     e = load(spark, sf_dir, "events").select(
         "event_id",
         F.unix_micros(F.col("ts").cast("timestamp")).alias("ts_us"),
@@ -218,7 +209,7 @@ def q_source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV write with header → schema'd read incl. timestamp parsing →
     min/max ts per type proves the timestamp text roundtrip is exact."""
     prep(spark)
-    path = _scratch("events_csv")
+    path = scratch(spark, "sinks", "events_csv")
     e = load(spark, sf_dir, "events").select("event_id", "ts", "event_type")
     (
         e.write.mode("overwrite")
@@ -323,7 +314,7 @@ def q_source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushdown via ORC SearchArguments), so the engine treats both as
     first-class scan sources."""
     prep(spark)
-    path = _scratch("lineitem_orc")
+    path = scratch(spark, "sinks", "lineitem_orc")
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linestatus", "l_quantity"
     )
@@ -352,7 +343,7 @@ def q_source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus text is space-separated tokens (asserted by the oracle match —
     a tab in `text` would break the split and the counts)."""
     prep(spark)
-    path = _scratch("documents_text")
+    path = scratch(spark, "sinks", "documents_text")
     d = load(spark, sf_dir, "documents")
     d.select(
         F.concat_ws("\t", "lang", "text").alias("value")
@@ -382,7 +373,7 @@ def q_source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     source (StaxXML) — the enterprise-feed format. Schema on read avoids
     the inference scan a production pipeline can't afford."""
     prep(spark)
-    path = _scratch("nation_xml")
+    path = scratch(spark, "sinks", "nation_xml")
     n = load(spark, sf_dir, "nation")
     (
         n.write.mode("overwrite")
@@ -440,8 +431,8 @@ def q_sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     once, which is why real tables compact incrementally, not globally.
     """
     prep(spark)
-    frag = _scratch("events_fragmented")
-    compact = _scratch("events_compacted")
+    frag = scratch(spark, "sinks", "events_fragmented")
+    compact = scratch(spark, "sinks", "events_compacted")
     e = load(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
@@ -464,14 +455,15 @@ def q_sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def compacted_file_counts() -> tuple[int, int]:
-    """(fragmented, compacted) data-file counts from the last
+def compacted_file_counts(spark: SparkSession) -> tuple[int, int]:
+    """(fragmented, compacted) data-file counts from the session's last
     `q_sink_compaction` run — test hook proving the rewrite collapsed
     the layout."""
     import glob
 
-    frag = glob.glob(os.path.join(_SCRATCH, "events_fragmented", "*", "*.parquet"))
-    comp = glob.glob(os.path.join(_SCRATCH, "events_compacted", "*", "*.parquet"))
+    root = scratch_root(spark, "sinks")
+    frag = glob.glob(os.path.join(root, "events_fragmented", "*", "*.parquet"))
+    comp = glob.glob(os.path.join(root, "events_compacted", "*", "*.parquet"))
     return len(frag), len(comp)
 
 
@@ -504,7 +496,7 @@ def q_sink_sorted_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     are disjoint (the property pruning relies on).
     """
     prep(spark)
-    path = _scratch("lineitem_sorted_shipdate")
+    path = scratch(spark, "sinks", "lineitem_sorted_shipdate")
     (
         load(spark, sf_dir, "lineitem")
         .select(
@@ -569,7 +561,7 @@ def q_sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     the written footers and asserts the per-file bounding boxes
     actually shrink vs the unclustered layout."""
     prep(spark)
-    path = _scratch("lineitem_zorder")
+    path = scratch(spark, "sinks", "lineitem_zorder")
     li = load(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_returnflag", "l_extendedprice", "l_discount"
     )
@@ -655,7 +647,7 @@ def q_source_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .alias("value")
     )
-    path = _scratch("orders_corrupt_csv")
+    path = scratch(spark, "sinks", "orders_corrupt_csv")
     lines.write.mode("overwrite").text(path)
     parsed = (
         spark.read.schema(
@@ -706,22 +698,21 @@ def q_sink_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     the rewritten partition only.
     """
     prep(spark)
-    path = _scratch("events_dyn_overwrite")
+    path = scratch(spark, "sinks", "events_dyn_overwrite")
     e = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
-    conf = spark.conf
-    old = conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    conf.set("spark.sql.sources.partitionOverwriteMode", "static")
-    try:
-        e.write.mode("overwrite").partitionBy("event_type").parquet(path)
-        conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        (
-            e.where((F.col("event_type") == "error") & (F.col("event_id") % 2 == 0))
-            .write.mode("overwrite")
-            .partitionBy("event_type")
-            .parquet(path)
-        )
-    finally:
-        conf.set("spark.sql.sources.partitionOverwriteMode", old)
+    (
+        e.write.mode("overwrite")
+        .option("partitionOverwriteMode", "static")
+        .partitionBy("event_type")
+        .parquet(path)
+    )
+    (
+        e.where((F.col("event_type") == "error") & (F.col("event_id") % 2 == 0))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("event_type")
+        .parquet(path)
+    )
     return (
         spark.read.parquet(path)
         .groupBy("event_type")
@@ -760,9 +751,7 @@ def q_source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the point. Hash + length computed JVM-side off the content
     column."""
     prep(spark)
-    path = _scratch("binary_blobs")
-    shutil.rmtree(path, ignore_errors=True)
-    os.makedirs(path)
+    path = scratch(spark, "sinks", "binary_blobs")
     docs = (
         load(spark, sf_dir, "documents")
         .where(F.col("doc_id") < 20)
@@ -808,7 +797,7 @@ def q_nested_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     shows the struct subpaths). Array-per-order memory is bounded by
     order width, not table size."""
     prep(spark)
-    path = _scratch("orders_nested")
+    path = scratch(spark, "sinks", "orders_nested")
     o = load(spark, sf_dir, "orders").where(F.col("o_orderpriority") == "1-URGENT")
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", "l_extendedprice", "l_discount", "l_returnflag"
@@ -874,8 +863,7 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     merged schema in a catalog instead of re-deriving it per query
     (which is also why the default is off)."""
     prep(spark)
-    path = _scratch("part_evolving")
-    shutil.rmtree(path, ignore_errors=True)
+    path = scratch(spark, "sinks", "part_evolving")
     p = load(spark, sf_dir, "part")
     v1 = p.where(F.col("p_partkey") % 2 == 0).select(
         "p_partkey", "p_name", F.lit("v1").alias("batch")
@@ -1028,7 +1016,7 @@ def q_source_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines = o.select(
         F.when(F.col("o_orderkey") % 89 == 0, bad).otherwise(good).alias("value")
     )
-    path = _scratch("orders_corrupt_json")
+    path = scratch(spark, "sinks", "orders_corrupt_json")
     lines.write.mode("overwrite").text(path)
     parsed = (
         spark.read.schema("okey bigint, total double, _bad string")
@@ -1421,7 +1409,7 @@ def q_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     qualifying directories before any row is read.
     """
     prep(spark)
-    path = _scratch("orders_by_priority_dpp")
+    path = scratch(spark, "sinks", "orders_by_priority_dpp")
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
@@ -1559,9 +1547,8 @@ def q_source_glob_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     promote such trees to real partitioned tables precisely to trade
     glob-listing for catalog pruning (q_sink_roundtrip's path)."""
     prep(spark)
-    base = _scratch("glob_nested_docs")
+    base = scratch(spark, "sinks", "glob_nested_docs")
     d = load(spark, sf_dir, "documents")
-    shutil.rmtree(base, ignore_errors=True)
     # Six subtrees: the two globbed sources, a decoy source, × block
     # parity (doc_id div 20 — raw doc_id parity is DEGENERATE here:
     # the generator assigns source = src{doc_id % 20}, so src1 docs
@@ -1629,7 +1616,7 @@ def q_sink_parquet_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters accumulate per row group at write time); the probe scan
     prunes row groups before decoding any page."""
     prep(spark)
-    path = _scratch("orders_bloom_custkey")
+    path = scratch(spark, "sinks", "orders_bloom_custkey")
     (
         load(spark, sf_dir, "orders")
         .write.mode("overwrite")
@@ -1690,7 +1677,7 @@ def q_sink_csv_quoting(spark: SparkSession, sf_dir: str) -> DataFrame:
     Production guidance in the docstring is the op's point: quote
     discipline is a correctness gate BEFORE a performance choice."""
     prep(spark)
-    path = _scratch("docs_csv_quoting")
+    path = scratch(spark, "sinks", "docs_csv_quoting")
     tricky = load(spark, sf_dir, "documents").select(
         "doc_id",
         F.concat(

@@ -35,8 +35,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -44,9 +42,23 @@ from pyspark.sql import types as T
 
 from modforms_db_spark.io import load
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
+from modforms_db_spark.session import prep, scoped_conf, scratch
 
-_SCRATCH = os.path.join(tempfile.gettempdir(), "mfdb_spark_streams")
+# Confs pinned for the span of every stream run (start through
+# termination: a streaming query reads its files in micro-batches).
+# - shuffle partitions: streaming state stores partition by it at first
+#   checkpoint, AQE is disabled for stateful workloads, and a driver's
+#   session may keep the 200 default — 200 state-store tasks over 10k
+#   rows is pure overhead. At production scale this is the one knob that
+#   MUST be sized to the cluster before the first run, because it's
+#   frozen into the checkpoint.
+# - nanosAsLong: surfaces a timestamp[ns] events file as bigint nanos
+#   (see _raw_events_schema); a no-op for every other source.
+_STREAM_CONF = {
+    "spark.sql.shuffle.partitions": "8",
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+}
+
 
 def _raw_events_schema(sf_dir: str) -> tuple[T.StructType, bool]:
     """Streaming sources need an explicit schema; the driver's events.parquet
@@ -78,8 +90,8 @@ def _raw_events_schema(sf_dir: str) -> tuple[T.StructType, bool]:
 
 def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """readStream over the events table with the same ns→µs normalization
-    as the batch reader (io.py) — identical values, streaming source."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    as the batch reader (io.py) — identical values, streaming source.
+    The stream must run under ``_STREAM_CONF``."""
     schema, is_nanos = _raw_events_schema(sf_dir)
     raw = (
         spark.readStream.schema(schema)
@@ -103,33 +115,18 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-class _stream_shuffle:
-    """Pin a small shuffle-partition count for the duration of a streaming
-    run, restoring the prior value after. Streaming state stores partition
-    by spark.sql.shuffle.partitions at first checkpoint, AQE is disabled
-    for stateful workloads, and the driver's session keeps the 200 default
-    — 200 state-store tasks over 10k rows is pure overhead. At production
-    scale this is the one knob that MUST be sized to the cluster before
-    the first run, because it's frozen into the checkpoint."""
-
-    def __init__(self, spark: SparkSession, n: str = "8"):
-        self.spark, self.n = spark, n
-
-    def __enter__(self):
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions")
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.n)
-
-    def __exit__(self, *exc):
-        self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-
-
-def _run_to_table(sdf_writer, name_prefix: str, spark: SparkSession) -> DataFrame:
-    """Start an availableNow stream into a memory sink, wait, return table."""
-    name = f"{name_prefix}_{uuid.uuid4().hex[:8]}"
-    with _stream_shuffle(spark):
-        q = sdf_writer.queryName(name).trigger(availableNow=True).start()
-        q.awaitTermination()
-    return spark.table(name)
+def _run_to_table(sdf_writer, name: str, spark: SparkSession) -> DataFrame:
+    """Run an availableNow stream into a memory sink named ``name`` and
+    return the sink's rows. The sink's temp view is dropped once the
+    frame is taken (the frame keeps the rows), so repeated runs do not
+    pile up views that hold rows on the driver."""
+    try:
+        with scoped_conf(spark, _STREAM_CONF):
+            q = sdf_writer.queryName(name).trigger(availableNow=True).start()
+            q.awaitTermination()
+        return spark.table(name)
+    finally:
+        spark.catalog.dropTempView(name)
 
 
 @register(
@@ -207,68 +204,65 @@ def q_stream_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     observable — which is also the realistic deployment scenario (late
     data arriving after recovery)."""
     prep(spark)
-    run_dir = os.path.join(_SCRATCH, f"late_{uuid.uuid4().hex[:8]}")
+    run_dir = scratch(spark, "streams", "late")
     src_dir = os.path.join(run_dir, "src")
     ckpt = os.path.join(run_dir, "ckpt")
-    os.makedirs(src_dir, exist_ok=True)
-    try:
-        # Cast to TimestampType (LTZ) up front: watermarks require it, and
-        # writing it means the re-read stream needs no further conversion.
-        ev = (
-            load(spark, sf_dir, "events")
-            .withColumn("ts", F.col("ts").cast("timestamp"))
-            .cache()
+    os.makedirs(src_dir)
+    # Cast to TimestampType (LTZ) up front: watermarks require it, and
+    # writing it means the re-read stream needs no further conversion.
+    ev = (
+        load(spark, sf_dir, "events")
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+        .cache()
+    )
+    split_ts = ev.agg(
+        F.expr("timestamp_micros(cast(percentile(unix_micros(ts), 0.5) as bigint))")
+    ).first()[0]
+    schema = ev.schema
+    p1, p2 = os.path.join(run_dir, "f1"), os.path.join(run_dir, "f2")
+    ev.where(F.col("ts") >= F.lit(split_ts)).coalesce(1).write.parquet(p1)
+    ev.where(F.col("ts") < F.lit(split_ts)).coalesce(1).write.parquet(p2)
+    ev.unpersist()
+
+    def _publish(part_dir: str, dest: str) -> None:
+        f = next(
+            fn for fn in os.listdir(part_dir) if fn.endswith(".parquet")
         )
-        split_ts = ev.agg(
-            F.expr("timestamp_micros(cast(percentile(unix_micros(ts), 0.5) as bigint))")
-        ).first()[0]
-        schema = ev.schema
-        p1, p2 = os.path.join(run_dir, "f1"), os.path.join(run_dir, "f2")
-        ev.where(F.col("ts") >= F.lit(split_ts)).coalesce(1).write.parquet(p1)
-        ev.where(F.col("ts") < F.lit(split_ts)).coalesce(1).write.parquet(p2)
-        ev.unpersist()
+        shutil.copyfile(os.path.join(part_dir, f), os.path.join(src_dir, dest))
 
-        def _publish(part_dir: str, dest: str) -> None:
-            f = next(
-                fn for fn in os.listdir(part_dir) if fn.endswith(".parquet")
-            )
-            shutil.copyfile(os.path.join(part_dir, f), os.path.join(src_dir, dest))
+    emitted: list = []
 
-        emitted: list = []
-
-        def _run_once() -> None:
-            stream = spark.readStream.schema(schema).parquet(src_dir)
-            agg = (
-                stream.withWatermark("ts", "30 minutes")
-                .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .select(F.col("w.start").alias("ws"), "event_type", "n")
-            )
-            with _stream_shuffle(spark):
-                q = (
-                    agg.writeStream.foreachBatch(
-                        lambda df, _bid: emitted.append(df.toPandas())
-                    )
-                    .outputMode("append")
-                    .option("checkpointLocation", ckpt)
-                    .trigger(availableNow=True)
-                    .start()
+    def _run_once() -> None:
+        stream = spark.readStream.schema(schema).parquet(src_dir)
+        agg = (
+            stream.withWatermark("ts", "30 minutes")
+            .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
+            .agg(F.count(F.lit(1)).alias("n"))
+            .select(F.col("w.start").alias("ws"), "event_type", "n")
+        )
+        with scoped_conf(spark, _STREAM_CONF):
+            q = (
+                agg.writeStream.foreachBatch(
+                    lambda df, _bid: emitted.append(df.toPandas())
                 )
-                q.awaitTermination()
+                .outputMode("append")
+                .option("checkpointLocation", ckpt)
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
 
-        _publish(p1, "recent.parquet")
-        _run_once()
-        _publish(p2, "old.parquet")
-        _run_once()
+    _publish(p1, "recent.parquet")
+    _run_once()
+    _publish(p2, "old.parquet")
+    _run_once()
 
-        import pandas as pd
+    import pandas as pd
 
-        out = pd.concat([e for e in emitted if len(e)], ignore_index=True)
-        return spark.createDataFrame(
-            out, schema="ws timestamp, event_type string, n bigint"
-        )
-    finally:
-        shutil.rmtree(run_dir, ignore_errors=True)
+    out = pd.concat([e for e in emitted if len(e)], ignore_index=True)
+    return spark.createDataFrame(
+        out, schema="ws timestamp, event_type string, n bigint"
+    )
 
 
 @register(
@@ -409,8 +403,7 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep(spark)
     events = _stream_events(spark, sf_dir)
 
-    store_dir = os.path.join(_SCRATCH, f"upsert_store_{uuid.uuid4().hex[:8]}")
-    os.makedirs(_SCRATCH, exist_ok=True)
+    store_dir = scratch(spark, "streams", "upsert_store")
 
     def merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -452,10 +445,10 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.symlink(nxt, tmp_link)
         os.replace(tmp_link, cur_path)
 
-    with _stream_shuffle(spark):
+    with scoped_conf(spark, _STREAM_CONF):
         q = (
             events.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", store_dir + "_ckpt")
+            .option("checkpointLocation", os.path.join(store_dir, "_ckpt"))
             .trigger(availableNow=True)
             .start()
         )
@@ -569,12 +562,11 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     joined = events.join(F.broadcast(dim), "event_type").select(
         "event_id", "user_id", "category", "ts"
     )
-    with _stream_shuffle(spark):
-        return _run_to_table(
-            joined.writeStream.format("memory").outputMode("append"),
-            "stream_static_join",
-            spark,
-        )
+    return _run_to_table(
+        joined.writeStream.format("memory").outputMode("append"),
+        "stream_static_join",
+        spark,
+    )
 
 
 @register(
@@ -668,12 +660,10 @@ def q_stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     property is the file sink's transactional commit protocol — the
     same mechanism at any scale."""
     prep(spark)
-    src = os.path.join(_SCRATCH, "ckpt_src")
-    out = os.path.join(_SCRATCH, "ckpt_out")
-    ck = os.path.join(_SCRATCH, "ckpt_state")
-    for d in (src, out, ck):
-        shutil.rmtree(d, ignore_errors=True)
-    os.makedirs(src)
+    run_dir = scratch(spark, "streams", "ckpt_resume")
+    src = os.path.join(run_dir, "src")
+    out = os.path.join(run_dir, "out")
+    ck = os.path.join(run_dir, "state")
 
     e = load(spark, sf_dir, "events").select("event_id", "event_type", "user_id")
     e.where(F.col("event_id") % 2 == 0).write.parquet(os.path.join(src, "half_a"))
@@ -686,7 +676,7 @@ def q_stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("recursiveFileLookup", "true")
             .parquet(src)
         )
-        with _stream_shuffle(spark):
+        with scoped_conf(spark, _STREAM_CONF):
             q = (
                 stream.writeStream.format("parquet")
                 .option("path", out)

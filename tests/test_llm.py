@@ -8,6 +8,8 @@ asserted exactly, recall against a floor measured with margin."""
 
 from __future__ import annotations
 
+import pytest
+
 from modforms_db_spark.registry import get_registry
 
 from tests.conftest import SF_DIR
@@ -63,11 +65,9 @@ def test_ivf_recall(spark):
     assert _topk_recall(spark, "q_sim_ivf_topk") >= 0.7
 
 
-def test_ivf_excludes_zero_norm_query(spark, tmp_path):
-    """Cosine is undefined for a zero-norm vector, so q_sim_ivf_topk
-    leaves such a query out explicitly; every other query keeps its full
-    top-5. Vec 0 is zeroed in a copy of the embeddings table (it is also
-    a seed centroid, so its cell must not break the other probes)."""
+def _zeroed_embeddings(spark, tmp_path) -> str:
+    """A copy of the embeddings table with vec 0 zeroed (vec 0 is also an
+    IVF seed centroid, so its cell must not break the other probes)."""
     import os
 
     from pyspark.sql import functions as F
@@ -80,13 +80,66 @@ def test_ivf_excludes_zero_norm_query(spark, tmp_path):
             F.col("vec_id") == 0, F.transform("embedding", lambda x: x - x)
         ).otherwise(F.col("embedding")),
     ).write.parquet(str(tmp_path / "embeddings.parquet"))
+    return str(tmp_path)
 
-    rows = get_registry()["q_sim_ivf_topk"].builder(spark, str(tmp_path)).collect()
+
+def test_ivf_excludes_zero_norm_query(spark, tmp_path):
+    """Cosine is undefined for a zero-norm vector, so q_sim_ivf_topk
+    leaves such a query out explicitly; every other query keeps its full
+    top-5."""
+    sf = _zeroed_embeddings(spark, tmp_path)
+    rows = get_registry()["q_sim_ivf_topk"].builder(spark, sf).collect()
     per_q: dict[int, int] = {}
     for r in rows:
         per_q[r.q_id] = per_q.get(r.q_id, 0) + 1
     assert 0 not in per_q, per_q
     assert per_q == {q: 5 for q in range(1, 20)}, per_q
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "q_sim_cosine_topk",
+        "q_sim_threshold",
+        "q_knn_classify",
+        "q_sim_ann_lsh",
+        "q_knn_classify_ann",
+        "q_sim_topk_incremental",
+        "q_label_propagation",
+        "q_hard_negatives",
+        "q_retrieval_metrics",
+        "q_ndcg",
+        "q_rbo",
+        "q_reco_coverage",
+    ],
+)
+def test_zero_norm_vector_scores_null(spark, tmp_path, name):
+    """Under ANSI mode a cosine against a zero-norm vector scores NULL
+    (``try_divide``) instead of failing the query. DuckDB's ``x / 0.0``
+    is NULL too, so an oracle query must still equal its oracle on the
+    zeroed copy; a rows-only query must run and score vec 0 NULL."""
+    import duckdb
+
+    from modforms_db_spark.session import scoped_conf
+
+    from tests.conftest import assert_parity
+
+    sf = _zeroed_embeddings(spark, tmp_path)
+    qd = get_registry()[name]
+    with scoped_conf(spark, {"spark.sql.ansi.enabled": "true"}):
+        if qd.oracle is not None:
+            con = duckdb.connect()
+            con.execute(
+                "CREATE VIEW embeddings AS SELECT * FROM "
+                f"read_parquet('{sf}/embeddings.parquet/*.parquet')"
+            )
+            assert_parity(spark, con, name, sf)
+            return
+        rows = qd.builder(spark, sf).collect()
+    assert rows
+    for r in (row.asDict() for row in rows):
+        if "cos4" in r and 0 in (r["q_id"], r["nb_id"]):
+            assert r["cos4"] is None, r
 
 
 def test_ann_lsh_recall(spark):

@@ -422,9 +422,10 @@ def test_zorder_layout_shrinks_per_file_bounding_boxes(spark):
 
     reg = get_registry()
     reg["q_sink_zorder"].builder(spark, "/root/testdata/sf0.01").collect()
-    from modforms_db_spark.sources.sinks import _SCRATCH
+    from modforms_db_spark.session import scratch_root
 
-    files = _glob.glob(_SCRATCH + "/lineitem_zorder/part-*.parquet")
+    root = scratch_root(spark, "sinks")
+    files = _glob.glob(root + "/lineitem_zorder/part-*.parquet")
     assert len(files) >= 4, files
     boxes = []
     for f in files:

@@ -1,0 +1,144 @@
+"""Session helpers: scoped confs, per-application scratch and its
+lifecycle, host-derived defaults."""
+
+from __future__ import annotations
+
+import glob
+import os
+import subprocess
+import sys
+import tempfile
+
+import pytest
+
+from modforms_db_spark.session import (
+    _MAX_DRIVER_MB,
+    _host_driver_mem,
+    scoped_conf,
+    scratch,
+    scratch_root,
+)
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def test_scoped_conf_restores_prior_value_or_unsets(spark):
+    unset, held = "spark.sql.legacy.parquet.nanosAsLong", "spark.sql.shuffle.partitions"
+    spark.conf.unset(unset)
+    prior = spark.conf.get(held)
+    with scoped_conf(spark, {unset: "true", held: "3"}):
+        assert spark.conf.get(unset) == "true"
+        assert spark.conf.get(held) == "3"
+    assert spark.conf.get(unset, None) is None
+    assert spark.conf.get(held) == prior
+
+
+def test_scoped_conf_restores_on_error(spark):
+    key = "spark.sql.shuffle.partitions"
+    prior = spark.conf.get(key)
+    with pytest.raises(RuntimeError), scoped_conf(spark, {key: "3"}):
+        raise RuntimeError("boom")
+    assert spark.conf.get(key) == prior
+
+
+def test_scratch_layout_and_repeat_call_clears(spark):
+    root = scratch_root(spark, "sinks")
+    assert root == os.path.join(
+        tempfile.gettempdir(),
+        "mfdb_spark_sinks",
+        f"{spark.sparkContext.applicationId}-{os.getpid()}",
+    )
+    path = scratch(spark, "sinks", "scratch_probe")
+    assert path == os.path.join(root, "scratch_probe")
+    assert os.listdir(path) == []
+    open(os.path.join(path, "old"), "w").close()
+    assert scratch(spark, "sinks", "scratch_probe") == path
+    assert os.listdir(path) == []
+
+
+def test_scratch_from_many_threads(spark):
+    """Builders ask for scratch from several threads (q_sink_bucketed's
+    two writes): every caller gets its own existing, empty directory."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    names = [f"thread_probe_{i}" for i in range(32)]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            paths = list(pool.map(lambda n: scratch(spark, "sinks", n), names))
+    finally:
+        sys.setswitchinterval(interval)
+    root = scratch_root(spark, "sinks")
+    assert paths == [os.path.join(root, n) for n in names]
+    assert all(os.listdir(p) == [] for p in paths)
+
+
+def test_host_driver_mem_is_capped():
+    mb = int(_host_driver_mem().removesuffix("m"))
+    assert 0 < mb <= _MAX_DRIVER_MB
+
+
+_WORKER = r"""
+import os
+
+import duckdb
+
+from modforms_db_spark.registry import get_registry
+from modforms_db_spark.schemas import TABLES
+from modforms_db_spark.session import get_spark, scratch_root
+from tests.conftest import SF_DIR, assert_parity
+
+reg = get_registry()
+ddb = duckdb.connect()
+for t in TABLES:
+    ddb.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')")
+
+spark = get_spark("mfdb-scratch-worker")
+for _ in range(2):
+    assert_parity(spark, ddb, "q_sink_partition_overwrite")
+    assert_parity(spark, ddb, "q_sink_roundtrip")
+    reg["q_stream_upsert"].builder(spark, SF_DIR).collect()
+roots = {a: scratch_root(spark, a) for a in ("sinks", "streams")}
+# One output per scratch name, however often a builder ran.
+assert sorted(os.listdir(roots["sinks"])) == ["events_dyn_overwrite", "lineitem_by_flag"]
+assert os.listdir(roots["streams"]) == ["upsert_store"]
+
+spark.stop()
+spark = get_spark("mfdb-scratch-worker")
+reg["q_sink_roundtrip"].builder(spark, SF_DIR).collect()
+# The next application's first scratch request removed the old roots.
+assert not any(os.path.exists(r) for r in roots.values()), roots
+assert os.listdir(scratch_root(spark, "sinks")) == ["lineitem_by_flag"]
+print("WORKER OK")
+"""
+
+
+def test_concurrent_sessions_isolated_and_leave_no_scratch(tmp_path):
+    """Two processes share one TMPDIR: both pass their parity checks, and
+    once they exit no ``mfdb_spark_*`` entry is left behind."""
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    env = dict(
+        os.environ,
+        TMPDIR=str(tmp),
+        PYTHONPATH=REPO,
+        SPARK_GRAFT_CPUS="2",
+        MFDB_SHUFFLE_PARTITIONS="4",
+        MFDB_DRIVER_MEM="1g",
+    )
+    procs = [
+        subprocess.Popen(
+            [sys.executable, "-c", _WORKER],
+            cwd=tmp_path,
+            env=env,
+            stdout=subprocess.PIPE,
+            stderr=subprocess.STDOUT,
+            text=True,
+        )
+        for _ in range(2)
+    ]
+    outs = [p.communicate(timeout=900)[0] for p in procs]
+    for p, out in zip(procs, outs):
+        assert p.returncode == 0 and "WORKER OK" in out, out[-4000:]
+    assert glob.glob(str(tmp / "mfdb_spark_*")) == []

@@ -24,6 +24,15 @@ def test_stream_tumbling_equals_batch_twin(spark):
     assert stream.equals(batch)
 
 
+def test_stream_runs_leave_no_memory_sink_views(spark):
+    """Each run's memory-sink view is dropped once its frame is taken,
+    and the frame still holds the rows."""
+    before = sorted(t.name for t in spark.catalog.listTables())
+    counts = [_run(spark, "q_stream_tumbling").count() for _ in range(3)]
+    assert sorted(t.name for t in spark.catalog.listTables()) == before
+    assert counts[0] > 0 and len(set(counts)) == 1, counts
+
+
 def test_stream_session_equals_batch_twin(spark):
     """session_window in a watermarked stream must produce exactly the
     batch sessionization (complete mode, availableNow ⇒ all sessions)."""

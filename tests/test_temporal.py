@@ -146,7 +146,7 @@ def test_compaction_collapses_files_losslessly(spark, ddb):
     from tests.conftest import assert_parity
 
     assert_parity(spark, ddb, "q_sink_compaction")
-    frag, comp = compacted_file_counts()
+    frag, comp = compacted_file_counts(spark)
     n_types = 5
     assert comp == n_types, (frag, comp)
     assert frag > comp, (frag, comp)
@@ -251,6 +251,36 @@ def _write_empty_events(spark, tmpdir: str) -> str:
     return tmpdir
 
 
+def test_nanos_events_file_loads_without_leaking_conf(spark, tmp_path):
+    """A real timestamp[ns] events file loads through io.load: ts equals
+    the µs fixture truncated (the file carries an extra 789 ns per row),
+    and the nanosAsLong conf the read needs is scoped to the read, not
+    left set on the session."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from modforms_db_spark.io import load
+    from modforms_db_spark.session import scoped_conf
+
+    t = pq.read_table(os.path.join(SF_DIR, "events.parquet"))
+    assert t.schema.field("ts").type == pa.timestamp("us")
+    us = t.column("ts").cast(pa.int64())
+    ns = pc.add(pc.multiply(us, 1000), 789).cast(pa.timestamp("ns"))
+    t = t.set_column(t.schema.get_field_index("ts"), "ts", ns)
+    pq.write_table(t, str(tmp_path / "events.parquet"))
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    with scoped_conf(spark, {key: "false"}):
+        got = load(spark, str(tmp_path), "events")
+        assert spark.conf.get(key) == "false"
+        got = got.select("event_id", "ts").toPandas()
+    want = load(spark, SF_DIR, "events").select("event_id", "ts").toPandas()
+    got, want = (f.sort_values("event_id").reset_index(drop=True) for f in (got, want))
+    assert len(got) == len(want) > 0
+    assert got.equals(want)
+
+
 def test_temporal_ops_survive_empty_input(spark, tmp_path):
     sf = _write_empty_events(spark, str(tmp_path))
     for name in [
@@ -300,10 +330,11 @@ def test_sorted_sink_files_cover_disjoint_ranges(spark):
 
     import pyarrow.parquet as pq
 
-    from modforms_db_spark.sources.sinks import _scratch
+    from modforms_db_spark.session import scratch_root
 
     _q("q_sink_sorted_pruning")(spark, SF_DIR).collect()  # materialize write
-    files = sorted(glob.glob(_scratch("lineitem_sorted_shipdate") + "/*.parquet"))
+    root = scratch_root(spark, "sinks")
+    files = sorted(glob.glob(root + "/lineitem_sorted_shipdate/*.parquet"))
     assert len(files) >= 2, files
     spans = []
     for f in files:
