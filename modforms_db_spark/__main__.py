@@ -6,7 +6,7 @@
 
 This is the "switch from the reference" surface: every operator the
 engine implements is invocable by name against any testdata scale
-directory, with the same session defaults the driver and bench use.
+directory, with the same session defaults the driver uses.
 """
 
 from __future__ import annotations

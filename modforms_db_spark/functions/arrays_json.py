@@ -66,7 +66,6 @@ def q_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM t
     """,
     priority="P0",
-    headline=True,
     tags=("array", "explode"),
 )
 def q_array_explode(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -130,7 +130,6 @@ def _canon_h():
     FROM c GROUP BY h HAVING COUNT(*) > 1
     """,
     priority="P0",
-    headline=True,
     tags=("llm", "dedup"),
 )
 def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -693,7 +692,6 @@ def _lsh_rep_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_dedup_minhash_lsh",
     oracle=None,  # sketch-based; tests assert exact-Jaccard agreement
     priority="P2",
-    headline=True,
     tags=("llm", "dedup", "lsh", "scale-path"),
 )
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -787,7 +785,6 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q_dedup_simhash_pairs",
     oracle=None,  # simhash isn't SQL-expressible; exactness proven in tests
     priority="P2",
-    headline=True,
     tags=("llm", "dedup", "simhash", "scale-path"),
 )
 def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1192,7 +1189,6 @@ _SUBSTR_W = 30  # window length (tokens) for exact passage dedup
 
 @register(
     "q_dedup_substring",
-    headline=True,
     oracle=f"""
     WITH t AS (
       SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents
@@ -1362,8 +1358,6 @@ def q_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=None,  # LSH-derived groups; invariants + canonical-dominance
     # pinned in tests
     priority="P2",
-    headline=True,  # r7 VERDICT item 5: keep the fuzzy chain's cost
-    # under the driver's persistent bench, not only local runs
     tags=("llm", "dedup", "apply", "lsh", "scale-path"),
 )
 def q_dedup_fuzzy_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1814,13 +1808,6 @@ def _sem_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_dedup_semantic",
-    headline=True,  # r10: VERDICT r9 directed a measured floor for this
-    # query ("the most expensive headline query"); it was only ever
-    # family-panel-sampled, so its timing appeared once per rotation
-    # wrap. Headline from r10 on — NOTE for round-over-round readers:
-    # headline_total grows by this query's ~2 s from r10 (composition
-    # change, not a regression); the spark/duck comparable totals are
-    # unaffected (no oracle → not in the comparable set).
     oracle=None,  # k-means assignment is a chained fp argmin — exactly
     # the cross-engine fp-tie coupling the parity rules forbid
     # (q_cluster_kmeans precedent); laws pinned in tests instead:

@@ -128,7 +128,6 @@ def _per_doc_bigram_counts(d):
     ORDER BY doc_id
     """,
     priority="P2",
-    headline=True,
     tags=("llm", "pipeline", "decontamination"),
 )
 def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -285,7 +284,6 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY doc_id
     """,
     priority="P2",
-    headline=True,
     tags=("llm", "pipeline", "quality"),
 )
 def q_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -391,7 +389,6 @@ def _make_pack_pdf():
     ORDER BY lang, bin
     """,
     priority="P2",
-    headline=True,
     tags=("llm", "pipeline", "packing"),
 )
 def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -471,7 +468,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY c.lang
     """,
     priority="P1",
-    headline=True,
     tags=("llm", "pipeline", "e2e"),
 )
 def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -73,7 +73,6 @@ _COS = "list_inner_product(a.emb, b.emb) / (sqrt(list_inner_product(a.emb, a.emb
     ) WHERE rn <= 5
     """,
     priority="P1",
-    headline=True,
     tags=("llm", "similarity"),
 )
 def q_sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -308,7 +307,6 @@ _IVF_COS = "round(list_cosine_similarity(e.emb, c.cemb), 4)"
       ) AS rn FROM scored
     ) WHERE rn <= 5
     """,
-    headline=True,
     priority="P2",
     tags=("llm", "similarity", "ivf", "scale-path"),
 )
@@ -1175,7 +1173,6 @@ def _kmeans_oracle() -> str:
 
 @register(
     "q_cluster_kmeans",
-    headline=True,
     oracle=_kmeans_oracle(),
     priority="P2",
     tags=("llm", "clustering", "scale-path"),

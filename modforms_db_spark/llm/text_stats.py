@@ -44,7 +44,6 @@ _FP_MOD = 1_000_000_007
     GROUP BY p.lang
     """,
     priority="P1",
-    headline=True,
     tags=("llm", "text"),
 )
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -360,7 +359,6 @@ _BM25_EXPR = (
     ) WHERE rn <= 3
     """,
     priority="P2",
-    headline=True,
     tags=("llm", "text", "bm25"),
 )
 def q_bm25_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -482,7 +480,6 @@ def q_bm25_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     """,
     priority="P2",
-    headline=True,
     tags=("llm", "text", "fingerprint", "winnow"),
 )
 def q_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:

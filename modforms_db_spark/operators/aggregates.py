@@ -41,7 +41,6 @@ EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
     GROUP BY l_returnflag, l_linestatus
     """,
     priority="P0",
-    headline=True,
     tags=("agg", "flagship"),
 )
 def q_agg_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -53,7 +53,6 @@ def q_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE o_orderstatus = 'O'
     """,
     priority="P0",
-    headline=True,
     tags=("join",),
 )
 def q_join_sortmerge(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -382,7 +381,6 @@ def q_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o_orderpriority
     """,
     priority="P2",
-    headline=True,
     tags=("join", "skew", "scale"),
 )
 def q_join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:

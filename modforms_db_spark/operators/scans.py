@@ -36,7 +36,6 @@ def q_scan_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE l_shipdate >= TIMESTAMP '2001-06-01 00:00:00'
     """,
     priority="P0",
-    headline=True,
     tags=("scan", "pushdown"),
 )
 def q_scan_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -141,7 +140,6 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lineitem
     """,
     priority="P2",
-    headline=True,  # bench-guards the metadata-only file-audit path
     tags=("scan", "metadata", "lineage"),
 )
 def q_scan_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:

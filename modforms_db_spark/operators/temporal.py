@@ -92,7 +92,6 @@ def q_scd2_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     WHERE rn = 1 AND event_type <> 'error'
     """,
     priority="P1",
-    headline=True,
     tags=("temporal", "cdc", "window"),
 )
 def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -146,7 +145,6 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN agg a ON a.h = s.h AND a.event_type = t.event_type
     """,
     priority="P1",
-    headline=True,
     tags=("temporal", "gapfill", "rollup"),
 )
 def q_gapfill_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -76,7 +76,6 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_tpch_q5",
-    headline=True,
     oracle=f"""
     SELECT n.n_name, {R2(f'SUM({_REVENUE})')} AS revenue
     FROM customer c

@@ -35,7 +35,6 @@ from modforms_db_spark.session import prep
     ) WHERE rn <= 3
     """,
     priority="P0",
-    headline=True,
     tags=("window", "topk"),
 )
 def q_win_topk_pergroup(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -72,7 +72,6 @@ def q_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY o.o_orderpriority
     """,
     priority="P2",
-    headline=True,  # bench-guards the zero-exchange bucketed-join plan
     tags=("sink", "bucketing", "scale-path"),
 )
 def q_sink_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -254,7 +253,6 @@ def q_source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM customer t FULL OUTER JOIN src s ON t.c_custkey = s.k
     """,
     priority="P1",
-    headline=True,
     tags=("sink", "merge", "etl"),
 )
 def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:

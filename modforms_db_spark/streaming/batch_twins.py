@@ -27,7 +27,6 @@ from modforms_db_spark.session import prep
     FROM events GROUP BY ws, event_type
     """,
     priority="P1",
-    headline=True,
     tags=("streaming", "window"),
 )
 def q_win_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:

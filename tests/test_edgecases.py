@@ -144,112 +144,20 @@ def test_approx_percentile_within_rank_tolerance(spark):
         assert r.median_within and r.p90_within, r
 
 
-def test_driver_row_signal_classification():
-    """The registry's window rotation depends on classifying driver
-    CORRECTNESS rows correctly: hash matches are the strong signal,
-    clean rows-only runs the weak one; errors and hash mismatches carry
-    no signal and must re-enter the front of the window."""
-    from modforms_db_spark.registry import _SIG_HASH, _SIG_ROWS, _row_signal
+def test_driver_views_follow_registration_order():
+    """queries() and oracle_sql() are plain views over the registry: the
+    same names in registration order, mapped to the registered builder
+    and oracle objects, so their order depends on nothing outside the
+    code."""
+    from modforms_db_spark.registry import get_oracle_sql, get_queries
 
-    ok_hash = {"rows_match": True, "schema_match": True, "hash_match": True,
-               "spark_rows": 5, "oracle_rows": 5, "err": None}
-    rows_only = {"rows_match": None, "schema_match": None, "hash_match": None,
-                 "spark_rows": 5, "oracle_rows": None, "err": None}
-    no_oracle_ran = {"rows_match": None, "schema_match": None, "hash_match": None,
-                     "spark_rows": 16, "oracle_rows": None, "err": "no_oracle"}
-    no_oracle_empty = {"rows_match": None, "schema_match": None, "hash_match": None,
-                       "spark_rows": 0, "oracle_rows": None, "err": "no_oracle"}
-    mismatch = {"rows_match": True, "schema_match": True, "hash_match": False,
-                "spark_rows": 5, "oracle_rows": 5, "err": None}
-    crashed = {"rows_match": None, "schema_match": None, "hash_match": None,
-               "spark_rows": None, "oracle_rows": None, "err": "AnalysisException"}
-    assert _row_signal(ok_hash) == _SIG_HASH
-    assert _row_signal(rows_only) == _SIG_ROWS
-    # rows-only-BY-DESIGN: no_oracle + a live row count is the best signal
-    # such a name can earn — tier 1, not tier 0 (it must stop burning one
-    # driver sample slot per round).
-    assert _row_signal(no_oracle_ran) == _SIG_ROWS
-    assert _row_signal(no_oracle_empty) is None
-    assert _row_signal(mismatch) is None
-    assert _row_signal(crashed) is None
-
-
-def test_driver_signals_latest_round_wins(tmp_path):
-    """Signals come from synthetic CORRECTNESS fixtures in a tmpdir (NOT
-    the live repo artifacts — this test must stay green as real rounds
-    accumulate). The LATEST round's row decides each name's tier: a
-    later error demotes an old hash match back to tier 0, a later hash
-    match promotes an old no_oracle error."""
-    import json as _json
-
-    from modforms_db_spark.registry import _SIG_HASH, _SIG_ROWS, _driver_signals
-
-    hash_row = {"hash_match": True, "err": None}
-    rows_row = {"hash_match": None, "rows_match": None, "err": None}
-    err_row = {"hash_match": None, "rows_match": None, "err": "no_oracle"}
-    (tmp_path / "CORRECTNESS_r01.json").write_text(_json.dumps({
-        "q_stays_green": hash_row,
-        "q_regressed": hash_row,
-        "q_promoted": err_row,
-        "q_rows_only": rows_row,
-    }))
-    (tmp_path / "CORRECTNESS_r02.json").write_text(_json.dumps({
-        "q_regressed": err_row,
-        "q_promoted": hash_row,
-    }))
-    sig = _driver_signals(root=str(tmp_path))
-    assert sig["q_stays_green"] == (_SIG_HASH, 1)
-    assert sig["q_promoted"] == (_SIG_HASH, 2)
-    assert sig["q_rows_only"] == (_SIG_ROWS, 1)
-    assert "q_regressed" not in sig  # latest row errored → back to tier 0
-    assert "q_never_sampled" not in sig
-
-
-def test_driver_window_rotation_order():
-    """queries() must order names (signal strength asc, round asc): fresh
-    / failed names lead, then error-free rows-only runs, then hash-verified
-    names oldest-round-first — so the driver's ~50-query sample always
-    covers the least-verified operators and old verifications rotate back
-    in for regression re-checks."""
-    from modforms_db_spark.registry import _driver_signals, get_queries
-
-    signals = _driver_signals()
-    keys = [signals.get(n, (0, 0)) for n in get_queries()]
-    assert keys == sorted(keys)
-    # Tier 0 (never sampled / failed) must lead while any remains.
-    n_tier0 = sum(1 for k in keys if k[0] == 0)
-    assert all(k[0] == 0 for k in keys[:n_tier0])
-
-
-def test_driver_window_family_debt_order():
-    """Within tier 0, families with more never-sampled names must come
-    first (largest verification debt drains first), contiguously, and in
-    registration order within each family — the fix for the llm/ family
-    starving behind module import order for three rounds."""
-    from modforms_db_spark.registry import _driver_signals, get_queries, get_registry
-
-    signals = _driver_signals()
     reg = get_registry()
-    tier0 = [n for n in get_queries() if n not in signals]
-    if not tier0:
-        return  # rotation fully drained — nothing to order
-    # Contiguous family blocks, ordered by descending debt.
-    blocks: list[tuple[str, int]] = []
-    for n in tier0:
-        fam = reg[n].family
-        if blocks and blocks[-1][0] == fam:
-            blocks[-1] = (fam, blocks[-1][1] + 1)
-        else:
-            blocks.append((fam, 1))
-    fams = [f for f, _ in blocks]
-    assert len(fams) == len(set(fams)), f"family split across blocks: {blocks}"
-    counts = [c for _, c in blocks]
-    assert counts == sorted(counts, reverse=True), blocks
-    # Registration order preserved within each family.
-    reg_pos = {n: i for i, n in enumerate(reg)}
-    for fam in fams:
-        members = [reg_pos[n] for n in tier0 if reg[n].family == fam]
-        assert members == sorted(members), fam
+    queries = get_queries()
+    assert list(queries) == list(reg)
+    assert all(queries[n] is q.builder for n, q in reg.items())
+    oracles = get_oracle_sql()
+    assert list(oracles) == [n for n, q in reg.items() if q.oracle]
+    assert all(oracles[n] is reg[n].oracle for n in oracles)
 
 
 def test_survey_inventory_matches_registry():
