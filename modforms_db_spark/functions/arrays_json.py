@@ -22,10 +22,6 @@ from modforms_db_spark.registry import register
 from modforms_db_spark.session import prep
 
 
-def _tokens(df: DataFrame) -> F.Column:
-    return F.split(F.col("text"), " ")
-
-
 @register(
     "q_array_funcs",
     oracle="""

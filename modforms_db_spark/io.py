@@ -98,10 +98,6 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLES}
-
-
 def spread(df: DataFrame, n: int | None = None) -> DataFrame:
     """Round-robin repartition to full parallelism before compute-heavy
     per-row work (tokenization, hashing, shingling).

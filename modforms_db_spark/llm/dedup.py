@@ -511,8 +511,9 @@ def _lsh_groups_rep_pairs(
             F.first("toks").alias("toks"),
         )
     ).localCheckpoint(eager=False)  # reused 4×: sigs, verify (×2 sides),
-    # expand — lazy: materializes inside the first consuming action
-    # instead of a dedicated up-front job; later uses read the blocks
+    # expand — under AQE the shuffle stages above run here, at the call;
+    # the blocks are written by the first consuming action and later
+    # uses read them
 
     # -- Stop-token df cap (SCALE.md §6) -------------------------------
     # Tokens in > _LSH_MAX_DF_FRAC of a lang's distinct sets are dropped

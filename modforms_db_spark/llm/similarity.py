@@ -1108,8 +1108,8 @@ def kmeans_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     prep(spark)
     vecs = _emb(spark, sf_dir).select("vec_id", "emb")
     return kmeans_fit(vecs, _KMEANS_K, _KMEANS_ITERS).localCheckpoint(
-        eager=False  # materializes inside the first consuming action;
-        # later consumers (and later calls) read the blocks
+        eager=False  # under AQE any shuffle stages of the fit run here, at
+        # the call; later consumers (and later calls) read the blocks
     )
 
 

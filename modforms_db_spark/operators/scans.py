@@ -211,7 +211,12 @@ def q_scan_observed(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Observation
 
     obs = Observation("scan_audit")
-    o = load(spark, sf_dir, "orders").observe(
+    # Observe a projection of our own, never the catalog's shared frame:
+    # an observe() on the shared frame stays registered on it, and a
+    # build that is never executed then starves every later call's get.
+    o = load(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_orderstatus"
+    ).observe(
         obs,
         F.count(F.lit(1)).alias("rows_scanned"),
         F.sum(F.col("o_custkey").isNull().cast("long")).alias("null_keys"),

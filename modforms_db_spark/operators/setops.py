@@ -16,14 +16,6 @@ from modforms_db_spark.registry import register
 from modforms_db_spark.session import prep
 
 
-def _seg_keys(spark: SparkSession, sf_dir: str, seg: str) -> DataFrame:
-    return (
-        load(spark, sf_dir, "customer")
-        .where(F.col("c_mktsegment") == seg)
-        .select("c_custkey")
-    )
-
-
 def _buyers_of_type(spark: SparkSession, sf_dir: str, ptype: str) -> DataFrame:
     """Customers who bought a part of the given type (3-way join chain)."""
     li = load(spark, sf_dir, "lineitem")

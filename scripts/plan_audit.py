@@ -29,8 +29,12 @@ join or an unpartitioned window. Checks, per executed-plan tree:
 
     python scripts/plan_audit.py [sf_dir] [--json out.json] [--only regex]
 
-Exit 0 iff every finding is allowlisted. Runs the builders (sink/stream
-operators execute their writes) but never collects result rows.
+Exit 0 iff every finding is allowlisted. tests/test_plans.py runs the
+same sweep through :func:`audit` in the suite's session. It never
+collects result rows, but it is not plan-only: building a query runs
+whatever its builder executes, so sink/stream operators write, and under
+AQE every ``localCheckpoint(eager=False)`` pin runs the shuffle stages
+upstream of it during the build.
 """
 
 from __future__ import annotations
@@ -491,7 +495,7 @@ def main() -> int:
         json_out = sys.argv[sys.argv.index("--json") + 1]
     only = None
     if "--only" in sys.argv:  # iterate fast on a few names; gate runs all
-        only = re.compile(sys.argv[sys.argv.index("--only") + 1])
+        only = sys.argv[sys.argv.index("--only") + 1]
 
     from pyspark.sql import SparkSession
 
@@ -505,10 +509,38 @@ def main() -> int:
         .getOrCreate()
     )
 
+    report, errors = audit(spark, sf_dir, only)
+    for line in finding_lines(report, errors):
+        print(line)
+    total = sum(
+        1 for n in get_registry() if only is None or re.search(only, n)
+    )
+    print(
+        f"findings: {sum(len(v) for v in report.values())} across "
+        f"{len(report)} of {total} queries; {len(errors)} errors ({sf_dir})"
+    )
+    if json_out:
+        with open(json_out, "w") as fh:
+            json.dump({"findings": report, "errors": errors}, fh, indent=1)
+    spark.stop()
+    return 1 if report or errors else 0
+
+
+def audit(
+    spark, sf_dir: str, only: str | None = None
+) -> tuple[dict[str, dict[str, list[str]]], dict[str, str]]:
+    """Build every registered query (or those whose name matches the
+    ``only`` regex) in ``spark`` and check its executed plan.
+
+    Returns ``(report, errors)``: name -> {check: findings} for each query
+    with a finding that is not allowlisted, and name -> message for each
+    builder that raised."""
+    from modforms_db_spark.registry import get_registry
+
     report: dict[str, dict[str, list[str]]] = {}
     errors: dict[str, str] = {}
     for name, q in get_registry().items():
-        if only is not None and not only.search(name):
+        if only is not None and not re.search(only, name):
             continue
         try:
             plan = (
@@ -535,25 +567,21 @@ def main() -> int:
                 findings["dup_scan"] = d
         if findings:
             report[name] = findings
+    return report, errors
 
-    for name, f in sorted(report.items()):
-        for kind, items in f.items():
-            for it in items:
-                print(f"{kind.upper():14s} {name}: {it}")
-    for name, e in sorted(errors.items()):
-        print(f"{'ERROR':14s} {name}: {e[:160]}")
-    total = sum(
-        1 for n in get_registry() if only is None or only.search(n)
-    )
-    print(
-        f"findings: {sum(len(v) for v in report.values())} across "
-        f"{len(report)} of {total} queries; {len(errors)} errors ({sf_dir})"
-    )
-    if json_out:
-        with open(json_out, "w") as fh:
-            json.dump({"findings": report, "errors": errors}, fh, indent=1)
-    spark.stop()
-    return 1 if report or errors else 0
+
+def finding_lines(
+    report: dict[str, dict[str, list[str]]], errors: dict[str, str]
+) -> list[str]:
+    """One printable line per finding and per builder error."""
+    lines = [
+        f"{kind.upper():14s} {name}: {it}"
+        for name, f in sorted(report.items())
+        for kind, items in f.items()
+        for it in items
+    ]
+    lines += [f"{'ERROR':14s} {name}: {e[:160]}" for name, e in sorted(errors.items())]
+    return lines
 
 
 if __name__ == "__main__":

@@ -2018,3 +2018,166 @@ def test_keyset_pagination_equals_offset(spark):
         for r in all_rows[2 * _PAGE_SIZE : 3 * _PAGE_SIZE]
     )
     assert got == want
+
+
+# -- planted/organic behavior contracts of the statistics operators: a
+# hash match proves both engines agree, these prove they agree on the
+# RIGHT thing
+
+
+def _run(spark, name, sf=SF_DIR):
+    return get_registry()[name].builder(spark, sf).toPandas()
+
+
+def test_sprt_verdicts_and_stopping(spark):
+    df = _run(spark, "q_sprt_monitor").set_index("stream")
+    assert df.loc["null_5pct", "decision"] == "accept_h0"
+    assert df.loc["alt_10pct", "decision"] == "reject_h0"
+    assert df.loc["organic_purchase", "decision"] == "reject_h0"
+    # sequential tests stop sooner the further truth is from H0
+    assert (
+        df.loc["organic_purchase", "n_decide"]
+        < df.loc["alt_10pct", "n_decide"]
+    )
+    # a decision row's LLR must sit outside the corridor
+    from modforms_db_spark.operators.aggregates import _SPRT_A
+
+    decided = df[df["decision"] != "undecided"]
+    assert (decided["llr8_decide"].abs() >= _SPRT_A).all()
+
+
+def test_obf_null_never_crosses_and_bounds_decrease(spark):
+    df = _run(spark, "q_group_sequential_obf")
+    null = df[df["scope"] == "null"]
+    assert not null["crossed"].any()
+    bounds = df.sort_values("look")["bound"].drop_duplicates().tolist()
+    assert bounds == sorted(bounds, reverse=True)  # OBF spends late
+    planted = df[df["scope"] == "planted"].sort_values("look")
+    # once crossed, the design stops — the final look must be crossed
+    # whenever any earlier look was (z grows with information here)
+    if planted["crossed"].any():
+        assert planted.iloc[-1]["crossed"]
+
+
+def test_jarque_bera_three_regimes(spark):
+    df = _run(spark, "q_jarque_bera").set_index("scope")
+    assert not df.loc["binomial_planted", "reject"]
+    assert df.loc["organic_value", "reject"]
+    assert df.loc["uniform_planted", "reject"]
+    # opposite kurtosis tails
+    assert df.loc["organic_value", "exkurt4"] > 0
+    assert df.loc["uniform_planted", "exkurt4"] < 0
+    # SF-invariant panel
+    assert (df["n"] == 1000).all()
+
+
+def test_breusch_pagan_branches(spark):
+    df = _run(spark, "q_breusch_pagan").set_index("scope")
+    assert df.loc["planted", "heteroscedastic"]
+    assert not df.loc["organic", "heteroscedastic"]
+
+
+def test_matching_recovers_tau_where_naive_fails(spark):
+    row = _run(spark, "q_matching_att").iloc[0]
+    tau = 5.0
+    assert abs(row["att2"] - tau) < 1.5
+    assert row["naive_diff2"] - tau > 10  # confounding bias is large
+    assert 0 < row["n_matched"] <= row["n_treated"]
+
+
+def test_mediation_branches(spark):
+    df = _run(spark, "q_mediation_sobel").set_index("scope")
+    assert df.loc["planted", "mediated"]
+    assert not df.loc["null", "mediated"]
+    # b is large in BOTH panels — the trap the test exists to avoid
+    assert df.loc["null", "b4"] > 1.5
+    assert abs(df.loc["planted", "a4"] - 10.0) < 2.0
+
+
+def test_qte_constant_shift_signature(spark):
+    df = _run(spark, "q_quantile_treatment_effect")
+    null = df[df["scope"] == "null"].set_index("p")["qte2"]
+    shifted = df[df["scope"] == "shifted"].set_index("p")["qte2"]
+    for p in (25, 50, 90):
+        assert abs((shifted.loc[p] - null.loc[p]) - 20.0) < 1e-9
+
+
+def test_wasserstein_shift_dominates(spark):
+    df = _run(spark, "q_wasserstein_drift").set_index("scope")
+    w_null = df.loc["null", "w1_dollars4"]
+    w_shift = df.loc["shifted", "w1_dollars4"]
+    assert abs(w_shift - 20.0) < w_null  # the shift dominates
+    assert w_null < 5  # hash-split noise, priced in dollars
+
+
+def test_tail_dependence_branches(spark):
+    df = _run(spark, "q_tail_dependence").set_index("scope")
+    assert df.loc["dependent", "tail_dependent"]
+    assert not df.loc["independent", "tail_dependent"]
+    # independent lambda_U floors at the tail mass q = 0.05, not 0
+    assert 0.0 <= df.loc["independent", "lambda_u4"] < 0.15
+    assert abs(df.loc["dependent", "lambda_u4"] - 0.30) < 0.05
+
+
+def test_meta_analysis_heterogeneity_flag(spark):
+    df = _run(spark, "q_meta_analysis").set_index("scope")
+    assert df.loc["planted", "heterogeneous"]
+    assert not df.loc["organic", "heterogeneous"]
+    assert df.loc["organic", "i2_4"] < 0.5
+    assert df.loc["planted", "q_het4"] > df.loc["organic", "q_het4"]
+
+
+def test_ht_systematic_pps_beats_poisson_srs(spark):
+    df = _run(spark, "q_ht_estimator").set_index("method")
+    # fixed-size systematic pps with a perfect size measure: ~1/n0 error
+    assert df.loc["pps", "rel_err4"] < 0.02
+    # Poisson SRS carries per-row AND size noise
+    assert df.loc["pps", "rel_err4"] < df.loc["srs", "rel_err4"]
+    # systematic selection is fixed-size by construction (n0 +- 1)
+    assert abs(df.loc["pps", "n_sampled"] - 100) <= 1
+
+
+def test_d38_widened_sum_is_exact_where_long_sum_wraps(spark):
+    """The r10 overflow sweep's mechanism. Spark accumulates SUM(BIGINT)
+    in a raw long, so a partial sum past 2^63 either kills the job
+    (ANSI on — Spark 4's default, what our sessions run) or silently
+    WRAPS to a wrong value (ANSI off, the common compatibility
+    setting). parity.d38 widens the operand to decimal(38,0), whose
+    accumulator is exact to 1e38, so the same sum is simply CORRECT
+    under both configs — the fix applied to every wrap-prone moment
+    sum (squares, cross-moments, tie cubes, rank sums); see d38's
+    docstring for the threshold arithmetic."""
+    import pytest
+
+    from modforms_db_spark.parity import d38
+
+    df = spark.range(3).select(F.lit(2**62).alias("v"))
+    # ANSI on (default): the long accumulator overflow is a hard error —
+    # at 100 TB that's a dead query, not a wrong number.
+    with pytest.raises(Exception, match="(?i)overflow"):
+        df.agg(F.sum("v")).collect()
+    # ANSI off: the same sum silently wraps negative — worse.
+    prev = spark.conf.get("spark.sql.ansi.enabled", None)
+    try:
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        wrapped = df.agg(F.sum("v").alias("s")).collect()[0]["s"]
+        assert wrapped < 0
+        # d38 is exact under ANSI off...
+        exact = df.agg(F.sum(d38("v")).alias("s")).collect()[0]["s"]
+        assert int(exact) == 3 * 2**62
+    finally:
+        if prev is None:
+            spark.conf.unset("spark.sql.ansi.enabled")
+        else:
+            spark.conf.set("spark.sql.ansi.enabled", prev)
+    # ...and under the default config too.
+    exact_default = df.agg(F.sum(d38("v")).alias("s")).collect()[0]["s"]
+    assert int(exact_default) == 3 * 2**62
+
+    # per-term product overflow (the tie-cube case): long*long overflows
+    # in the MULTIPLY; d38 on the first operand keeps the product exact.
+    big = spark.range(1).select(F.lit(2**40).alias("t"))
+    with pytest.raises(Exception, match="(?i)overflow"):
+        big.select((F.col("t") * F.col("t")).alias("p")).collect()
+    prod_dec = big.select((d38("t") * F.col("t")).alias("p")).collect()[0]["p"]
+    assert int(prod_dec) == 2**80

@@ -9,6 +9,8 @@ from __future__ import annotations
 import os
 import re
 
+from pyspark.sql import functions as F
+
 from modforms_db_spark.registry import get_registry
 
 from tests.conftest import SF_DIR
@@ -557,25 +559,18 @@ def test_banded_twins_partition_their_big_windows(spark):
                 assert "_mfdb_band" in l or "day" in l, (name, l)
 
 
-def test_plan_audit_is_green():
-    """Registry-wide plan audit (scripts/plan_audit.py) must exit 0:
-    every cartesian/row-UDF/global-window/dup-scan finding is either
-    fixed or consciously allowlisted WITH a reason (VERDICT r5 item 1).
-    Runs in a subprocess (own SparkSession, sf0.001) so a red audit —
-    i.e. the NEXT operator someone adds with a quadratic join or an
-    unpartitioned window — fails the suite, not just the script."""
-    import subprocess
-    import sys
+def test_plan_audit_is_green(spark):
+    """Registry-wide plan audit (scripts/plan_audit.py) in the suite's
+    session: every cartesian/row-UDF/global-window/dup-scan finding is
+    either fixed or consciously allowlisted WITH a reason, so the NEXT
+    operator someone adds with a quadratic join or an unpartitioned
+    window fails the suite, not just the script."""
+    from scripts.plan_audit import audit, finding_lines
 
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    proc = subprocess.run(
-        [sys.executable, os.path.join(repo, "scripts", "plan_audit.py")],
-        capture_output=True,
-        text=True,
-        timeout=1800,
+    report, errors = audit(spark, SF_DIR)
+    assert not report and not errors, "plan audit red:\n" + "\n".join(
+        finding_lines(report, errors)
     )
-    tail = "\n".join(proc.stdout.splitlines()[-25:])
-    assert proc.returncode == 0, f"plan audit red:\n{tail}\n{proc.stderr[-2000:]}"
 
 
 def test_bloom_filter_sink_grows_footprint(spark, tmp_path):
@@ -619,3 +614,117 @@ def test_bloom_filter_sink_grows_footprint(spark, tmp_path):
         spark.read.parquet(bloom_dir).count()
         == spark.read.parquet(plain_dir).count()
     )
+
+
+# -- k-means, semantic-dedup and PCA plan shapes
+
+
+def test_kmeans_assignment_never_shuffles_vector_side(spark):
+    """The r9 kmeans_fit shape: assignment = 1-row packed-centroid
+    broadcast crossJoin + array_min projection. Its physical plan must
+    contain a BroadcastNestedLoopJoin and NO sort-merge join and NO
+    shuffle of the vector side (the only Exchange feeding the join may
+    be the broadcast one; the r1-r8 form shuffled k copies of every
+    quantized vector per round through a groupBy(vec_id) argmin)."""
+    from modforms_db_spark.llm.similarity import (
+        _emb,
+        _kmeans_assign_packed,
+        _pack_centroids,
+    )
+
+    qv = _emb(spark, SF_DIR).select(
+        "vec_id",
+        F.transform(
+            "emb", lambda x: F.round(x.cast("double") * 1000, 0).cast("bigint")
+        ).alias("qe"),
+    )
+    packed = _pack_centroids(
+        qv.limit(4).select(F.lit(1).alias("cluster"), F.col("qe").alias("c_qe"))
+    )
+    plan = (
+        _kmeans_assign_packed(qv, packed)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "BroadcastNestedLoopJoin" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    # No hash-partitioned exchange anywhere in the assignment: the only
+    # exchanges allowed are the broadcast of the packed row and the
+    # single-partition one under its own limit/agg — never a
+    # hashpartitioning of vec_id.
+    assert "hashpartitioning(vec_id" not in plan, plan
+
+
+def test_semantic_pairs_leg_is_broadcast_join(spark):
+    """q_dedup_semantic's within-cluster pairwise join must be a
+    broadcast-hash join with NO sort-merge join on the cluster key: a
+    shuffle join keyed on 8 cluster ids caps the ~250k cosine folds at
+    min(8, shuffle.partitions) tasks — the r8 starvation pattern. The
+    probe side keeps its spread() round-robin layout through the
+    narrow broadcast join."""
+    from modforms_db_spark.registry import get_registry
+
+    df = get_registry()["q_dedup_semantic"].builder(spark, SF_DIR)
+    # The returned frame ends at the CC output join; the pairs leg was
+    # already executed eagerly inside connected_components' entry
+    # checkpoint, so re-derive the pairs plan the same way the builder
+    # does and audit THAT. Cheaper: audit the full builder's effect by
+    # re-running the leg construction here.
+    import modforms_db_spark.llm.similarity as sim
+    from modforms_db_spark.io import spread
+    from modforms_db_spark.llm.similarity import _dot, _emb, _norm
+
+    vecs = (
+        _emb(spark, SF_DIR)
+        .select("vec_id", "emb")
+        .withColumn("nrm", _norm("emb"))
+    )
+    asg = sim.kmeans_core(spark, SF_DIR).select("vec_id", "cluster")
+    v = vecs.join(asg, "vec_id")
+    a = spread(
+        v.select(
+            "cluster",
+            F.col("vec_id").alias("d1"),
+            F.col("emb").alias("e1"),
+            F.col("nrm").alias("n1"),
+        )
+    )
+    b = v.select(
+        "cluster",
+        F.col("vec_id").alias("d2"),
+        F.col("emb").alias("e2"),
+        F.col("nrm").alias("n2"),
+    )
+    cos4 = F.round(_dot("e1", "e2") / (F.col("n1") * F.col("n2")), 4)
+    pairs = (
+        a.join(F.broadcast(b), "cluster")
+        .where(F.col("d1") < F.col("d2"))
+        .where(cos4 >= 0.45)
+        .select("d1", "d2")
+    )
+    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    assert "BroadcastHashJoin" in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    assert "hashpartitioning(cluster" not in plan, plan
+    assert df is not None  # builder constructed without error
+    sim.kmeans_core_cache_clear()
+
+
+def test_pca_matvec_runs_on_packed_row_no_joins(spark):
+    """r10 q_pca_power contract: after the Gram pack, every power-
+    iteration round is a projection over a one-row frame — the final
+    plan must contain no join and no embeddings scan (the single
+    data-sized pass lives behind the packed checkpoint)."""
+    from modforms_db_spark.registry import get_registry
+
+    df = get_registry()["q_pca_power"].builder(spark, SF_DIR)
+    plan = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
+            "formatted"
+        )
+    )
+    assert "FileScan parquet" not in plan
+    assert "Join" not in plan and "Exchange" not in plan
+    # and the result is still the 64-dim loading vector
+    assert df.count() == 64

@@ -237,6 +237,28 @@ def test_scan_observed_metrics(spark):
     assert m["null_keys"] == 0
 
 
+def test_scan_observed_metrics_after_unexecuted_build(spark):
+    """A q_scan_observed frame that is built and never executed must not
+    starve a later call's Observation: the builder observes a frame of
+    its own, not the catalog's shared orders frame. The read runs on a
+    daemon thread with a bounded wait, so a regression fails instead of
+    hanging the suite."""
+    import threading
+
+    from modforms_db_spark.io import load
+    from modforms_db_spark.operators.scans import q_scan_observed
+
+    _q("q_scan_observed")(spark, SF_DIR)  # built, never executed
+    _q("q_scan_observed")(spark, SF_DIR).collect()
+    obs = q_scan_observed.last_observation
+    got = {}
+    reader = threading.Thread(target=lambda: got.update(obs.get), daemon=True)
+    reader.start()
+    reader.join(timeout=30)
+    assert not reader.is_alive(), "Observation.get still blocked after 30 s"
+    assert got["rows_scanned"] == load(spark, SF_DIR, "orders").count()
+
+
 def _write_empty_events(spark, tmpdir: str) -> str:
     # Raw layout of events.parquet: ts is INT64 nanoseconds (io.py reads
     # it with nanosAsLong and converts) — an empty frame with that schema.
@@ -514,3 +536,62 @@ def test_assortativity_bounded(spark):
     assert r.mean_out_deg > 0 and r.mean_in_deg > 0
     if r.assortativity is not None:
         assert -1.0 <= r.assortativity <= 1.0
+
+
+# -- planted/organic behavior contracts of the temporal operators
+
+
+def _run(spark, name, sf=SF_DIR):
+    return _q(name)(spark, sf).toPandas()
+
+
+def test_runs_test_branches(spark):
+    df = _run(spark, "q_runs_test").set_index("stream")
+    assert df.loc["ramp_planted", "reject"] and df.loc["ramp_planted", "r_runs"] == 2
+    assert df.loc["zigzag_planted", "reject"]
+    assert df.loc["zigzag_planted", "z4"] > 0 > df.loc["ramp_planted", "z4"]
+    organic = df.drop(index=["ramp_planted", "zigzag_planted"])
+    assert not organic["reject"].any()
+
+
+def test_spc_xbar_flags_only_planted_shift(spark):
+    df = _run(spark, "q_spc_xbar")
+    organic = df[df["scope"] == "organic"]
+    assert not organic["out_of_control"].any()
+    planted17 = df[(df["scope"] == "planted") & (df["d"] == 17)]
+    assert planted17["out_of_control"].all()
+    # limits bracket the center line ordering
+    assert (df["lcl4"] < df["ucl4"]).all()
+
+
+def test_event_study_shape(spark):
+    df = _run(spark, "q_event_study")
+    p = df[df["scope"] == "planted"].set_index("tau")["mean_abnormal4"]
+    assert p.loc[0] > 40000 and p.loc[1] > 15000
+    # flat pre-trend: nothing before tau=0 approaches the jump
+    assert p.loc[[-3, -2, -1]].abs().max() < p.loc[0] / 10
+
+
+def test_markov_attribution_shares(spark):
+    df = _run(spark, "q_markov_attribution")
+    assert len(df) == 4
+    assert abs(df["share4"].sum() - 1.0) < 0.01
+    assert (df["removal_effect4"] > 0).all()  # every channel carries paths
+    assert (df["p_removed4"] < df["removal_effect4"] * 0 + 1).all()
+
+
+def test_ljung_box_branches(spark):
+    df = _run(spark, "q_ljung_box").set_index("stream")
+    assert df.loc["randomwalk_planted", "reject"]
+    organic = df.drop(index="randomwalk_planted")
+    assert not organic["reject"].any()
+    assert df.loc["randomwalk_planted", "lb4"] > 5 * organic["lb4"].max()
+
+
+def test_binseg_recovers_both_boundaries(spark):
+    df = _run(spark, "q_changepoint_binseg")
+    planted = df[df["stream"] == "shifts_planted"]
+    assert sorted(planted["cp_d"].tolist()) == [10, 20]
+    assert (planted["rel_gain4"] > 0.45).all()
+    # organic streams emit nothing — the honest negative
+    assert (df["stream"] == "shifts_planted").all()
