@@ -6,6 +6,10 @@ Two distinct paths:
   local[$SPARK_GRAFT_CPUS], AQE on, shuffle partitions sized for single-node SF
   (SURVEY.md §4: "8-32, not the 200 default"), UTC timezone, Arrow enabled.
   Without the env vars, cores and driver memory come from the host.
+  Its sessions are mostly short (CLI, audits, benchmark runs), and C2
+  compilation dominates their set-up CPU, so the driver JVM compiles with
+  C1 only: a slower steady state (the long test suite pays it) traded
+  for a cheaper start.
 - :func:`prep` — called at the top of every registered query builder, because the
   DRIVER owns the session there (__spark_entry__.py contract). Only touches
   runtime-settable confs that correctness depends on (timezone; Arrow for the
@@ -40,6 +44,12 @@ if TYPE_CHECKING:
 # Upper bound of the host-derived driver memory default.
 _MAX_DRIVER_MB = 16 * 1024
 
+# Driver JVM options of the factory's sessions: C1-only JIT compilation,
+# with the code cache kept at the tiered JVM's 240m. Alone, C1-only
+# shrinks it to 48m, which a whole test suite fills, so the JVM keeps
+# evicting and recompiling code.
+_DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
+
 
 def _host_driver_mem() -> str:
     """The host's MemTotal from ``/proc/meminfo``, capped at 16g."""
@@ -61,6 +71,7 @@ def get_spark(app_name: str = "modforms-db-spark") -> SparkSession:
         .config("spark.sql.shuffle.partitions", shuffle)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", mem)
+        .config("spark.driver.extraJavaOptions", _DRIVER_JAVA_OPTIONS)
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

@@ -29,8 +29,10 @@ join or an unpartitioned window. Checks, per executed-plan tree:
 
     python scripts/plan_audit.py [sf_dir] [--json out.json] [--only regex]
 
-Exit 0 iff every finding is allowlisted. tests/test_plans.py runs the
-same sweep through :func:`audit` in the suite's session. It never
+Exit 0 iff every finding is allowlisted. The CLI audits in a
+``session.get_spark`` session, and tests/test_plans.py runs the same
+sweep through :func:`audit` in the suite's, so both share one session
+factory (cores, confs, JVM options). It never
 collects result rows, but it is not plan-only: building a query runs
 whatever its builder executes, so sink/stream operators write, and under
 AQE every ``localCheckpoint(eager=False)`` pin runs the shuffle stages
@@ -39,6 +41,7 @@ upstream of it during the build.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
 import re
@@ -487,40 +490,43 @@ def _dup_scan_findings(plan: str) -> list[str]:
     return [f"{t} x{n}" for t, n in sorted(counts.items()) if n > 1]
 
 
-def main() -> int:
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    sf_dir = args[0] if args else "/root/testdata/sf0.001"
-    json_out = None
-    if "--json" in sys.argv:
-        json_out = sys.argv[sys.argv.index("--json") + 1]
-    only = None
-    if "--only" in sys.argv:  # iterate fast on a few names; gate runs all
-        only = sys.argv[sys.argv.index("--only") + 1]
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(
+        description="Audit every registered query's physical plan."
+    )
+    ap.add_argument(
+        "sf_dir",
+        nargs="?",
+        default="/root/testdata/sf0.001",
+        help="directory of the input tables' parquet files (default: %(default)s)",
+    )
+    ap.add_argument("--json", metavar="OUT", help="also write the report here")
+    ap.add_argument(
+        "--only", metavar="REGEX", help="audit only the matching names"
+    )
+    return ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+
+def main(argv: list[str] | None = None) -> int:
+    a = parse_args(argv)
 
     from modforms_db_spark.registry import get_registry
-    from modforms_db_spark.session import prep
+    from modforms_db_spark.session import get_spark
 
-    spark = prep(
-        SparkSession.builder.master("local[8]")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.shuffle.partitions", "8")
-        .getOrCreate()
-    )
+    spark = get_spark("plan-audit")
 
-    report, errors = audit(spark, sf_dir, only)
+    report, errors = audit(spark, a.sf_dir, a.only)
     for line in finding_lines(report, errors):
         print(line)
     total = sum(
-        1 for n in get_registry() if only is None or re.search(only, n)
+        1 for n in get_registry() if a.only is None or re.search(a.only, n)
     )
     print(
         f"findings: {sum(len(v) for v in report.values())} across "
-        f"{len(report)} of {total} queries; {len(errors)} errors ({sf_dir})"
+        f"{len(report)} of {total} queries; {len(errors)} errors ({a.sf_dir})"
     )
-    if json_out:
-        with open(json_out, "w") as fh:
+    if a.json:
+        with open(a.json, "w") as fh:
             json.dump({"findings": report, "errors": errors}, fh, indent=1)
     spark.stop()
     return 1 if report or errors else 0

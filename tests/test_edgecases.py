@@ -5,6 +5,11 @@ groups, empty arrays, malformed JSON — plus property-style invariants
 
 from __future__ import annotations
 
+import ast
+import glob
+import os
+import re
+
 from pyspark.sql import Row, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -2181,3 +2186,70 @@ def test_d38_widened_sum_is_exact_where_long_sum_wraps(spark):
         big.select((F.col("t") * F.col("t")).alias("p")).collect()
     prod_dec = big.select((d38("t") * F.col("t")).alias("p")).collect()[0]["p"]
     assert int(prod_dec) == 2**80
+
+
+# Nondeterministic calls the engine may make, as (path under the
+# package, function): each names something other than a result value.
+_NONDET_ALLOW = {
+    # the JSON-lines sink's part-file name; never written into a row
+    ("sources/python_ds.py", "uuid4"),
+}
+_NONDET_FUNCS = {"rand", "randn", "shuffle", "monotonically_increasing_id"}
+_NONDET_SQL = re.compile(
+    r"\b(rand|randn|shuffle|uuid\w*|monotonically_increasing_id)\s*\(", re.I
+)
+
+
+def _nondet_uses(path: str, rel: str) -> list[str]:
+    """Calls, and SQL text outside docstrings, in ``path`` that draw a
+    random or order-dependent value and are not in the allowlist."""
+    with open(path) as fh:
+        tree = ast.parse(fh.read(), path)
+    docs = {
+        id(n.body[0].value)
+        for n in ast.walk(tree)
+        if isinstance(
+            n, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        )
+        and n.body
+        and isinstance(n.body[0], ast.Expr)
+        and isinstance(n.body[0].value, ast.Constant)
+    }
+    out = []
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            f = node.func
+            name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+            if (
+                name
+                and (name in _NONDET_FUNCS or name.startswith("uuid"))
+                and (rel, name) not in _NONDET_ALLOW
+            ):
+                out.append(f"{rel}:{node.lineno} {name}()")
+        elif (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and id(node) not in docs
+            and (m := _NONDET_SQL.search(node.value))
+        ):
+            out.append(f"{rel}:{node.lineno} SQL {m.group(0)}")
+    return out
+
+
+def test_engine_draws_no_random_values():
+    """No engine module calls rand, randn, shuffle, uuid* or
+    monotonically_increasing_id, in Python or in SQL text, outside the
+    allowlist: recomputing a frame (a lazy checkpoint re-run, a cache
+    rebuild) cannot change its values."""
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "modforms_db_spark",
+    )
+    paths = glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)
+    assert len(paths) > 10, pkg
+    found = [
+        use
+        for p in sorted(paths)
+        for use in _nondet_uses(p, os.path.relpath(p, pkg))
+    ]
+    assert not found, "nondeterministic calls in the engine:\n" + "\n".join(found)

@@ -573,6 +573,20 @@ def test_plan_audit_is_green(spark):
     )
 
 
+def test_plan_audit_cli_args():
+    """The CLI's optional ``sf_dir`` is never taken from an option's
+    value, so ``--only``/``--json`` alone audit the default directory."""
+    from scripts.plan_audit import parse_args
+
+    default = parse_args([]).sf_dir
+    a = parse_args(["--only", "^q_scan"])
+    assert (a.sf_dir, a.only, a.json) == (default, "^q_scan", None)
+    a = parse_args(["--json", "out.json"])
+    assert (a.sf_dir, a.only, a.json) == (default, None, "out.json")
+    a = parse_args(["--only", "x", "some/sf", "--json", "o.json"])
+    assert (a.sf_dir, a.only, a.json) == ("some/sf", "x", "o.json")
+
+
 def test_bloom_filter_sink_grows_footprint(spark, tmp_path):
     """q_sink_parquet_bloom's layout claim, proven from the bytes on disk:
     neither pyarrow 16 nor DuckDB 1.0 exposes bloom_filter_offset, so the

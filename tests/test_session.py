@@ -79,6 +79,15 @@ def test_host_driver_mem_is_capped():
     assert 0 < mb <= _MAX_DRIVER_MB
 
 
+def test_get_spark_jvm_is_c1_only(spark):
+    """The factory's driver JVM was started with C1-only compilation and
+    the tiered JVM's code cache size."""
+    mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    args = list(mx.getRuntimeMXBean().getInputArguments())
+    assert "-XX:TieredStopAtLevel=1" in args, args
+    assert "-XX:ReservedCodeCacheSize=240m" in args, args
+
+
 _WORKER = r"""
 import os
 
