@@ -6,10 +6,13 @@ Two distinct paths:
   local[$SPARK_GRAFT_CPUS], AQE on, shuffle partitions sized for single-node SF
   (SURVEY.md §4: "8-32, not the 200 default"), UTC timezone, Arrow enabled.
   Without the env vars, cores and driver memory come from the host.
-  Its sessions are mostly short (CLI, audits, benchmark runs), and C2
-  compilation dominates their set-up CPU, so the driver JVM compiles with
-  C1 only: a slower steady state (the long test suite pays it) traded
-  for a cheaper start.
+  Its driver JVM's compiler follows the session's length. A short session
+  (one CLI query, one benchmark run) compiles C1-only: C2 compilation is
+  most of its set-up CPU and a run of a minute never earns it back. A
+  ``long_lived`` one (the test suite and the audit scripts, which each run
+  the whole registry for minutes) keeps the default tiered JIT: there C1
+  code still saves CPU but costs wall time, and the suite runs against a
+  wall-clock timeout.
 - :func:`prep` — called at the top of every registered query builder, because the
   DRIVER owns the session there (__spark_entry__.py contract). Only touches
   runtime-settable confs that correctness depends on (timezone; Arrow for the
@@ -44,11 +47,12 @@ if TYPE_CHECKING:
 # Upper bound of the host-derived driver memory default.
 _MAX_DRIVER_MB = 16 * 1024
 
-# Driver JVM options of the factory's sessions: C1-only JIT compilation,
-# with the code cache kept at the tiered JVM's 240m. Alone, C1-only
-# shrinks it to 48m, which a whole test suite fills, so the JVM keeps
-# evicting and recompiling code.
-_DRIVER_JAVA_OPTIONS = "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
+# Driver JVM options of the factory's short sessions: C1-only JIT
+# compilation, with the code cache kept at the tiered JVM's 240m (C1-only
+# alone shrinks it to 48m).
+_SHORT_SESSION_JAVA_OPTIONS = (
+    "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
+)
 
 
 def _host_driver_mem() -> str:
@@ -58,12 +62,22 @@ def _host_driver_mem() -> str:
     return f"{min(kb // 1024, _MAX_DRIVER_MB)}m"
 
 
-def get_spark(app_name: str = "modforms-db-spark") -> SparkSession:
+def get_spark(
+    app_name: str = "modforms-db-spark", *, long_lived: bool = False
+) -> SparkSession:
+    """The factory's session. ``long_lived=True`` keeps the driver JVM's
+    default tiered compilation; otherwise it compiles C1-only (see the
+    module docstring). Either only acts when this call starts the JVM."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     mem = os.environ.get("MFDB_DRIVER_MEM") or _host_driver_mem()
     shuffle = os.environ.get("MFDB_SHUFFLE_PARTITIONS", "32")
+    builder = SparkSession.builder
+    if not long_lived:
+        builder = builder.config(
+            "spark.driver.extraJavaOptions", _SHORT_SESSION_JAVA_OPTIONS
+        )
     spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
+        builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.adaptive.enabled", "true")
@@ -71,7 +85,6 @@ def get_spark(app_name: str = "modforms-db-spark") -> SparkSession:
         .config("spark.sql.shuffle.partitions", shuffle)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", mem)
-        .config("spark.driver.extraJavaOptions", _DRIVER_JAVA_OPTIONS)
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )

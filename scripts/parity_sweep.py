@@ -37,7 +37,7 @@ def main() -> int:
         with open(log_path) as fh:
             done = {line.split("\t")[1] for line in fh if "\t" in line}
 
-    spark = get_spark("parity-sweep")
+    spark = get_spark("parity-sweep", long_lived=True)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in (

@@ -513,7 +513,7 @@ def main(argv: list[str] | None = None) -> int:
     from modforms_db_spark.registry import get_registry
     from modforms_db_spark.session import get_spark
 
-    spark = get_spark("plan-audit")
+    spark = get_spark("plan-audit", long_lived=True)
 
     report, errors = audit(spark, a.sf_dir, a.only)
     for line in finding_lines(report, errors):

@@ -32,7 +32,7 @@ def main() -> int:
     from modforms_db_spark.registry import get_registry
     from modforms_db_spark.session import get_spark
 
-    spark = get_spark("vacuity-audit")
+    spark = get_spark("vacuity-audit", long_lived=True)
     spark.sparkContext.setLogLevel("ERROR")
     reg = get_registry()
     always_empty: list[str] = []

@@ -24,7 +24,7 @@ def spark():
     os.environ.setdefault("MFDB_SHUFFLE_PARTITIONS", "8")
     from modforms_db_spark.session import get_spark
 
-    s = get_spark("mfdb-tests")
+    s = get_spark("mfdb-tests", long_lived=True)
     yield s
     s.stop()
 

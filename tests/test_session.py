@@ -79,13 +79,48 @@ def test_host_driver_mem_is_capped():
     assert 0 < mb <= _MAX_DRIVER_MB
 
 
-def test_get_spark_jvm_is_c1_only(spark):
-    """The factory's driver JVM was started with C1-only compilation and
-    the tiered JVM's code cache size."""
+def _jvm_input_args(spark) -> list[str]:
     mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
-    args = list(mx.getRuntimeMXBean().getInputArguments())
-    assert "-XX:TieredStopAtLevel=1" in args, args
-    assert "-XX:ReservedCodeCacheSize=240m" in args, args
+    return list(mx.getRuntimeMXBean().getInputArguments())
+
+
+def test_long_lived_session_keeps_tiered_jit(spark):
+    """The suite's ``long_lived`` session runs on the JVM's default
+    tiered compilation."""
+    args = _jvm_input_args(spark)
+    assert not any(a.startswith("-XX:TieredStopAtLevel") for a in args), args
+
+
+_C1_PROBE = r"""
+from modforms_db_spark.session import get_spark
+from tests.test_session import _jvm_input_args
+
+print("ARGS", _jvm_input_args(get_spark("mfdb-jvm-probe")))
+"""
+
+
+def test_get_spark_jvm_is_c1_only(tmp_path):
+    """A default (short) session's driver JVM starts with C1-only
+    compilation and the tiered JVM's code cache size. It needs a JVM of
+    its own, so it runs in a child process."""
+    env = dict(
+        os.environ,
+        PYTHONPATH=REPO,
+        SPARK_GRAFT_CPUS="1",
+        MFDB_DRIVER_MEM="512m",
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", _C1_PROBE],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    args = next(ln for ln in out.stdout.splitlines() if ln.startswith("ARGS "))
+    assert "'-XX:TieredStopAtLevel=1'" in args, args
+    assert "'-XX:ReservedCodeCacheSize=240m'" in args, args
 
 
 _WORKER = r"""
