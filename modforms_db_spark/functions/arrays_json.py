@@ -19,7 +19,6 @@ from modforms_db_spark.io import load
 from modforms_db_spark.oracle_dialect import R4
 from modforms_db_spark.parity import r4
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
 
 
 @register(
@@ -40,7 +39,6 @@ from modforms_db_spark.session import prep
 )
 def q_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array bundle over tokenized text — ap-list manipulation [R]."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     return d.select(
@@ -67,7 +65,6 @@ def q_array_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_array_explode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """posexplode to long format — unpack ap-chunks [R]. Spark pos is
     0-based, generate_subscripts 1-based → pos + 1."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     toks = F.split(F.col("text"), " ")
     return d.select("doc_id", F.posexplode(toks).alias("pos", "word")).select(
@@ -92,7 +89,6 @@ def q_array_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Higher-order functions (transform / filter / aggregate fold) —
     elementwise ops on coefficient vectors [R]. Folds run in element order
     on both engines, so float sums match bit-for-bit before rounding."""
-    prep(spark)
     e = load(spark, sf_dir, "embeddings")
     emb = F.col("embedding").cast("array<double>")
     return e.select(
@@ -125,7 +121,6 @@ def q_array_higher_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """from_json → MapType access — schemaless metadata [R]."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     m = F.from_json(F.col("props"), "map<string,bigint>")
     return e.select(
@@ -151,7 +146,6 @@ def q_map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_json_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON extraction two ways (path + typed struct) — Mongo document
     field access [R]. Both must agree with the oracle's json_extract."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     k_path = F.get_json_object(F.col("props"), "$.k").cast("bigint")
     k_struct = F.from_json(F.col("props"), "struct<k:bigint>").getField("k")
@@ -186,7 +180,6 @@ def q_json_variant(spark: SparkSession, sf_dir: str) -> DataFrame:
     storage), where `from_json` with a fixed struct is the schema-known
     answer.
     """
-    prep(spark)
     e = load(spark, sf_dir, "events")
     v = F.parse_json("props")
     return e.where(F.col("event_id") < 200).select(

@@ -18,7 +18,6 @@ from modforms_db_spark.io import load
 from modforms_db_spark.oracle_dialect import R4
 from modforms_db_spark.parity import r4
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
 
 
 @register(
@@ -41,7 +40,6 @@ from modforms_db_spark.session import prep
 def q_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Date bundle — version-date handling [R]. All extracts return BIGINT
     on DuckDB, so Spark's INTs are cast up; dow aligned to 0-based Sunday."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     d = F.col("o_orderdate")
     return o.select(
@@ -84,7 +82,6 @@ def q_date_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Math bundle — dimension formulas / normalizations [R]."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     price = F.col("l_extendedprice")
     return li.select(
@@ -123,7 +120,6 @@ def q_math_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_cond_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CASE WHEN / if / coalesce / nullif — flag derivation (is_cm,
     is_complete) [R]."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     tp = F.col("o_totalprice")
     return o.select(
@@ -165,7 +161,6 @@ def q_bit_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     level, stored as bitmasks [R]). Same partial+final hash-agg shape;
     bitwise partials combine associatively like sums.
     """
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.bit_and("l_linenumber").alias("ln_and"),
@@ -213,7 +208,6 @@ def q_date_parts_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pure scan-side projection with a pushed modulo filter —
     zero shuffles; calendar parts cost nothing at any size.
     """
-    prep(spark)
     o = load(spark, sf_dir, "orders").where(F.col("o_orderkey") % 37 == 0)
     d = F.col("o_orderdate").cast("date")
     return o.select(
@@ -259,7 +253,6 @@ def q_date_iso_calendar(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded by calendar span); all calendar functions are
     codegen-stage scalar expressions on the scan.
     """
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     return o.groupBy(
         F.expr("extract(yearofweek FROM o_orderdate)")
@@ -333,7 +326,6 @@ def q_date_business_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast to the fact scan; the cumulative index is a window
     over that tiny frame. The fact side joins on a date key it
     already has; no per-row date loops, no UDFs."""
-    prep(spark)
     cal = spark.sql(
         """
         SELECT d,

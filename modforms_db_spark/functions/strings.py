@@ -16,7 +16,6 @@ from pyspark.sql import functions as F
 
 from modforms_db_spark.io import load
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
 
 
 @register(
@@ -39,7 +38,6 @@ from modforms_db_spark.session import prep
 )
 def q_str_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Core string bundle — label formatting "{N}.{k}.{chi}" [R]."""
-    prep(spark)
     p = load(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
@@ -70,7 +68,6 @@ def q_str_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_str_regexp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """regexp_extract / regexp_replace — parsing labels back into (N,k,i) [R].
     Spark replaces all matches by default; DuckDB needs the 'g' flag."""
-    prep(spark)
     c = load(spark, sf_dir, "customer")
     return c.select(
         "c_custkey",
@@ -93,7 +90,6 @@ def q_str_regexp(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_str_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Edit-distance buckets — fuzzy label matching [R]."""
-    prep(spark)
     c = load(spark, sf_dir, "customer")
     return (
         c.select(
@@ -117,7 +113,6 @@ def q_str_levenshtein(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_hash_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-addressing (GridFS checksum analogue [R]): md5 + sha256 hex.
     xxhash64 is Spark-only → exercised in unit tests, not in the oracle."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
@@ -148,7 +143,6 @@ def q_str_extract_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     match). Pattern stays in the RE2∩Java common subset (§2.11); pure
     projection, codegen'd at scan speed.
     """
-    prep(spark)
     p = load(spark, sf_dir, "part").where(F.col("p_partkey") <= 200)
     runs = F.regexp_extract_all("p_name", F.lit("[aeiou]+"), 0)
     return p.select(
@@ -191,7 +185,6 @@ def q_str_collation(spark: SparkSession, sf_dir: str) -> DataFrame:
     key — collation changes the grouping comparator, not the plan
     shape; variant counting is a count_distinct partial.
     """
-    prep(spark)
     c = load(spark, sf_dir, "customer")
     seg = F.when(
         F.col("c_custkey") % 2 == 0, F.lower("c_mktsegment")
@@ -238,7 +231,6 @@ def q_str_format_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-row codegen expressions on a 25-row dim scan — free;
     the row exists for dialect coverage, not throughput.
     """
-    prep(spark)
     n = load(spark, sf_dir, "nation")
     return n.select(
         "n_nationkey",

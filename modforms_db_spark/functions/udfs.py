@@ -28,7 +28,6 @@ from modforms_db_spark.io import load
 from modforms_db_spark.oracle_dialect import R2, R4
 from modforms_db_spark.parity import r2, r4
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
 
 
 @register(
@@ -45,7 +44,6 @@ from modforms_db_spark.session import prep
 def q_udf_python(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Row-at-a-time Python UDF — character-index normalizer arithmetic
     (Conrey↔Sage conversion [R]). Deliberately the pickle slow path."""
-    prep(spark)
 
     @F.udf(T.LongType())
     def key_gcd(custkey: int, nationkey: int) -> int:
@@ -78,7 +76,6 @@ def q_udf_pandas_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vectorized (Arrow) scalar pandas UDF: z-score of event value against
     global mean/std. The stats come from a 1-row Spark agg broadcast-joined
     in, so the UDF itself is a pure elementwise batch transform [R]."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     stats = e.agg(
         F.avg("value").alias("mu"), F.stddev_samp("value").alias("sigma")
@@ -106,7 +103,6 @@ def q_udf_pandas_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_udaf_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped-agg pandas UDF: geometric mean per priority — custom
     reductions over orbit data [R]."""
-    prep(spark)
 
     @pandas_udf("double")
     def geo_mean(v: pd.Series) -> float:
@@ -133,7 +129,6 @@ def q_udaf_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_apply_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Grouped-map applyInPandas: mean-center o_totalprice within each
     priority — per-space batch recompute of derived fields [R]."""
-    prep(spark)
 
     def center(pdf: pd.DataFrame) -> pd.DataFrame:
         vals = pdf["o_totalprice"].to_numpy()
@@ -169,7 +164,6 @@ def q_apply_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_map_in_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-wise pandas transform (filter + project) — chunked ap-list
     processing [R]. Arrow batches in, Arrow batches out; no shuffle."""
-    prep(spark)
 
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -206,7 +200,6 @@ def q_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Python UDTF (Spark 4): expand each document into (word, count) rows
     via LATERAL join — one stored object fanning out into many records [R].
     Bounded to doc_id < 50 to keep the t2 result small."""
-    prep(spark)
     from collections import Counter
 
     from pyspark.sql.functions import udtf
@@ -249,7 +242,6 @@ def q_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: same plan shape as mapInPandas — a zero-shuffle partition-wise
     map; Arrow batch size governed by spark.sql.execution.arrow.maxRecordsPerBatch.
     """
-    prep(spark)
     import pyarrow as pa
     import pyarrow.compute as pc
 
@@ -294,7 +286,6 @@ def q_udf_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-cost way to share expression logic (the Conrey↔Sage conversion
     functions [R] would ship this way when they're pure arithmetic).
     """
-    prep(spark)
     spark.sql(
         """
         CREATE OR REPLACE TEMPORARY FUNCTION mfdb_net(p DOUBLE, d DOUBLE)
@@ -381,7 +372,6 @@ def q_cogroup_pandas(spark: SparkSession, sf_dir: str) -> DataFrame:
     are per-customer so groups are tiny and skew-free. The oracle proves
     the pandas path agrees with the relational formulation exactly.
     """
-    prep(spark)
     c = (
         load(spark, sf_dir, "customer")
         .where(F.col("c_custkey") <= 300)
@@ -434,7 +424,6 @@ def q_udtf_analyze(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical to any UDTF — partition-wise Python execution, no
     shuffle; the analyze call runs ONCE on the driver at planning."""
-    prep(spark)
     from pyspark.sql.functions import udtf
     from pyspark.sql.types import (
         LongType,
@@ -507,7 +496,6 @@ def q_udtf_table_arg(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`q_text_stats`) is the faster plan — this row exists for the API
     surface where per-row Python logic genuinely needs partition
     state."""
-    prep(spark)
     from pyspark.sql.functions import udtf
 
     @udtf(returnType="lang string, n_tokens bigint, n_chars bigint, max_tok_len int")
@@ -579,7 +567,6 @@ def q_udf_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface row for the gradual-migration story, with the arithmetic
     chosen oracle-checkable.
     """
-    prep(spark)
 
     @F.udf("string", useArrow=True)
     def name_upper(s: str) -> str:

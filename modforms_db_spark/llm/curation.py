@@ -20,7 +20,6 @@ from modforms_db_spark.io import load, spread
 from modforms_db_spark.oracle_dialect import R, R4
 from modforms_db_spark.parity import r4
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
 
 _KNUTH = 2654435761
 _MOD = 4294967296  # 2^32
@@ -59,7 +58,6 @@ def q_split_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     split survives reshards, retries, and incremental ingest — the
     property that makes hash-splits the standard over random ones.
     """
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     b = _hash_bucket("doc_id", 100)
     return (
@@ -115,7 +113,6 @@ def q_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     token count. expected_tokens is derived from the ROUNDED rate on
     both engines so the hash can't drift on fp representation.
     """
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     weights = spark.createDataFrame(
         [("en", 0.4), ("de", 0.2), ("fr", 0.2), ("es", 0.1), ("zh", 0.1)],
@@ -182,7 +179,6 @@ def q_sample_group_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-partition partial top-k (Spark's WindowGroupLimit pushes the
     k=10 limit below the shuffle, so only candidate rows move).
     """
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     pri = (F.col("doc_id") * F.lit(_KNUTH) % F.lit(_MOD)).alias("pri")
     w = Window.partitionBy("lang").orderBy("pri", "doc_id")
@@ -224,7 +220,6 @@ def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the quasi-identifier domain, not the row count, so the audit is
     a single linear pass at any corpus size.
     """
-    prep(spark)
     c = load(spark, sf_dir, "customer")
     g = c.groupBy(*_QI_COLS).agg(F.count(F.lit(1)).alias("grp_n"))
     return g.agg(
@@ -271,7 +266,6 @@ def q_dataset_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     the dup count reuses the canonical-hash groupBy (32-byte keys).
     Output is a single row regardless of corpus size.
     """
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     canon = F.sha2(
         F.array_join(F.array_sort(F.array_distinct(F.split("text", " "))), " "),
@@ -330,7 +324,6 @@ def q_bpe_merge_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream to per-task pair tables before the shuffle; the top-10 is a
     WindowGroupLimit over the already-aggregated counts.
     """
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     toks = d.select("lang", F.explode(F.split("text", " ")).alias("tok")).where(
         F.length("tok") >= 2
@@ -387,7 +380,6 @@ def q_sample_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no floats anywhere in the decision). At 100 TB the predicate is
     scan-side codegen arithmetic: zero shuffles before the report agg.
     Emits the per-lang audit (docs, kept, kept tokens, total weight)."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     n_toks = F.size(F.split("text", " "))
     w_pct = F.least(F.lit(95), F.greatest(F.lit(5), n_toks))
@@ -441,7 +433,6 @@ def q_length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoffs) are data-driven rather than guessed. Pure scan-side integer
     arithmetic + one partial+final agg — no shuffle before the group
     keys, bounded output (langs × 8 buckets)."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     n_toks = F.size(F.split("text", " "))
     bucket = F.least((F.col("n_toks") / 16).cast("bigint"), F.lit(7).cast("bigint"))
@@ -512,7 +503,6 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     downstream embedding/indexing partitions on (doc_id, chunk_id)
     without data movement here.
     """
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
@@ -589,7 +579,6 @@ def q_shard_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     output bounded at the shard count. In production the same
     expression feeds `.repartition(N_SHARDS, shard)` so the manifest
     and the physical layout derive from one definition."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     shard = (
         (F.col("doc_id") * F.lit(2654435761).cast("bigint")) % _N_SHARDS
@@ -652,7 +641,6 @@ def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the only care is that the distinct-value curve stays
     driver-small (it's bounded by the value domain, here ≤ ~2k char
     counts); a continuous domain would be pre-bucketed first."""
-    prep(spark)
     d = load(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars", F.size(F.split("text", " ")).cast("bigint").alias("n_toks")
     )
@@ -713,7 +701,6 @@ def q_alloc_largest_remainder(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one linear token count per lang, then everything operates on
     the #langs-sized quota table (1-row broadcast total/shortfall, a
     bounded window). Nothing grows with the corpus but the first agg."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     tok = (
         d.select("lang", F.size(F.split("text", " ")).alias("n"))
@@ -816,7 +803,6 @@ def q_rag_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles over the chunk-token grain JOINed against the 3-token
     broadcast query; stats ride a 1-row broadcast. Top-5 TakeOrdered.
     All counts integer; one r4 at the score."""
-    prep(spark)
     chunks = q_doc_chunks(spark, sf_dir).select(
         "doc_id", "chunk_id", F.split("chunk_text", " ").alias("ctoks")
     )
@@ -905,7 +891,6 @@ def q_split_temporal(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one pass tags rows against a 1-row broadcast cutoff; the
     leakage check is a user-grain conditional aggregate — same
     shuffle the per-side user counts already need."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     # exact integer-microsecond cutoff (min + 80% of the span) via
     # BIGINT `div` — double division would round past 2^53 µs spans and
@@ -989,7 +974,6 @@ def q_sample_weighted_wor(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge, never a global sort. The hash-derived u makes the sample a
     pure function of the data, the same reproducibility argument as
     `q_sample`."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     u = (
         (F.col("doc_id") * F.lit(2654435761).cast("bigint") + 12345) % _ARES_HASH_MOD
@@ -1066,7 +1050,6 @@ def q_token_budget_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one linear token count to lang grain; everything after
     operates on the #langs-sized table (bounded window, broadcast
     scalar shortfall)."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     avail = (
         d.select("lang", F.size(F.split("text", " ")).alias("n"))
@@ -1161,7 +1144,6 @@ def q_stratified_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one partial-agg pass to lang grain (count + variance
     moments); all allocation arithmetic on the #strata-sized table."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     s = d.groupBy("lang").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_h"),
@@ -1247,7 +1229,6 @@ def q_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one projection + 3-group count; everything after runs on the
     3-row arm table (the OVER () window is 3 rows, not data grain)."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     b = _hash_bucket("doc_id", 100)
     counts = (
@@ -1348,7 +1329,6 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     raise the bucket count and train the target counts from the actual
     target-domain sample instead of a language slice; nothing else
     changes shape."""
-    prep(spark)
     from modforms_db_spark.io import spread
 
     d = spread(load(spark, sf_dir, "documents"))
@@ -1471,7 +1451,6 @@ def q_sample_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     operates on the #langs-sized frame (bounded global window,
     broadcast scalar shortfall) — same 100 TB shape as the other
     allocation operators."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     avail = (
         d.select("lang", F.size(F.split("text", " ")).alias("n"))
@@ -1592,7 +1571,6 @@ def q_epoch_repeats(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract — deterministic, and at lang-grain the whole allocation
     runs on a broadcastable #langs-row frame after one linear token
     count, the `q_token_budget_mix` 100 TB shape."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     u = (
         d.select("lang", F.size(F.split("text", " ")).alias("n"))
@@ -1754,7 +1732,6 @@ def q_anneal_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     after that runs over the ≤#sources-row quota frame (20 here) with a
     1-row broadcast budget/shortfall — the `q_token_budget_mix`
     discipline."""
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     # ONE documents scan: the source-grain aggregate (with exact integer
     # doc/char sums) is checkpointed and every later frame — including
@@ -1928,7 +1905,6 @@ def q_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     class rollup and the global domain count without re-scanning; the
     report is a 1-row combine of two bounded aggregates.
     """
-    prep(spark)
     c = load(spark, sf_dir, "customer")
     band = F.floor(F.col("c_acctbal") / _LDIV_BAND).cast("bigint")
     g = (
@@ -2004,7 +1980,6 @@ def q_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     then per-row scalar math — noise injection costs nothing at any
     corpus size; the release table is bounded by the QI domain.
     """
-    prep(spark)
     c = load(spark, sf_dir, "customer")
     g = c.groupBy(*_QI_COLS).agg(
         F.count(F.lit(1)).cast("bigint").alias("true_n")
@@ -2091,7 +2066,6 @@ def q_hash_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by 2×{_HU_BUCKETS} rows), spine join + 2-row combine; the
     audit costs one projection whatever the corpus size.
     """
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     good = d.select(
         F.lit("knuth_doc_id").alias("test"),
@@ -2191,7 +2165,6 @@ def q_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     is per-row against that broadcast — one shuffle on lang for the
     ranks, nothing else.
     """
-    prep(spark)
     from modforms_db_spark.operators.banded import with_banded_order
 
     d = (
@@ -2286,7 +2259,6 @@ def q_importance_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass, no doc-side shuffle beyond the banded ranks. At 100 TB m
     grows to the shard budget and nothing changes shape.
     """
-    prep(spark)
     from modforms_db_spark.operators.banded import with_banded_order
 
     d = load(spark, sf_dir, "documents").select(
@@ -2394,7 +2366,6 @@ def q_alloc_hierarchical(spark: SparkSession, sf_dir: str) -> DataFrame:
     past that, rescale masses to whole dollars or widen the product
     to DECIMAL(38)/HUGEINT — a mechanical swap, same plan shape.
     """
-    prep(spark)
     o = load(spark, sf_dir, "orders").select("o_custkey", "o_totalprice")
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     n = load(spark, sf_dir, "nation").select(
@@ -2518,7 +2489,6 @@ def q_group_kfold(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial+final aggregate on the k-bounded fold grain; the spine
     join touches 5 rows.
     """
-    prep(spark)
     d = (
         load(spark, sf_dir, "documents")
         .select(
@@ -2611,7 +2581,6 @@ def q_budget_select_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpartitioned window over the corpus); everything after the
     ranks is a filter plus a bounded-grain aggregate.
     """
-    prep(spark)
     from modforms_db_spark.operators.banded import with_banded_order
 
     toks = F.split("text", " ")
@@ -2738,7 +2707,6 @@ def q_cell_suppression(spark: SparkSession, sf_dir: str) -> DataFrame:
     attribute domains — 125 cells here, never row count); every
     window partitions by a single row/column of that grain.
     """
-    prep(spark)
     c0 = (
         load(spark, sf_dir, "customer")
         .groupBy(
@@ -2912,7 +2880,6 @@ def q_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     not the corpus stream — the standard trick that makes merge
     rounds O(|vocab|·len); pair counts map-side combine; each round's
     grain is checkpointed so round r+1 never recomputes round r."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     vocab = (
         d.select(F.explode(F.split("text", " ")).alias("tok"))
@@ -3075,7 +3042,6 @@ def q_prefix_cache_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     the token array — a per-row projection); the group-by carries
     (k, prefix) keys that map-side combine, and output is bounded by
     distinct prefixes."""
-    prep(spark)
     t = load(spark, sf_dir, "documents").select(
         "doc_id", F.split("text", " ").alias("toks")
     )
@@ -3187,7 +3153,6 @@ def q_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 5-row global spine broadcast onto it; the EMD walk is a window
     over 5-row frames. Billions of rows enter through the grain's
     partial-agg counts only."""
-    prep(spark)
     base = (
         load(spark, sf_dir, "customer")
         .select(
@@ -3324,7 +3289,6 @@ def q_curriculum_competence(spark: SparkSession, sf_dir: str) -> DataFrame:
     the loader consumes (t, rn) as a sort key."""
     from modforms_db_spark.operators.banded import with_banded_order
 
-    prep(spark)
     docs = load(spark, sf_dir, "documents").select(
         "doc_id", F.col("n_chars").cast("bigint").alias("difficulty")
     )
@@ -3428,7 +3392,6 @@ def q_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows), rebuilt once per round with partitioned window sums —
     the data-sized work is the single pass that builds the grain;
     at 100 TB that one groupBy is the whole cost."""
-    prep(spark)
     cells = (
         load(spark, sf_dir, "customer")
         .groupBy(

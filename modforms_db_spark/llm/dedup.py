@@ -32,7 +32,6 @@ from modforms_db_spark.io import load, spread
 from modforms_db_spark.oracle_dialect import R, R4
 from modforms_db_spark.parity import r4
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
 
 # MinHash parameters: 32 permutations in 8 bands of 4 rows.
 _N_PERM = 32
@@ -90,7 +89,6 @@ def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one projection + one hash-keyed partial+final agg — the
     appended batch is a second scan of a 1/37 slice (scan-side modulo
     predicate), not a join."""
-    prep(spark)
     d = load(spark, sf_dir, "documents").select("doc_id", "text")
     feed = d.select("text").unionAll(
         d.where(F.col("doc_id") % 37 == 0).select("text")
@@ -135,7 +133,6 @@ def _canon_h():
 def q_dedup_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup detection via canonical token-set hash — the driver data has
     21 such groups at sf0.01 (measured ground truth, SURVEY.md §1.2)."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     return (
         d.select("doc_id", _canon_h().alias("h"))
@@ -233,7 +230,6 @@ def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     Threshold applied to the ROUNDED value so the boundary can't flip
     between engines. Exact (no df cap) — the skew-capped variant is
     :func:`jaccard_pairs` with ``max_df`` set, unit-tested separately."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     return jaccard_pairs(_distinct_tokens(d), 0.8, max_df=None)
 
@@ -283,7 +279,6 @@ def q_dedup_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     slices — no explode until the set is distinct, so the shuffle carries
     one row per (doc, distinct-gram). Same skew caveat as the token join:
     at 100 TB cap gram document-frequency before the self-join."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     grams = F.array_distinct(
@@ -339,7 +334,6 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     would flag). Exact all-pairs is the oracle-checked contract; at 100 TB
     the same verification runs only on ANN candidates (`q_sim_ann_lsh` /
     `q_sim_ivf_topk` prefilter), never all-pairs."""
-    prep(spark)
     from modforms_db_spark.llm.similarity import _dot, _emb, _norm
 
     e = _emb(spark, sf_dir).withColumn("nrm", _norm("emb"))
@@ -378,7 +372,6 @@ def q_dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     in tests (uniform-random embeddings are LSH's worst case; real
     near-dup embeddings sit far above the 0.45 tail and collide in
     nearly every band)."""
-    prep(spark)
     from modforms_db_spark.llm.similarity import (
         _dot,
         _emb,
@@ -496,7 +489,6 @@ def _lsh_groups_rep_pairs(
     Both returned frames are lazily checkpointed; the pair is a session
     cache entry (see :mod:`modforms_db_spark.cache`).
     """
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     tokset = d.select(
         "doc_id",
@@ -707,7 +699,6 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output ≡ the naive per-doc LSH (subset of `q_dedup_jaccard`; recall
     measured in tests), but the quadratic stages see only distinct sets.
     """
-    prep(spark)
     groups, rep_pairs = _lsh_groups_rep_pairs(spark, sf_dir)
 
     # -- Expand back to doc pairs --------------------------------------
@@ -778,7 +769,6 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """64-bit SimHash per document — emits (doc_id, simhash). Pairing is
     q_dedup_simhash_pairs; at scale you bucket on 16-bit chunks and
     compare hamming distance in-bucket."""
-    prep(spark)
     return _simhash_fp(spark, sf_dir)
 
 
@@ -799,7 +789,6 @@ def q_dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     one bit_count(xor) each — the self-join shuffles on the chunk value,
     and only fingerprints (16 bytes/doc) move, never text.
     """
-    prep(spark)
     # Materialize fingerprints once: both sides of the self-join reuse
     # them instead of re-running the 64-bit fold per side (at scale the
     # fingerprint table is a persisted artifact for the same reason).
@@ -1178,7 +1167,6 @@ def q_dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     exponential-state on big graphs but exact at test SF; the edge set is
     the already-oracle-matched Jaccard machinery at threshold 0.5.
     """
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     edges = jaccard_pairs(_distinct_tokens(d), 0.5).select("d1", "d2")
     labels, _ = connected_components(edges)
@@ -1248,7 +1236,6 @@ def q_dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap window document-frequency before the pair expansion, exactly
     where the `where(size(ds) >= 2)` guard sits).
     """
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     toks = F.split("text", " ")
     wins = (
@@ -1331,7 +1318,6 @@ def q_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles total on small keys, payload never moves until the final
     filtered write.
     """
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     canon = F.sha2(
         F.array_join(F.array_sort(F.array_distinct(F.split("text", " "))), " "),
@@ -1391,7 +1377,6 @@ def q_dedup_fuzzy_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The component labels come from `_lsh_rep_labels` — the cached
     keeper side of the dedup index (CC once per corpus snapshot)."""
-    prep(spark)
     groups, _ = _lsh_groups_rep_pairs(spark, sf_dir)
     labels = _lsh_rep_labels(spark, sf_dir)
     member_rep = groups.select(
@@ -1455,7 +1440,6 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch against (shuffle keyed on the hash, payload never moves);
     a broadcast works whenever the batch, not the corpus, is small.
     """
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     canon = F.sha2(
         F.array_join(F.array_sort(F.array_distinct(F.split("text", " "))), " "),
@@ -1584,7 +1568,6 @@ def q_dedup_jaccard_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     and identical results as `q_dedup_jaccard`, candidate generation via
     :func:`prefix_filtered_jaccard` (PPJoin-style rarest-first prefixes;
     see that docstring for the guarantee and the 100 TB rationale)."""
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     toks = d.select(
         "doc_id",
@@ -1609,7 +1592,6 @@ def q_dedup_ngram_prefix(spark: SparkSession, sf_dir: str) -> DataFrame:
     more skew-friendly than tokens (bigrams are rarer), so the
     rarest-first prefix join prunes harder here: the candidate set is
     strictly ⊆ the all-pairs gram join's (property-tested)."""
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     toks = F.split("text", " ")
     grams = F.array_distinct(
@@ -1661,7 +1643,6 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     prefix bound is even stronger (only ⌈(1-t)·|A|⌉+1 rarest tokens of
     the SMALLER side need indexing) — or MinHash with the containment
     estimator |A∩B|/|A| = J·(|A|+|B|)/((1+J)·|A|)."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     tok = _distinct_tokens(d)
     sz = tok.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
@@ -1720,7 +1701,6 @@ def q_dedup_group_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg over group SIZES (bounded by the largest dup cluster); the
     corpus total is a broadcast scalar. Nothing beyond the first agg
     touches doc grain."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     canon = F.sha2(
         F.array_join(F.array_sort(F.array_distinct(F.split("text", " "))), " "),
@@ -1871,7 +1851,6 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
       distinct shuffle.
     - the pairs + CC live in `_sem_labels` — the cached keeper side of
       the semantic index (the `_lsh_rep_labels` sibling)."""
-    prep(spark)
     from modforms_db_spark.llm.similarity import kmeans_core
 
     asg = kmeans_core(spark, sf_dir).select(
@@ -1950,7 +1929,6 @@ def q_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (localCheckpoint) and self-joins on the consecutive-id key — a
     linear pair count by construction, vs the quadratic exact-Jaccard
     contract rows."""
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     toks = d.select(
         "doc_id", F.array_distinct(F.split("text", " ")).alias("toks")
@@ -2085,7 +2063,6 @@ def q_lsh_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     side itself is the linear banded shape the pipeline ships. Both
     sides read one checkpointed token frame; candidates checkpoint
     before fan-out to the θ grid."""
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     t = d.select(
         "doc_id", F.array_distinct(F.split("text", " ")).alias("toks")
@@ -2272,7 +2249,6 @@ def q_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     to keepers on the chunk key. At 100 TB the chunk column hashes to a
     fingerprint first (the `q_fingerprint` discipline) so the shuffle
     moves 8-byte keys, not text."""
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     t = d.select("doc_id", F.split("text", " ").alias("w"))
     ch = t.select(
@@ -2363,7 +2339,6 @@ def q_dedup_source_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     sources-per-key (≤ the source count, a constant) — never by row
     count; all counts exact integers.
     """
-    prep(spark)
     ks = (
         load(spark, sf_dir, "documents")
         .select("source", _canon_h().alias("h"))
@@ -2462,7 +2437,6 @@ def q_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
     projections, one checkpointed frame, linear consecutive-id pair
     join; at 100 TB the 1-bit sketch is 4 bytes/doc (32 bits) and the
     pair stage moves bits, not hex strings."""
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     toks = d.select(
         "doc_id", F.array_distinct(F.split("text", " ")).alias("toks")

@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 from modforms_db_spark.io import load
 from modforms_db_spark.oracle_dialect import R4
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
 
 # Shared synthetic-media parameters (referenced by oracle f-strings at
 # decorator time — must precede every @register below).
@@ -56,7 +55,6 @@ _BMP_W, _BMP_H = 16, 8  # 24-bit rows are 48 bytes — 4-byte aligned, no pad
 def q_multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Text ⋈ embedding as one multimodal record (struct column built, scalar
     fields emitted — structs don't hash portably across engines)."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     e = load(spark, sf_dir, "embeddings")
     joined = d.join(e, d.doc_id == e.vec_id).where(
@@ -91,7 +89,6 @@ def q_multimodal_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_mm_length_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-modal consistency scan (`check_records` analogue [R]):
     metadata-vs-payload disagreements and unpaired records."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     e = load(spark, sf_dir, "embeddings")
     bad_docs = d.where(F.col("n_chars") != F.length("text")).agg(
@@ -124,7 +121,6 @@ def q_mm_blob_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     typed metadata (byte length, header bytes as hex, checksum) — the
     GridFS metadata-without-blob read [R]. ASCII corpus ⇒ hex(first 4
     chars) is a faithful stand-in for magic-number sniffing."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     blob = F.encode(F.col("text"), "UTF-8")
     return d.select(
@@ -153,7 +149,6 @@ def q_mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frame-sampling plumbing for video-shaped blobs: stride offsets into
     the payload (every 100 bytes), exploded to one row per sampled frame.
     The byte-ranges are what a real decoder would seek to."""
-    prep(spark)
     d = load(spark, sf_dir, "documents").where(F.col("n_chars") >= 300)
     offs = F.sequence(
         F.lit(0).cast("bigint"),
@@ -283,7 +278,6 @@ def q_mm_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: mapInPandas over Arrow binary batches, one output row per
     image, no shuffle; blobs would come off the parquet scan in a real
     deployment (synthesized in-task here, like the decode trio)."""
-    prep(spark)
     d = load(spark, sf_dir, "documents").select("doc_id")
     synth, parse, _ = _bmp_codec()  # nested fns — pickle by value
 
@@ -369,7 +363,6 @@ def q_mm_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM-side (`F.round` ↔ oracle R4). A real resampler (area-average /
     Lanczos via PIL) swaps the one stride line — the seam documented on
     `_bmp_codec`."""
-    prep(spark)
     d = load(spark, sf_dir, "documents").select("doc_id")
     TW, TH = _BMP_W // _THUMB_SX, _BMP_H // _THUMB_SY
     synth, parse, encode = _bmp_codec()  # nested fns — pickle by value
@@ -460,7 +453,6 @@ def q_mm_audio_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import numpy as np
 
-    prep(spark)
     d = load(spark, sf_dir, "documents").select("doc_id")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -553,7 +545,6 @@ def q_mm_wav_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import numpy as np
 
-    prep(spark)
     d = load(spark, sf_dir, "documents").select("doc_id")
 
     def synth_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -643,7 +634,6 @@ def q_mm_bmp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum/128 · 10⁴ is an integer and `round` never sees a tie. New
     decode operators must use the emit-int-sums + F.round pattern
     instead of relying on such structure.)"""
-    prep(spark)
     d = load(spark, sf_dir, "documents").select("doc_id")
     synth, parse, _ = _bmp_codec()  # nested fns — pickle by value
 
@@ -715,7 +705,6 @@ def q_mm_y4m_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexes directly to sampled frames the same way)."""
     import numpy as np
 
-    prep(spark)
     d = load(spark, sf_dir, "documents").select("doc_id")
     W, H, NF, STRIDE = _Y4M_W, _Y4M_H, _Y4M_FRAMES, _Y4M_STRIDE
 

@@ -22,7 +22,6 @@ from modforms_db_spark.io import load, spread
 from modforms_db_spark.oracle_dialect import R, R2, R4
 from modforms_db_spark.parity import r4
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
 
 # Held-out split: the top 10% of doc ids play the role of the benchmark /
 # eval set (450 at sf0.01); everything below is training data to be
@@ -145,7 +144,6 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold derives from a one-row aggregate broadcast into both
     filters, never a collected literal.
     """
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     split = d.agg(
         F.floor(_EVAL_FRACTION * (F.max("doc_id") + 1))
@@ -224,7 +222,6 @@ def q_pii_redact(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pure per-row projection — no shuffle, no state; whole-stage
     codegen over regexp_replace/regexp_extract_all at scan speed.
     """
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     enriched = d.select(
         "doc_id",
@@ -299,7 +296,6 @@ def q_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     must not inherit a few-split input's parallelism (see io.spread and
     the measured note on `_per_doc_bigram_counts`).
     """
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     return (
         _per_doc_bigram_counts(d)
@@ -413,7 +409,6 @@ def q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     depth at 256. State per group is two integers (fill, bin), never the
     document list.
     """
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
@@ -504,7 +499,6 @@ def q_pipeline_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominant exchange — ~10× the per-row key bytes of this form's slim
     join at corpus scale.
     """
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     toks = F.split("text", " ")
     rep = _per_doc_bigram_counts(d).select(
@@ -577,7 +571,6 @@ def q_eval_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     decontaminate twin); per-eval-doc distinct-hit counts partial-agg.
     Training shingles are NOT pre-deduplicated — countDistinct after
     the join absorbs duplicates without a corpus-wide distinct."""
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     split = d.agg(
         F.floor(_EVAL_FRACTION * (F.max("doc_id") + 1))
@@ -667,7 +660,6 @@ def q_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     the model FIRST and broadcast only the >= df slice (it's the tiny
     side by Zipf), turning the scoring pass into a scan + broadcast
     lookup — same two-aggregation shape, no new primitive."""
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     tk = d.select("doc_id", "lang", F.split("text", " ").alias("t"))
     ng = (
@@ -758,7 +750,6 @@ def q_badwords_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal or broadcast set), then ONE map-side-combined aggregation
     to the source grain. This is the cheapest possible shape: a single
     pass, projection-pruned to (source, text)."""
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     t = d.select(
         "source", F.split("text", " ").alias("t")
@@ -849,7 +840,6 @@ def q_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     text). At 100 TB this is the cheapest pass in the pipeline and runs
     fused with ingestion; the stopword list stays a literal (Gopher's
     real list is 8 words)."""
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     w = F.split("text", " ")
     s = d.select(
@@ -1004,7 +994,6 @@ def q_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     the plan (a production 10^5-bucket model broadcasts instead) and
     scoring is one fused projection over the pruned (doc_id, source,
     text) scan. The cheapest possible classifier-inference shape."""
-    prep(spark)
     s = _qc_scored(spark, sf_dir)
     return s.select(
         "doc_id",
@@ -1074,7 +1063,6 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     HAVING ≥ 2 keeps only actual duplicate clusters. At 100 TB the
     same pass runs after MinHash-LSH components, grouping on the
     component id instead of the exact key — identical shape."""
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     b = (F.col("doc_id") * F.lit(_SPLIT_KNUTH)) % F.lit(_SPLIT_MOD) % 100
     t = d.select(
@@ -1157,7 +1145,6 @@ def q_roc_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     fold. The same shape computes AUC over billions of rows because
     only the quantized-score grain ever enters the window — the
     banded-rank trick applied to classifier evaluation."""
-    prep(spark)
     s = _qc_scored(spark, sf_dir)
     g = s.groupBy("source", "score").agg(
         F.sum(F.col("label").cast("int")).cast("bigint").alias("np"),
@@ -1232,7 +1219,6 @@ def q_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan → per-row score/prob arithmetic → ONE
     map-side-combined groupBy to the 10-row bin grain; the ECE window
     touches 10 rows at any corpus size."""
-    prep(spark)
     s = _qc_scored(spark, sf_dir)
     p = s.select(
         "label", r4(1.0 / (1.0 + F.exp(-F.col("score")))).alias("prob")
@@ -1378,7 +1364,6 @@ def q_filter_ensemble(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain — the ensemble costs the same single pass as its cheapest
     member; adding raters adds columns, not shuffles.
     """
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     w = F.split("text", " ")
     s = d.select(
@@ -1517,7 +1502,6 @@ def q_url_canonicalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct aggregate per source; no joins. At 100 TB the distincts
     are the only shuffles and both are map-side partially aggregated.
     """
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     k = F.floor(F.col("doc_id") / 20)
     page = (k % 13).cast("string")
@@ -1628,7 +1612,6 @@ def q_lift_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     `q_win_ranking_scaled` twin discipline) — the per-source window
     here is the bounded-grain contract form.
     """
-    prep(spark)
     s = _qc_scored(spark, sf_dir)
     wrank = Window.partitionBy("source").orderBy(
         F.desc("score"), F.asc("doc_id")
@@ -1748,7 +1731,6 @@ def q_code_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial+final on a low-cardinality grain; the share window runs
     on the ≤(sources×2)-row result, not the corpus.
     """
-    prep(spark)
     d = (
         load(spark, sf_dir, "documents")
         .select("doc_id", "source", "text", "n_chars")
@@ -1854,7 +1836,6 @@ def q_mojibake_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     (variant, source) grain; one documents scan (checkpointed base
     feeds both legs).
     """
-    prep(spark)
     d = (
         load(spark, sf_dir, "documents")
         .select("doc_id", "source", "text")
@@ -1960,7 +1941,6 @@ def q_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: sample fan-out is a per-task projection (n = 10 rows per
     task, map-side combined back to one row); everything downstream is
     per-(task, k) arithmetic — evaluation cost is linear in tasks."""
-    prep(spark)
     tasks = (
         load(spark, sf_dir, "documents")
         .where(F.col("doc_id") < 200)
@@ -2090,7 +2070,6 @@ def q_bleu_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pairing is a keyed self-join on doc_id+1 (no cross
     product); gram frames are linear in corpus tokens and collapse
     map-side to per-(pair, gram) counts before the one shuffle."""
-    prep(spark)
     # spread(): the gram legs below explode + transform every token of
     # every pair — compute that must not inherit the single-file scan's
     # (or the bench panel's 4-way shuffle) parallelism (io.spread).
@@ -2285,7 +2264,6 @@ def q_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     sargable hash-predicate scans of one checkpointed projection."""
     from modforms_db_spark.operators.banded import with_banded_order
 
-    prep(spark)
     base = (
         load(spark, sf_dir, "orders")
         .select(
@@ -2461,7 +2439,6 @@ def q_canary_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     containment gate broadcasts the (corpus/97)-sized probe set — at
     100 TB that leg swaps to the bloom/LSH device `q_decontaminate`
     ships. Canary mass is constant (60 docs) at any corpus size."""
-    prep(spark)
     docs = load(spark, sf_dir, "documents").select("doc_id", "text")
     organic = docs.select(
         "doc_id", F.col("text").alias("payload"), F.lit("organic").alias("family")
@@ -2646,7 +2623,6 @@ def q_fairness_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one pass to the (scope, lang) conditional-count grain,
     map-side combined; the overall rate joins back broadcast."""
-    prep(spark)
     base = (
         load(spark, sf_dir, "documents")
         .select(
@@ -2755,7 +2731,6 @@ def q_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan to the (source, score) grain (bounded by 4-dp
     score quantization x sources), a source-partitioned cumulative
     window, a per-source reduce."""
-    prep(spark)
     s = _qc_scored(spark, sf_dir)
     g = s.groupBy("source", "score").agg(
         F.sum(F.when(F.col("label"), 1).otherwise(0))
@@ -2843,7 +2818,6 @@ def q_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one scan to the (source, bin) grain, map-side combined;
     everything downstream is 10-row frames per source."""
-    prep(spark)
     s = _qc_scored(spark, sf_dir)
     binned = s.select(
         "source",
@@ -2954,7 +2928,6 @@ def q_uplift_qini(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative walk runs on the 20-row cell frame."""
     from modforms_db_spark.operators.banded import with_banded_order
 
-    prep(spark)
     h = lambda k, sh: F.pmod(  # noqa: E731
         F.pmod(F.col("event_id") * F.lit(k).cast("bigint"), F.lit(4294967296))
         .bitwiseXOR(

@@ -31,7 +31,6 @@ from modforms_db_spark.io import load, spread
 from modforms_db_spark.oracle_dialect import R, R4
 from modforms_db_spark.parity import r4
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
 
 
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -78,7 +77,6 @@ _COS = "list_inner_product(a.emb, b.emb) / (sqrt(list_inner_product(a.emb, a.emb
 def q_sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact top-5 cosine neighbors for each query vector (vec_id < 20),
     self excluded. Brute force = the correctness baseline for ANN."""
-    prep(spark)
     # Norms are per-ROW scalars: computing them before the join does the
     # fold once per row instead of once per pair (FP-identical — same
     # expression over the same data, only hoisted out of the pair loop).
@@ -115,7 +113,6 @@ def q_sim_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_sim_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All same-label pairs with cosine ≥ 0.2 (applied to the rounded value;
     ~700 of 12k pairs at sf0.01 — measured)."""
-    prep(spark)
     # Per-row norms hoisted out of the pair loop (see q_sim_cosine_topk).
     e = _emb(spark, sf_dir).withColumn("nrm", _norm("emb"))
     a = e.alias("a")
@@ -155,7 +152,6 @@ def q_sim_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid in long form (label, pos1, c) — clustering prep.
     Long form avoids array-hash ambiguity in the driver compare."""
-    prep(spark)
     e = _emb(spark, sf_dir)
     return (
         e.select("label", F.posexplode("emb").alias("pos", "x"))
@@ -190,7 +186,6 @@ def q_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5-NN majority-label classification for every vector (self excluded;
     ties → smallest label). Composition of exact kNN + vote window."""
-    prep(spark)
     # Per-row norms hoisted out of the pair loop (see q_sim_cosine_topk):
     # the 64-element fold runs once per ROW, not twice per N² pair.
     # FP-identical — same expression over the same data.
@@ -358,7 +353,6 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterative fit, not on a one-shot assignment whose groupBy already
     collapses map-side. (Round-5's floor note stands: the residual
     runtime is local-mode stage scaffolding, not data.)"""
-    prep(spark)
     e = _emb(spark, sf_dir).withColumn("nrm", _norm("emb"))
     c = ivf_centroids(e)
     asg_ids = (
@@ -542,7 +536,6 @@ def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     query. Linear signature pass + bucket-local joins replace the
     all-pairs crossJoin; recall vs q_sim_cosine_topk is measured in
     tests."""
-    prep(spark)
     e = _emb(spark, sf_dir).withColumn("nrm", _norm("emb"))
     # Narrow banding (no vector payload); candidate IDs first, then the
     # embeddings re-attach ONCE by keyed join (query side is tiny —
@@ -605,7 +598,6 @@ def q_sim_threshold_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     replaces the per-label quadratic fanout with per-bucket fanout —
     bucket sizes are ~n/2^4 per band with 4 probes, and the signature
     stage never shuffles the vector side."""
-    prep(spark)
     e = _emb(spark, sf_dir).withColumn("nrm", _norm("emb"))
     # Narrow banding: only the label scalar rides the explode; the
     # (band, bucket, label) self-join moves 4 scalar columns per side,
@@ -680,7 +672,6 @@ def q_knn_classify_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     per probe; the floors pinned in tests are this worst case.
     Prediction agreement vs the exact form is measured and floor-pinned
     in tests."""
-    prep(spark)
     e = _emb(spark, sf_dir).withColumn("nrm", _norm("emb"))
     ranked = ivf_rank_cells(e, carry=("label",)).localCheckpoint(
         eager=False
@@ -760,7 +751,6 @@ def q_vec_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     risk; per-row array math only — ZERO shuffles, like the signature
     stages.
     """
-    prep(spark)
     emb = load(spark, sf_dir, "embeddings")
     e = F.transform("embedding", lambda x: x.cast("double"))
     v = emb.select("vec_id", "label", e.alias("e"))
@@ -838,7 +828,6 @@ def q_sim_topk_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     not change results). Scale: per-refresh cost is |Q|×|delta| + a
     KB-sized cached state per query, vs |Q|×|corpus| for recompute.
     """
-    prep(spark)
     e = _emb(spark, sf_dir).withColumn("nrm", _norm("emb"))
     split = e.agg(
         F.floor(0.9 * (F.max("vec_id") + 1)).cast("bigint").alias("d0")
@@ -1105,7 +1094,6 @@ def kmeans_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed; the one cluster index shared by `q_cluster_kmeans` and
     `q_dedup_semantic` (a session cache entry, see
     :mod:`modforms_db_spark.cache`). Returns (vec_id, cluster, d2q6)."""
-    prep(spark)
     vecs = _emb(spark, sf_dir).select("vec_id", "emb")
     return kmeans_fit(vecs, _KMEANS_K, _KMEANS_ITERS).localCheckpoint(
         eager=False  # under AQE any shuffle stages of the fit run here, at
@@ -1195,7 +1183,6 @@ def q_cluster_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The fit comes from `kmeans_core`, the session-cached assignment
     shared with `q_dedup_semantic` (see :mod:`modforms_db_spark.cache`)."""
-    prep(spark)
     assigned = kmeans_core(spark, sf_dir)
     return (
         assigned.groupBy(F.col("cluster").cast("bigint").alias("cluster"))
@@ -1293,7 +1280,6 @@ def q_pca_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     roundings absorb fold-order vs groupBy-order ulps exactly as they
     absorb the cross-engine ones — analysis in SCALE.md §15). Eigvec
     state still never lives on the driver."""
-    prep(spark)
     e = load(spark, sf_dir, "embeddings")
     qarr = F.transform(
         "embedding", lambda x: F.round(x.cast("double") * 1000, 0).cast("bigint")
@@ -1401,7 +1387,6 @@ def q_vector_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions rows regardless of corpus size. Mean r6-rounded (sum
     order ulps); min/max are exact comparisons on the same doubles in
     both engines."""
-    prep(spark)
     e = load(spark, sf_dir, "embeddings")
     flat = e.select(F.posexplode("embedding").alias("pos", "xf")).select(
         (F.col("pos") + 1).alias("dim"), F.col("xf").cast("double").alias("x")
@@ -1455,7 +1440,6 @@ def q_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     means — one shuffle keyed well below cardinality problems (labels ×
     2 × 64 cells); the distance is a 64-row-per-label aggregate. No
     vector pair is ever formed."""
-    prep(spark)
     e = _emb(spark, sf_dir).withColumn(
         "half", F.when(F.col("vec_id") % 2 == 0, "a").otherwise("b")
     )
@@ -1519,7 +1503,6 @@ def q_sim_mips(spark: SparkSession, sf_dir: str) -> DataFrame:
     norm-augmentation reduction — append sqrt(M² − |x|²) to each
     corpus vector and a 0 to each query, after which MIPS ≡ cosine and
     the existing LSH/IVF ANN twins apply verbatim."""
-    prep(spark)
     e = _emb(spark, sf_dir)
     q = e.where(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("q_id"), F.col("emb").alias("q_emb")
@@ -1617,7 +1600,6 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation round is one (edges JOIN labels) shuffle on v plus a
     groupBy(u) majority — the large-star/small-star cost profile,
     O(log diameter) rounds if iterated."""
-    prep(spark)
     e = _emb(spark, sf_dir).withColumn("nrm", _norm("emb")).localCheckpoint(
         eager=False
     )  # both sides of the kNN pair join + seeds + final output — one scan
@@ -1756,7 +1738,6 @@ def q_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     8×64 matrix is a compile-time literal. At a real 100 TB run the
     matrix rides the closure and the projected sketch is written
     bucketed by its first component for locality."""
-    prep(spark)
     e = _emb(spark, sf_dir)
     proj_sq = None
     for row in _JL_SIGNS:
@@ -1825,7 +1806,6 @@ def q_prototype_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-label ranking window partitions on label; a 100 TB class would
     use the banded rank (`operators.banded`) in the same shape, as
     `q_quantile_bins_scaled` demonstrates."""
-    prep(spark)
     e = _emb(spark, sf_dir)
     cent = (
         e.select("label", F.posexplode("emb").alias("pos", "x"))
@@ -1904,7 +1884,6 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate side goes through the existing ANN twins (`q_sim_ann_lsh`
     / `q_sim_ivf_topk`) and negatives re-rank only bucket survivors —
     ANCE literally refreshes this mining pass from the ANN index."""
-    prep(spark)
     e = _emb(spark, sf_dir).withColumn("nrm", _norm("emb"))
     q = e.where(F.col("vec_id") % 10 == 0).select(
         F.col("vec_id").alias("q_id"),
@@ -1991,7 +1970,6 @@ def q_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     n²/10 as the pre-r7 `vec_id % 10` panel was); a fixed-size panel
     is also what a 100 TB re-index gate wants (constant evaluation
     cost, comparable MRR across runs)."""
-    prep(spark)
     e = _emb(spark, sf_dir).withColumn("nrm", _norm("emb"))
     q = e.orderBy(
         (F.col("vec_id").cast("bigint") * F.lit(2654435761).cast("bigint"))
@@ -2134,7 +2112,6 @@ def q_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitions per (nprobe, query). The curve frame is bounded by
     nprobes × queries, not corpus size.
     """
-    prep(spark)
     e = (
         _emb(spark, sf_dir)
         .withColumn("nrm", _norm("emb"))
@@ -2293,7 +2270,6 @@ def q_hubness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     join keeps antihubs (occurrence 0) visible — the bucket the audit
     exists to find.
     """
-    prep(spark)
     e = (
         _emb(spark, sf_dir)
         .withColumn("nrm", _norm("emb"))
@@ -2405,7 +2381,6 @@ def q_vec_product_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring join; encode is a grouped min over {_PQ_K} candidates —
     map-side combinable; the audit output is bounded by the codebook.
     """
-    prep(spark)
     e = _emb(spark, sf_dir).select("vec_id", "emb")
     s_ids = F.explode(F.array(*[F.lit(i) for i in range(_PQ_M)])).alias("s")
     sub = e.select("vec_id", "emb", s_ids).select(
@@ -2515,7 +2490,6 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-sum map-side. The encode reuses the `q_vec_product_quantize`
     shape; per-query windows rank the bounded candidate frame.
     """
-    prep(spark)
     e = _emb(spark, sf_dir).select("vec_id", "emb")
     s_ids = F.explode(F.array(*[F.lit(i) for i in range(_PQ_M)])).alias("s")
     sub = e.select("vec_id", "emb", s_ids).select(
@@ -2631,7 +2605,6 @@ def q_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     WindowGroupLimit top-k; the recall join runs on the 20x{_MATRYOSHKA_K}x4
     result rows. At 100 TB the probe batch stays the broadcast side.
     """
-    prep(spark)
     e = _emb(spark, sf_dir)
     for d in _MATRYOSHKA_DIMS:
         e = e.withColumn(f"nrm{d}", _norm(F.slice("emb", 1, d)))
@@ -2737,7 +2710,6 @@ def q_spatial_grid_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     no quadratic stage exists. Skewed cells (dense clusters) salt the
     same way hot join keys do.
     """
-    prep(spark)
     r = _GRID_NN_RADIUS
     pts = _emb(spark, sf_dir).select(
         "vec_id",
@@ -2872,7 +2844,6 @@ def q_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one linear candidate pass against the O(1) panel (the
     r7-bounded `q_retrieval_metrics` shape), then per-query constant
     work."""
-    prep(spark)
     e = _emb(spark, sf_dir).withColumn("nrm", _norm("emb"))
     q = e.orderBy(
         (F.col("vec_id").cast("bigint") * F.lit(2654435761).cast("bigint"))
@@ -2991,7 +2962,6 @@ def q_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: both rankings come from ONE scored pass (panel broadcast ×
     corpus scan); the overlap join runs on 10-row-per-query frames."""
-    prep(spark)
     e = _emb(spark, sf_dir).withColumn("nrm", _norm("emb"))
     q = e.where(F.col("vec_id") < _RBO_NQ).select(
         F.col("vec_id").alias("q_id"),
@@ -3091,7 +3061,6 @@ def q_sim_hamming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the scan); the top-k is panel-broadcast × sketch-scan with integer
     ops that stay inside codegen — no float math anywhere in the hot
     loop."""
-    prep(spark)
     e = _emb(spark, sf_dir)
     word = (
         "aggregate(zip_with(slice(emb, {off}, 32), sequence(0, 31),"
@@ -3218,7 +3187,6 @@ def q_mmr_diversify(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames only; the corpus is never touched again. At 100 TB the pool
     comes from the ANN twins (`q_sim_ann_lsh`) instead of the exact
     pass — same constant-size greedy stage."""
-    prep(spark)
     e = _emb(spark, sf_dir)
     qv = e.where(F.col("vec_id") == 0).select(
         F.col("emb").alias("q_emb"),
@@ -3403,7 +3371,6 @@ def q_lof_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
     a TakeOrdered-style top-k per panel point. Constant evaluation
     cost at any corpus size; full-corpus LOF would ride the ANN twins
     (`q_dedup_embedding_ann`) for candidate generation."""
-    prep(spark)
     e = (
         _emb(spark, sf_dir)
         .select("vec_id", "emb")
@@ -3569,7 +3536,6 @@ def q_reco_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one linear candidate pass against the O(1) broadcast
     panel; the exposure frame is bounded by panel*k (<= 320 rows), so
     its ranking window is constant-size regardless of corpus."""
-    prep(spark)
     e = (
         _emb(spark, sf_dir)
         .withColumn("nrm", _norm("emb"))
@@ -3758,7 +3724,6 @@ def q_cluster_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
     — two linear passes over the exploded vectors (centroids, then
     deviations) with the K x dim centroid frame broadcast back; the
     DB pair frame is K^2 rows. No pairwise point work anywhere."""
-    prep(spark)
     pts = (
         _emb(spark, sf_dir)
         .select(

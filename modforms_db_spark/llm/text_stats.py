@@ -19,7 +19,6 @@ from modforms_db_spark.io import load, spread
 from modforms_db_spark.oracle_dialect import R, R4
 from modforms_db_spark.parity import d38, r4
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
 
 _STOPWORDS = ("a", "the", "of", "and")
 _STOP_SQL = "[" + ", ".join(f"'{s}'" for s in _STOPWORDS) + "]"
@@ -49,7 +48,6 @@ _FP_MOD = 1_000_000_007
 def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language corpus profile: doc count, mean token count, vocabulary
     size, type-token ratio."""
-    prep(spark)
     # Single pass: one split/explode, one shuffle on lang. The per-doc
     # average falls out exactly: AVG(n_toks) = Σ n_toks / n_docs =
     # total_toks / n_docs — both integer-sum-over-count divisions, so the
@@ -107,7 +105,6 @@ def q_text_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace split + BPE-ish regex tokenizer + distinct
     count (regex kept in the Java∩RE2 common subset)."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
@@ -141,7 +138,6 @@ def q_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality heuristics: token count, mean token length (derived from
     n_chars so it cross-checks the metadata column), stopword ratio,
     length-window flag."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     n = F.size(toks)
@@ -201,7 +197,6 @@ def q_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile per language from the corpus, score each document by overlap,
     argmax (ties → lexicographically smallest language). The n-gram-profile
     method at word granularity, fully relational."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
@@ -247,7 +242,6 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Order-sensitive rolling polynomial fingerprint over the token stream
     (acc·31 + f(token) mod p) — document fingerprinting as an exact,
     oracle-checkable fold (both engines fold left in element order)."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     vals = F.transform(
@@ -292,7 +286,6 @@ def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_tfidf_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-5 terms per language by tf-idf (tf = in-language doc frequency,
     idf = corpus-wide inverse doc frequency), deterministic term tiebreak."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
@@ -382,7 +375,6 @@ def q_bm25_topterms(spark: SparkSession, sf_dir: str) -> DataFrame:
     §6 with `partitionBy` reuse — but at bench scale the scan is not
     the bottleneck and four parallel legs win.
     """
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     toks = F.split("text", " ")
     # r10 rework (guide §2.3/§2.4) — doc_id is UNIQUE in documents, so
@@ -493,7 +485,6 @@ def q_winnow(spark: SparkSession, sf_dir: str) -> DataFrame:
     — ZERO shuffles to fingerprint, like `q_dedup_minhash_lsh`'s signature
     stage; only the exploded (doc, fp) output shuffles if joined later.
     """
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     vals = F.transform(
         F.split("text", " "),
@@ -558,7 +549,6 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ranking window partitions by lang over the (already tiny)
     per-term counts — never the token stream.
     """
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     freq = (
         d.select("lang", F.explode(F.split("text", " ")).alias("tok"))
@@ -630,7 +620,6 @@ def q_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-M-pruned model instead of shuffle-joining the full one (the
     tail of the model barely moves scores).
     """
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     # Named token-array column: a split captured inside the lambda would
     # re-evaluate per bigram (O(tokens²); see pipeline._per_doc_bigram_counts).
@@ -697,7 +686,6 @@ def q_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     only extra care is posting-list skew for stop-ish tokens — the same
     df-cap discipline as MinHash-LSH (SCALE.md §6) applies before
     collect_list, and postings page to fixed-size blocks."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
@@ -758,7 +746,6 @@ def q_term_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokenization; the per-term and per-source marginals join back on
     their own keys; N rides a 1-row broadcast cross join. No pair
     explosion anywhere — cost is O(distinct (term,source))."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id", "source", F.explode(F.array_distinct(F.split("text", " "))).alias("term")
@@ -831,7 +818,6 @@ def q_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     source-grain combine; entropy runs on the frequency table, never
     the corpus. Vocabulary per source bounds state; no pairs, no
     windows."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     tf = (
         d.select("source", F.explode(F.split("text", " ")).alias("tok"))
@@ -915,7 +901,6 @@ def q_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     size; that constant-size property (mergeable across shards by cell
     sum) is the whole point of CMS at 100 TB. Heavy-hitter probe is a
     broadcast join against the 1024 cells."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     tok = d.select(F.explode(F.split("text", " ")).alias("tok")).where(
         F.col("tok") != ""
@@ -1025,7 +1010,6 @@ def q_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     join and final top-10 run on ≤2·{_RRF_TOPN} rows. The corpus-sized
     work is the overlap aggregate (one explode + broadcast of 3 query
     tokens); ranks are never materialized beyond the lists."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     tok = d.select(
         "doc_id", F.explode(F.array_distinct(F.split("text", " "))).alias("tok")
@@ -1093,7 +1077,6 @@ def q_compression_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     the downstream filter (`ratio < τ` → drop) pushes into the same
     stage. Deterministic: zlib output is fixed for (bytes, level), so
     the column is stable across partitionings and retries."""
-    prep(spark)
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
@@ -1149,7 +1132,6 @@ def q_unicode_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectorized-ish), hashing stays JVM-side. In a production dedup this
     runs once in the canonicalization stage before `q_dedup_exact`'s
     hash — linear, no shuffle."""
-    prep(spark)
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("string")
@@ -1232,7 +1214,6 @@ def q_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     The token⋈model join here is the LEFT JOIN giving smoothed zeros
     for unseen (lang, tok) pairs — the part naive implementations get
     wrong by dropping them."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     tok = d.select("doc_id", "lang", F.explode(F.split("text", " ")).alias("tok"))
     tf = (
@@ -1322,7 +1303,6 @@ def q_eval_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the eval adds one doc-grain join + two #classes-sized
     aggregates to whatever the classifier costs — evaluation rides
     the same plan, amortizing the corpus scan."""
-    prep(spark)
     preds = q_lang_id(spark, sf_dir)
     d = load(spark, sf_dir, "documents").select("doc_id", F.col("lang").alias("true_lang"))
     cells = (
@@ -1401,7 +1381,6 @@ def q_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc (heavy side, map-side combined into pair counts); marginals
     and the total DERIVE from the checkpointed pair table — one corpus
     pass total, same discipline as `q_term_pmi`. Top-15 is TakeOrdered."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     t = d.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
@@ -1483,7 +1462,6 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     task, the same machinery as the `_scaled` twins. The OLS reduces to
     five sums per language; the ln() points never materialize beyond
     the agg."""
-    prep(spark)
     from modforms_db_spark.operators.banded import with_banded_order
 
     # spread(): the token explode must not inherit a few-split input's
@@ -1565,7 +1543,6 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-doc arithmetic is map-only; the per-lang summary is one
     partial-agg pass plus exact per-group percentiles (group sort —
     swap for the GK sketch path at 100 TB, `q_agg_approx_percentile`)."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     per_doc = d.select(
         "lang",
@@ -1619,7 +1596,6 @@ def q_cross_lingual_contamination(spark: SparkSession, sf_dir: str) -> DataFrame
     how many documents repeat it — boilerplate cannot blow up the
     pair join the way a raw (doc, shingle) self-join would; the pair
     aggregate is #lang² rows."""
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     toks = d.select("lang", F.split("text", " ").alias("t"))
     sh = (
@@ -1709,7 +1685,6 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     final agg returns to doc grain. No pass is quadratic, nothing
     compares doc PAIRS — global first-seen replaces the all-pairs
     overlap question entirely."""
-    prep(spark)
     sh, first_seen = _shingle_first_seen(spark, sf_dir)
     return (
         sh.join(first_seen, "shingle")
@@ -1767,7 +1742,6 @@ def q_corpus_saturation(spark: SparkSession, sf_dir: str) -> DataFrame:
     FIRST document makes it exact and linear — new-per-bucket is a
     shingle-keyed min-agg histogram and the cumulative runs over the
     tiny bucket grain (docs/50 rows)."""
-    prep(spark)
     _sh, first_seen = _shingle_first_seen(spark, sf_dir)
     per_bucket = first_seen.groupBy(
         # F.floor, not cast('bigint'): cast truncates toward zero while
@@ -1841,7 +1815,6 @@ def q_text_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-lang totals, corpus marginals and the scalar total all
     re-derive from that grain — one corpus pass total. The term join is
     keyed on tok against the vocab-grain marginal."""
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     lt = (
         d.select("lang", F.explode(F.split("text", " ")).alias("tok"))
@@ -1924,7 +1897,6 @@ def q_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern); all ratios are r4-rounded. Scale: one explode to word
     grain, map-side-combinable agg straight back to doc grain — one
     shuffle, no model table, no window."""
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     w = d.select(
         "doc_id", "lang", F.explode(F.split("text", " ")).alias("word")
@@ -2018,7 +1990,6 @@ def q_ppl_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vocab² is tiny by Zipf; a 100 TB corpus prunes to top-M first).
     The global tercile is a BANDED rank (`operators.banded`) + exact
     ntile arithmetic — no single-task window at any scale."""
-    prep(spark)
     from modforms_db_spark.operators.banded import (
         ntile_from_rn,
         with_banded_order,
@@ -2131,7 +2102,6 @@ def q_truncation_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     arithmetic — then a ×{len(_TRUNC_LENGTHS)} literal explode into ONE
     map-side-combined aggregation on the (lang, ctx_len) grain (≤ langs
     × lengths rows). The explode multiplies 2-column rows, not text."""
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     t = d.select(
         "lang", F.size(F.split("text", " ")).cast("bigint").alias("n")
@@ -2215,7 +2185,6 @@ def q_heaps_law(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vocabulary-bounded, Zipf-tiny vs corpus); milestones are
     O(log corpus) rows (47 at 100 TB), so the fit window is bounded by
     construction — the `q_srm_check` bounded-frame discipline."""
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     tk = d.select("doc_id", F.split("text", " ").alias("w"))
     g = tk.where(F.size("w") > 2).select(
@@ -2335,7 +2304,6 @@ def q_text_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     `orderBy().limit()` TakeOrdered for the top slice — never a
     vocabulary-wide window; the ratio math runs on {_BURST_TOP} rows.
     """
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     pc = (
         d.select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
@@ -2403,7 +2371,6 @@ def q_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     transform for Zipf-shaped weights) so a 10M-term vocabulary never
     meets a single-task window; the normalizer is a 1-row broadcast.
     """
-    prep(spark)
     d = spread(load(spark, sf_dir, "documents"))
     cf = (
         d.select(F.explode(F.split("text", " ")).alias("tok"))
@@ -2487,7 +2454,6 @@ def q_hill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-broadcast frame). At 100 TB the same plan reads the
     length column only (column pruning) and moves 101 rows.
     """
-    prep(spark)
     d = load(spark, sf_dir, "documents").select("n_chars", "doc_id")
     top = d.orderBy(F.col("n_chars").desc(), F.col("doc_id")).limit(101)
     w = Window.orderBy(F.col("n_chars").desc(), F.col("doc_id"))
@@ -2580,7 +2546,6 @@ def q_nucleus_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     language with the `operators/banded.py` device on ln f, the
     `q_zipf_fit` transform); output is one row per language.
     """
-    prep(spark)
     tf = (
         load(spark, sf_dir, "documents")
         .select("lang", F.explode(F.split("text", " ")).alias("token"))

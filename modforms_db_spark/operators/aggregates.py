@@ -19,7 +19,6 @@ from modforms_db_spark.io import load
 from modforms_db_spark.oracle_dialect import R, R2, R4
 from modforms_db_spark.parity import d38, r2, r4
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
 
 EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 
@@ -46,7 +45,6 @@ EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 def q_agg_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q1 analogue — the entry() flagship. Scan → filter → hash agg
     (partial+final) over two low-cardinality keys. Per-(N,k) totals [R]."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     disc_price = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
@@ -78,7 +76,6 @@ def q_agg_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_agg_count_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact distinct users per event type (expand + two-phase agg)."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     return e.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("n_users"),
@@ -104,7 +101,6 @@ def q_agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch estimate, and emits `within_tol` = |approx − exact| ≤ 5 %
     of exact (rsd=0.02, so 5 % is > 2σ headroom). A sketch drifting out
     of its error bound flips the boolean and fails the driver hash."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     return e.groupBy("event_type").agg(
         F.countDistinct("user_id").alias("exact_users"),
@@ -134,7 +130,6 @@ def q_agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Statistical aggregates — sanity stats over stored dimensions [R]."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.agg(
         r4(F.stddev_samp("l_extendedprice")).alias("sd_price"),
@@ -159,7 +154,6 @@ def q_agg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_agg_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact interpolated percentiles (Spark percentile ≡ DuckDB quantile_cont)."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         r4(F.percentile("o_totalprice", F.lit(0.5))).alias("median_price"),
@@ -191,7 +185,6 @@ def q_agg_approx_percentile(spark: SparkSession, sf_dir: str) -> DataFrame:
     headroom at accuracy=10000). The oracle reproduces the group keys
     and counts and emits the expected TRUE booleans — an out-of-bound
     sketch flips a boolean and fails the driver hash."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
 
     def within(q: float) -> F.Column:
@@ -223,7 +216,6 @@ def q_agg_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
     """max_by/min_by — "largest level with complete data" [R]. o_totalprice
     is a continuous double, so ties (the nondeterministic case) don't occur
     in this data; the unit test covers tie behavior explicitly."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.max_by("o_orderkey", "o_totalprice").alias("max_order"),
@@ -246,7 +238,6 @@ def q_agg_minmax_by(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_agg_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic list agg (sorted distinct, emitted as CSV so the value
     hash is unambiguous) — ap-list assembly from chunks [R]."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     return e.groupBy("user_id").agg(
         F.array_join(F.array_sort(F.collect_set("event_type")), ",").alias(
@@ -267,7 +258,6 @@ def q_agg_collect(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HAVING — levels with more factors than X [R]."""
-    prep(spark)
     c = load(spark, sf_dir, "customer")
     return (
         c.groupBy("c_nationkey")
@@ -294,7 +284,6 @@ def q_agg_having(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP with grouping_id — subtotal reports over the (N,k) hierarchy [R].
     The dims are broadcast; the only shuffle is the rollup agg itself."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
     n = load(spark, sf_dir, "nation")
@@ -321,7 +310,6 @@ def q_agg_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "cube"),
 )
 def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
     return (
@@ -344,7 +332,6 @@ def q_agg_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit grouping sets via the SQL API."""
-    prep(spark)
     load(spark, sf_dir, "customer").createOrReplaceTempView("mfdb_customer_gs")
     return spark.sql(
         """
@@ -372,7 +359,6 @@ def q_agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_agg_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pivot long→wide — "web" record assembly from long storage [R]."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     wide = e.groupBy("user_id").pivot("event_type", EVENT_TYPES).count()
     return wide.select(
@@ -406,7 +392,6 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineitem measures into (metric, value) rows, then profile each metric.
     `DataFrame.unpivot` is a zero-shuffle projection (each input row emits
     4 rows map-side); the only exchange is the final 4-group aggregate."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     measures = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
     long = li.unpivot(
@@ -461,7 +446,6 @@ def q_agg_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q_agg_approx_distinct is the one-level approx_count_distinct form).
     The exact side here is the self-check harness, not the scale path.
     """
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     sketches = o.groupBy("o_orderpriority").agg(
         F.expr("hll_sketch_agg(o_custkey)").alias("sk"),
@@ -522,7 +506,6 @@ def q_agg_mode(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the groupBy pre-aggregates to ≤ |users|×|types| rows before the
     window pass, so the sort-per-key touches tiny groups (≤5 rows each).
     """
-    prep(spark)
     e = load(spark, sf_dir, "events")
     cnt = e.groupBy("user_id", "event_type").agg(F.count(F.lit(1)).alias("n"))
     w = Window.partitionBy("user_id").orderBy(F.desc("n"), F.asc("event_type"))
@@ -554,7 +537,6 @@ def q_agg_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     a single map-side-combined agg keyed on 12 values (no skew risk: the
     per-bucket partials are one row each).
     """
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     bucket = F.least(F.floor(F.col("o_totalprice") / 50000), F.lit(11)).cast(
         "bigint"
@@ -598,7 +580,6 @@ def q_agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash agg at any scale; the per-agg predicates are evaluated inside
     the partial, so no extra scan or shuffle per condition.
     """
-    prep(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("mfdb_fc_orders")
     return spark.sql(
         _FILTER_CLAUSE_SQL.format(
@@ -630,7 +611,6 @@ def q_agg_string(spark: SparkSession, sf_dir: str) -> DataFrame:
     structure (partial aggregation still applies; the sort touches only
     the final per-group list, never a global order).
     """
-    prep(spark)
     n = load(spark, sf_dir, "nation")
     return n.groupBy("n_regionkey").agg(
         F.array_join(F.array_sort(F.collect_list("n_name")), ",").alias(
@@ -672,7 +652,6 @@ def q_stat_freq_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     needs salting (SCALE.md §3), at a vanishing fraction of the exact
     groupBy's shuffle. The exact side here is the self-check harness.
     """
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     sketch = o.stat.freqItems(["o_orderpriority"], 0.05).select(
         F.col("o_orderpriority_freqItems").alias("sketch_items")
@@ -714,7 +693,6 @@ def q_agg_bool(spark: SparkSession, sf_dir: str) -> DataFrame:
     "any failures?") [R `check_records`]. Same partial+final hash-agg
     shape as every other aggregate.
     """
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.bool_and(F.col("o_totalprice") > 1000).alias("all_over_1k"),
@@ -744,7 +722,6 @@ def q_agg_decimal_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     discipline of the reference's number-field coefficients [R], in the
     type system Spark actually ships.
     """
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         F.sum(F.col("l_extendedprice").cast("decimal(18,2)"))
@@ -785,7 +762,6 @@ def q_transpose(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns, so it is a SMALL-RESULT-ONLY operator by construction (here:
     3×2 post-aggregation cells); never transpose a fact table.
     """
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     agg = (
         li.groupBy("l_returnflag")
@@ -827,7 +803,6 @@ def q_agg_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-row cross join — the standard distributed-moments shape (at
     100 TB: one-pass co-moment accumulation if the second scan hurts).
     """
-    prep(spark)
     li = load(spark, sf_dir, "lineitem").select("l_quantity")
     mu = li.agg(F.avg("l_quantity").alias("m"))
     x = F.col("l_quantity") - F.col("m")
@@ -871,7 +846,6 @@ def q_profile_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the difference between 1× and C× the table read at 100 TB).
     The reference's `check_records` schema audit [R] as a profile query.
     """
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     s = o.agg(
         F.count(F.lit(1)).alias("n"),
@@ -917,7 +891,6 @@ def q_agg_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: regr_* are algebraic aggregates (sums of x, y, xy, x², y²)
     → partial+final like any sum; one shuffle of 5 moment tuples per
     group, constant state per task."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.groupBy("l_returnflag").agg(
         r4(F.regr_slope("l_extendedprice", "l_quantity")).alias("slope"),
@@ -966,7 +939,6 @@ def q_quantile_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx percentile cutpoints (`q_agg_approx_percentile`) and a
     scan-side bucket assignment instead — this row is the exact,
     oracle-checkable form over bounded group counts."""
-    prep(spark)
     e = load(spark, sf_dir, "events").where(F.col("value").isNotNull())
     w = Window.partitionBy("event_type").orderBy("value", "event_id")
     return (
@@ -1003,7 +975,6 @@ def q_quantile_bins_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel; the per-(group, band) offset window runs over ≤ 5×32
     aggregate rows. At 100 TB that re-scan beats one-task ntile by the
     width of the cluster."""
-    prep(spark)
     from modforms_db_spark.operators.banded import ntile_from_rn, with_banded_order
 
     e = (
@@ -1063,7 +1034,6 @@ def q_agg_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial-agg shuffle reduces to a single 1-row combine); the
     long-form explode happens on the 1-row result via stack, not on
     data. O(cols²) accumulators, O(1) rows moved."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     pairs = [
         (a, b)
@@ -1113,7 +1083,6 @@ def q_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     + a broadcast-sized nation-totals join back — the fact table is
     touched once; shares and squares run on the supplier-grain
     aggregate, ~|suppliers| rows."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name")
@@ -1161,7 +1130,6 @@ def q_bitmap_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     (`q_agg_hll_merge`) when approximation is acceptable. The oracle
     recomputes both levels with plain COUNT(DISTINCT), so a popcount
     or merge bug fails the hash."""
-    prep(spark)
     e = load(spark, sf_dir, "events").select("event_type", "user_id")
     cell = e.select(
         "event_type",
@@ -1221,7 +1189,6 @@ def q_period_over_period(spark: SparkSession, sf_dir: str) -> DataFrame:
     months-sized table; both lags run on that tiny series. The
     unpartitioned ORDER BY month window is a non-issue — it sorts
     ~tens of rows, not facts."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     monthly = o.groupBy(F.date_trunc("month", "o_orderdate").alias("month")).agg(
         r2(F.sum("o_totalprice")).alias("revenue"),
@@ -1272,7 +1239,6 @@ def q_ab_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     one scan regardless of group sizes, and generalizes to many-arm
     experiments as a groupBy + pairwise self-join of the tiny moment
     table."""
-    prep(spark)
     e = load(spark, sf_dir, "events").where(
         F.col("event_type").isin("click", "purchase")
     )
@@ -1332,7 +1298,6 @@ def q_agg_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     high cardinality inputs per key, exactly what the distinct-set leg
     simulates. The oracle pins result-equality with the unsalted
     plan."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     salted = e.withColumn("salt", (F.col("event_id") % _SALT_N).cast("int"))
     phase1 = salted.groupBy("event_type", "salt").agg(
@@ -1385,7 +1350,6 @@ def q_grouped_ols(spark: SparkSession, sf_dir: str) -> DataFrame:
     the group-sized table. This is exactly how distributed linear
     regression by group should decompose — no per-group sorts, no
     collect."""
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     x = F.size(F.split("text", " ")).cast("bigint")
     y = F.col("n_chars")
@@ -1426,7 +1390,6 @@ def q_geometric_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: a plain partial+final aggregate — ln is applied map-side,
     one shuffle of (sum, count) partials per group; positivity filter
     pushed to the scan."""
-    prep(spark)
     o = load(spark, sf_dir, "orders").where(F.col("o_totalprice") > 0)
     return o.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"),
@@ -1479,7 +1442,6 @@ def q_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     (find the revenue value at the 80th cumulative percentile from a
     GK sketch, then classify by comparison — no global sort), which
     preserves classes up to boundary ties."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     rev = li.groupBy("l_partkey").agg(
         r2(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))).alias("r")
@@ -1521,7 +1483,6 @@ def q_pareto_abc_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one partial-agg shuffle to part grain, banded window across
     32 parallel tasks, 32-row offset prefix, broadcast scalar total —
     no global sort anywhere."""
-    prep(spark)
     from modforms_db_spark.operators.banded import with_abc_class
 
     li = load(spark, sf_dir, "lineitem")
@@ -1574,7 +1535,6 @@ def q_share_of_parent(spark: SparkSession, sf_dir: str) -> DataFrame:
     grand totals cascade from that aggregate (checkpointed — no
     re-scan), and both ratio joins are against #regions-sized /
     1-row broadcast sides."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     n = load(spark, sf_dir, "nation").select("n_nationkey", "n_name", "n_regionkey")
@@ -1649,7 +1609,6 @@ def q_ab_proportions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one user-grain aggregate (shuffle on user_id), a 1-row
     median broadcast, then a 1-row conditional combine — the entire
     test is two aggregates regardless of arm sizes."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     spend = (
         e.where(F.col("event_type") == "purchase")
@@ -1715,7 +1674,6 @@ def q_feature_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     |A|×|B|); the collapse is a second tiny aggregate over the crossed
     table. At extreme crosses (3+ columns) the same plan holds — the
     threshold is what keeps the output vocabulary bounded."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     crossed = (
@@ -1769,7 +1727,6 @@ def q_target_encode_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one window over the group key computes sum and count in a
     single exchange — no self-join, no second pass; the LOO arithmetic
     is per-row map work on the windowed values."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     # ORDER-EXACT arithmetic: prices become integer cents before the
     # window sum (r10-rounding group sums was NOT enough — engines sum
@@ -1828,7 +1785,6 @@ def q_stats_merge_pairwise(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-shard sketches are O(1) rows each; re-merging N sketches
     is an N-row aggregate — recomputing statistics over a year from
     daily sketches never touches the facts again."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     # Σx² in DECIMAL(38,0): bigint overflows at driver scale (cents² ~
     # 2.5e15/row × 10⁶ rows — an overflow this operator hit live), and
@@ -1906,7 +1862,6 @@ def q_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one partial-agg pass over orders to customer grain
     (checkpointed — the three banded rank passes and the count re-read
     that grain, never the fact table)."""
-    prep(spark)
     from modforms_db_spark.operators.banded import ntile_from_rn, with_banded_order
 
     o = load(spark, sf_dir, "orders")
@@ -1984,7 +1939,6 @@ def q_wilson_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one partial-agg pass to supplier grain; the top-20 is
     orderBy+limit (TakeOrdered), the rank window runs over 20 rows."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     s = li.groupBy("l_suppkey").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -2070,7 +2024,6 @@ def q_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE fact scan to the checkpointed (part, week) grain; part
     grain, week count, revenue ranks and demand moments all re-derive
     from it."""
-    prep(spark)
     from modforms_db_spark.operators.banded import with_abc_class
 
     li = load(spark, sf_dir, "lineitem")
@@ -2179,7 +2132,6 @@ def q_agg_kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     window. At 100 TB the per-partition bottom-k is a map-side
     aggregate and only k values per group ever cross the wire — the
     point of the sketch."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     u = F.conv(
         F.substring(F.md5(F.col("o_custkey").cast("string")), 1, 12), 16, 10
@@ -2277,7 +2229,6 @@ def q_feature_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded by the label-vocabulary product (15 cells here), never by
     row count, the `q_share_of_parent` discipline. Nothing but the
     grid ever leaves the first aggregation."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     c = o.groupBy(
         F.col("o_orderpriority").alias("pri"),
@@ -2383,7 +2334,6 @@ def q_bootstrap_poisson(spark: SparkSession, sf_dir: str) -> DataFrame:
     the explode is ×32 but filters w=0 draws (36.8%) before the
     shuffle, and the per-(pri, b) sums are exact-integer map-side
     combines; the final window runs over 32 rows per group."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     base = o.select(
         F.col("o_orderpriority").alias("pri"),
@@ -2480,7 +2430,6 @@ def q_agg_listagg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: broadcast dim join + map-side-combinable ordered aggregate
     over bounded per-group lists (25 nations / 5 regions) — the label
     assembly shape; a data-sized group would cap or bucket first."""
-    prep(spark)
     n = load(spark, sf_dir, "nation")
     r = load(spark, sf_dir, "region")
     j = n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey)
@@ -2540,7 +2489,6 @@ def q_rare_collapse(spark: SparkSession, sf_dir: str) -> DataFrame:
     the membership join + re-aggregate run entirely on the
     category-domain-bounded frame.
     """
-    prep(spark)
     p = load(spark, sf_dir, "part")
     cents = F.round(F.col("p_retailprice") * 100, 0).cast("bigint")
     g = (
@@ -2621,7 +2569,6 @@ def q_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain BEFORE hashing, so the bucket aggregate sees vocabulary-
     not row-count; the spine join is a {_FHASH_B}-row broadcast.
     """
-    prep(spark)
     p = load(spark, sf_dir, "part")
     feats = p.selectExpr(
         "stack(2, concat('b=', p_brand), concat('t=', p_type)) AS (feat)"
@@ -2729,7 +2676,6 @@ def q_sketch_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB only k hashes per set cross the wire for the sketch
     legs — the point of the sketch; the exact legs are the audit.
     """
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     u = F.conv(
         F.substring(F.md5(F.col("o_custkey").cast("string")), 1, 12), 16, 10
@@ -2893,7 +2839,6 @@ def q_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded by the category domain product); margins and the
     statistic run on the bounded cell frame — rows never re-shuffle.
     """
-    prep(spark)
     o = load(spark, sf_dir, "orders").select("o_custkey", "o_orderstatus")
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
     j = o.join(F.broadcast(c), o.o_custkey == c.c_custkey).select(
@@ -3028,7 +2973,6 @@ def q_anova_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     r4-rounded before the threshold. The same shape tests billions of
     rows because only k moment triples ever cross the wire.
     """
-    prep(spark)
     c = load(spark, sf_dir, "customer")
     cents = F.round(F.col("c_acctbal") * 100, 0).cast("bigint")
     base = c.select(
@@ -3127,7 +3071,6 @@ def q_lorenz_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row moment combine, and two single-rank landmark lookups joined
     off the checkpointed banded frame.
     """
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
     g = o.groupBy("o_custkey").agg(F.sum(cents).cast("bigint").alias("cents"))
@@ -3243,7 +3186,6 @@ def q_bloom_fpr_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     filters distributed-friendly) broadcast to the probe side; probes
     are a per-row hash + 3-row min — one linear pass each side.
     """
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     members = (
         o.where(F.col("o_orderstatus") == "F")
@@ -3402,7 +3344,6 @@ def q_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole design is eight aggregate rows), then scalar math. Billions
     of events cost one scan.
     """
-    prep(spark)
     e = load(spark, sf_dir, "events")
     base = e.select(
         (F.col("user_id") % 2 == 0).alias("treated"),
@@ -3518,7 +3459,6 @@ def q_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     one extra 1-row aggregate over the same user-grain frame (kept to
     a single scan by the checkpoint).
     """
-    prep(spark)
     e = load(spark, sf_dir, "events")
     post_f = F.col("ts") >= F.lit(_DID_SPLIT_TS).cast("timestamp")
     u = (
@@ -3617,7 +3557,6 @@ def q_mde_power(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined moment pass to the TYPE grain; the
     sizing math is free at any corpus size.
     """
-    prep(spark)
     e = load(spark, sf_dir, "events").select(
         "event_id", "event_type", "value"
     ).localCheckpoint(eager=False)  # organic + planted-sparse legs
@@ -3725,7 +3664,6 @@ def q_levene_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpointed base, then three map-side-combinable integer sums
     per group — only k moment triples cross the wire.
     """
-    prep(spark)
     c = load(spark, sf_dir, "customer")
     cents = F.round(F.col("c_acctbal") * 100, 0).cast("bigint")
     base = c.select(
@@ -3847,7 +3785,6 @@ def q_ttest_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined pass to the user grain, one 2-row
     moment combine; nothing but moment triples crosses the wire.
     """
-    prep(spark)
     e = load(spark, sf_dir, "events")
     post_f = F.col("ts") >= F.lit(_DID_SPLIT_TS).cast("timestamp")
     u = (
@@ -3951,7 +3888,6 @@ def q_corr_spearman(spark: SparkSession, sf_dir: str) -> DataFrame:
     (quantize continuous features to fixed bins first — the
     `q_ks_test` discipline).
     """
-    prep(spark)
     t = load(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("g"),
         F.col("l_quantity").cast("bigint").alias("x"),
@@ -4072,7 +4008,6 @@ def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     the "quadratic" join is a constant ~300k cell pairs regardless of
     row count — the same trick that makes `q_ks_test` linear.
     """
-    prep(spark)
     t = load(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("g"),
         F.col("l_quantity").cast("bigint").alias("x"),
@@ -4204,7 +4139,6 @@ def q_partial_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: single map-side-combined moment pass; 3 rows of math after.
     """
-    prep(spark)
     q_ = F.col("l_quantity").cast("bigint")
     t = load(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("g"),
@@ -4341,7 +4275,6 @@ def q_cmh_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     (variant, stratum) 2x2 grain — 10 cells of math regardless of
     row count.
     """
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     variants = spark.createDataFrame(
         [("organic",), ("planted",)], "variant string"
@@ -4523,7 +4456,6 @@ def q_effect_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 2-row broadcast cross join); all statistics on <=212 grain
     rows regardless of corpus size.
     """
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     variants = spark.createDataFrame(
         [("organic",), ("planted",)], "variant string"
@@ -4691,7 +4623,6 @@ def q_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     point of AMS at 100 TB — the exact grain is the audit, the
     sketch is what you'd actually ship).
     """
-    prep(spark)
     g = (
         load(spark, sf_dir, "lineitem")
         .groupBy(F.col("l_orderkey").alias("k"))
@@ -4811,7 +4742,6 @@ def q_ipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross join. The same shape prices any observational read at
     100 TB — the masses are add-mergeable partials.
     """
-    prep(spark)
     e = load(spark, sf_dir, "events")
     u = (
         e.groupBy(
@@ -4940,7 +4870,6 @@ def q_price_volume_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast customer-dim join; the bridge math runs on the
     5-row segment frame.
     """
-    prep(spark)
     o = load(spark, sf_dir, "orders").select(
         "o_custkey",
         F.when(
@@ -5061,7 +4990,6 @@ def q_design_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     a per-variant 1-row reduce — the same shape prices DEFF on a
     billion clusters.
     """
-    prep(spark)
     e = (
         load(spark, sf_dir, "events")
         .select(
@@ -5217,7 +5145,6 @@ def q_simpson_paradox(spark: SparkSession, sf_dir: str) -> DataFrame:
     grain (map-side combined); everything after is arithmetic on a
     bounded frame.
     """
-    prep(spark)
     base = (
         load(spark, sf_dir, "events")
         .where(F.col("event_type").isin("click", "purchase"))
@@ -5345,7 +5272,6 @@ def q_agg_histogram_log(spark: SparkSession, sf_dir: str) -> DataFrame:
     fits in a double), never row count; the spine is generated from
     a 1-row min/max reduce.
     """
-    prep(spark)
     b = (
         load(spark, sf_dir, "orders")
         .where(F.col("o_totalprice") > 0)
@@ -5460,7 +5386,6 @@ def q_causal_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one pass to the unit grain, a 1-row mass reduce, a
     4-row literal panel.
     """
-    prep(spark)
     e = load(spark, sf_dir, "events")
     u = e.groupBy(
         (
@@ -5581,7 +5506,6 @@ def q_vif(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: ONE aggregate pass computes all three correlations (fused
     moment accumulators, map-side combined); the algebra runs on a
     1-row frame."""
-    prep(spark)
     a, b, c = _VIF_COLS
     li = load(spark, sf_dir, "lineitem")
     m = li.agg(
@@ -5705,7 +5629,6 @@ def q_elo_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair stats — at any data size the expensive part is the ONE
     aggregation from raw match logs to (pair, wins) counts, map-side
     combined; rounds never touch raw matches again."""
-    prep(spark)
     models = (
         load(spark, sf_dir, "nation")
         .where(F.col("n_nationkey") < _BT_MODELS)
@@ -5850,7 +5773,6 @@ def q_gini_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: thresholds arrive as a broadcast literal dim; one
     conditional-aggregate pass over the fact regardless of candidate
     count; the argmin runs on the |thresholds|-row frame."""
-    prep(spark)
     d = load(spark, sf_dir, "documents").select(
         "n_chars", (F.col("lang") == "en").cast("int").alias("y")
     )
@@ -5932,7 +5854,6 @@ def q_ctr_smoothing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one conditional-count aggregate keyed by user — map-side
     combined; no joins, no windows."""
-    prep(spark)
     u = (
         load(spark, sf_dir, "events")
         .groupBy("user_id")
@@ -6029,7 +5950,6 @@ def q_xi_correlation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two partitioned windows per (group, pair) — a rank pass and
     a lag pass — never global; the per-group frames shuffle once
     each."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem").select(
         "l_returnflag",
         "l_quantity",
@@ -6144,7 +6064,6 @@ def q_tost_equivalence(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-scope 1-row moment aggregates off one scan of the
     filtered stream, joined broadcast-style — the test costs one scan
     regardless of arm sizes."""
-    prep(spark)
     base = (
         load(spark, sf_dir, "events")
         .select("event_id", "value")
@@ -6308,7 +6227,6 @@ def q_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin that replays the decision path."""
     from modforms_db_spark.operators.banded import with_banded_order
 
-    prep(spark)
     base = (
         load(spark, sf_dir, "events")
         .select(
@@ -6477,7 +6395,6 @@ def q_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     two 1-row-per-scope aggregate passes over a constant-size panel —
     at 100 TB the scan prunes to the id range and everything
     downstream is constant."""
-    prep(spark)
     sub = (
         load(spark, sf_dir, "events")
         .where(F.col("event_id") < _JB_CAP)
@@ -6644,7 +6561,6 @@ def q_breusch_pagan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two aggregate passes over one checkpointed scan (the OLS
     moments, then the aux moments with (a, b) broadcast back), both
     map-side combined; no shuffle beyond the 2-row scope grain."""
-    prep(spark)
     base = (
         load(spark, sf_dir, "events")
         .select(
@@ -6793,7 +6709,6 @@ def q_quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     extraction joins a 3-row literal spine; output is 6 rows."""
     from modforms_db_spark.operators.banded import with_banded_order
 
-    prep(spark)
     base = (
         load(spark, sf_dir, "events")
         .select(
@@ -6963,7 +6878,6 @@ def q_group_sequential_obf(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoints; rank-spaced looks make the test reproducible here."""
     from modforms_db_spark.operators.banded import with_banded_order
 
-    prep(spark)
     h2 = F.pmod(
         F.pmod(
             F.col("event_id") * F.lit(1013904223).cast("bigint"),
@@ -7152,7 +7066,6 @@ def q_mediation_sobel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: ONE aggregate pass to a 2-row moment frame (map-side
     combined) — the entire test is O(scan), no joins, no windows."""
-    prep(spark)
     h = lambda k, sh: F.pmod(  # noqa: E731
         F.pmod(F.col("event_id") * F.lit(k).cast("bigint"), F.lit(4294967296))
         .bitwiseXOR(
@@ -7331,7 +7244,6 @@ def q_tail_dependence(spark: SparkSession, sf_dir: str) -> DataFrame:
     running the oracle comparison above that bound."""
     from modforms_db_spark.operators.banded import with_banded_order
 
-    prep(spark)
     key = F.col("l_orderkey") * 7 + F.col("l_linenumber")
     hbase = F.pmod(key * F.lit(2654435761).cast("bigint"), F.lit(4294967296))
     base = (
@@ -7503,7 +7415,6 @@ def q_meta_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one pass to the (scope, stratum, arm) grain (map-side
     combined), then k-row frames throughout."""
-    prep(spark)
     h = F.pmod(
         F.pmod(
             F.col("event_id") * F.lit(2654435761).cast("bigint"),
@@ -7694,7 +7605,6 @@ def q_ht_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one 1-row total pass, one sargable SRS scan, and one
     banded cumulative walk for the systematic selection (no global
     sort); the estimator never shuffles row data."""
-    prep(spark)
     hbase = F.pmod(
         F.col("o_orderkey") * F.lit(2654435761).cast("bigint"),
         F.lit(4294967296),

@@ -14,7 +14,6 @@ from modforms_db_spark.io import load
 from modforms_db_spark.oracle_dialect import R, R2, R4
 from modforms_db_spark.parity import r2, r4
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
 
 
 @register(
@@ -31,7 +30,6 @@ from modforms_db_spark.session import prep
 )
 def q_project_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arithmetic projection with casts and aliasing."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     return li.select(
         "l_orderkey",
@@ -57,7 +55,6 @@ def q_project_expr(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_filter_conjunct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AND/OR/NOT/BETWEEN/IN compound predicate on orders."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     lo = F.lit("1996-01-01 00:00:00").cast("timestamp_ntz")
     hi = F.lit("1998-12-31 00:00:00").cast("timestamp_ntz")
@@ -82,7 +79,6 @@ def q_filter_conjunct(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_filter_like_regexp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LIKE / rlike in the Java∩RE2 common regex subset (SURVEY.md §2.11)."""
-    prep(spark)
     p = load(spark, sf_dir, "part")
     return p.where(
         F.col("p_name").like("%gear%")
@@ -105,7 +101,6 @@ def q_filter_like_regexp(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_filter_null(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Null semantics: nullif-injected nulls, isNull, null-safe <=>, coalesce."""
-    prep(spark)
     c = load(spark, sf_dir, "customer")
     seg_null = F.nullif(F.col("c_mktsegment"), F.lit("BUILDING"))
     return c.where(
@@ -126,7 +121,6 @@ def q_filter_null(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SELECT DISTINCT — distinct levels/weights present in the DB [R]."""
-    prep(spark)
     return load(spark, sf_dir, "customer").select("c_mktsegment").distinct()
 
 
@@ -154,7 +148,6 @@ def q_subquery_correlated(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries — no per-row re-execution, which is what makes the construct
     survive 100 TB.
     """
-    prep(spark)
     load(spark, sf_dir, "customer").createOrReplaceTempView("mfdb_sq_customer")
     load(spark, sf_dir, "orders").createOrReplaceTempView("mfdb_sq_orders")
     return spark.sql(
@@ -204,7 +197,6 @@ def q_sql_recursive_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     like sequence packing belong in applyInPandas (q_pack_sequences),
     and Spark enforces that boundary with its recursion-level limit.
     """
-    prep(spark)
     load(spark, sf_dir, "nation").createOrReplaceTempView("mfdb_rc_nation")
     return spark.sql(_RECURSIVE_CHAIN_SQL.format(nation="mfdb_rc_nation"))
 
@@ -233,7 +225,6 @@ def q_join_lateral(spark: SparkSession, sf_dir: str) -> DataFrame:
     construct scales like any windowed top-k: one shuffle on the
     correlation key, per-key group limit, no per-row re-execution.
     """
-    prep(spark)
     load(spark, sf_dir, "region").createOrReplaceTempView("mfdb_lat_region")
     load(spark, sf_dir, "nation").createOrReplaceTempView("mfdb_lat_nation")
     return spark.sql(
@@ -260,7 +251,6 @@ def q_sql_parameterized(spark: SparkSession, sf_dir: str) -> DataFrame:
     f-string splicing). The bound literals constant-fold, so pushdown and
     partition pruning see them exactly as if hard-coded.
     """
-    prep(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("mfdb_param_orders")
     return spark.sql(
         """
@@ -312,7 +302,6 @@ def q_subquery_any_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the rewrite IS the scale plan — a naive quantified subquery
     is a per-row recheck; the extremum form is one 1-row broadcast
     cross join, zero shuffles on the probe side beyond the scan."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     # The quantified subqueries range over ONE MONTH of orders: the
     # round-5 vacuity audit showed that quantifying over the global
@@ -383,7 +372,6 @@ def q_sql_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: resolution happens at plan time; the executed plan is
     byte-identical to the static form (same pushdown, same agg), so
     there is no runtime cost to the indirection."""
-    prep(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("mfdb_dyn_orders")
     tbl, grp = "mfdb_dyn_orders", "o_orderpriority"
     spark.sql("DECLARE OR REPLACE VARIABLE mfdb_status STRING")
@@ -428,7 +416,6 @@ def q_sql_pipe(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combined aggregation to the priority grain — identical to
     `q_agg_flagship`'s discipline; nothing about `|>` changes the
     physical plan."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     o.createOrReplaceTempView("mfdb_pipe_orders")
     return spark.sql(
@@ -466,7 +453,6 @@ def q_sql_group_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one broadcast-dim join + map-side-combined aggregate —
     syntax sugar, zero plan difference.
     """
-    prep(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("mfdb_gba_o")
     load(spark, sf_dir, "customer").createOrReplaceTempView("mfdb_gba_c")
     return spark.sql(
@@ -507,7 +493,6 @@ def q_sql_lateral_alias(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pure scan-side projection with a pushed filter; analyzer
     sugar, zero plan difference.
     """
-    prep(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("mfdb_lca_o")
     return spark.sql(
         """
@@ -568,7 +553,6 @@ def q_sql_try_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side-combined conditional aggregate over the fact
     scan; the try_* forms stay inside whole-stage codegen.
     """
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     t = li.select(
         "l_returnflag",
@@ -629,7 +613,6 @@ def q_sql_window_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice — partition key is the 5-value priority, bounded grain;
     the filter reaches the parquet scan.
     """
-    prep(spark)
     load(spark, sf_dir, "orders").createOrReplaceTempView("mfdb_wc_orders")
     return spark.sql(
         """
@@ -673,7 +656,6 @@ def q_sql_identifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     is byte-identical to the static query (scan + partial/final
     agg), so there is no runtime cost to the indirection.
     """
-    prep(spark)
     load(spark, sf_dir, "customer").createOrReplaceTempView(
         "mfdb_ident_customer"
     )
@@ -721,7 +703,6 @@ def q_sql_order_by_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the sort runs on the aggregated frame (bounded by the
     flag×status domain), never on raw rows."""
-    prep(spark)
     load(spark, sf_dir, "lineitem").createOrReplaceTempView("mfdb_oba_l")
     return spark.sql(
         """
@@ -764,7 +745,6 @@ def q_sql_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: UNPIVOT is a per-row map expansion (3 rows out per row
     in) — embarrassingly parallel, no shuffle; the shuffle in this
     query is the upstream groupBy to the 3-row wide frame."""
-    prep(spark)
     load(spark, sf_dir, "lineitem").createOrReplaceTempView(
         "li_unpivot_src"
     )
@@ -832,7 +812,6 @@ def q_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
     'nan' from DuckDB, so the driver canonicalizer would hash-split
     on representation, not semantics (measured here) — the same
     hazard class as the r4/complex-column standing rules."""
-    prep(spark)
     return spark.sql(
         """
         WITH v AS (

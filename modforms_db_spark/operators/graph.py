@@ -29,7 +29,6 @@ from modforms_db_spark.io import load
 from modforms_db_spark.oracle_dialect import R, R4
 from modforms_db_spark.parity import d38, r4
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
 
 _D = 0.85  # damping
 _ITERS = 3
@@ -105,7 +104,6 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Per round: ranks join edges on src → per-dst contribution agg →
     blend with teleport + dangling terms. All sums r10-rounded per
     round on both engines (module docstring)."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     edges = (
@@ -190,7 +188,6 @@ def q_degree_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: distinct-edge build shuffles once on (src, dst); each degree
     count reuses a side of that key; the histogram agg is bounded by
     the distinct-degree count. Nothing is ever collected per-node."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     edges = (
@@ -342,7 +339,6 @@ def q_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     invariant, so the id-ordered oracle still verifies it. Both wedge
     build and close are plain equi-joins — Catalyst shuffles on the
     pivot key; no per-node adjacency materialization."""
-    prep(spark)
     edges = cosupply_edges(spark, sf_dir).localCheckpoint(
         eager=False
     )  # reused 3× (wedge legs + close probe)
@@ -384,7 +380,6 @@ def q_khop_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses multipaths EACH round so the frontier never carries
     duplicate paths, which is what makes k rounds O(k·m) not O(deg^k));
     deeper k just iterates the same two ops."""
-    prep(spark)
     half = cosupply_edges(spark, sf_dir)
     sym = half.union(half.select(F.col("v").alias("u"), F.col("u").alias("v")))
     sym = sym.localCheckpoint(eager=False)  # both hop legs read it
@@ -464,7 +459,6 @@ def q_shortest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     localCheckpoint truncates per-round lineage. Full convergence runs
     diameter rounds or switches to delta-stepping; the fixed-round
     form here is the oracle-checkable contract."""
-    prep(spark)
     os_ = (
         load(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("s"))
@@ -557,7 +551,6 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ_v deg(v)², bounded by orienting on the low-degree endpoint at
     power-law scale; degrees and the anti-join are key-partitioned
     aggregates. Top-20 via TakeOrdered."""
-    prep(spark)
     counts = cosupply_pair_counts(spark, sf_dir).localCheckpoint(
         eager=False
     )  # feeds both the mean and the cut
@@ -687,7 +680,6 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage cut per round. Top lists are two `orderBy().limit()`
     TakeOrdered legs, never a data-sized window.
     """
-    prep(spark)
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     edges = (
@@ -800,7 +792,6 @@ def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     edge frame is checkpointed once and feeds both degree legs and
     the moment join.
     """
-    prep(spark)
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     edges = (
@@ -950,7 +941,6 @@ def q_graph_clustering_coeff(spark: SparkSession, sf_dir: str) -> DataFrame:
     (degree, id) orientation of `triangle_close` is the swap-in if
     the degree tail ever grows hubs); the histogram is 10 rows.
     """
-    prep(spark)
     e = copurchase_edges(spark, sf_dir).localCheckpoint(
         eager=False
     )  # three wedge legs + degrees
@@ -1068,7 +1058,6 @@ def q_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: edges join the broadcast-sized part dim for labels; both
     masses are partial+final aggregates; output is 2 rows.
     """
-    prep(spark)
     e = copurchase_edges(spark, sf_dir)
     comm = load(spark, sf_dir, "part").select(
         F.col("p_partkey").alias("node"), F.col("p_brand").alias("c")
@@ -1204,7 +1193,6 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     large-star/small-star discipline from `q_dedup_components`;
     O(rounds) passes, never quadratic.
     """
-    prep(spark)
     op = (
         load(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p"))
@@ -1330,7 +1318,6 @@ def q_graph_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     argument as the dim-join family), so the reciprocity self-join
     runs on a constant frame regardless of fact size; the only
     data-sized work is the dim-broadcast join chain + one distinct."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")

@@ -22,7 +22,6 @@ from modforms_db_spark.io import load
 from modforms_db_spark.oracle_dialect import R, R2, R4
 from modforms_db_spark.parity import r4
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
 
 
 @register(
@@ -36,7 +35,6 @@ from modforms_db_spark.session import prep
 )
 def q_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tiny-dim inner join with an explicit broadcast hint."""
-    prep(spark)
     n = load(spark, sf_dir, "nation")
     r = load(spark, sf_dir, "region")
     return n.join(
@@ -57,7 +55,6 @@ def q_join_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_join_sortmerge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The large fact-fact equi-join (space ⋈ factors analogue), merge hint."""
-    prep(spark)
     o = load(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "O")
     li = load(spark, sf_dir, "lineitem")
     return (
@@ -83,7 +80,6 @@ def q_join_sortmerge(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left outer — spaces with/without computed factors [R]."""
-    prep(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     return c.join(o, c.c_custkey == o.o_custkey, "left").select(
@@ -101,7 +97,6 @@ def q_join_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("join",),
 )
 def q_join_right(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prep(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     return c.join(o, c.c_custkey == o.o_custkey, "right").select(
@@ -123,7 +118,6 @@ def q_join_right(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full outer — reconcile files-store vs Mongo-store record sets [R]."""
-    prep(spark)
     c = load(spark, sf_dir, "customer").where(F.col("c_nationkey") < 12)
     s = load(spark, sf_dir, "supplier").where(F.col("s_nationkey") >= 8)
     return c.join(s, c.c_nationkey == s.s_nationkey, "full").select(
@@ -144,7 +138,6 @@ def q_join_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left semi — "which spaces already have aps?" [R]."""
-    prep(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     return c.join(o, c.c_custkey == o.o_custkey, "left_semi").select(
@@ -176,7 +169,6 @@ def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     the date-filtered order set keeps the anti-join load-bearing at
     every shipped SF (14 / 135 / 1355 rows measured) — and the filter
     pushes to the orders scan, the realistic shape anyway."""
-    prep(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders").where(
         F.col("o_orderdate") >= F.lit("2000-01-01 00:00:00").cast("timestamp_ntz")
@@ -196,7 +188,6 @@ def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross join — parameter-grid generation (all (N,k) pairs) [R]."""
-    prep(spark)
     r = load(spark, sf_dir, "region")
     n = load(spark, sf_dir, "nation")
     return r.crossJoin(n).select("r_name", "n_name")
@@ -215,7 +206,6 @@ def q_join_cross(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_join_theta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi + range predicate join — ap-coverage vs required-precision [R]."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
     return o.join(
@@ -261,7 +251,6 @@ def q_join_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase, the latest prior-or-equal signup of the same user. One shuffle
     on user_id + one window pass — no self-join blowup, which is what makes
     this the 100 TB-safe formulation. Version-chained record lookup [R]."""
-    prep(spark)
     e = load(spark, sf_dir, "events").where(
         F.col("event_type").isin("signup", "purchase")
     )
@@ -309,7 +298,6 @@ def q_join_asof_native(spark: SparkSession, sf_dir: str) -> DataFrame:
     while the emulation breaks equal-ts ties by event_id — identical
     here because no user has a signup and purchase at the same ts
     (verified at every SF; see _ASOF_ORACLE comment)."""
-    prep(spark)
     import pyspark.pandas as pps
 
     e = load(spark, sf_dir, "events")
@@ -350,7 +338,6 @@ def q_join_asof_native(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_join_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Attribution: view→purchase pairs of the same user within 5 minutes."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     v = e.where(F.col("event_type") == "view").select(
         F.col("event_id").alias("view_id"),
@@ -403,7 +390,6 @@ def q_join_skew_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
       fact table.
     The oracle is the UNSALTED join+agg — salting must not change results.
     """
-    prep(spark)
     S = 8
     l = load(spark, sf_dir, "lineitem").withColumn(
         "salt", F.pmod(F.xxhash64("l_orderkey", "l_linenumber"), F.lit(S))
@@ -456,7 +442,6 @@ def q_build_wide_records(spark: SparkSession, sf_dir: str) -> DataFrame:
     hints sit on the dims and not on a config. The wide result is written
     partitioned by the serving key, never collected.
     """
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders").where(
         F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp")
@@ -523,7 +508,6 @@ def q_join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
       the Bloom stage can ONLY shrink the shuffle, never change results —
       which is what the plain-semi-join oracle pins.
     """
-    prep(spark)
     m_words = 1024
     m_bits = m_words * 64
     k = 2
@@ -621,7 +605,6 @@ def q_join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     window pass, no self-join blowup; forward direction costs nothing
     extra because the frame mirror is frame metadata, not a second
     sort."""
-    prep(spark)
     e = load(spark, sf_dir, "events").where(
         F.col("event_type").isin("signup", "purchase")
     )
@@ -681,7 +664,6 @@ def q_join_nullsafe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the one caveat at 100 TB is that ALL nulls land in one partition —
     if the null class is a heavy hitter, pre-split it like any other
     skewed key (q_join_skew_salted)."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     k = F.nullif(F.col("o_orderpriority"), F.lit("3-MEDIUM")).alias("prio_k")
     left = o.groupBy(k).agg(F.count(F.lit(1)).alias("n_orders"))
@@ -721,7 +703,6 @@ def q_copurchase_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the top-20 is a TakeOrdered, no global sort. Pathological
     mega-baskets (w in the thousands) get capped or minhashed upstream
     — the width bound is the thing to monitor at 100 TB."""
-    prep(spark)
     op = (
         load(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p"))
@@ -882,7 +863,6 @@ def q_fuzzy_name_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     phonetic key, or q-gram LSH) as data grows. Levenshtein's ≤2 bound
     also admits the banded O(n·k) DP rather than full O(n²) per pair
     (Spark's builtin takes the threshold argument for exactly this)."""
-    prep(spark)
     return _fuzzy_pairs(spark, sf_dir)
 
 
@@ -940,7 +920,6 @@ def q_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     when it fits the driver, else O(log n) star rounds. The compose-don't-
     materialize shape is the point: no intermediate table lands
     between match and cluster."""
-    prep(spark)
     from modforms_db_spark.llm.dedup import connected_components
 
     edges = _fuzzy_pairs(spark, sf_dir).select(
@@ -1006,7 +985,6 @@ def q_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     20-row side broadcasts, so the metric join costs nothing at any
     scale. The distinct grain is checkpointed: supports, marginals and
     the total all derive from it in one scan of the fact table."""
-    prep(spark)
     op = (
         load(spark, sf_dir, "lineitem")
         .select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p"))
@@ -1113,7 +1091,6 @@ def q_join_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ts, event_id)-ordered window — Catalyst plans one Exchange + one
     Sort with two frames over it, so nearest costs the same single
     shuffle as either one-direction form."""
-    prep(spark)
     e = load(spark, sf_dir, "events").where(
         F.col("event_type").isin("signup", "purchase")
     )
@@ -1232,7 +1209,6 @@ def q_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
     that the scoring pass reuses; the report is bounded by the score
     bands. A production run swaps blocks and fields, same shape.
     """
-    prep(spark)
     c = load(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_nationkey",
@@ -1355,7 +1331,6 @@ def q_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost IS its reduction-ratio verdict, bounded here by the supplier
     dim size).
     """
-    prep(spark)
     m, dirty = _fuzzy_sides(spark, sf_dir)
     m = m.localCheckpoint(eager=False)  # two scheme joins + size agg
     dirty = dirty.localCheckpoint(eager=False)
@@ -1478,7 +1453,6 @@ def q_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     crosses the wire, so the prediction costs a fraction of the join
     it prices.
     """
-    prep(spark)
     lo = (
         load(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderkey").alias("k"))
@@ -1567,7 +1541,6 @@ def q_join_division(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the divisor size, and a dim join — no EXISTS correlation,
     no divisor×dividend blowup.
     """
-    prep(spark)
     o = load(spark, sf_dir, "orders").select("o_custkey", "o_orderpriority")
     cp = (
         o.groupBy("o_custkey", "o_orderpriority")
@@ -1652,7 +1625,6 @@ def q_join_sample_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     here is only the audit; in production you run just the sampled
     leg.
     """
-    prep(spark)
     h = lambda c: F.pmod(  # noqa: E731
         F.pmod(F.col(c) * F.lit(2654435761).cast("bigint"), 9973), 100
     )
@@ -1719,7 +1691,6 @@ def q_late_arriving_dim(spark: SparkSession, sf_dir: str) -> DataFrame:
     one and broadcast-eligible); the inferred bucket is a conditional
     aggregation, not a second pass. The COUNT(DISTINCT) rides the same
     grouped aggregate."""
-    prep(spark)
     snap = (
         load(spark, sf_dir, "customer")
         .where(F.col("c_custkey") % 7 != 0)
@@ -1791,7 +1762,6 @@ def q_join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: identical to `q_join_asof`: one shuffle on user_id + one
     window pass; the tolerance predicate is free."""
-    prep(spark)
     e = load(spark, sf_dir, "events").where(
         F.col("event_type").isin("signup", "purchase")
     )
@@ -1935,7 +1905,6 @@ def q_matching_att(spark: SparkSession, sf_dir: str) -> DataFrame:
     (avalanched independent hashes for treatment and noise — the
     q_ipw_ate lesson); gaps and tie-breaks compare integers; the ATT
     is an exact integer sum over matched pairs divided once."""
-    prep(spark)
     h = lambda k, sh: F.pmod(  # noqa: E731
         F.pmod(F.col("event_id") * F.lit(k).cast("bigint"), F.lit(4294967296))
         .bitwiseXOR(

@@ -20,7 +20,6 @@ from modforms_db_spark.io import load
 from modforms_db_spark.oracle_dialect import R, R2, R4
 from modforms_db_spark.parity import d38, r2, r4
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
 
 
 @register(
@@ -63,7 +62,6 @@ def q_dq_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     conditional counts fused into single scans. Each table is scanned
     once per check family, and the output is one row per check.
     """
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     c = load(spark, sf_dir, "customer")
     li = load(spark, sf_dir, "lineitem")
@@ -143,7 +141,6 @@ def q_winsorize(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded event-type key (5 rows), broadcast back onto the fact scan —
     the fact table is read once for the bounds and once for the clipped
     agg, both linear; no window function, so no per-row sort."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     bounds = e.groupBy("event_type").agg(
         F.percentile("value", F.lit(0.05)).alias("lo"),
@@ -207,7 +204,6 @@ def q_stat_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     window — no self-join of the two windows), output bounded at
     #event_types. At 100 TB windows would come from partition pruning on
     a date-partitioned table; the agg shape is unchanged."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     win_b = F.col("ts") >= F.lit("2024-01-16 00:00:00").cast("timestamp_ntz")
     g = (
@@ -291,7 +287,6 @@ def q_outlier_iqr(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB swap `percentile` for the GK sketch
     (`q_agg_approx_percentile`'s path) — the fence join itself is a
     broadcast of #groups rows against the scan."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     spiked = o.select(
         "o_orderkey",
@@ -344,7 +339,6 @@ def q_impute_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     AVG does), broadcast back over the scan — no second fact pass, no
     window. Means r4-rounded before the fill so the filled column is
     engine-identical."""
-    prep(spark)
     c = load(spark, sf_dir, "customer")
     holes = c.select(
         "c_custkey",
@@ -391,7 +385,6 @@ def q_feature_scale(spark: SparkSession, sf_dir: str) -> DataFrame:
     caveat encoded here by the flag: min-max is outlier-sensitive;
     robust variants swap the bounds for the IQR fences of
     `q_outlier_iqr` without changing the plan.)"""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     stats = o.agg(
         r2(F.min("o_totalprice")).alias("lo"), r2(F.max("o_totalprice")).alias("hi")
@@ -454,7 +447,6 @@ def q_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one conditional scan → 9-group agg; the expected side is a
     9-row literal. χ² terms are emitted per digit rather than summed
     so the report shows WHERE the deviation lives."""
-    prep(spark)
     o = load(spark, sf_dir, "orders").where(F.col("o_totalprice") >= 1)
     digits = o.select(
         F.substring(F.floor("o_totalprice").cast("bigint").cast("string"), 1, 1)
@@ -520,7 +512,6 @@ def q_freshness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     footers could answer MAX alone, but COUNT(*)+MAX in one scan keeps
     it honest about row-level visibility); the reference is a 3-row
     combine."""
-    prep(spark)
     parts = []
     for tbl, col in (("events", "ts"), ("orders", "o_orderdate"), ("lineitem", "l_shipdate")):
         parts.append(
@@ -613,7 +604,6 @@ def q_ks_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     per pair. The same shape tests feature drift on billions of rows
     because only the quantized support enters the window (quantize
     real-valued features to fixed-width bins first)."""
-    prep(spark)
     d = load(spark, sf_dir, "documents").select("lang", "n_chars")
     # Planted ground truth (house vacuity discipline): the fixture's
     # length distributions are iid across langs, so every organic pair
@@ -763,7 +753,6 @@ def q_fk_discovery(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle join on (candidate, key), one bounded final combine — at
     100 TB the fact scan dominates and nothing wide ever shuffles.
     """
-    prep(spark)
     child_by_table: dict[str, list[tuple[str, str]]] = {}
     parent_by_col: dict[tuple[str, str], list[str]] = {}
     cols_needed: dict[str, set[str]] = {}
@@ -886,7 +875,6 @@ def q_fd_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB the scan dominates; only (lhs, rhs-partial) pairs cross
     the wire.
     """
-    prep(spark)
     by_table: dict[str, list[tuple[str, str, str]]] = {}
     for cand, tbl, lhs, rhs in _FD_CANDIDATES:
         by_table.setdefault(tbl, []).append((cand, lhs, rhs))
@@ -992,7 +980,6 @@ def q_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
     per pair, then exact-integer pair sums; billions of rows enter
     only through the quantized support.
     """
-    prep(spark)
     d = load(spark, sf_dir, "documents").select("lang", "n_chars")
     shifted = d.where(F.col("lang") == "en").select(
         F.lit("zz-shift").alias("lang"),
@@ -1135,7 +1122,6 @@ def q_reconciliation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     unskewed), then a tiny grouped audit; both scans prune to the
     money columns.
     """
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     line_cents = F.round(
         F.col("l_extendedprice")
@@ -1251,7 +1237,6 @@ def q_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
     then all ranking/threshold work happens on the m-row battery
     frame (m = streams under test), free at any corpus size.
     """
-    prep(spark)
     e = load(spark, sf_dir, "events").select(
         "event_type", F.dayofmonth("ts").alias("d")
     ).localCheckpoint(eager=False)  # organic + planted-burst legs
@@ -1394,7 +1379,6 @@ def q_outlier_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFrame:
     back onto the checkpointed base for the per-row score — the same
     shape scores billions of rows; only moment tuples shuffle.
     """
-    prep(spark)
     base = load(spark, sf_dir, "lineitem").select(
         F.col("l_returnflag").alias("g"),
         F.col("l_quantity").cast("bigint").alias("x"),
@@ -1538,7 +1522,6 @@ def q_psi_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     the bin DOMAIN, not rows; the spine/smoothing math runs on
     streams × {_PSI_NBINS} rows.
     """
-    prep(spark)
     e = load(spark, sf_dir, "events")
     split = F.lit(_PSI_SPLIT).cast("timestamp_ntz")
     win_b = F.col("ts") >= split
@@ -1679,7 +1662,6 @@ def q_column_entropy_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregation is on bounded (table, column, value) grains, and
     the top-value window partitions per column.
     """
-    prep(spark)
 
     def two_col(df, tbl: str, c1: str, c2: str):
         return df.select(
@@ -1798,7 +1780,6 @@ def q_duplicate_payments(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket pair expansion is bounded by per-customer same-amount
     multiplicity (≈1); the date predicate is a residual filter.
     """
-    prep(spark)
     base = (
         load(spark, sf_dir, "orders")
         .select(
@@ -1973,7 +1954,6 @@ def q_schema_contract(spark: SparkSession, sf_dir: str) -> DataFrame:
     executors, no data pages; the diff is a full-outer join of two
     bounded column-census frames.
     """
-    prep(spark)
     import pandas as pd  # noqa: F401
 
     from modforms_db_spark.schemas import TABLES
@@ -2116,7 +2096,6 @@ def q_ri_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the child grain is the only shuffle and the audit
     output is one row per declared edge.
     """
-    prep(spark)
     child_cols = {"lineitem": ["l_orderkey", "l_partkey", "l_suppkey"]}
     loaded = {}
 
@@ -2245,7 +2224,6 @@ def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows enter only through the quantized support (distinct n_chars);
     the rank cumulative is a per-scope window over that support, and
     every downstream frame is bounded by k·|support|."""
-    prep(spark)
     base = (
         load(spark, sf_dir, "documents")
         .where(F.col("lang") == "en")
@@ -2397,7 +2375,6 @@ def q_mcnemar(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two conditional-count aggregates over one scan (the
     paired-group rule: one conditional agg, never split+self-join);
     output is bounded by the number of comparisons."""
-    prep(spark)
     d = load(spark, sf_dir, "documents").select(
         (F.col("n_chars") > 300).alias("gold"),
         (F.size(F.split("text", " ")) > 60).alias("ra"),
@@ -2522,7 +2499,6 @@ def q_cohen_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: exact conditional-count aggregates over one scan; output
     bounded by the number of rater pairs."""
-    prep(spark)
     d = load(spark, sf_dir, "documents").select(
         (F.size(F.split("text", " ")) > 60).alias("ra"),
         (F.col("n_chars") > 300).alias("rb"),
@@ -2625,7 +2601,6 @@ def q_poisson_rate_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: exact conditional counts off one scan; the test runs on a
     rows-per-stream frame."""
-    prep(spark)
     base = load(spark, sf_dir, "events").select(
         "event_type", F.dayofmonth("ts").cast("bigint").alias("d")
     ).localCheckpoint(eager=False)  # organic leg + two planted legs
@@ -2705,7 +2680,6 @@ def q_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: two sargable hash predicates on one scan + a semi-join on
     the ~4% intersection; the estimator runs on a 1-row frame."""
-    prep(spark)
     d = load(spark, sf_dir, "documents").select("doc_id").localCheckpoint(
         eager=False
     )  # capture legs + true count — one scan
@@ -2806,7 +2780,6 @@ def q_cochran_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: every statistic is an exact integer from two grouped
     conditional counts (per gate, per item) over one checkpointed
     scan; the test runs on k-row and item-count frames."""
-    prep(spark)
     d = load(spark, sf_dir, "documents").select(
         "doc_id",
         "n_chars",
@@ -2947,7 +2920,6 @@ def q_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     loss."""
     from modforms_db_spark.operators.banded import with_banded_order
 
-    prep(spark)
     base = (
         load(spark, sf_dir, "events")
         .select(

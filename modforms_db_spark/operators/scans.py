@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from modforms_db_spark.io import load, load_raw
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
 
 
 @register(
@@ -24,7 +23,6 @@ from modforms_db_spark.session import prep
 )
 def q_scan_full(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Full scan + projection of region."""
-    prep(spark)
     return load(spark, sf_dir, "region").select("r_regionkey", "r_name")
 
 
@@ -40,7 +38,6 @@ def q_scan_full(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_scan_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered 3-column scan — exercises parquet predicate pushdown + pruning."""
-    prep(spark)
     import pyspark.sql.functions as F
 
     return (
@@ -72,7 +69,6 @@ def q_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster sizes (and hence oracle-checkable). At 100 TB this predicate
     is sargable arithmetic — it rides the scan inside codegen with no
     shuffle at all."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     keep = (
         (F.col("l_orderkey") * F.lit(2654435761).cast("bigint")
@@ -113,7 +109,6 @@ def q_sample_stratified(spark: SparkSession, sf_dir: str) -> DataFrame:
     unusable for reproducible mixes; this formulation re-samples
     identically on any engine or cluster shape.
     """
-    prep(spark)
     d = load(spark, sf_dir, "documents")
     rates = spark.createDataFrame(
         [("en", 50), ("de", 20), ("fr", 20), ("es", 10), ("zh", 5)],
@@ -157,7 +152,6 @@ def q_scan_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     sf_dir must still hash-match); the file-count audit itself lives in
     the unit test (:func:`scan_metadata_per_file` vs the file listing).
     """
-    prep(spark)
     return scan_metadata_per_file(spark, sf_dir).agg(
         F.sum("n_rows").alias("total_rows"),
         F.bool_and(
@@ -207,7 +201,6 @@ def q_scan_observed(spark: SparkSession, sf_dir: str) -> DataFrame:
     0-cost monitoring at 100 TB, vs a separate validation scan that
     doubles the read.
     """
-    prep(spark)
     from pyspark.sql import Observation
 
     obs = Observation("scan_audit")
@@ -257,7 +250,6 @@ def q_source_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     no file listing), so a 10^12-row spine is as cheap to parallelize
     as a parquet scan; the residue agg is one partial-agg shuffle of 7
     groups. All-integer arithmetic → engine-exact parity."""
-    prep(spark)
     i = F.col("id")
     return (
         spark.range(250_000)
@@ -293,7 +285,6 @@ def q_partition_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups); determinism holds because hash partitioning is a pure
     function of (key bytes, partition count) — pinned by the unit
     test across two runs."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem").select("l_orderkey")
     parts = (
         li.repartition(16, "l_orderkey")

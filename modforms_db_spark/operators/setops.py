@@ -13,7 +13,6 @@ from pyspark.sql import functions as F
 
 from modforms_db_spark.io import load
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
 
 
 def _buyers_of_type(spark: SparkSession, sf_dir: str, ptype: str) -> DataFrame:
@@ -49,7 +48,6 @@ _BUYERS_SQL = """
 )
 def q_set_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bag union (overlapping inputs ⇒ real duplicates preserved)."""
-    prep(spark)
     c = load(spark, sf_dir, "customer")
     a = c.where(F.col("c_mktsegment") == "AUTOMOBILE").select("c_custkey")
     b = c.where(F.col("c_acctbal") > 5000).select("c_custkey")
@@ -67,7 +65,6 @@ def q_set_union_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("setop",),
 )
 def q_set_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prep(spark)
     c = load(spark, sf_dir, "customer")
     a = c.where(F.col("c_mktsegment") == "AUTOMOBILE").select("c_custkey")
     b = c.where(F.col("c_acctbal") > 5000).select("c_custkey")
@@ -85,7 +82,6 @@ def q_set_union_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Buyers of PROMO ∩ buyers of ECONOMY — records present in both
     stores [R]."""
-    prep(spark)
     return _buyers_of_type(spark, sf_dir, "PROMO").intersect(
         _buyers_of_type(spark, sf_dir, "ECONOMY")
     )
@@ -101,7 +97,6 @@ def q_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Buyers of PROMO ∖ buyers of ECONOMY — the sync diff [R]."""
-    prep(spark)
     return _buyers_of_type(spark, sf_dir, "PROMO").exceptAll(
         _buyers_of_type(spark, sf_dir, "ECONOMY")
     ).distinct()
@@ -119,7 +114,6 @@ def q_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bag intersect — duplicate-aware reconciliation [R]."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     a = o.where(F.col("o_orderstatus") == "O").select("o_custkey")
     b = o.where(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
@@ -137,7 +131,6 @@ def q_set_intersect_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("setop", "bag"),
 )
 def q_set_except_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     a = o.where(F.col("o_orderstatus") == "O").select("o_custkey")
     b = o.where(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
@@ -166,7 +159,6 @@ def q_set_union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     two stores with drifted schemas merge [R files-vs-Mongo reconcile].
     Position-based union would silently misalign; this is the safe form.
     """
-    prep(spark)
     c = (
         load(spark, sf_dir, "customer")
         .where(F.col("c_custkey") <= 50)
@@ -216,7 +208,6 @@ def q_set_symmetric_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     is a null-safe anti join on the deduplicated key frames, never the
     raw fact rows.
     """
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     d = (
         o.where(F.col("o_orderstatus").isin("F", "O"))

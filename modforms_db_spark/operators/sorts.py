@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from modforms_db_spark.io import load
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
 
 
 @register(
@@ -32,7 +31,6 @@ from modforms_db_spark.session import prep
 def q_sort_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-key sort + LIMIT with a unique tiebreak key (deterministic
     result set despite order-insensitive hashing)."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     return (
         o.orderBy(
@@ -56,7 +54,6 @@ def q_sort_multikey(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_topk_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global top-10 by extendedprice (composite tiebreak)."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     return (
         li.orderBy(
@@ -107,7 +104,6 @@ def q_topk_with_ties(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one pass to the customer count grain, a k-row TakeOrdered,
     a 1-row broadcast, one filter.
     """
-    prep(spark)
     c = (
         load(spark, sf_dir, "orders")
         .groupBy("o_custkey")
@@ -166,7 +162,6 @@ def q_keyset_pagination(spark: SparkSession, sf_dir: str) -> DataFrame:
     prunes date-partitioned files before any row is read, the
     property OFFSET structurally cannot have.
     """
-    prep(spark)
     o = (
         load(spark, sf_dir, "orders")
         .select(

@@ -34,7 +34,6 @@ from modforms_db_spark.io import load
 from modforms_db_spark.oracle_dialect import R, R2, R4
 from modforms_db_spark.parity import d38, r2, r4
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
 
 
 @register(
@@ -60,7 +59,6 @@ def q_scd2_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     One shuffle on user_id, then a single sorted pass (lead + row_number
     share one window spec ⇒ one Window physical operator).
     """
-    prep(spark)
     e = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     return e.select(
@@ -101,7 +99,6 @@ def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     store-sync replay [R] as one window + filter (plans as
     WindowGroupLimit: top-1 per key never materializes full rank).
     """
-    prep(spark)
     e = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(
         F.desc("ts"), F.desc("event_id")
@@ -158,7 +155,6 @@ def q_gapfill_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     spine-sized (hours × types), so both sides of the gap-fill join are
     post-aggregation tiny and broadcast-able regardless of fact size.
     """
-    prep(spark)
     e = load(spark, sf_dir, "events").select(
         F.date_trunc("hour", "ts").alias("h"), "event_type", "value"
     )
@@ -224,7 +220,6 @@ def q_anomaly_mad(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact table is touched once. Exact `percentile` matches DuckDB's
     `quantile_cont` (dialect rule, SURVEY.md §2.11).
     """
-    prep(spark)
     e = load(spark, sf_dir, "events")
     hourly = (
         e.groupBy("event_type", F.date_trunc("hour", "ts").alias("h"))
@@ -279,7 +274,6 @@ def q_join_range_binned(spark: SparkSession, sf_dir: str) -> DataFrame:
     is absent. Oracle = the UNBINNED join: binning must not change
     results (same discipline as `q_join_skew_salted`).
     """
-    prep(spark)
     e = load(spark, sf_dir, "events")
     # window(ts, "5 minutes").start is the bin label — idiomatic, NTZ-safe.
     v = (
@@ -357,7 +351,6 @@ def q_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     how dashboard hierarchies stay O(1) per refresh at 100 TB — persist
     the hourly partials, derive everything coarser from them.
     """
-    prep(spark)
     e = load(spark, sf_dir, "events")
     hourly = (
         e.groupBy(
@@ -430,7 +423,6 @@ def q_events_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     and joins on user_id — well-distributed, no fact×fact blowup, and the
     offset cap bounds output to cohorts × 8 rows.
     """
-    prep(spark)
     e = load(spark, sf_dir, "events")
     cohort = (
         e.where(F.col("event_type") == "signup")
@@ -478,7 +470,6 @@ def q_events_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-aggregate map-side (≤ |types|³ = 125 distinct paths); the top-10
     is a TakeOrdered, not a global sort.
     """
-    prep(spark)
     e = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = e.select(
@@ -526,7 +517,6 @@ def q_time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole query is a single exchange. Weights are integer µs
     (epoch arithmetic exact on both engines); only the final ratio is
     rounded."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # NTZ → µs via the session-UTC cast (prep() pins the zone; same
@@ -585,7 +575,6 @@ def q_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
     `applyInPandas` over (user, time-shard) with carried seed values,
     the q_pack_sequences sharding pattern, or incrementally under
     `applyInPandasWithState` in the streaming twin."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     arr = F.array_sort(
         F.collect_list(F.struct("ts", "event_id", "value"))
@@ -654,7 +643,6 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     window, and the (user_id, session_id) agg all share that
     partitioning (session_id is a refinement of user_id), so AQE plans
     a single exchange end-to-end."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     t = F.unix_micros(F.col("ts").cast("timestamp"))
@@ -719,7 +707,6 @@ def q_ohlc_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     formulation is the portable SQL equivalent; struct-ordered min_by
     is the cheaper single-pass Spark form). One shuffle on the grouped
     key; output is bounded at users × hours."""
-    prep(spark)
     e = load(spark, sf_dir, "events").where(F.col("value").isNotNull())
     h = F.date_trunc("hour", "ts").alias("h")
     key = F.struct(F.col("ts"), F.col("event_id"))
@@ -773,7 +760,6 @@ def q_ivm_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     new partition, and the merge joins state-sized sides on the group
     key. Count/sum/min/max merge this way; avg/stddev via (sum, count,
     M2) moments; percentiles/distinct need sketches (`q_agg_hll_merge`)."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     cutoff = F.lit("2024-01-24 00:00:00").cast("timestamp_ntz")
 
@@ -837,7 +823,6 @@ def q_attribution_multitouch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (equality on (user, day-bin) before the range residual) instead of
     an unbounded theta join; the ranking windows then partition by
     purchase_id, whose groups are small (views-per-day per user)."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     p = e.where(F.col("event_type") == "purchase").select(
         "user_id", F.col("event_id").alias("purchase_id"), F.col("ts").alias("p_ts")
@@ -921,7 +906,6 @@ def q_anomaly_rolling_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on user_id; the trailing frame is ROWS-bounded
     (constant per-row window state), the flag is a projection — a
     single exchange end-to-end."""
-    prep(spark)
     e = load(spark, sf_dir, "events").where(F.col("value").isNotNull())
     vi = F.round(F.col("value") * 10000).cast("bigint")
     trail = (
@@ -1015,7 +999,6 @@ def q_interval_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on user_id; the running-max window, the island
     cumsum, and the (user, island) agg all refine that partitioning —
     single exchange, same pattern as q_sessionize."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     iv = e.select(
         "user_id",
@@ -1084,7 +1067,6 @@ def q_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle of ≤|types|² groups; the normalizing window runs on the
     tiny aggregated matrix, not the fact table. Transition counts are
     exact integers; only the final ratio is rounded."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     pairs = (
@@ -1134,7 +1116,6 @@ def q_event_regex_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     bytes-per-event, bounded by history length, the same envelope as
     any sessionization. Regex runs JVM-side per row (codegen), no UDF.
     """
-    prep(spark)
     e = load(spark, sf_dir, "events")
     seq = (
         e.groupBy("user_id")
@@ -1215,7 +1196,6 @@ def q_interpolate_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     IGNORE-NULLS windows run on the spine, not the facts. The window
     carries O(1) state per row (last/first known), so spine length can
     grow unbounded (streaming backfill) without memory growth."""
-    prep(spark)
     e = load(spark, sf_dir, "events").select(
         F.date_trunc("hour", "ts").alias("h"), "event_type", "value"
     )
@@ -1300,7 +1280,6 @@ def q_cumulative_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate, and the running-sum window runs over ~hundreds of day
     rows — fact data is touched exactly once regardless of the window
     length."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     first_seen = e.groupBy("user_id").agg(
         F.date_trunc("day", F.min("ts")).alias("day")
@@ -1359,7 +1338,6 @@ def q_id_gap_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB pick the bucket width so the audit table fits the report
     consumer — detection granularity, not correctness, is the only
     trade-off."""
-    prep(spark)
     acc = (
         load(spark, sf_dir, "events")
         .where(F.col("event_type") != "error")
@@ -1446,7 +1424,6 @@ def q_max_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice's opening load — two tiny extra aggregates, same output;
     sliced variant deliberately not shipped because the contract row
     pins cross-engine totality first."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     iv = e.select(
         F.col("ts").alias("s"),
@@ -1495,7 +1472,6 @@ def q_max_concurrency_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one shuffle on day for the sliced window, one day-grain agg +
     tiny prefix window, one broadcast join back — no single-task pass
     over the endpoint stream."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     iv = e.select(
         F.col("ts").alias("s"),
@@ -1566,7 +1542,6 @@ def q_sliding_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode is map-side; the per-day distinct is Spark's standard
     two-phase expand. For large W swap the explode for the bitmap merge
     (`q_bitmap_distinct` per day, OR over the trailing W bitmaps)."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     # checkpoint the user-day grain: bounds AND the explode both read it,
     # so without this the fact table would be scanned twice
@@ -1638,7 +1613,6 @@ def q_rolling_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     hours-sized series (Catalyst computes them in a single Window
     operator). The unpartitioned window is over hours, not facts —
     the same caveat-and-scale note as `q_period_over_period`."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     hourly = e.groupBy(F.date_trunc("hour", "ts").alias("h")).agg(
         F.round(F.avg(F.when(F.col("event_type") == "click", F.col("value"))), 10).alias("x"),
@@ -1729,7 +1703,6 @@ def q_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     windows are over a tiny series — the fact table never meets a
     window. The standard survival-analysis entry point, fully
     relational."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     s0 = (
         e.where(F.col("event_type") == "signup")
@@ -1804,7 +1777,6 @@ def q_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one partial-agg pass into ≤168 cells; the lift normalizer
     is a 1-row broadcast. The profile is the input you feed the
     rolling-z anomaly detector to deseasonalize its baseline."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     cells = e.groupBy(
         F.dayofweek("ts").alias("dow"), F.hour("ts").cast("int").alias("hod")
@@ -1855,7 +1827,6 @@ def q_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row broadcast and the running window is over the days-sized
     series. Multi-changepoint extensions (binary segmentation) recurse
     on the flagged split — each level is this same cheap plan."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     daily = (
         e.groupBy(F.date_trunc("day", "ts").alias("day"))
@@ -1919,7 +1890,6 @@ def q_user_ltv_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered projection; the join is user-keyed (well-distributed), the
     offset cap bounds output to cohorts × 8 rows, and the cumulative
     window runs per cohort over ≤ 8 rows — bounded, never row grain."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     cohort = (
         e.where(F.col("event_type") == "signup")
@@ -1984,7 +1954,6 @@ def q_repeat_purchase_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition; the exact percentiles run over the gap multiset — swap
     for GK (`q_agg_approx_percentile`'s path) when gaps outgrow a sort,
     as flagged for every exact-percentile row."""
-    prep(spark)
     e = load(spark, sf_dir, "events").where(F.col("event_type") == "purchase")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     t_us = F.unix_micros(F.col("ts").cast("timestamp"))
@@ -2079,7 +2048,6 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration runs on broadcast-sized frames — the degenerate-easy end
     of the same Pregel shape `q_pagerank` runs on O(|V|) state.
     """
-    prep(spark)
     e = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = e.select(
@@ -2165,7 +2133,6 @@ def q_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (type, lag) corr run on that tiny frame. At 100 TB the only big
     stage is the first combine.
     """
-    prep(spark)
     d = (
         load(spark, sf_dir, "events")
         .groupBy("event_type", F.to_date("ts").alias("day"))
@@ -2239,7 +2206,6 @@ def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(months^2) pair join (3.2k pairs/group at an 80-month span) and
     both medians run on that frame, cost independent of row count.
     """
-    prep(spark)
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
     mi = (F.year("o_orderdate") * 12 + F.month("o_orderdate")).cast("bigint")
     m = (
@@ -2340,7 +2306,6 @@ def q_downsample_ltob(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats, the 3-way anchor join, and per-bucket argmax all run on
     calendar-bounded frames.
     """
-    prep(spark)
     daily = (
         load(spark, sf_dir, "events")
         .groupBy("event_type", F.dayofmonth("ts").cast("bigint").alias("d"))
@@ -2485,7 +2450,6 @@ def q_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     window and dow means run on calendar-bounded frames partitioned
     by stream.
     """
-    prep(spark)
     daily = (
         load(spark, sf_dir, "events")
         .groupBy("event_type", F.dayofmonth("ts").cast("bigint").alias("d"))
@@ -2580,7 +2544,6 @@ def q_backtest_folds(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-row literal broadcast against it; every join is on the bounded
     calendar grain.
     """
-    prep(spark)
     cents = F.round(F.col("o_totalprice") * 100, 0).cast("bigint")
     mi = (F.year("o_orderdate") * 12 + F.month("o_orderdate")).cast("bigint")
     m = (
@@ -2704,7 +2667,6 @@ def q_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the calendar-bounded daily grain, lag self-join, 5-row
     recursion math free at any size.
     """
-    prep(spark)
     d = (
         load(spark, sf_dir, "events")
         .groupBy("event_type", F.to_date("ts").alias("day"))
@@ -2788,7 +2750,6 @@ def q_ccf(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-side reduction to the daily grain, then a
     literal-pair × calendar-bounded join — free at any corpus size.
     """
-    prep(spark)
     daily = (
         load(spark, sf_dir, "events")
         .groupBy("event_type", F.to_date("ts").alias("day"))
@@ -2875,7 +2836,6 @@ def q_pit_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is the canonical bounded-partition window (customer
     histories are small; a hot entity would take the banded device).
     """
-    prep(spark)
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_custkey",
@@ -2997,7 +2957,6 @@ def q_allen_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
     (min/max, map-side combined); the pair join is per-user 1×1,
     never a time-grain blowup; output is the fixed 39-row grid.
     """
-    prep(spark)
     iv = (
         load(spark, sf_dir, "events")
         .where(F.col("event_type").isin("click", "purchase"))
@@ -3112,7 +3071,6 @@ def q_dispersion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant derived from that grain (checkpointed — no second
     fact scan), then 1-row-per-type moments.
     """
-    prep(spark)
     c = (
         load(spark, sf_dir, "events")
         .groupBy("event_type", F.col("ts").cast("date").alias("d"))
@@ -3179,7 +3137,6 @@ def q_percentile_bands_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     `q_agg_approx_percentile`, with the rank-error bound documented
     there; the day grain and plan shape stay identical.
     """
-    prep(spark)
     e = load(spark, sf_dir, "events").select(
         F.col("ts").cast("date").alias("d"), "value"
     )
@@ -3268,7 +3225,6 @@ def q_markov_prediction_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitions; one events scan feeds both halves via the split
     filter on the transition grain.
     """
-    prep(spark)
     base = (
         load(spark, sf_dir, "events")
         .select("user_id", "ts", "event_id", "event_type")
@@ -3375,7 +3331,6 @@ def q_decayed_engagement(spark: SparkSession, sf_dir: str) -> DataFrame:
     standard decayed-counter trick; documented, not needed at the
     batch grain.
     """
-    prep(spark)
     e = (
         load(spark, sf_dir, "events")
         .select("user_id", "ts", "value")
@@ -3454,7 +3409,6 @@ def q_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     lists stay small, so no time-grain blowup; one events scan
     feeds both legs via a checkpointed projection.
     """
-    prep(spark)
     e = (
         load(spark, sf_dir, "events")
         .where(F.col("event_type").isin("signup", "purchase"))
@@ -3544,7 +3498,6 @@ def q_bitemporal_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB; at scale the tx filter pushes into the partition column
     a bitemporal table is laid out by.
     """
-    prep(spark)
     e = (
         load(spark, sf_dir, "events")
         .select(
@@ -3653,7 +3606,6 @@ def q_forecast_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one pass to the daily grain (map-side combined), two lags
     on one calendar-bounded window, exact-integer rollup — billions of
     events enter only through the daily grain."""
-    prep(spark)
     daily = (
         load(spark, sf_dir, "events")
         .groupBy("event_type", F.dayofmonth("ts").cast("bigint").alias("d"))
@@ -3786,7 +3738,6 @@ def q_fifo_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the overlap join bins on cumulative-quantity ranges
     exactly like `q_join_range_binned` (each lot/sale pair lands in
     ⌈span/bin⌉ buckets), and the per-part windows partition cleanly."""
-    prep(spark)
     li = (
         load(spark, sf_dir, "lineitem")
         .where(F.col("l_partkey") < 40)
@@ -3934,7 +3885,6 @@ def q_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one pass to the daily grain; the grid is types × days
     (calendar-bounded), moments map-side combine."""
-    prep(spark)
     daily = (
         load(spark, sf_dir, "events")
         .groupBy("event_type", F.dayofmonth("ts").cast("bigint").alias("d"))
@@ -4113,7 +4063,6 @@ def q_granger_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one pass to the daily grain; pairs × days frames are
     calendar-bounded (k²·days rows), moments map-side combine."""
-    prep(spark)
     daily = (
         load(spark, sf_dir, "events")
         .groupBy("event_type", F.dayofmonth("ts").cast("bigint").alias("d"))
@@ -4288,7 +4237,6 @@ def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: pairs are per-stream day² (calendar-bounded, 435 at 30
     days) off the daily grain — billions of events enter only through
     that grain; everything downstream is constant-size."""
-    prep(spark)
     daily = (
         load(spark, sf_dir, "events")
         .groupBy("event_type", F.dayofmonth("ts").cast("bigint").alias("d"))
@@ -4442,7 +4390,6 @@ def q_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one pass to the daily grain; ranking windows are per-block
     (k rows each), never global; everything downstream is k-row
     frames."""
-    prep(spark)
     daily = (
         load(spark, sf_dir, "events")
         .groupBy("event_type", F.dayofmonth("ts").cast("bigint").alias("d"))
@@ -4629,7 +4576,6 @@ def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: everything happens on the daily grain (calendar-bounded:
     30 rows per stream regardless of event count); the billions of
     raw events enter only through the grain's partial-agg sums."""
-    prep(spark)
     daily = (
         load(spark, sf_dir, "events")
         .groupBy("event_type", F.dayofmonth("ts").cast("bigint").alias("d"))
@@ -4767,7 +4713,6 @@ def q_rsi(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the rolling sums are per-stream partitioned windows over
     the calendar-bounded daily grain (30 rows/stream at any event
     count) — raw events enter via the grain's partial aggs only."""
-    prep(spark)
     daily = (
         load(spark, sf_dir, "events")
         .groupBy("event_type", F.dayofmonth("ts").cast("bigint").alias("d"))
@@ -4910,7 +4855,6 @@ def q_attribution_shapley(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggs, map-side combined), then a 16-row coalition frame — the 2^n
     blow-up is bounded by the CHANNEL vocabulary (n = 4), never data
     size; everything after the journey collapse is broadcast-sized."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     has = lambda t: (  # noqa: E731
         F.sum(F.when(F.col("event_type") == t, 1).otherwise(0)) > 0
@@ -5070,7 +5014,6 @@ def q_spc_xbar(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one pass to the (scope, stream, day) grain with exact
     partial-agg sums; limits join back broadcast; flags are per-grain
     row arithmetic. Calendar-bounded output (30 rows per stream)."""
-    prep(spark)
     base = (
         load(spark, sf_dir, "events")
         .select(
@@ -5194,7 +5137,6 @@ def q_event_study(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the event spine is a literal broadcast; everything runs
     on the calendar-bounded daily grain — billions of raw events
     enter through one partial-agg pass."""
-    prep(spark)
     daily = (
         load(spark, sf_dir, "events")
         .groupBy("event_type", F.dayofmonth("ts").cast("bigint").alias("d"))
@@ -5395,7 +5337,6 @@ def q_markov_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     (window lead over (user, day) orderings); everything after the
     (from, to) count collapse is a broadcast-sized matrix. Removal
     variants multiply the TINY frame, never the data."""
-    prep(spark)
     ev = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id", "d").orderBy("ts", "event_id")
     touches = (
@@ -5597,7 +5538,6 @@ def q_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: lag joins and the LB reduction run on the calendar-bounded
     daily grain; raw events enter through one partial-agg pass."""
-    prep(spark)
     daily = (
         load(spark, sf_dir, "events")
         .groupBy("event_type", F.dayofmonth("ts").cast("bigint").alias("d"))
@@ -5784,7 +5724,6 @@ def q_changepoint_binseg(spark: SparkSession, sf_dir: str) -> DataFrame:
     calendar-bounded daily grain; depth-2 recursion is two identical
     relational rounds (the q_ipf_raking loop discipline), each a
     constant number of window passes regardless of data size."""
-    prep(spark)
     daily = (
         load(spark, sf_dir, "events")
         .groupBy("event_type", F.dayofmonth("ts").cast("bigint").alias("d"))

@@ -23,7 +23,6 @@ from pyspark.sql import functions as F
 from modforms_db_spark.io import load
 from modforms_db_spark.oracle_dialect import R, R2, R4
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
 
 _REVENUE = "l_extendedprice * (1 - l_discount)"
 
@@ -56,7 +55,6 @@ def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the cutoff but shipped after it, for one market segment.
     Segment filter shrinks customer to a broadcastable side; lineitem
     (the only big side) shuffles once on l_orderkey."""
-    prep(spark)
     c = load(spark, sf_dir, "customer").where(
         F.col("c_mktsegment") == "BUILDING"
     )
@@ -98,7 +96,6 @@ def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer and supplier share the nation, one region, two years. Six
     tables; region→nation→supplier collapse to a broadcast chain, and
     the c_nationkey = s_nationkey clause rides the customer join."""
-    prep(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))
@@ -150,7 +147,6 @@ def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Returned-item reporting (TPC-H Q10): top-20 customers by revenue
     lost to returns in one quarter. The returnflag filter prunes the
     fact scan; nation broadcasts onto the customer dimension."""
-    prep(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1998-01-01 00:00:00").cast("timestamp_ntz"))
@@ -210,7 +206,6 @@ def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps only qualifying keys (tiny); joining it back broadcast-prunes
     the second lineitem pass, and both lineitem shuffles share the
     l_orderkey partitioning (AQE reuses the exchange)."""
-    prep(spark)
     c = load(spark, sf_dir, "customer")
     o = load(spark, sf_dir, "orders")
     li = load(spark, sf_dir, "lineitem")
@@ -278,7 +273,6 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
     the date-filtered projected order keys (the date predicate pushes
     to the orders scan); at 100 TB the anti join shuffles on custkey
     once and the threshold costs one linear pass."""
-    prep(spark)
     c = load(spark, sf_dir, "customer")
     o = (
         load(spark, sf_dir, "orders")
@@ -334,7 +328,6 @@ def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
     after the join — the fact side is never joined against unfiltered
     dimensions. lineitem shuffles once (on l_orderkey, for orders);
     supplier-nation and customer-nation ride broadcasts."""
-    prep(spark)
     pair = ("NATION_19", "NATION_20")
     n = load(spark, sf_dir, "nation").where(F.col("n_name").isin(*pair))
     sn = (
@@ -414,7 +407,6 @@ def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
     prune of the fact scan); region→nation→customer collapses to the
     customer join; supplier-nation broadcasts. One wide-fact shuffle on
     l_orderkey, one grouped agg keyed by year (tiny)."""
-    prep(spark)
     p = load(spark, sf_dir, "part").where(F.col("p_type") == "PROMO").select(
         "p_partkey"
     )
@@ -483,7 +475,6 @@ def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
     possible because the denominator needs every line). part broadcasts;
     the only shuffle is the final tiny year agg. Both sums r2-rounded
     before the ratio (same parity rationale as Q8)."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part").select("p_partkey", "p_type")
     promo = F.when(F.col("p_type") == "PROMO", _rev()).otherwise(F.lit(0.0))
@@ -532,7 +523,6 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     at 100 TB the unfiltered per-partkey agg would itself be a major
     shuffle); the threshold side is then tiny and broadcasts back onto
     the filtered fact scan."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part").where(
         (F.col("p_brand") == "Brand#16") & (F.col("p_type") == "MEDIUM")
@@ -583,7 +573,6 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact OR runs as the post-join residual. Same plan a TPC-H-tuned
     engine produces; at 100 TB the quantity envelope alone skips ~40% of
     fact row groups."""
-    prep(spark)
     p = load(spark, sf_dir, "part").where(
         (
             (F.col("p_brand") == "Brand#12") & F.col("p_size").between(1, 5)
@@ -660,7 +649,6 @@ def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     Both aggs and the per⋈ord join share the l_orderkey partitioning, so
     the fact side shuffles once; supplier broadcasts; top-20 is a
     TakeOrdered, never a global sort."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem")
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
     late = (
@@ -721,7 +709,6 @@ def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the quarter filter prunes orders first; the semi join
     shuffles both sides on orderkey once; the priority agg output is
     bounded at the priority domain."""
-    prep(spark)
     o = load(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))
         & (F.col("o_orderdate") < F.lit("1997-07-01 00:00:00").cast("timestamp_ntz"))
@@ -763,7 +750,6 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicate must reach the parquet scan (row-group pruning on
     shipdate under the sorted layouts), and the agg is a two-level
     partial+final over a 2-column projection."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))
         & (F.col("l_shipdate") < F.lit("1998-01-01 00:00:00").cast("timestamp_ntz"))
@@ -805,7 +791,6 @@ def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
     Q13 is also the classic SKEW query (every customer with the mode
     count lands in one group) — the second agg's key domain is small
     enough that AQE coalescing handles it."""
-    prep(spark)
     c = load(spark, sf_dir, "customer").select("c_custkey")
     o = load(spark, sf_dir, "orders").select("o_custkey", "o_orderkey")
     per_cust = (
@@ -847,7 +832,6 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Revenue is r2-rounded INSIDE the view on both engines, so the
     max-equality comparison is over engine-identical doubles."""
-    prep(spark)
     li = load(spark, sf_dir, "lineitem").where(
         (F.col("l_shipdate") >= F.lit("1997-01-01 00:00:00").cast("timestamp_ntz"))
         & (F.col("l_shipdate") < F.lit("1997-04-01 00:00:00").cast("timestamp_ntz"))
@@ -980,7 +964,6 @@ def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
     TakeOrdered, no global sort. Ordering is total (acctbal DESC, nation,
     supplier, part — (part, supplier) pairs are unique), so LIMIT is
     deterministic cross-engine."""
-    prep(spark)
     ps = synth_partsupp(spark, sf_dir)
     n = load(spark, sf_dir, "nation")
     r = load(spark, sf_dir, "region").where(F.col("r_name") == "EUROPE")
@@ -1068,7 +1051,6 @@ def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
     fact shuffle is the join to orders on l_orderkey, then the final
     (nation, year) agg is partial-aggregated map-side. Catalyst orders
     the broadcast joins below the shuffle join unaided."""
-    prep(spark)
     ps = synth_partsupp(spark, sf_dir)
     li = load(spark, sf_dir, "lineitem")
     p = load(spark, sf_dir, "part").where(
@@ -1151,7 +1133,6 @@ def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
     build; the per-part agg partial-aggregates; the global (total,
     count) is a 1-row broadcast back over the per-part frame — the
     q_tpch_q15 scalar discipline, no second scan of partsupp."""
-    prep(spark)
     ps = synth_partsupp(spark, sf_dir)
     n = load(spark, sf_dir, "nation")
     r = load(spark, sf_dir, "region").where(F.col("r_name") == "ASIA")
@@ -1212,7 +1193,6 @@ def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
     are non-null); part (brand/type/size-filtered) broadcasts;
     COUNT(DISTINCT) expands to the standard two-phase partial-distinct
     agg on (brand, type, size, suppkey)."""
-    prep(spark)
     ps = synth_partsupp(spark, sf_dir)
     p = load(spark, sf_dir, "part").where(
         (F.col("p_brand") != "Brand#13")
@@ -1281,7 +1261,6 @@ def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
     qualifying-supplier set is DISTINCT-ed (small) and broadcast into
     the final LEFT SEMI against the region-filtered supplier dim —
     every join in the chain is a broadcast."""
-    prep(spark)
     ps = synth_partsupp(spark, sf_dir)
     ts = lambda x: F.lit(x).cast("timestamp_ntz")  # noqa: E731
     shipped = (
@@ -1385,7 +1364,6 @@ def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders (AQE picks broadcast vs SMJ by orders' size), map-side
     combined conditional counts to a 2-row result.
     """
-    prep(spark)
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linenumber", F.col("l_shipdate").cast("date").alias("sd")
     )

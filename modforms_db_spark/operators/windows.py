@@ -19,7 +19,6 @@ from modforms_db_spark.io import load
 from modforms_db_spark.oracle_dialect import R, R2, R4
 from modforms_db_spark.parity import r2, r4
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
 
 
 @register(
@@ -40,7 +39,6 @@ from modforms_db_spark.session import prep
 def q_win_topk_pergroup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 orders per customer (o_orderkey tiebreak) — top-k factors per
     space [R]."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     w = Window.partitionBy("o_custkey").orderBy(
         F.desc("o_totalprice"), F.asc("o_orderkey")
@@ -77,7 +75,6 @@ def q_win_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     through one task — fine to ~10⁸ supplier-grain rows, single-task
     beyond; `q_win_ranking_scaled` is the banded distributed form
     test-pinned equal to this one."""
-    prep(spark)
     s = load(spark, sf_dir, "supplier")
     w = Window.orderBy(F.desc("s_acctbal"), F.asc("s_suppkey"))
     return s.select(
@@ -108,7 +105,6 @@ def q_win_ranking_scaled(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: per-band sort + rank parallelizes across 32 bands (more at
     higher SF); the count scalar is a broadcast 1-row join, never a
     driver collect."""
-    prep(spark)
     from modforms_db_spark.operators.banded import ntile_from_rn, with_banded_order
 
     s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_acctbal")
@@ -148,7 +144,6 @@ def q_win_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user inter-event gap (µs) + next event type — successive-version
     deltas [R]. Gap computed in epoch micros so both engines do exact
     integer arithmetic."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     us = F.unix_micros(F.col("ts").cast("timestamp"))
@@ -179,7 +174,6 @@ def q_win_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def q_win_running(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running sum + 3-row moving average — cumulative coverage [R]."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     base = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     return o.select(
@@ -213,7 +207,6 @@ def q_win_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-RANGE frame (trailing 1 hour of value per user) — the DF API's
     rangeBetween is long-typed, so this goes through the SQL API, which both
     engines share verbatim. Trailing coverage checks [R]."""
-    prep(spark)
     load(spark, sf_dir, "events").createOrReplaceTempView("mfdb_events_ri")
     return spark.sql(
         """
@@ -244,7 +237,6 @@ def q_win_range_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_win_first_last(spark: SparkSession, sf_dir: str) -> DataFrame:
     """first/last_value with an explicit full-partition frame — first/last
     computed version per space [R]."""
-    prep(spark)
     s = load(spark, sf_dir, "supplier")
     w = (
         Window.partitionBy("s_nationkey")
@@ -283,7 +275,6 @@ def q_win_keep_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
     (top-1 per key pushed before the full sort materializes). At 100 TB
     prefer this over groupBy(max(ts))+self-join — half the shuffles.
     """
-    prep(spark)
     e = load(spark, sf_dir, "events")
     w = Window.partitionBy("user_id").orderBy(
         F.col("ts").desc(), F.col("event_id").desc()
@@ -331,7 +322,6 @@ def q_events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     (collect_list + UDF scan per user) holds whole histories in memory;
     this shape doesn't.
     """
-    prep(spark)
     e = load(spark, sf_dir, "events")
     s = (
         e.where(F.col("event_type") == "signup")
@@ -382,7 +372,6 @@ def q_win_nth_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     to one row per key; same one-shuffle sorted-pass shape as the other
     windows.
     """
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
@@ -416,7 +405,6 @@ def q_win_range_numeric(spark: SparkSession, sf_dir: str) -> DataFrame:
     long-typed; the frame is evaluated in one sorted pass per partition,
     same cost shape as every other window.
     """
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_orderpriority")
@@ -458,7 +446,6 @@ def q_win_moving_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     wide frames (say 10k rows) you'd swap the sort for a two-heap /
     order-statistic sketch inside applyInPandas — noted, not needed at
     frame=4."""
-    prep(spark)
     e = load(spark, sf_dir, "events").where(F.col("event_type") == "purchase")
     w = (
         Window.partitionBy("user_id")
@@ -515,7 +502,6 @@ def q_longest_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     step shares the user_id partitioning (row_number window, anchor
     groupBy, argmax window) — a single exchange end-to-end; state per
     user is its day count, never raw events."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     days = e.select("user_id", F.date_trunc("day", "ts").alias("d")).distinct()
     wrn = Window.partitionBy("user_id").orderBy("d")
@@ -578,7 +564,6 @@ def q_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Catalyst collapses same-partitioning windows); per-row state is
     two doubles. The HAVING keeps flat (never-declining) users out of
     the report."""
-    prep(spark)
     e = load(spark, sf_dir, "events").where(F.col("event_type") == "purchase")
     signed = e.select(
         "user_id",
@@ -641,7 +626,6 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     the crossing filter discards rows before the tiny final agg. At
     extreme group widths the same recurrence runs on a pre-aggregated
     (value, Σweight) grain first, shrinking the sort."""
-    prep(spark)
     o = load(spark, sf_dir, "orders")
     w = o.select(
         "o_orderpriority",
@@ -717,7 +701,6 @@ def q_funnel_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-timestamp state (the `q_events_funnel` shape), then a
     3-row cohort aggregate.
     """
-    prep(spark)
     e = load(spark, sf_dir, "events")
     s = (
         e.where(F.col("event_type") == "signup")
@@ -804,7 +787,6 @@ def q_tail_latency_slo(spark: SparkSession, sf_dir: str) -> DataFrame:
     the exact form stays a single shuffle per stream, and
     `q_agg_approx_percentile` is the sketch twin when one pass over
     raw values is too much."""
-    prep(spark)
     e = load(spark, sf_dir, "events").select("event_type", "event_id", "value")
     w = Window.partitionBy("event_type").orderBy("value", "event_id")
     wn = Window.partitionBy("event_type")

@@ -6,6 +6,9 @@ oracle SQL the driver hash-matches it against (__spark_entry__.py contract).
 ``oracle=None`` → the driver records the weaker rows-only check (streaming,
 sketches).
 
+:func:`register` wraps each builder to call :func:`~modforms_db_spark.session.prep`
+first: the driver owns the session, so no builder may assume our factory ran.
+
 The registry is populated by importing the operator modules
 (:func:`_load_all`), so ``queries()`` / ``oracle_sql()`` in
 ``__spark_entry__.py`` are just views over it.
@@ -13,11 +16,14 @@ The registry is populated by importing the operator modules
 
 from __future__ import annotations
 
+import functools
 import importlib
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
+
+from modforms_db_spark.session import prep
 
 Builder = Callable[[SparkSession, str], DataFrame]
 
@@ -76,16 +82,22 @@ def register(
     def deco(fn: Builder) -> Builder:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name {name!r}")
+
+        @functools.wraps(fn)
+        def pinned(spark: SparkSession, sf_dir: str) -> DataFrame:
+            prep(spark)
+            return fn(spark, sf_dir)
+
         REGISTRY[name] = QueryDef(
             name=name,
-            builder=fn,
+            builder=pinned,
             oracle=oracle,
             priority=priority,
             doc=doc or (fn.__doc__ or "").strip().splitlines()[0] if (doc or fn.__doc__) else "",
             tags=tags,
             module=fn.__module__,
         )
-        return fn
+        return pinned
 
     return deco
 

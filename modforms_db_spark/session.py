@@ -13,8 +13,8 @@ Two distinct paths:
   the whole registry for minutes) keeps the default tiered JIT: there C1
   code still saves CPU but costs wall time, and the suite runs against a
   wall-clock timeout.
-- :func:`prep` — called at the top of every registered query builder, because the
-  DRIVER owns the session there (__spark_entry__.py contract). Only touches
+- :func:`prep` — called by the registry around every registered builder, because
+  the DRIVER owns the session there (__spark_entry__.py contract). Only touches
   runtime-settable confs that correctness depends on (timezone; Arrow for the
   pandas-UDF operators). Never assumes our factory ran.
 

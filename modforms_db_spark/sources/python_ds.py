@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from modforms_db_spark.io import load
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep, scoped_conf, scratch
+from modforms_db_spark.session import scoped_conf, scratch
 
 try:  # Python DataSource API: Spark 4 (gate for older runtimes)
     from pyspark.sql.datasource import DataSource  # noqa: F401
@@ -97,7 +97,6 @@ def q_source_python_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     if not _HAVE_PYDS:  # pragma: no cover
         raise NotImplementedError("Python DataSource API requires Spark 4+")
-    prep(spark)
     spark.dataSource.register(_calendar_source())
     cal = spark.read.format("mfdb_calendar").load()
     return cal.groupBy(F.month("d").alias("m")).agg(
@@ -200,7 +199,6 @@ def q_source_python_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-batch rows flow through the same Arrow path as the batch API."""
     if not _HAVE_PYDS_STREAM:  # pragma: no cover
         raise NotImplementedError("Python streaming DataSource requires Spark 4+")
-    prep(spark)
     spark.dataSource.register(_tick_stream_source())
     ticks = spark.readStream.format("mfdb_ticks").load()
     from modforms_db_spark.streaming.streams import _STREAM_CONF
@@ -317,7 +315,6 @@ def q_source_python_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     if not _HAVE_PYDS:  # pragma: no cover
         raise NotImplementedError("Python DataSource API requires Spark 4+")
-    prep(spark)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     spark.dataSource.register(_year_calendar_source())
     cal = spark.read.format("mfdb_calendar_year").load()
@@ -388,7 +385,6 @@ def q_sink_python_ds(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-executor push connector."""
     if not _HAVE_PYDS:  # pragma: no cover
         raise NotImplementedError("Python DataSource API requires Spark 4+")
-    prep(spark)
     out_dir = scratch(spark, "sinks", "nation_jsonl")
     spark.dataSource.register(_region_sink_source(out_dir))
     nat = load(spark, sf_dir, "nation").select("n_nationkey", "n_regionkey")

@@ -25,7 +25,7 @@ from modforms_db_spark.io import load
 from modforms_db_spark.oracle_dialect import R, R2, R4
 from modforms_db_spark.parity import r4
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep, scratch, scratch_root
+from modforms_db_spark.session import scratch, scratch_root
 
 
 @register(
@@ -43,7 +43,6 @@ def q_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partitioned parquet write → read back with a partition filter →
     group-count. The partition filter ('A','R') prunes the 'N' directory
     entirely (partition pruning, asserted in plan tests)."""
-    prep(spark)
     path = scratch(spark, "sinks", "lineitem_by_flag")
     li = load(spark, sf_dir, "lineitem")
     (
@@ -104,7 +103,6 @@ def q_sink_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
       scheduler interleaves them and the second write back-fills the
       first's straggler tail). Measured 2.05 s serial → 1.53 s
       overlapped for the write pair at sf0.1."""
-    prep(spark)
 
     def _write(spec: tuple[str, str, str, list[str]]) -> None:
         tbl, src, key, cols = spec
@@ -166,7 +164,6 @@ def q_source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ts is written as epoch micros (JSON has no timestamp type; explicit
     representation keeps the roundtrip exact), props stays a JSON string.
     """
-    prep(spark)
     path = scratch(spark, "sinks", "events_json")
     e = load(spark, sf_dir, "events").select(
         "event_id",
@@ -207,7 +204,6 @@ def q_source_json_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_source_csv_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CSV write with header → schema'd read incl. timestamp parsing →
     min/max ts per type proves the timestamp text roundtrip is exact."""
-    prep(spark)
     path = scratch(spark, "sinks", "events_csv")
     e = load(spark, sf_dir, "events").select("event_id", "ts", "event_type")
     (
@@ -271,7 +267,6 @@ def q_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     result partition-wise and swap directories atomically, or use a table
     format (Delta/Iceberg) whose MERGE compiles to this same join.
     """
-    prep(spark)
     cust = load(spark, sf_dir, "customer")
     updates = cust.where(F.col("c_custkey") % 7 == 0).select(
         F.col("c_custkey").alias("k"),
@@ -311,7 +306,6 @@ def q_source_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     gives it the same pushdown/pruning machinery as parquet (predicate
     pushdown via ORC SearchArguments), so the engine treats both as
     first-class scan sources."""
-    prep(spark)
     path = scratch(spark, "sinks", "lineitem_orc")
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_linestatus", "l_quantity"
@@ -340,7 +334,6 @@ def q_source_text_lines(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema'd format and parsing is part of the scan. Tab is safe: the
     corpus text is space-separated tokens (asserted by the oracle match —
     a tab in `text` would break the split and the counts)."""
-    prep(spark)
     path = scratch(spark, "sinks", "documents_text")
     d = load(spark, sf_dir, "documents")
     d.select(
@@ -370,7 +363,6 @@ def q_source_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """XML write → schema'd read → aggregate via Spark 4's native XML
     source (StaxXML) — the enterprise-feed format. Schema on read avoids
     the inference scan a production pipeline can't afford."""
-    prep(spark)
     path = scratch(spark, "sinks", "nation_xml")
     n = load(spark, sf_dir, "nation")
     (
@@ -428,7 +420,6 @@ def q_sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     count exceeds threshold; the job shuffles each partition's bytes
     once, which is why real tables compact incrementally, not globally.
     """
-    prep(spark)
     frag = scratch(spark, "sinks", "events_fragmented")
     compact = scratch(spark, "sinks", "events_compacted")
     e = load(spark, sf_dir, "events").select(
@@ -493,7 +484,6 @@ def q_sink_sorted_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     written parquet footers and asserts the per-file shipdate ranges
     are disjoint (the property pruning relies on).
     """
-    prep(spark)
     path = scratch(spark, "sinks", "lineitem_sorted_shipdate")
     (
         load(spark, sf_dir, "lineitem")
@@ -558,7 +548,6 @@ def q_sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     SOURCE table, proving the rewrite lossless; the unit test reads
     the written footers and asserts the per-file bounding boxes
     actually shrink vs the unclustered layout."""
-    prep(spark)
     path = scratch(spark, "sinks", "lineitem_zorder")
     li = load(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_returnflag", "l_extendedprice", "l_discount"
@@ -621,7 +610,6 @@ def q_source_csv_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: corruption handling is row-local — the permissive parse
     costs nothing extra on clean rows, and quarantined rows flow to a
     dead-letter sink via `WHERE _bad IS NOT NULL` on the same scan."""
-    prep(spark)
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_totalprice"
     )
@@ -695,7 +683,6 @@ def q_sink_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     truncating the table (static mode) or hand-deleting paths. Cost is
     the rewritten partition only.
     """
-    prep(spark)
     path = scratch(spark, "sinks", "events_dyn_overwrite")
     e = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
     (
@@ -748,7 +735,6 @@ def q_source_binary_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     indexed container format upstream; here the format surface itself
     is the point. Hash + length computed JVM-side off the content
     column."""
-    prep(spark)
     path = scratch(spark, "sinks", "binary_blobs")
     docs = (
         load(spark, sf_dir, "documents")
@@ -794,7 +780,6 @@ def q_nested_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection of two line fields still prunes columns (ReadSchema
     shows the struct subpaths). Array-per-order memory is bounded by
     order width, not table size."""
-    prep(spark)
     path = scratch(spark, "sinks", "orders_nested")
     o = load(spark, sf_dir, "orders").where(F.col("o_orderpriority") == "1-URGENT")
     li = load(spark, sf_dir, "lineitem").select(
@@ -860,7 +845,6 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     every file's footer at planning, so production tables pin the
     merged schema in a catalog instead of re-deriving it per query
     (which is also why the default is off)."""
-    prep(spark)
     path = scratch(spark, "sinks", "part_evolving")
     p = load(spark, sf_dir, "part")
     v1 = p.where(F.col("p_partkey") % 2 == 0).select(
@@ -928,7 +912,6 @@ def q_table_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     join, so network cost is keys + hashes, not rows. Unchanged rows
     are filtered post-join — at 100 TB you'd pre-partition both
     snapshots identically (bucketing) and diff partition-locally."""
-    prep(spark)
     c = load(spark, sf_dir, "customer")
     v1 = c.select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
     v2 = (
@@ -1001,7 +984,6 @@ def q_source_json_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: same row-local contract — clean rows pay nothing, corrupt
     rows flow to a dead-letter sink off the same scan."""
-    prep(spark)
     o = load(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
     good = F.concat(
         F.lit('{"okey": '),
@@ -1095,7 +1077,6 @@ def q_encoding_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine. At 100 TB this audit reads the column once and writes
     nothing.
     """
-    prep(spark)
     e = (
         load(spark, sf_dir, "events")
         .select("event_id")
@@ -1174,7 +1155,6 @@ def q_parquet_rowgroup_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the logical table view — the suite pins the output exactly
     against DuckDB's ``parquet_metadata()`` on the same files.
     """
-    prep(spark)
     rows = [(t, f"{sf_dir}/{t}.parquet", k) for t, k in _RG_TABLES]
     src = spark.createDataFrame(
         rows, "tbl string, path string, key_col string"
@@ -1302,7 +1282,6 @@ def q_consistent_hash_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     same plan assigns any keyspace — the ring never grows with
     data.
     """
-    prep(spark)
     keys = load(spark, sf_dir, "documents").select(
         "doc_id",
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 6), 16, 10)
@@ -1406,7 +1385,6 @@ def q_dpp_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast dim join whose DPP filter prunes the fact scan to the
     qualifying directories before any row is read.
     """
-    prep(spark)
     path = scratch(spark, "sinks", "orders_by_priority_dpp")
     o = load(spark, sf_dir, "orders").select(
         "o_orderkey",
@@ -1476,7 +1454,6 @@ def q_shuffle_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The full-order window on (epoch × corpus) exists to hash-pin the
     ORDER itself; production reads it as a sort key, not a window."""
-    prep(spark)
     d = load(spark, sf_dir, "documents").select("doc_id")
     epochs = d.sparkSession.createDataFrame(
         [(i + 1, m) for i, m in enumerate(_SHUF_EPOCH_MULT)], "e int, m long"
@@ -1544,7 +1521,6 @@ def q_source_glob_nested(spark: SparkSession, sf_dir: str) -> DataFrame:
     the only pruning available on non-tabular layouts; at 100 TB you
     promote such trees to real partitioned tables precisely to trade
     glob-listing for catalog pruning (q_sink_roundtrip's path)."""
-    prep(spark)
     base = scratch(spark, "sinks", "glob_nested_docs")
     d = load(spark, sf_dir, "documents")
     # Six subtrees: the two globbed sources, a decoy source, × block
@@ -1613,7 +1589,6 @@ def q_sink_parquet_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the rewrite is one map-only pass (no shuffle — bloom
     filters accumulate per row group at write time); the probe scan
     prunes row groups before decoding any page."""
-    prep(spark)
     path = scratch(spark, "sinks", "orders_bloom_custkey")
     (
         load(spark, sf_dir, "orders")
@@ -1674,7 +1649,6 @@ def q_sink_csv_quoting(spark: SparkSession, sf_dir: str) -> DataFrame:
     controls file count (partition count) to keep that parallel.
     Production guidance in the docstring is the op's point: quote
     discipline is a correctness gate BEFORE a performance choice."""
-    prep(spark)
     path = scratch(spark, "sinks", "docs_csv_quoting")
     tricky = load(spark, sf_dir, "documents").select(
         "doc_id",

@@ -17,7 +17,6 @@ from pyspark.sql import functions as F
 
 from modforms_db_spark.io import load
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep
 
 
 @register(
@@ -32,7 +31,6 @@ from modforms_db_spark.session import prep
 def q_win_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour tumbling windows × event type. Epoch-aligned 1h windows ≡
     date_trunc('hour')."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     return (
         e.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -59,7 +57,6 @@ def q_win_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """1-hour windows sliding every 15 min — each event lands in exactly 4
     windows. The oracle enumerates the 4 candidate window starts per event
     (slide-offset arithmetic in epoch micros)."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     return (
         e.groupBy(
@@ -100,7 +97,6 @@ def q_win_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark session_window end = last event + gap, so duration-of-activity =
     (end - start) - gap; the oracle's gaps-and-islands computes max-min
     directly — identical values."""
-    prep(spark)
     e = load(spark, sf_dir, "events")
     sw = F.session_window("ts", "30 minutes").alias("w")
     gap_us = 30 * 60 * 1_000_000
@@ -146,7 +142,6 @@ def q_join_stream_twin(spark: SparkSession, sf_dir: str) -> DataFrame:
     residual predicate, so this is a plain shuffled hash join on user_id —
     the same physical shape the streaming version's state store uses.
     """
-    prep(spark)
     e = load(spark, sf_dir, "events")
     v = e.where(F.col("event_type") == "view").select(
         "user_id", F.col("event_id").alias("view_id"), F.col("ts").alias("v_ts")

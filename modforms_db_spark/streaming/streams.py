@@ -42,7 +42,7 @@ from pyspark.sql import types as T
 
 from modforms_db_spark.io import load
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import prep, scoped_conf, scratch
+from modforms_db_spark.session import scoped_conf, scratch
 
 # Confs pinned for the span of every stream run (start through
 # termination: a streaming query reads its files in micro-batches).
@@ -141,7 +141,6 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     Complete output mode so the single availableNow batch emits every
     window (append would hold windows the final watermark never passed);
     the watermark still bounds state in a continuous deployment."""
-    prep(spark)
     events = _stream_events(spark, sf_dir)
     agg = (
         events.withWatermark("ts", "1 hour")
@@ -169,7 +168,6 @@ def q_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference's idempotent re-ingest scenario); the dedup operator must
     emit each event_id once. Append mode: dedup emits rows immediately and
     the watermark lets state for old keys expire."""
-    prep(spark)
     events = _stream_events(spark, sf_dir)
     doubled = events.union(_stream_events(spark, sf_dir))
     deduped = (
@@ -203,7 +201,6 @@ def q_stream_late(spark: SparkSession, sf_dir: str) -> DataFrame:
     query start (measured on 4.1.2), so the restart is what makes the drop
     observable — which is also the realistic deployment scenario (late
     data arriving after recovery)."""
-    prep(spark)
     run_dir = scratch(spark, "streams", "late")
     src_dir = os.path.join(run_dir, "src")
     ckpt = os.path.join(run_dir, "ckpt")
@@ -278,7 +275,6 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted in tests. Complete mode so the single availableNow batch
     emits every session; in a continuous deployment the watermark is what
     lets the state store merge-and-expire session state."""
-    prep(spark)
     events = _stream_events(spark, sf_dir)
     sw = F.session_window("ts", "30 minutes").alias("w")
     gap_us = 30 * 60 * 1_000_000
@@ -318,7 +314,6 @@ def q_stream_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    prep(spark)
     events = _stream_events(spark, sf_dir)
 
     out_schema = "user_id bigint, n_events bigint"
@@ -362,7 +357,6 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     the watermark bounding state is what makes this deployable; complete
     mode here only because the single availableNow batch must emit every
     window for the batch-twin equality test."""
-    prep(spark)
     events = _stream_events(spark, sf_dir)
     agg = (
         events.withWatermark("ts", "1 hour")
@@ -400,7 +394,6 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     to this same join) or a partition-overwrite layout; the swap-dir
     pattern here is the minimal transactional write parquet allows.
     """
-    prep(spark)
     events = _stream_events(spark, sf_dir)
 
     store_dir = scratch(spark, "streams", "upsert_store")
@@ -474,7 +467,6 @@ def q_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     the range bound, state would be unbounded — this is the canonical
     "always give a stream-stream join a time constraint" shape.
     """
-    prep(spark)
     events = _stream_events(spark, sf_dir)
     v = (
         events.where(F.col("event_type") == "view")
@@ -547,7 +539,6 @@ def q_stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     throughput is bounded by the scan, not the join. A slowly-changing
     dimension swaps in via foreachBatch re-read or a Delta-style
     versioned table; the plan shape is unchanged."""
-    prep(spark)
     events = _stream_events(spark, sf_dir)
     dim = spark.createDataFrame(
         [
@@ -594,7 +585,6 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (min over both inputs of max-event-time − 1 h) keeps waiting in
     state — its negative is unprovable, so it is (correctly) never
     emitted; matched pairs are emitted regardless."""
-    prep(spark)
     events = _stream_events(spark, sf_dir)
     v = (
         events.where(F.col("event_type") == "view")
@@ -659,7 +649,6 @@ def q_stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     not data; restart cost is reading that log. The exactly-once
     property is the file sink's transactional commit protocol — the
     same mechanism at any scale."""
-    prep(spark)
     run_dir = scratch(spark, "streams", "ckpt_resume")
     src = os.path.join(run_dir, "src")
     out = os.path.join(run_dir, "out")
@@ -719,7 +708,6 @@ def q_stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     (every event re-delivered once with a perturbed timestamp — exactly
     the retry shape above); the operator must emit each event_id once.
     The law test pins output ≡ batch distinct on event_id."""
-    prep(spark)
     events = _stream_events(spark, sf_dir)
     replay = _stream_events(spark, sf_dir).withColumn(
         "ts", F.col("ts") + F.expr("INTERVAL 1 SECOND")
@@ -771,7 +759,6 @@ def q_stream_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
         _SPRT_L1,
     )
 
-    prep(spark)
     events = _stream_events(spark, sf_dir)
     h = F.pmod(
         F.col("event_id") * F.lit(2654435761).cast("bigint"), F.lit(1000)
@@ -881,7 +868,6 @@ def q_stream_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cardinality, not stream length; at scale the complete-mode
     re-emission cost is the documented trade (update mode + a
     sink-side ranking view is the alternative)."""
-    prep(spark)
     events = _stream_events(spark, sf_dir)
     agg = events.groupBy("user_id").agg(F.count(F.lit(1)).alias("n_events"))
     sink = _run_to_table(
@@ -923,7 +909,6 @@ def q_stream_online_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-    prep(spark)
     events = _stream_events(spark, sf_dir)
     vals = events.select(
         "event_type", F.round(F.col("value") * 100, 0).cast("bigint").alias("y2")

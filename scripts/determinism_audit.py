@@ -18,8 +18,10 @@ Exit 0 iff every query hashes identically under both layouts.
 
 from __future__ import annotations
 
+import argparse
 import hashlib
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -59,22 +61,37 @@ def _run_all(sf_dir: str, parts: int, only=None) -> dict[str, str]:
     return out
 
 
-def main() -> int:
-    import re
+def parse_args(argv: list[str] | None = None) -> argparse.Namespace:
+    ap = argparse.ArgumentParser(
+        description="Compare every registered query's value hash under two "
+        "shuffle-partition counts."
+    )
+    ap.add_argument(
+        "sf_dir",
+        nargs="?",
+        default="/root/testdata/sf0.01",
+        help="directory of the input tables' parquet files (default: %(default)s)",
+    )
+    ap.add_argument("partsA", nargs="?", type=int, default=32)
+    ap.add_argument("partsB", nargs="?", type=int, default=7)
+    ap.add_argument(
+        "--only", metavar="REGEX", help="audit only the matching names"
+    )
+    return ap.parse_intermixed_args(argv)
 
-    args = [a for a in sys.argv[1:] if not a.startswith("--")]
-    sf_dir = args[0] if args else "/root/testdata/sf0.01"
-    pa = int(args[1]) if len(args) > 1 else 32
-    pb = int(args[2]) if len(args) > 2 else 7
-    only = None
-    if "--only" in sys.argv:  # re-check a few names in isolation
-        only = re.compile(sys.argv[sys.argv.index("--only") + 1])
-    a = _run_all(sf_dir, pa, only)
-    b = _run_all(sf_dir, pb, only)
-    diffs = sorted(n for n in a if a[n] != b.get(n))
+
+def main(argv: list[str] | None = None) -> int:
+    a = parse_args(argv)
+    only = re.compile(a.only) if a.only is not None else None
+    ha = _run_all(a.sf_dir, a.partsA, only)
+    hb = _run_all(a.sf_dir, a.partsB, only)
+    diffs = sorted(n for n in ha if ha[n] != hb.get(n))
     for n in diffs:
         print(f"LAYOUT-DEPENDENT: {n}")
-    print(f"diffs: {len(diffs)} of {len(a)} ({pa} vs {pb} partitions, {sf_dir})")
+    print(
+        f"diffs: {len(diffs)} of {len(ha)} "
+        f"({a.partsA} vs {a.partsB} partitions, {a.sf_dir})"
+    )
     return 1 if diffs else 0
 
 

@@ -112,3 +112,10 @@ def assert_parity(spark, ddb, name: str, sf_dir: str = SF_DIR) -> None:
         f"{name}: dtype-kind mismatch {list(zip(got.columns, got_kinds, want_kinds))}"
     )
     pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True)
+
+
+def _run(spark, name, sf=SF_DIR):
+    """A registered query's result as pandas."""
+    from modforms_db_spark.registry import get_registry
+
+    return get_registry()[name].builder(spark, sf).toPandas()

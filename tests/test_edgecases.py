@@ -17,7 +17,7 @@ from pyspark.sql import types as T
 from modforms_db_spark.io import load
 from modforms_db_spark.registry import get_registry
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, _run
 
 
 def test_null_keys_dont_equijoin(spark):
@@ -2028,10 +2028,6 @@ def test_keyset_pagination_equals_offset(spark):
 # -- planted/organic behavior contracts of the statistics operators: a
 # hash match proves both engines agree, these prove they agree on the
 # RIGHT thing
-
-
-def _run(spark, name, sf=SF_DIR):
-    return get_registry()[name].builder(spark, sf).toPandas()
 
 
 def test_sprt_verdicts_and_stopping(spark):

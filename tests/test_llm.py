@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 from modforms_db_spark.registry import get_registry
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, _run
 
 
 def _pairs(spark, name: str, id_cols: tuple[str, str]) -> set[tuple]:
@@ -996,10 +996,6 @@ def test_bpe_apply_greedy_overlap_law(spark, tmp_path):
 
 # -- planted/organic behavior contracts of the curation, pipeline and
 # similarity operators, and the connected-components / k-means internals
-
-
-def _run(spark, name, sf=SF_DIR):
-    return get_registry()[name].builder(spark, sf).toPandas()
 
 
 def test_conformal_coverage_near_nominal(spark):

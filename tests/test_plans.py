@@ -587,6 +587,20 @@ def test_plan_audit_cli_args():
     assert (a.sf_dir, a.only, a.json) == ("some/sf", "x", "o.json")
 
 
+def test_determinism_audit_cli_args():
+    """The determinism audit's positionals are never taken from
+    ``--only``'s value, so ``--only`` alone audits the default directory
+    under the default partition counts."""
+    from scripts.determinism_audit import parse_args
+
+    d = parse_args([])
+    default = (d.sf_dir, d.partsA, d.partsB)
+    a = parse_args(["--only", "^q_scan"])
+    assert ((a.sf_dir, a.partsA, a.partsB), a.only) == (default, "^q_scan")
+    a = parse_args(["some/sf", "--only", "x", "16", "8"])
+    assert (a.sf_dir, a.partsA, a.partsB, a.only) == ("some/sf", 16, 8, "x")
+
+
 def test_bloom_filter_sink_grows_footprint(spark, tmp_path):
     """q_sink_parquet_bloom's layout claim, proven from the bytes on disk:
     neither pyarrow 16 nor DuckDB 1.0 exposes bloom_filter_offset, so the

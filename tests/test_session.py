@@ -18,6 +18,7 @@ from modforms_db_spark.session import (
     scratch,
     scratch_root,
 )
+from tests.conftest import SF_DIR
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -77,6 +78,57 @@ def test_scratch_from_many_threads(spark):
 def test_host_driver_mem_is_capped():
     mb = int(_host_driver_mem().removesuffix("m"))
     assert 0 < mb <= _MAX_DRIVER_MB
+
+
+def test_registered_builders_pin_the_session_confs(spark):
+    """The driver owns the session, so a registered builder must pin UTC
+    and Arrow itself, whether it is reached through the driver contract's
+    ``get_queries()`` or by its module-level name."""
+    from modforms_db_spark.operators.scans import q_scan_full
+    from modforms_db_spark.registry import get_queries
+
+    pinned = {
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+    }
+    foreign = {
+        "spark.sql.session.timeZone": "America/Los_Angeles",
+        "spark.sql.execution.arrow.pyspark.enabled": "false",
+    }
+    for build in (get_queries()["q_scan_full"], q_scan_full):
+        with scoped_conf(spark, foreign):
+            assert {k: spark.conf.get(k) for k in pinned} == foreign
+            build(spark, SF_DIR)
+            assert {k: spark.conf.get(k) for k in pinned} == pinned
+
+
+def test_no_registered_builder_calls_prep():
+    """``registry.register`` pins the confs around every builder; a
+    builder that calls ``prep`` itself copies that decision again."""
+    import ast
+    import pathlib
+
+    from modforms_db_spark.registry import get_registry
+
+    def is_register(dec):  # ``@register(...)``, not ``@atexit.register``
+        return isinstance(dec, ast.Call) and getattr(dec.func, "id", None) == "register"
+
+    builders, callers = 0, []
+    for path in sorted(pathlib.Path(REPO, "modforms_db_spark").rglob("*.py")):
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            if not any(is_register(d) for d in fn.decorator_list):
+                continue
+            builders += 1
+            if any(
+                isinstance(c, ast.Call)
+                and getattr(c.func, "id", getattr(c.func, "attr", None)) == "prep"
+                for c in ast.walk(fn)
+            ):
+                callers.append(f"{path.name}:{fn.name}")
+    assert builders == len(get_registry())
+    assert callers == []
 
 
 def _jvm_input_args(spark) -> list[str]:

@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from modforms_db_spark.registry import get_registry
 
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, _run
 
 
 def _q(name):
@@ -539,10 +539,6 @@ def test_assortativity_bounded(spark):
 
 
 # -- planted/organic behavior contracts of the temporal operators
-
-
-def _run(spark, name, sf=SF_DIR):
-    return _q(name)(spark, sf).toPandas()
 
 
 def test_runs_test_branches(spark):
