@@ -13,10 +13,18 @@ Two distinct paths:
   the whole registry for minutes) keeps the default tiered JIT: there C1
   code still saves CPU but costs wall time, and the suite runs against a
   wall-clock timeout.
+  Both lengths size Spark's JVM-wide cache of compiled generated classes
+  (``spark.sql.codegen.cache.maxEntries``) to hold every generated class
+  of the registry, so a repeated query reuses its compiled code instead of
+  compiling it again. The default of 100 entries is smaller than one
+  workload's set of classes, so without it every warm pass recompiles
+  nearly all of them.
 - :func:`prep` — called by the registry around every registered builder, because
   the DRIVER owns the session there (__spark_entry__.py contract). Only touches
   runtime-settable confs that correctness depends on (timezone; Arrow for the
-  pandas-UDF operators). Never assumes our factory ran.
+  pandas-UDF operators). Never assumes our factory ran. The codegen cache
+  size is a static conf, fixed when the JVM's first session starts, so
+  ``prep`` cannot set it on the driver-owned session.
 
 :func:`collect_within_budget` with :func:`driver_row_budget` is the
 sketch-then-exact switch of the iterative index builds: a frame that fits
@@ -54,6 +62,10 @@ _SHORT_SESSION_JAVA_OPTIONS = (
     "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
 )
 
+# Entries of the JVM-wide cache of compiled generated classes: a sweep of
+# the whole registry generates about 7.2k distinct classes.
+_CODEGEN_CACHE_ENTRIES = 16384
+
 
 def _host_driver_mem() -> str:
     """The host's MemTotal from ``/proc/meminfo``, capped at 16g."""
@@ -66,7 +78,8 @@ def get_spark(
     app_name: str = "modforms-db-spark", *, long_lived: bool = False
 ) -> SparkSession:
     """The factory's session. ``long_lived=True`` keeps the driver JVM's
-    default tiered compilation; otherwise it compiles C1-only (see the
+    default tiered compilation; otherwise it compiles C1-only. Both get a
+    codegen cache that holds the registry's generated classes (see the
     module docstring). Either only acts when this call starts the JVM."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     mem = os.environ.get("MFDB_DRIVER_MEM") or _host_driver_mem()
@@ -84,6 +97,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.shuffle.partitions", shuffle)
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", mem)
         .config("spark.ui.enabled", "false")
         .getOrCreate()

@@ -12,8 +12,9 @@ Spark-vs-Spark complement of the Spark-vs-DuckDB parity sweep.
 
     python scripts/determinism_audit.py [sf_dir] [partsA] [partsB] [--only regex]
 
-Exit 0 iff every query hashes identically under both layouts.
-(Round-4 baseline: 308/308 identical under 32 vs 7 partitions.)
+Exit 0 iff every query runs and hashes identically under both layouts.
+A query that fails under either layout is reported as an error, never
+compared as a hash.
 """
 
 from __future__ import annotations
@@ -25,6 +26,9 @@ import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+# Prefix of a failed query's entry in ``_run_all``'s result.
+_ERR = "ERR:"
 
 
 def _run_all(sf_dir: str, parts: int, only=None) -> dict[str, str]:
@@ -56,7 +60,7 @@ def _run_all(sf_dir: str, parts: int, only=None) -> dict[str, str]:
                 ).encode()
             ).hexdigest()
         except Exception as exc:  # noqa: BLE001 — audit must keep going
-            out[name] = f"ERR:{type(exc).__name__}"
+            out[name] = f"{_ERR}{type(exc).__name__}"
     spark.stop()
     return out
 
@@ -85,14 +89,17 @@ def main(argv: list[str] | None = None) -> int:
     only = re.compile(a.only) if a.only is not None else None
     ha = _run_all(a.sf_dir, a.partsA, only)
     hb = _run_all(a.sf_dir, a.partsB, only)
-    diffs = sorted(n for n in ha if ha[n] != hb.get(n))
+    errs = sorted(n for n in ha if ha[n].startswith(_ERR) or hb[n].startswith(_ERR))
+    diffs = sorted(n for n in ha if n not in errs and ha[n] != hb[n])
     for n in diffs:
         print(f"LAYOUT-DEPENDENT: {n}")
+    for n in errs:
+        print(f"ERROR: {n}: {ha[n]} vs {hb[n]}")
     print(
-        f"diffs: {len(diffs)} of {len(ha)} "
+        f"diffs: {len(diffs)} of {len(ha)}; errors: {len(errs)} "
         f"({a.partsA} vs {a.partsB} partitions, {a.sf_dir})"
     )
-    return 1 if diffs else 0
+    return 1 if diffs or errs else 0
 
 
 if __name__ == "__main__":

@@ -601,6 +601,30 @@ def test_determinism_audit_cli_args():
     assert (a.sf_dir, a.partsA, a.partsB, a.only) == ("some/sf", 16, 8, "x")
 
 
+def test_determinism_audit_counts_errors(monkeypatch, capsys):
+    """A query that fails under either layout is an error, reported by
+    name and failing the audit, even when both layouts fail alike."""
+    import scripts.determinism_audit as audit
+
+    runs = {
+        32: {"q_ok": "h1", "q_both": "ERR:IOError", "q_one": "h2"},
+        7: {"q_ok": "h1", "q_both": "ERR:IOError", "q_one": "ERR:KeyError"},
+    }
+    monkeypatch.setattr(audit, "_run_all", lambda sf, parts, only: runs[parts])
+    assert audit.main(["/nonexistent/sf"]) == 1
+    out = capsys.readouterr().out
+    assert "ERROR: q_both: ERR:IOError vs ERR:IOError" in out
+    assert "ERROR: q_one: h2 vs ERR:KeyError" in out
+    assert "LAYOUT-DEPENDENT" not in out
+    assert "diffs: 0 of 3; errors: 2" in out
+    runs[7]["q_one"] = "h3"
+    runs[32]["q_both"] = runs[7]["q_both"] = "h4"
+    assert audit.main(["/nonexistent/sf"]) == 1
+    assert "LAYOUT-DEPENDENT: q_one\ndiffs: 1 of 3; errors: 0" in capsys.readouterr().out
+    runs[7]["q_one"] = "h2"
+    assert audit.main(["/nonexistent/sf"]) == 0
+
+
 def test_bloom_filter_sink_grows_footprint(spark, tmp_path):
     """q_sink_parquet_bloom's layout claim, proven from the bytes on disk:
     neither pyarrow 16 nor DuckDB 1.0 exposes bloom_filter_offset, so the

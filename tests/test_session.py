@@ -12,6 +12,7 @@ import tempfile
 import pytest
 
 from modforms_db_spark.session import (
+    _CODEGEN_CACHE_ENTRIES,
     _MAX_DRIVER_MB,
     _host_driver_mem,
     scoped_conf,
@@ -147,14 +148,17 @@ _C1_PROBE = r"""
 from modforms_db_spark.session import get_spark
 from tests.test_session import _jvm_input_args
 
-print("ARGS", _jvm_input_args(get_spark("mfdb-jvm-probe")))
+spark = get_spark("mfdb-jvm-probe")
+print("ARGS", _jvm_input_args(spark))
+print("CODEGEN_CACHE", spark.conf.get("spark.sql.codegen.cache.maxEntries"))
 """
 
 
 def test_get_spark_jvm_is_c1_only(tmp_path):
     """A default (short) session's driver JVM starts with C1-only
-    compilation and the tiered JVM's code cache size. It needs a JVM of
-    its own, so it runs in a child process."""
+    compilation and the tiered JVM's code cache size, and its codegen
+    cache is sized like a long-lived one's. It needs a JVM of its own,
+    so it runs in a child process."""
     env = dict(
         os.environ,
         PYTHONPATH=REPO,
@@ -173,6 +177,37 @@ def test_get_spark_jvm_is_c1_only(tmp_path):
     args = next(ln for ln in out.stdout.splitlines() if ln.startswith("ARGS "))
     assert "'-XX:TieredStopAtLevel=1'" in args, args
     assert "'-XX:ReservedCodeCacheSize=240m'" in args, args
+    assert f"CODEGEN_CACHE {_CODEGEN_CACHE_ENTRIES}" in out.stdout.splitlines()
+
+
+# The ``relational_warm`` benchmark set: one read per operator module, a
+# partitioned sink and a streaming upsert. At sf0.001 a first round
+# compiles more than 100 generated classes, over Spark's default cache.
+_WARM_SET = (
+    "q_scan_pushdown", "q_join_sortmerge", "q_agg_flagship", "q_tpch_q5",
+    "q_win_topk_pergroup", "q_cdc_apply", "q_array_explode", "q_win_tumbling",
+    "q_sink_partition_overwrite", "q_stream_upsert",
+)
+
+
+def test_warm_rerun_compiles_nothing(spark):
+    """The session's codegen cache holds a workload's generated classes,
+    so a second round of the same queries reuses their compiled code."""
+    from modforms_db_spark.registry import get_registry
+
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        _CODEGEN_CACHE_ENTRIES
+    )
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    count = metrics.METRIC_COMPILATION_TIME().getCount
+    reg = get_registry()
+    rounds = []
+    for _ in range(2):
+        before = count()
+        for name in _WARM_SET:
+            reg[name].builder(spark, SF_DIR).collect()
+        rounds.append(count() - before)
+    assert rounds[1] == 0, rounds
 
 
 _WORKER = r"""
