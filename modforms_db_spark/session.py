@@ -6,13 +6,18 @@ Two distinct paths:
   local[$SPARK_GRAFT_CPUS], AQE on, shuffle partitions sized for single-node SF
   (SURVEY.md §4: "8-32, not the 200 default"), UTC timezone, Arrow enabled.
   Without the env vars, cores and driver memory come from the host.
-  Its driver JVM's compiler follows the session's length. A short session
-  (one CLI query, one benchmark run) compiles C1-only: C2 compilation is
-  most of its set-up CPU and a run of a minute never earns it back. A
+  Its driver JVM's compiler and collector follow the session's length. A
+  short session (one CLI query, one benchmark run) compiles C1-only: C2
+  compilation is most of its set-up CPU and a run of a minute never earns
+  it back. It also collects with the serial collector, which commits
+  less of a small heap than G1 (whose eden and old generation each grow
+  towards the heap's size) and runs no concurrent GC threads. A
   ``long_lived`` one (the test suite and the audit scripts, which each run
-  the whole registry for minutes) keeps the default tiered JIT: there C1
-  code still saves CPU but costs wall time, and the suite runs against a
-  wall-clock timeout.
+  the whole registry for minutes) keeps the default tiered JIT and G1:
+  there C1 code still saves CPU but costs wall time, the suite runs
+  against a wall-clock timeout, and its heap is sized to the host (up to
+  16g), where the serial collector's single-threaded full collections
+  would walk gigabytes.
   Both lengths size Spark's JVM-wide cache of compiled generated classes
   (``spark.sql.codegen.cache.maxEntries``) to hold every generated class
   of the registry, so a repeated query reuses its compiled code instead of
@@ -57,9 +62,12 @@ _MAX_DRIVER_MB = 16 * 1024
 
 # Driver JVM options of the factory's short sessions: C1-only JIT
 # compilation, with the code cache kept at the tiered JVM's 240m (C1-only
-# alone shrinks it to 48m).
+# alone shrinks it to 48m), and the serial collector: a one-run session's
+# heap is small, so its pauses are short, and serial keeps the committed
+# heap near what is live where G1 grows eden and old gen towards -Xmx.
+# Long sessions keep G1 (module docstring).
 _SHORT_SESSION_JAVA_OPTIONS = (
-    "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m"
+    "-XX:TieredStopAtLevel=1 -XX:ReservedCodeCacheSize=240m -XX:+UseSerialGC"
 )
 
 # Entries of the JVM-wide cache of compiled generated classes: a sweep of
@@ -78,7 +86,8 @@ def get_spark(
     app_name: str = "modforms-db-spark", *, long_lived: bool = False
 ) -> SparkSession:
     """The factory's session. ``long_lived=True`` keeps the driver JVM's
-    default tiered compilation; otherwise it compiles C1-only. Both get a
+    default tiered compilation and G1 collector; otherwise it compiles
+    C1-only and collects with the serial collector. Both get a
     codegen cache that holds the registry's generated classes (see the
     module docstring). Either only acts when this call starts the JVM."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))

@@ -87,22 +87,13 @@ def q_sink_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the same join+agg on the source tables — a hash match proves
     the bucketed layout is lossless.
 
-    Write-path shape (r10 optimization round; leg-profiled first):
-    - Each side is `repartition(8, key)`-ed before the bucketed write, so
-      the data arrives already clustered by the bucket expression
-      (HashPartitioning(key, 8) is exactly the bucket-id function): every
-      write task holds ONE bucket, sorts only its bucket, and emits ONE
-      file — 8 files per table instead of (input splits × touched
-      buckets) small files, and the sort+write runs 8-wide instead of at
-      the scan's split count. This is the standard cluster-before-write
-      trade (one extra narrow-payload Exchange buys file sizing +
-      parallel sort); measured 1.49 → 0.75 s on the lineitem leg at
-      sf0.1.
+    Write-path shape:
+    - Each side is `repartition(8, key)`-ed before the bucketed write.
+      HashPartitioning(key, 8) is the bucket-id function, so every write
+      task holds one bucket, sorts only that bucket and emits one file:
+      8 files per table instead of (input splits × touched buckets).
     - The two table writes are independent jobs, so they run overlapped
-      from a 2-thread pool (job descriptions are thread-local; Spark's
-      scheduler interleaves them and the second write back-fills the
-      first's straggler tail). Measured 2.05 s serial → 1.53 s
-      overlapped for the write pair at sf0.1."""
+      from a 2-thread pool (job descriptions are thread-local)."""
 
     def _write(spec: tuple[str, str, str, list[str]]) -> None:
         tbl, src, key, cols = spec
@@ -699,7 +690,8 @@ def q_sink_partition_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(path)
     )
     return (
-        spark.read.parquet(path)
+        spark.read.schema("event_id bigint, user_id bigint, event_type string")
+        .parquet(path)
         .groupBy("event_type")
         .agg(
             F.count(F.lit(1)).alias("n"),

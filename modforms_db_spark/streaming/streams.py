@@ -71,8 +71,8 @@ def _raw_events_schema(sf_dir: str) -> tuple[T.StructType, bool]:
 
     t = pq.read_schema(os.path.join(sf_dir, "events.parquet")).field("ts").type
     # Unit-based check: str(t) would miss tz-annotated variants like
-    # "timestamp[ns, tz=UTC]" (ADVICE r1) and mis-declare the stream
-    # schema while nanosAsLong still surfaces the column as bigint.
+    # "timestamp[ns, tz=UTC]" and mis-declare the stream schema while
+    # nanosAsLong still surfaces the column as bigint.
     is_nanos = pa.types.is_timestamp(t) and t.unit == "ns"
     ts_field = T.LongType() if is_nanos else T.TimestampNTZType()
     schema = T.StructType(
@@ -371,6 +371,11 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The schema ``q_stream_upsert``'s merge writes; reading the store back
+# with it skips a schema-inference job per read.
+_UPSERT_STORE_SCHEMA = "user_id bigint, n_events bigint, total_value double"
+
+
 @register(
     "q_stream_upsert",
     oracle=None,  # rows-only; own test: store ≡ batch groupBy after replay
@@ -409,7 +414,7 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         cur_path = os.path.join(store_dir, "current")
         if os.path.exists(cur_path):
-            cur = sp.read.parquet(cur_path)
+            cur = sp.read.schema(_UPSERT_STORE_SCHEMA).parquet(cur_path)
             t, s = cur.alias("t"), delta.alias("s")
             merged = (
                 t.join(s, F.col("t.user_id") == F.col("s.user_id"), "full_outer")
@@ -446,7 +451,9 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    return spark.read.parquet(os.path.join(store_dir, "current"))
+    return spark.read.schema(_UPSERT_STORE_SCHEMA).parquet(
+        os.path.join(store_dir, "current")
+    )
 
 
 @register(

@@ -137,28 +137,40 @@ def _jvm_input_args(spark) -> list[str]:
     return list(mx.getRuntimeMXBean().getInputArguments())
 
 
+def _jvm_collectors(spark) -> list[str]:
+    mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+    return sorted(b.getName() for b in mx.getGarbageCollectorMXBeans())
+
+
+# The collector names the serial collector registers: young, then old.
+_SERIAL_COLLECTORS = ["Copy", "MarkSweepCompact"]
+
+
 def test_long_lived_session_keeps_tiered_jit(spark):
     """The suite's ``long_lived`` session runs on the JVM's default
-    tiered compilation."""
+    tiered compilation and default (not serial) collector."""
     args = _jvm_input_args(spark)
     assert not any(a.startswith("-XX:TieredStopAtLevel") for a in args), args
+    assert "-XX:+UseSerialGC" not in args, args
+    assert _jvm_collectors(spark) != _SERIAL_COLLECTORS
 
 
 _C1_PROBE = r"""
 from modforms_db_spark.session import get_spark
-from tests.test_session import _jvm_input_args
+from tests.test_session import _jvm_collectors, _jvm_input_args
 
 spark = get_spark("mfdb-jvm-probe")
 print("ARGS", _jvm_input_args(spark))
+print("GC", _jvm_collectors(spark))
 print("CODEGEN_CACHE", spark.conf.get("spark.sql.codegen.cache.maxEntries"))
 """
 
 
 def test_get_spark_jvm_is_c1_only(tmp_path):
     """A default (short) session's driver JVM starts with C1-only
-    compilation and the tiered JVM's code cache size, and its codegen
-    cache is sized like a long-lived one's. It needs a JVM of its own,
-    so it runs in a child process."""
+    compilation, the tiered JVM's code cache size and the serial
+    collector, and its codegen cache is sized like a long-lived one's. It
+    needs a JVM of its own, so it runs in a child process."""
     env = dict(
         os.environ,
         PYTHONPATH=REPO,
@@ -177,6 +189,7 @@ def test_get_spark_jvm_is_c1_only(tmp_path):
     args = next(ln for ln in out.stdout.splitlines() if ln.startswith("ARGS "))
     assert "'-XX:TieredStopAtLevel=1'" in args, args
     assert "'-XX:ReservedCodeCacheSize=240m'" in args, args
+    assert f"GC {_SERIAL_COLLECTORS}" in out.stdout.splitlines(), out.stdout
     assert f"CODEGEN_CACHE {_CODEGEN_CACHE_ENTRIES}" in out.stdout.splitlines()
 
 
@@ -208,6 +221,30 @@ def test_warm_rerun_compiles_nothing(spark):
             reg[name].builder(spark, SF_DIR).collect()
         rounds.append(count() - before)
     assert rounds[1] == 0, rounds
+
+
+def test_write_path_builders_read_back_without_inference(spark):
+    """The sink and upsert builders read their own output back with the
+    schema they wrote, so a warm build runs no schema-inference job: the
+    sink runs its two writes, and the upsert's jobs all run in the
+    stream's own job group. The first build loads the catalog's events
+    frame, which may run a job of its own."""
+    from modforms_db_spark.registry import get_registry
+
+    sc = spark.sparkContext
+    reg = get_registry()
+    jobs = {}
+    for name, want in (("q_sink_partition_overwrite", 2), ("q_stream_upsert", 0)):
+        reg[name].builder(spark, SF_DIR)
+        group = f"read-back-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            reg[name].builder(spark, SF_DIR)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        jobs[name] = (len(sc.statusTracker().getJobIdsForGroup(group)), want)
+    assert all(got == want for got, want in jobs.values()), jobs
 
 
 _WORKER = r"""
