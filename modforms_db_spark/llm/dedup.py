@@ -340,7 +340,7 @@ def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = e.alias("a")
     b = e.alias("b")
     cos4 = F.round(
-        _dot("a.emb", "b.emb") / (F.col("a.nrm") * F.col("b.nrm")), 4
+        F.try_divide(_dot("a.emb", "b.emb"), F.col("a.nrm") * F.col("b.nrm")), 4
     ).alias("cos4")
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
@@ -408,9 +408,9 @@ def q_dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         "v2",
     )
-    cos4 = F.round(_dot("e1", "e2") / (F.col("n1") * F.col("n2")), 4).alias(
-        "cos4"
-    )
+    cos4 = F.round(
+        F.try_divide(_dot("e1", "e2"), F.col("n1") * F.col("n2")), 4
+    ).alias("cos4")
     return pairs.select("v1", "v2", cos4).where(F.col("cos4") >= 0.45)
 
 
@@ -1737,31 +1737,98 @@ def q_dedup_group_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-@cache.index(cache.SEM_LABELS, "embeddings")
-def _sem_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SemDeDup near-dup component labels (doc_id, component) — the
-    keeper side of the semantic dedup index, a session cache entry like
-    the rep-graph labels it mirrors (`_lsh_rep_labels`).
+# Driver bytes per collected (vec_id, cluster, emb) row of the semantic
+# index: up to 1024 double dims, held twice by `_sem_pairs_driver` (the
+# Arrow table and its cluster-sorted numpy copy), with room to spare.
+_SEM_ROW_BYTES = 32 * 1024
+# The driver fold holds the dot products of one block of about this many
+# pairs at a time, so the python process's memory does not grow with the
+# pairs.
+_SEM_BLOCK_PRODUCTS = 1 << 16
+# Spark keeps a pair when round(cos, 4) >= 0.45. Its round is HALF_UP on
+# the double's decimal form, so monotone in cos, and 0.44995 is the least
+# double it rounds to 0.45: on raw doubles the test is cos >= 0.44995.
+_SEM_COS_FLOOR = 0.44995
 
-    Pipeline: kmeans blocking (`kmeans_core`, itself cached) →
-    within-cluster exact rounded cosine ≥ 0.45 (spread probe side +
-    broadcast build side — see q_dedup_semantic's scale note) → CC over
-    the near-dup pairs."""
-    from modforms_db_spark.llm.similarity import (
-        _dot,
-        _emb,
-        _norm,
-        kmeans_core,
+
+def _sem_keep(dot: np.ndarray, den: np.ndarray) -> np.ndarray:
+    """Spark's ``round(try_divide(dot, den), 4) >= 0.45``, elementwise: a
+    zero ``den`` divides to null and drops the pair, and NaN keeps it,
+    because Spark orders NaN above every number."""
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return (den != 0) & ~(dot / den < _SEM_COS_FLOOR)
+
+
+def _sem_pairs_driver(v: pa.Table) -> pa.Table | None:
+    """`_sem_pairs` over the collected (vec_id, cluster, emb) table, as a
+    (a, b) edge table, a < b, of the vec_id type.
+
+    The norms and dot products are Spark's element-order folds
+    (``acc + x*x`` and ``acc + x*y`` from 0.0, then ``sqrt``) in the same
+    IEEE double operations: Java never fuses a multiply-add and numpy's
+    multiply and add are separate ufuncs, and ``sqrt`` and the division
+    are correctly rounded on both sides, so every cosine is bit-identical
+    and `_sem_keep` makes Spark's keep decision on it.
+
+    None for the inputs whose Spark semantics ride on nulls and empty
+    arrays (no vectors, null ids, clusters or cells, ragged or
+    zero-length vectors), which stay with the distributed form."""
+    ids = v.column("vec_id").combine_chunks()
+    cl = v.column("cluster").combine_chunks()
+    emb = v.column("emb").combine_chunks()
+    cells = emb.flatten()
+    n = len(emb)
+    if not n or ids.null_count or cl.null_count or emb.null_count:
+        return None
+    lengths = emb.value_lengths().to_numpy()
+    dims = int(lengths[0])
+    if cells.null_count or not dims or (lengths != dims).any():
+        return None
+    cluster, vid = cl.to_numpy(), ids.to_numpy()
+    # By cluster, then vec_id: a pair (i, j) of one cluster has i < j.
+    order = np.lexsort((vid, cluster))
+    _, starts, sizes = np.unique(
+        cluster[order], return_index=True, return_counts=True
+    )
+    x = cells.to_numpy().reshape(n, dims)[order]
+    vid = vid[order]
+    acc = np.zeros(n)
+    for k in range(dims):
+        acc = acc + x[:, k] * x[:, k]
+    nrm = np.sqrt(acc)
+    a, b = [], []
+    for lo, m in zip(starts, sizes):
+        xc, idc, nc = x[lo : lo + m], vid[lo : lo + m], nrm[lo : lo + m]
+        step = max(1, _SEM_BLOCK_PRODUCTS // m)
+        for i0 in range(0, m, step):
+            # Rows i0.. of the block against columns i0..m, which hold
+            # every pair (i, j > i) of those rows.
+            rows, cols = slice(i0, min(i0 + step, m)), slice(i0, m)
+            dot = np.zeros((rows.stop - i0, m - i0))
+            for k in range(dims):
+                dot = dot + np.multiply.outer(xc[rows, k], xc[cols, k])
+            keep = (idc[rows, None] < idc[cols]) & _sem_keep(
+                dot, np.multiply.outer(nc[rows], nc[cols])
+            )
+            i, j = np.nonzero(keep)
+            a.append(idc[rows][i])
+            b.append(idc[cols][j])
+    t = v.schema.field("vec_id").type
+    return pa.table(
+        {"a": pa.array(np.concatenate(a), t), "b": pa.array(np.concatenate(b), t)}
     )
 
-    vecs = (
-        _emb(spark, sf_dir)
-        .select("vec_id", "emb")
-        .withColumn("nrm", _norm("emb"))
-        .localCheckpoint(eager=False)  # both sides of the pair join
+
+def _sem_pairs(v: DataFrame) -> DataFrame:
+    """The distributed within-cluster pairs leg of the semantic index:
+    (d1, d2), d1 < d2, of every two (vec_id, cluster, emb) rows of ``v``
+    in one cluster whose rounded cosine is ≥ 0.45. The probe side is
+    spread and the build side broadcast (see q_dedup_semantic)."""
+    from modforms_db_spark.llm.similarity import _dot, _norm
+
+    v = v.withColumn("nrm", _norm("emb")).localCheckpoint(
+        eager=False  # both sides of the pair join
     )
-    asg = kmeans_core(spark, sf_dir).select("vec_id", "cluster")
-    v = vecs.join(asg, "vec_id")
     a = spread(
         v.select(
             "cluster",
@@ -1776,15 +1843,52 @@ def _sem_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("emb").alias("e2"),
         F.col("nrm").alias("n2"),
     )
-    cos4 = F.round(_dot("e1", "e2") / (F.col("n1") * F.col("n2")), 4)
-    pairs = (
+    cos4 = F.round(F.try_divide(_dot("e1", "e2"), F.col("n1") * F.col("n2")), 4)
+    return (
         a.join(F.broadcast(b), "cluster")
         .where(F.col("d1") < F.col("d2"))
         .where(cos4 >= 0.45)
         .select("d1", "d2")
     )
-    labels, _rounds = connected_components(pairs, assume_distinct=True)
+
+
+def _sem_components(v: DataFrame) -> DataFrame:
+    """(doc_id, component) near-dup component labels of the (vec_id,
+    cluster, emb) rows of ``v``: connected components with min-id labels
+    over `_sem_pairs`.
+
+    Sketch-then-exact, as in `connected_components`: when ``v`` fits the
+    driver row budget, one collect, `_sem_pairs_driver` and
+    `_min_label_components` finish on the driver; the budget bounds the
+    vectors, and so the pairs, which the driver folds in blocks.
+    Otherwise the pairs leg and the components run on the cluster. Both
+    keep the same pairs, so the labels are identical at any budget;
+    budget 0 is the purely distributed form."""
+    spark = v.sparkSession
+    tbl = session.collect_within_budget(
+        v.select("vec_id", "cluster", "emb"),
+        session.driver_row_budget(spark, _SEM_ROW_BYTES),
+    )
+    pairs = None if tbl is None else _sem_pairs_driver(tbl)
+    if pairs is not None:
+        return spark.createDataFrame(_min_label_table(pairs))
+    labels, _rounds = connected_components(_sem_pairs(v), assume_distinct=True)
     return labels
+
+
+@cache.index(cache.SEM_LABELS, "embeddings")
+def _sem_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """SemDeDup near-dup component labels (doc_id, component) — the
+    keeper side of the semantic dedup index, a session cache entry like
+    the rep-graph labels it mirrors (`_lsh_rep_labels`): kmeans blocking
+    (`kmeans_core`, itself cached), then `_sem_components` over the
+    clustered embeddings."""
+    from modforms_db_spark.llm.similarity import _emb, kmeans_core
+
+    asg = kmeans_core(spark, sf_dir).select("vec_id", "cluster")
+    return _sem_components(
+        _emb(spark, sf_dir).select("vec_id", "emb").join(asg, "vec_id")
+    )
 
 
 @register(
@@ -1828,29 +1932,21 @@ def q_dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     fan-out per row = cluster size), matching the SemDeDup reference
     implementation's per-cluster pairwise pass.
 
-    r10 shape (5.7 → ~2 s cached / ~4 s cold min-of-3 at sf0.1,
-    bit-identical at 3 SFs):
+    Invariants of the build:
 
-    - the fit comes from `kmeans_core` — the session-cached fitted
-      assignment shared with `q_cluster_kmeans` (see
-      :mod:`modforms_db_spark.cache`).
-    - the within-cluster pairwise leg was parallelism-starved, not
-      shuffle-bound: a join keyed on 8 cluster ids inherits the panel's
-      4 shuffle partitions, so ~250k cosine folds ran on ≤4 of 32
-      cores. Fix = `spread()` the probe side and BROADCAST the build
-      side (~1 MB at sf0.1) — the broadcast-hash join is narrow, so the
-      folds execute in the probe side's 32-way round-robin layout. At
-      100 TB the roles invert naturally: k grows with the corpus
-      (cluster count ≫ cores), the per-cluster build side no longer
-      fits a broadcast, and the cluster-key shuffle join this replaces
-      is the right plan again — with full parallelism, because the key
-      cardinality is no longer the binding constraint. Same plan AQE
-      would pick from size stats at each scale.
-    - `assume_distinct=True` into CC: pairs are unique by construction
-      (one row per vec_id on each side, d1 < d2) — skips CC's entry
-      distinct shuffle.
-    - the pairs + CC live in `_sem_labels` — the cached keeper side of
-      the semantic index (the `_lsh_rep_labels` sibling)."""
+    - `_sem_labels` is the cached keeper side of the index (the
+      `_lsh_rep_labels` sibling), over the fit of `kmeans_core`, the
+      cached assignment shared with `q_cluster_kmeans`.
+    - When the clustered embeddings fit the driver budget, the pairs and components finish on the driver
+      (sketch-then-exact, `_sem_components`), with the same pairs.
+    - Otherwise, at scale, the pairs leg (`_sem_pairs`) spreads its probe
+      side and broadcasts its build side: a shuffle join keyed on k
+      cluster ids would run the cosine folds on at most k tasks, while
+      the broadcast-hash join is narrow and keeps the probe side's
+      parallelism.
+    - The pairs go to `connected_components` with
+      ``assume_distinct=True``: they are unique by construction (one row
+      per vec_id on each side, d1 < d2)."""
     from modforms_db_spark.llm.similarity import kmeans_core
 
     asg = kmeans_core(spark, sf_dir).select(

@@ -113,15 +113,22 @@ def test_ivf_excludes_zero_norm_query(spark, tmp_path):
         "q_ndcg",
         "q_rbo",
         "q_reco_coverage",
+        "q_dedup_embedding",
+        "q_dedup_embedding_ann",
+        "q_dedup_semantic",
     ],
 )
-def test_zero_norm_vector_scores_null(spark, tmp_path, name):
+def test_zero_norm_vector_scores_null(spark, tmp_path, monkeypatch, name):
     """Under ANSI mode a cosine against a zero-norm vector scores NULL
     (``try_divide``) instead of failing the query. DuckDB's ``x / 0.0``
-    is NULL too, so an oracle query must still equal its oracle on the
-    zeroed copy; a rows-only query must run and score vec 0 NULL."""
+    is NULL too (and its ``list_cosine_similarity`` of a zero vector is
+    -1.0, below every threshold), so an oracle query must still equal its
+    oracle on the zeroed copy; a rows-only query must run and score vec 0
+    NULL. q_dedup_semantic pairs vec 0 with nothing, so it is its own
+    keeper, at the session's budget and at budget 0."""
     import duckdb
 
+    from modforms_db_spark import cache, session
     from modforms_db_spark.session import scoped_conf
 
     from tests.conftest import assert_parity
@@ -138,10 +145,17 @@ def test_zero_norm_vector_scores_null(spark, tmp_path, name):
             assert_parity(spark, con, name, sf)
             return
         rows = qd.builder(spark, sf).collect()
+        if name == "q_dedup_semantic":
+            cache.clear()
+            monkeypatch.setattr(session, "driver_row_budget", lambda *a: 0)
+            rows += qd.builder(spark, sf).collect()
     assert rows
     for r in (row.asDict() for row in rows):
-        if "cos4" in r and 0 in (r["q_id"], r["nb_id"]):
+        ids = {r.get(c) for c in ("q_id", "nb_id", "v1", "v2")}
+        if "cos4" in r and 0 in ids:
             assert r["cos4"] is None, r
+        if r.get("vec_id") == 0 and "keeper" in r:
+            assert r["keeper"] == 0, r
 
 
 def test_ann_lsh_recall(spark):
@@ -905,6 +919,115 @@ def test_semantic_dedup_laws(spark):
     assert same_cluster, "no exact pair co-clustered — soundness check vacuous"
     for a, b in same_cluster:
         assert keeper[a] == keeper[b], (a, b, keeper[a], keeper[b])
+
+
+def _sem_finish(monkeypatch, build, budget=None):
+    """(sorted labels of ``build()``, whether its pairs ran on the
+    cluster) with ``budget`` standing in for `session.driver_row_budget`
+    (None keeps the session's own)."""
+    from modforms_db_spark import session
+    from modforms_db_spark.llm import dedup
+
+    cc, calls = dedup.connected_components, []
+
+    def spy(*a, **kw):
+        calls.append(a)
+        return cc(*a, **kw)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(dedup, "connected_components", spy)
+        if budget is not None:
+            mp.setattr(session, "driver_row_budget", budget)
+        labels = sorted(map(tuple, build().collect()))
+    return labels, bool(calls)
+
+
+def _sem_fixture(spark):
+    """Clustered vectors where the keep rule decides: 1-2 pass (cos
+    0.995), 3 has zero norm, 4 pairs with nobody, 5's NaN element makes
+    its cosines NaN (kept: Spark orders NaN above every number), and 8
+    equals 1 but sits in another cluster. 9 pairs × 3 dims."""
+    nan = float("nan")
+    return spark.createDataFrame(
+        [
+            (1, 1, [1.0, 0.0, 0.0]),
+            (2, 1, [1.0, 0.1, 0.0]),
+            (3, 1, [0.0, 0.0, 0.0]),
+            (4, 1, [0.0, 1.0, 0.0]),
+            (5, 2, [nan, 1.0, 0.0]),
+            (6, 2, [0.0, 0.0, 1.0]),
+            (7, 2, [0.0, 1.0, 1.0]),
+            (8, 3, [1.0, 0.0, 0.0]),
+        ],
+        "vec_id long, cluster int, emb array<double>",
+    )
+
+
+def test_semantic_finishes_agree(spark, monkeypatch):
+    """The semantic index's driver finish and its distributed pairs leg
+    (budget 0) give the same labels, on SF_DIR and, under ANSI mode, on a
+    fixture with a zero-norm row and a NaN element."""
+    from modforms_db_spark.llm.dedup import _sem_components, _sem_labels
+    from modforms_db_spark.session import scoped_conf
+
+    def both(build):
+        driver, on_cluster = _sem_finish(monkeypatch, build)
+        assert driver and not on_cluster
+        dist, on_cluster = _sem_finish(monkeypatch, build, lambda *a: 0)
+        assert on_cluster
+        assert driver == dist
+        return driver
+
+    both(lambda: _sem_labels.__wrapped__(spark, SF_DIR))
+    with scoped_conf(spark, {"spark.sql.ansi.enabled": "true"}):
+        got = both(lambda: _sem_components(_sem_fixture(spark)))
+    assert got == [(1, 1), (2, 1), (5, 5), (6, 5), (7, 5)], got
+
+
+def test_semantic_driver_finish_boundary(spark, monkeypatch):
+    """The driver finish applies exactly when the 8 rows fit the row
+    budget; one less runs the pairs on the cluster. Same labels both
+    ways."""
+    from modforms_db_spark.llm import dedup
+
+    want = [(1, 1), (2, 1), (5, 5), (6, 5), (7, 5)]
+    for rows, on_cluster in ((8, False), (7, True)):
+        labels, ran = _sem_finish(
+            monkeypatch,
+            lambda: dedup._sem_components(_sem_fixture(spark)),
+            lambda _spark, row_bytes: rows,
+        )
+        assert labels == want, (rows, labels)
+        assert ran == on_cluster, rows
+
+
+def test_semantic_driver_keep_matches_spark_round(spark):
+    """The driver's keep rule equals Spark's ``round(try_divide(dot,
+    den), 4) >= 0.45`` at the threshold's neighbouring doubles: Spark's
+    round is monotone, so agreement there is agreement everywhere. NaN
+    is kept and a zero denominator (NULL in Spark) drops the pair."""
+    import math
+
+    import numpy as np
+
+    from modforms_db_spark.llm.dedup import _sem_keep
+
+    pts = [
+        (math.nextafter(0.44995, 0.0), 1.0),
+        (0.44995, 1.0),
+        (math.nextafter(0.44995, 1.0), 1.0),
+        (float("nan"), 1.0),
+        (0.5, 0.0),
+        (float("nan"), 0.0),
+    ]
+    df = spark.createDataFrame(
+        [(i, d, n) for i, (d, n) in enumerate(pts)], "i int, dot double, den double"
+    )
+    keep = F.round(F.try_divide("dot", "den"), 4) >= 0.45
+    got = [bool(r.k) for r in df.select("i", keep.alias("k")).orderBy("i").collect()]
+    dot, den = (np.array(c) for c in zip(*pts))
+    assert got == [False, True, True, True, False, False], got
+    assert _sem_keep(dot, den).tolist() == got
 
 
 def test_ivf_recall_curve_monotone_and_bounded(spark):

@@ -709,58 +709,21 @@ def test_kmeans_assignment_never_shuffles_vector_side(spark):
 
 
 def test_semantic_pairs_leg_is_broadcast_join(spark):
-    """q_dedup_semantic's within-cluster pairwise join must be a
-    broadcast-hash join with NO sort-merge join on the cluster key: a
-    shuffle join keyed on 8 cluster ids caps the ~250k cosine folds at
-    min(8, shuffle.partitions) tasks — the r8 starvation pattern. The
-    probe side keeps its spread() round-robin layout through the
-    narrow broadcast join."""
-    from modforms_db_spark.registry import get_registry
+    """q_dedup_semantic's distributed within-cluster pairwise join must be
+    a broadcast-hash join with NO sort-merge join on the cluster key: a
+    shuffle join keyed on 8 cluster ids caps the cosine folds at
+    min(8, shuffle.partitions) tasks. The probe side keeps its spread()
+    round-robin layout through the narrow broadcast join. Audits the
+    engine's own pairs leg (`_sem_pairs`) over the clustered vectors."""
+    from modforms_db_spark.llm.dedup import _sem_pairs
+    from modforms_db_spark.llm.similarity import _emb, kmeans_core
 
-    df = get_registry()["q_dedup_semantic"].builder(spark, SF_DIR)
-    # The returned frame ends at the CC output join; the pairs leg was
-    # already executed eagerly inside connected_components' entry
-    # checkpoint, so re-derive the pairs plan the same way the builder
-    # does and audit THAT. Cheaper: audit the full builder's effect by
-    # re-running the leg construction here.
-    import modforms_db_spark.llm.similarity as sim
-    from modforms_db_spark.io import spread
-    from modforms_db_spark.llm.similarity import _dot, _emb, _norm
-
-    vecs = (
-        _emb(spark, SF_DIR)
-        .select("vec_id", "emb")
-        .withColumn("nrm", _norm("emb"))
-    )
-    asg = sim.kmeans_core(spark, SF_DIR).select("vec_id", "cluster")
-    v = vecs.join(asg, "vec_id")
-    a = spread(
-        v.select(
-            "cluster",
-            F.col("vec_id").alias("d1"),
-            F.col("emb").alias("e1"),
-            F.col("nrm").alias("n1"),
-        )
-    )
-    b = v.select(
-        "cluster",
-        F.col("vec_id").alias("d2"),
-        F.col("emb").alias("e2"),
-        F.col("nrm").alias("n2"),
-    )
-    cos4 = F.round(_dot("e1", "e2") / (F.col("n1") * F.col("n2")), 4)
-    pairs = (
-        a.join(F.broadcast(b), "cluster")
-        .where(F.col("d1") < F.col("d2"))
-        .where(cos4 >= 0.45)
-        .select("d1", "d2")
-    )
-    plan = pairs._jdf.queryExecution().executedPlan().toString()
+    asg = kmeans_core(spark, SF_DIR).select("vec_id", "cluster")
+    v = _emb(spark, SF_DIR).select("vec_id", "emb").join(asg, "vec_id")
+    plan = _sem_pairs(v)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan, plan
     assert "SortMergeJoin" not in plan, plan
     assert "hashpartitioning(cluster" not in plan, plan
-    assert df is not None  # builder constructed without error
-    sim.kmeans_core_cache_clear()
 
 
 def test_pca_matvec_runs_on_packed_row_no_joins(spark):
