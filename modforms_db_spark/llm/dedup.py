@@ -465,10 +465,10 @@ def _lsh_groups_rep_pairs(
     with member arrays m1/m2 and the rounded Jaccard). Factored out of
     `q_dedup_minhash_lsh` so `q_dedup_fuzzy_apply` can run connected
     components over the rep graph DIRECTLY — at sf0.1 that is ~290 k
-    verified edges over ~2.9 k nodes (measured r9: 289,702 / 2,868, of
-    4,266 groups total) instead of the 755 k member-expanded pairs
-    (intra-group cliques alone are quadratic in group size; the
-    expansion exists only for the pair-emitting query's contract).
+    verified edges over ~2.9 k nodes (of 4,266 groups) instead of the
+    755 k member-expanded pairs (intra-group cliques alone are quadratic
+    in group size; the expansion exists only for the pair-emitting
+    query's contract).
     Component min-labels are invariant under the expansion: rep =
     min(member) per group, so min(doc_id) over an expanded component
     equals min(rep) over its rep component.
@@ -572,30 +572,17 @@ def _lsh_groups_rep_pairs(
     )
     a = bands.alias("a")
     b = bands.alias("b")
-    # r11 probed-and-REJECTED: rewriting this self-join as bucket
-    # posting lists (groupBy (lang, band, band_hash) →
-    # sort_array(collect_list(doc_id)) → posexplode + suffix-slice
-    # explode, the q_dedup_substring r10 pattern) measured ~40% SLOWER
-    # (interleaved A/B min/med-of-7 at sf0.1, noop sink: 2.21/2.32 →
-    # 3.03/3.28 s): the band rows are NARROW (~30 bytes) so the join's
-    # broadcast is harmless here — ReusedExchange already dedupes the
-    # signature subtree — while the posting form pays collect_list
-    # array building plus O(bucket²) suffix-array allocations to emit
-    # the same 1.29 M candidates the hash join emits for free. The
-    # substring rewrite won because its join carried 30-token WINDOW
-    # STRINGS; this one carries 8-byte hashes. Kept as the join.
-    # One wide hash exchange for the candidate dedup (r11, guide §2.4):
-    # the r9–r10 form was `spread(raw.distinct())` — a dedup exchange at
-    # shuffle-partition width (the bench panel runs 4) followed by a
-    # FULL round-robin respread of the deduped set so the verify stage
-    # (the pipeline's compute peak: one array_intersect per candidate)
-    # runs at full-core width. Hash-repartitioning the raw pairs to
-    # defaultParallelism on the pair key lets the distinct's aggregate
-    # reuse that one exchange (ensureRequirements: hashpartitioning
-    # (r1, r2, n) already clusters the dedup) — ONE shuffle of the
-    # candidate set instead of two, wide dedup, wide verify, at any
-    # scale. Interleaved A/B (min/med-of-7, noop, sf0.1): rep_pairs leg
-    # 3.39/4.34 → 2.77/3.26 s; output frame-equal (289,702 pairs).
+    # The candidate self-join stays a hash join. Its rows are narrow
+    # (lang, band, an 8-byte hash, an id) and ReusedExchange already
+    # shares the signature subtree between its sides; a bucket
+    # posting-list form (collect_list per bucket, then a suffix explode,
+    # as q_dedup_substring does for its wide window strings) only adds
+    # array building and O(bucket²) allocations to emit the same pairs.
+    # One exchange serves the candidate dedup: the raw pairs are
+    # hash-partitioned on (r1, r2) at defaultParallelism, which already
+    # clusters the distinct's aggregate, so the dedup and the verify
+    # (one array_intersect per candidate, the pipeline's compute peak)
+    # both run at full-core width after a single shuffle.
     raw = a.join(
         b,
         (F.col("a.band") == F.col("b.band"))
@@ -616,20 +603,13 @@ def _lsh_groups_rep_pairs(
         F.col("toks").alias("toks2"),
         F.col("members").alias("m2"),
     )
-    # Verify each candidate pair. Measured savings vs the naive
-    # intersect+union form: (a) jac >= t bounds the SIZE ratio (jac <=
-    # |A|/|B| for |A|<=|B|), so `min >= t*max` kills most candidates with
-    # integer arithmetic before any array work; (b) |A∪B| = s1+s2-|A∩B|,
-    # so the union array is never materialized; (c) r11: the size
-    # prefilter joins SLIM 12-byte (rep, size) projections FIRST
-    # (1.29 M → 893 k candidates at sf0.1 before any array moves), so
-    # the (toks, members)-bearing join output is only materialized for
-    # survivors — on top of the one-exchange dedup, 2.77/3.26 →
-    # 2.26/2.85 s min/med-of-7 noop, frame-equal. The broadcast hints
-    # are the bench-scale shape (4,266 groups); at 100 TB the size dims
-    # grow with the corpus and the hints come off (planner SMJ) — the
-    # prefilter still pays by cutting the array-bearing joins' probe
-    # rows ~30% (more on boilerplate-heavy real corpora).
+    # Verify each candidate pair, cheapest test first: (a) jac >= t
+    # bounds the SIZE ratio (jac <= |A|/|B| for |A|<=|B|), so
+    # `min >= t*max` drops most candidates with integer arithmetic;
+    # (b) |A∪B| = s1+s2-|A∩B|, so the union array is never
+    # materialized; (c) the size prefilter joins slim (rep, size)
+    # projections before any array is touched, so the (toks,
+    # members)-bearing joins run only for its survivors.
     sz1 = groups.select(F.col("rep").alias("r1"), F.size("toks").alias("s1"))
     sz2 = groups.select(F.col("rep").alias("r2"), F.size("toks").alias("s2"))
     kept = (

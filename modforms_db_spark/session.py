@@ -24,12 +24,30 @@ Two distinct paths:
   compiling it again. The default of 100 entries is smaller than one
   workload's set of classes, so without it every warm pass recompiles
   nearly all of them.
+  Both lengths also stop plan building from asking the JVM what it
+  already knows. pyspark reaches its helpers by simple name
+  (``PythonSQLUtils`` for every higher-order function, ``PythonUtils``
+  for every column list, ``functions``), and py4j resolves a simple name
+  on every access: the bare name, then each import of the view, every
+  miss a failed class load across all of Spark's jars. The session's
+  JVM view keeps each name it resolved to a class, so a repeat access
+  sends nothing; any other name (py4j answers a name that is no class
+  with a package) is asked again, so an import added later (streaming
+  adds some) still takes effect. And pyspark's DataFrame call-site
+  capture is off: with it on, every ``F.col`` and every ``Column``
+  method also reads two confs, sets and clears the JVM's current
+  origin, walks the Python stack and tries to import IPython. Spark's
+  error messages then lack the Python file:line of the failing call;
+  results are unchanged.
 - :func:`prep` — called by the registry around every registered builder, because
   the DRIVER owns the session there (__spark_entry__.py contract). Only touches
   runtime-settable confs that correctness depends on (timezone; Arrow for the
   pandas-UDF operators). Never assumes our factory ran. The codegen cache
   size is a static conf, fixed when the JVM's first session starts, so
-  ``prep`` cannot set it on the driver-owned session.
+  ``prep`` cannot set it on the driver-owned session. ``prep`` leaves
+  the JVM view and call-site capture alone too: neither changes a
+  result, and pyspark fixes the capture flag for the whole process at its
+  first wrapped call.
 
 :func:`collect_within_budget` with :func:`driver_row_budget` is the
 sketch-then-exact switch of the iterative index builds: a frame that fits
@@ -51,6 +69,7 @@ import threading
 from contextlib import contextmanager
 from typing import TYPE_CHECKING, Iterator
 
+from py4j.java_gateway import JavaClass, JVMView
 from pyspark.sql import DataFrame, SparkSession
 
 if TYPE_CHECKING:
@@ -75,6 +94,23 @@ _SHORT_SESSION_JAVA_OPTIONS = (
 _CODEGEN_CACHE_ENTRIES = 16384
 
 
+class _ClassCachingJVMView(JVMView):
+    """A py4j ``JVMView`` that keeps each name it resolved to a class in
+    its ``__dict__``, where a repeat access finds it without a round trip.
+    A ``JavaClass`` holds only its fully qualified name and the gateway
+    client, so the JVM still resolves every call on it by that name.
+    Any other answer (a package, which is also py4j's answer for a name
+    that no import makes a class, or an error) is not kept. A kept name
+    stays with its class even if a later import would resolve it to
+    another."""
+
+    def __getattr__(self, name: str):
+        found = super().__getattr__(name)
+        if isinstance(found, JavaClass):
+            self.__dict__[name] = found
+        return found
+
+
 def _host_driver_mem() -> str:
     """The host's MemTotal from ``/proc/meminfo``, capped at 16g."""
     with open("/proc/meminfo") as f:
@@ -89,7 +125,10 @@ def get_spark(
     default tiered compilation and G1 collector; otherwise it compiles
     C1-only and collects with the serial collector. Both get a
     codegen cache that holds the registry's generated classes (see the
-    module docstring). Either only acts when this call starts the JVM."""
+    module docstring). Either only acts when this call starts the JVM.
+    Every call makes the process's JVM view keep the class names it
+    resolves and turns pyspark's DataFrame call-site capture off; pyspark
+    reads that flag once per process, at its first wrapped call."""
     cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     mem = os.environ.get("MFDB_DRIVER_MEM") or _host_driver_mem()
     shuffle = os.environ.get("MFDB_SHUFFLE_PARTITIONS", "32")
@@ -109,8 +148,12 @@ def get_spark(
         .config("spark.sql.codegen.cache.maxEntries", str(_CODEGEN_CACHE_ENTRIES))
         .config("spark.driver.memory", mem)
         .config("spark.ui.enabled", "false")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )
+    jvm = spark.sparkContext._jvm
+    if type(jvm) is JVMView:
+        jvm.__class__ = _ClassCachingJVMView
     return spark
 
 

@@ -1,5 +1,6 @@
 """Session helpers: scoped confs, per-application scratch and its
-lifecycle, host-derived defaults."""
+lifecycle, host-derived defaults, the factory's JVM view and call-site
+capture."""
 
 from __future__ import annotations
 
@@ -8,8 +9,10 @@ import os
 import subprocess
 import sys
 import tempfile
+import threading
 
 import pytest
+from py4j.java_gateway import JavaPackage, JVMView, java_import
 
 from modforms_db_spark.session import (
     _CODEGEN_CACHE_ENTRIES,
@@ -166,11 +169,9 @@ print("CODEGEN_CACHE", spark.conf.get("spark.sql.codegen.cache.maxEntries"))
 """
 
 
-def test_get_spark_jvm_is_c1_only(tmp_path):
-    """A default (short) session's driver JVM starts with C1-only
-    compilation, the tiered JVM's code cache size and the serial
-    collector, and its codegen cache is sized like a long-lived one's. It
-    needs a JVM of its own, so it runs in a child process."""
+def _short_session_lines(tmp_path, script: str) -> list[str]:
+    """The output lines of ``script`` run in a child interpreter, where
+    ``get_spark()`` starts a short session's JVM of its own."""
     env = dict(
         os.environ,
         PYTHONPATH=REPO,
@@ -178,7 +179,7 @@ def test_get_spark_jvm_is_c1_only(tmp_path):
         MFDB_DRIVER_MEM="512m",
     )
     out = subprocess.run(
-        [sys.executable, "-c", _C1_PROBE],
+        [sys.executable, "-c", script],
         cwd=tmp_path,
         env=env,
         capture_output=True,
@@ -186,11 +187,20 @@ def test_get_spark_jvm_is_c1_only(tmp_path):
         timeout=300,
     )
     assert out.returncode == 0, out.stderr[-4000:]
-    args = next(ln for ln in out.stdout.splitlines() if ln.startswith("ARGS "))
+    return out.stdout.splitlines()
+
+
+def test_get_spark_jvm_is_c1_only(tmp_path):
+    """A default (short) session's driver JVM starts with C1-only
+    compilation, the tiered JVM's code cache size and the serial
+    collector, and its codegen cache is sized like a long-lived one's. It
+    needs a JVM of its own, so it runs in a child process."""
+    lines = _short_session_lines(tmp_path, _C1_PROBE)
+    args = next(ln for ln in lines if ln.startswith("ARGS "))
     assert "'-XX:TieredStopAtLevel=1'" in args, args
     assert "'-XX:ReservedCodeCacheSize=240m'" in args, args
-    assert f"GC {_SERIAL_COLLECTORS}" in out.stdout.splitlines(), out.stdout
-    assert f"CODEGEN_CACHE {_CODEGEN_CACHE_ENTRIES}" in out.stdout.splitlines()
+    assert f"GC {_SERIAL_COLLECTORS}" in lines, lines
+    assert f"CODEGEN_CACHE {_CODEGEN_CACHE_ENTRIES}" in lines, lines
 
 
 # The ``relational_warm`` benchmark set: one read per operator module, a
@@ -245,6 +255,85 @@ def test_write_path_builders_read_back_without_inference(spark):
         sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
         jobs[name] = (len(sc.statusTracker().getJobIdsForGroup(group)), want)
     assert all(got == want for got, want in jobs.values()), jobs
+
+
+def _commands_sent(monkeypatch, client) -> list[str]:
+    """The py4j commands this thread sends through ``client`` from now
+    until the test ends."""
+    sent: list[str] = []
+    send = client.send_command
+    me = threading.get_ident()
+
+    def counting(command, *args, **kwargs):
+        if threading.get_ident() == me:
+            sent.append(command)
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    return sent
+
+
+def test_jvm_view_resolves_a_class_name_once(spark, monkeypatch):
+    """The factory session's JVM view keeps a name it resolved to a
+    class, so a repeat access sends no py4j command; a package is asked
+    again on every access."""
+    jvm = spark.sparkContext._jvm
+    jvm.PythonSQLUtils
+    sent = _commands_sent(monkeypatch, jvm._gateway_client)
+    assert jvm.PythonSQLUtils._fqn.endswith(".PythonSQLUtils")
+    assert sent == []
+    jvm.java
+    jvm.java
+    assert "java" not in vars(jvm) and len(sent) == 2, sent
+    assert type(jvm) is not JVMView and isinstance(jvm, JVMView)
+
+
+def test_jvm_view_sees_a_star_import_added_later(spark):
+    """A name that resolved to no class is not kept, so a class that a
+    later star import brings in (as pyspark's ``foreachBatch`` does)
+    resolves. A view of its own keeps the session's imports as they
+    are."""
+    view = spark.sparkContext._gateway.new_jvm_view()
+    view.__class__ = type(spark.sparkContext._jvm)
+    assert isinstance(view.PythonForeachBatchHelper, JavaPackage)
+    java_import(view, "org.apache.spark.sql.execution.streaming.sources.*")
+    helper = view.PythonForeachBatchHelper
+    assert helper._fqn == (
+        "org.apache.spark.sql.execution.streaming.sources.PythonForeachBatchHelper"
+    )
+    assert vars(view)["PythonForeachBatchHelper"] is helper
+
+
+def test_call_site_capture_is_off(spark):
+    """pyspark's DataFrame call-site capture is off in the factory's
+    session."""
+    from pyspark.errors.utils import is_debugging_enabled
+
+    assert is_debugging_enabled() is False
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+
+
+_IPYTHON_PROBE = r"""
+import sys
+
+from modforms_db_spark.registry import get_registry
+from modforms_db_spark.session import get_spark
+from tests.conftest import SF_DIR
+
+spark = get_spark("mfdb-ipython-probe")
+rows = get_registry()["q_dedup_minhash_lsh"].builder(spark, SF_DIR).collect()
+print("ROWS", len(rows))
+print("IPYTHON", "IPython" in sys.modules)
+"""
+
+
+def test_plan_building_imports_no_ipython(tmp_path):
+    """Building and collecting a query in a short factory session
+    never imports IPython, which pyspark's call-site capture tries on
+    every wrapped call. It needs an interpreter of its own."""
+    lines = _short_session_lines(tmp_path, _IPYTHON_PROBE)
+    assert any(ln.startswith("ROWS ") and ln != "ROWS 0" for ln in lines), lines
+    assert "IPYTHON False" in lines, lines
 
 
 _WORKER = r"""
