@@ -1389,8 +1389,7 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TEMP_BUDGET_NUM = 1  # budget = floor(total_tokens / 2) — half-corpus sample
-_TEMP_BUDGET_DEN = 2
+_TEMP_BUDGET_DEN = 2  # budget = floor(total_tokens / 2) — half-corpus sample
 
 
 @register(

@@ -383,8 +383,7 @@ def q_dedup_embedding_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Narrow banding (round-6 rework, see lsh_band_long): candidate ID
     # pairs are generated on (vec_id, band, bucket) only — the 64-float
     # embeddings re-attach once per side, by keyed join, after dedup.
-    long = lsh_band_long(e).localCheckpoint(eager=False)
-    # ONE banding pass feeds both sides of the self-join.
+    long = lsh_band_long(e)
     a = long.select(F.col("vec_id").alias("v1"), "band", "bucket")
     b = long.select(F.col("vec_id").alias("v2"), "band", "bucket")
     cand = (
@@ -2136,13 +2135,10 @@ def q_lsh_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the EXACT side is the audit's deliberately quadratic
     evaluation (bench quadratic_watch row, timed at sf0.01) — in
     production you run it on a SAMPLE to estimate the curve; the LSH
-    side itself is the linear banded shape the pipeline ships. Both
-    sides read one checkpointed token frame; candidates checkpoint
-    before fan-out to the θ grid."""
+    side itself is the linear banded shape the pipeline ships.
+    Candidates checkpoint before fan-out to the θ grid."""
     d = spread(load(spark, sf_dir, "documents"))
-    t = d.select(
-        "doc_id", F.array_distinct(F.split("text", " ")).alias("toks")
-    ).localCheckpoint(eager=False)  # sig frame + token explode
+    t = d.select("doc_id", F.array_distinct(F.split("text", " ")).alias("toks"))
 
     def _md5_perm(i: int):
         return lambda tk: F.md5(F.concat(F.lit(f"p{i} "), tk))
@@ -2156,7 +2152,7 @@ def q_lsh_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for i in range(_MHA_PERM)
             ]
         ).alias("sig"),
-    ).localCheckpoint(eager=False)  # bands + two size joins
+    )
     bands = s.select(
         "doc_id",
         F.explode(

@@ -582,11 +582,7 @@ def q_eval_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(split))
     )
 
-    ev = (
-        _doc_shingles(toks.where(F.col("doc_id") >= F.col("eval_from")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    ev = _doc_shingles(toks.where(F.col("doc_id") >= F.col("eval_from"))).distinct()
     own = ev.groupBy("doc_id").agg(F.count(F.lit(1)).cast("bigint").alias("n_shingles"))
     tr = _doc_shingles(toks.where(F.col("doc_id") < F.col("eval_from"))).select("shingle")
     hits = (
@@ -2078,7 +2074,6 @@ def q_bleu_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
             load(spark, sf_dir, "documents").where(F.col("doc_id") < 300)
         )
         .select("doc_id", "lang", F.split("text", " ").alias("toks"))
-        .localCheckpoint(eager=False)  # both sides of the pair join
     )
     b = d.select(
         F.col("doc_id").alias("ref_id"),
@@ -2443,10 +2438,8 @@ def q_canary_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     organic = docs.select(
         "doc_id", F.col("text").alias("payload"), F.lit("organic").alias("family")
     )
-    eval_set = (
-        docs.where(F.col("doc_id") % 97 == 0)
-        .select("doc_id", F.substring("text", 1, 40).alias("probe"))
-        .localCheckpoint(eager=False)  # probe leg + leak-canary build
+    eval_set = docs.where(F.col("doc_id") % 97 == 0).select(
+        "doc_id", F.substring("text", 1, 40).alias("probe")
     )
     r20 = spark.range(1, 21).select(F.col("id").alias("i"))
     clean = r20.select(
@@ -2503,9 +2496,7 @@ def q_canary_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=False)  # stage legs + per-family report
     )
     keep = corpus.groupBy("payload").agg(F.min("doc_id").alias("doc_id"))
-    s1 = corpus.join(keep.select("doc_id"), "doc_id").localCheckpoint(
-        eager=False
-    )
+    s1 = corpus.join(keep.select("doc_id"), "doc_id")
     tok = (
         s1.select("doc_id", F.explode(F.split("payload", " ")).alias("t"))
         .groupBy("doc_id", "t")
@@ -2517,7 +2508,6 @@ def q_canary_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         s1.join(tok, "doc_id")
         .where((F.col("max_c") * 2 < F.col("n_tok")) | (F.col("n_tok") < 2))
         .select("doc_id", "payload")
-        .localCheckpoint(eager=False)
     )
     probes = eval_set.select("probe")
     hit = (

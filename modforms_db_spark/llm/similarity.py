@@ -541,8 +541,7 @@ def q_sim_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # embeddings re-attach ONCE by keyed join (query side is tiny —
     # broadcast; the neighbor side is one equi-join against the base
     # scan, so each vector crosses the wire once, not once per band).
-    long = lsh_band_long(e).localCheckpoint(eager=False)
-    # ONE banding pass feeds both the query filter and the corpus side.
+    long = lsh_band_long(e)
     q = long.where(F.col("vec_id") < 20).select(
         F.col("vec_id").alias("q_id"), "band", "bucket"
     )
@@ -603,9 +602,7 @@ def q_sim_threshold_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (band, bucket, label) self-join moves 4 scalar columns per side,
     # and the two 64-float embeddings attach once each, by keyed join,
     # only to the deduped candidate pairs.
-    long = lsh_band_long(e, carry=("label",)).localCheckpoint(eager=False)
-    # ONE banding pass feeds both sides of the self-join — without the
-    # checkpoint the explode+groupBy signature stage executes twice.
+    long = lsh_band_long(e, carry=("label",))
     a = long.select(
         F.col("vec_id").alias("v1"), "label", "band", "bucket"
     )
@@ -917,22 +914,6 @@ def _pack_centroids(centroids: DataFrame) -> DataFrame:
     order never reaches the result."""
     return centroids.agg(
         F.collect_list(F.struct("cluster", "c_qe")).alias("cents")
-    )
-
-
-def kmeans_assign(vecs: DataFrame, centroids: DataFrame) -> DataFrame:
-    """(vec_id, qe, cluster, d2q6): nearest centroid per QUANTIZED
-    vector (`qe` = round(x·1000) bigints — see :func:`kmeans_fit`).
-    The k-row centroid frame is packed to one array-of-structs row and
-    broadcast; see `_kmeans_assign_packed` for the argmin shape.
-
-    Degenerate input: an EMPTY centroid frame packs to one row with an
-    empty `cents` array, whose argmin is null — the null-cluster filter
-    below restores the pre-r9 k-row-crossJoin contract (zero rows, not
-    n all-null rows) for that unreachable-from-`kmeans_fit` case (r9
-    ADVICE). A no-op for every non-empty centroid frame."""
-    return _kmeans_assign_packed(vecs, _pack_centroids(centroids)).where(
-        F.col("cluster").isNotNull()
     )
 
 
@@ -1600,9 +1581,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     propagation round is one (edges JOIN labels) shuffle on v plus a
     groupBy(u) majority — the large-star/small-star cost profile,
     O(log diameter) rounds if iterated."""
-    e = _emb(spark, sf_dir).withColumn("nrm", _norm("emb")).localCheckpoint(
-        eager=False
-    )  # both sides of the kNN pair join + seeds + final output — one scan
+    e = _emb(spark, sf_dir).withColumn("nrm", _norm("emb"))
     a = e.select(
         F.col("vec_id").alias("q_id"),
         F.col("emb").alias("q_emb"),
@@ -2154,7 +2133,6 @@ def q_ivf_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.try_divide(_dot("q_emb", "emb"), F.col("q_nrm") * F.col("nrm")), 4
             ).alias("cos4"),
         )
-        .localCheckpoint(eager=False)  # one probe pass, four curve points
     )
     nps = F.explode(
         F.array(*[F.lit(p) for p in _RC_NPROBES])
@@ -2960,8 +2938,8 @@ def q_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     bigint and the final score one division. Queries with disjoint
     top-10s emit rbo4 = 0 via the left join + COALESCE.
 
-    Scale: both rankings come from ONE scored pass (panel broadcast ×
-    corpus scan); the overlap join runs on 10-row-per-query frames."""
+    Scale: each ranking is one scored pass (panel broadcast × corpus
+    scan); the overlap join runs on 10-row-per-query frames."""
     e = _emb(spark, sf_dir).withColumn("nrm", _norm("emb"))
     q = e.where(F.col("vec_id") < _RBO_NQ).select(
         F.col("vec_id").alias("q_id"),
@@ -2979,7 +2957,6 @@ def q_rbo(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("cos4"),
             F.round(_dot("q_emb", "emb"), 4).alias("ip4"),
         )
-        .localCheckpoint(eager=False)  # both ranking legs — one scored pass
     )
     wa = Window.partitionBy("q_id").orderBy(F.desc("cos4"), F.asc("nb_id"))
     wb = Window.partitionBy("q_id").orderBy(F.desc("ip4"), F.asc("nb_id"))
@@ -3429,12 +3406,12 @@ def q_lof_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.transform("emb", lambda x: x * 5.0).alias("emb"),
     )
     q0 = organic.unionByName(planted)
-    knn1 = knn(q0, "q_id", "o_id").localCheckpoint(eager=False)
+    knn1 = knn(q0, "q_id", "o_id")
     p1 = e.join(
         F.broadcast(knn1.select(F.col("o_id").alias("vec_id")).distinct()),
         "vec_id",
     )
-    knn2 = knn(p1, "o_id", "p_id").localCheckpoint(eager=False)
+    knn2 = knn(p1, "o_id", "p_id")
     kdist_o = knn2.groupBy("o_id").agg(F.max("d4").alias("kdist4"))
     p2 = e.join(
         F.broadcast(knn2.select(F.col("p_id").alias("vec_id")).distinct()),
@@ -3536,11 +3513,7 @@ def q_reco_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one linear candidate pass against the O(1) broadcast
     panel; the exposure frame is bounded by panel*k (<= 320 rows), so
     its ranking window is constant-size regardless of corpus."""
-    e = (
-        _emb(spark, sf_dir)
-        .withColumn("nrm", _norm("emb"))
-        .localCheckpoint(eager=False)  # panel leg + candidate leg + catalog
-    )
+    e = _emb(spark, sf_dir).withColumn("nrm", _norm("emb"))
     q = (
         e.orderBy(
             F.pmod(
@@ -3750,7 +3723,7 @@ def q_cluster_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cent = scoped.groupBy("scope", "label", "dim").agg(
         F.round(F.avg("x"), 10).alias("c")
-    ).localCheckpoint(eager=False)  # within + between + cdist legs
+    )
     gcent = scoped.groupBy("scope", "dim").agg(
         F.round(F.avg("x"), 10).alias("g")
     )
@@ -3766,7 +3739,6 @@ def q_cluster_validity(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("d8")
         )
-        .localCheckpoint(eager=False)  # within total + s_k legs
     )
     within = within_pt.groupBy("scope").agg(
         F.sum("d8").cast("bigint").alias("w8"),

@@ -1206,11 +1206,7 @@ def q_naive_bayes(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrong by dropping them."""
     d = load(spark, sf_dir, "documents")
     tok = d.select("doc_id", "lang", F.explode(F.split("text", " ")).alias("tok"))
-    tf = (
-        tok.groupBy("lang", "tok")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=False)  # model reused by totals, vocab, scoring
-    )
+    tf = tok.groupBy("lang", "tok").agg(F.count(F.lit(1)).alias("n"))
     totals = tf.groupBy("lang").agg(F.sum("n").alias("nt"))
     vocab = tf.agg(F.count_distinct("tok").alias("v"))
     # priors from the doc-grain table directly — a tok-based
@@ -1974,9 +1970,8 @@ def q_ppl_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
     Terciles assign on the ROUNDED score with a doc_id tiebreak, so an
     ulp of cross-engine noise cannot move a document across buckets.
 
-    Scale: the bigram stream is materialized once (model + scoring both
-    read it — one documents scan); the model is two map-side-combined
-    aggregations over the en slice and is broadcast to the scorer
+    Scale: the model is two map-side-combined aggregations over the
+    en slice of the bigram stream and is broadcast to the scorer
     (vocab² is tiny by Zipf; a 100 TB corpus prunes to top-M first).
     The global tercile is a BANDED rank (`operators.banded`) + exact
     ntile arithmetic — no single-task window at any scale."""
@@ -2003,13 +1998,11 @@ def q_ppl_bucket(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("p"),
         )
         .select("doc_id", "lang", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
-        .localCheckpoint(eager=False)  # model slice + scoring — one scan
     )
     mbg = (
         bg.where(F.col("lang") == "en")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n12"))
-        .localCheckpoint(eager=False)  # uni + vocab + scoring join
     )
     uni = mbg.groupBy("w1").agg(F.sum("n12").cast("bigint").alias("n1"))
     v = mbg.agg(F.countDistinct("w2").cast("bigint").alias("v"))

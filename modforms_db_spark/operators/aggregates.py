@@ -3661,14 +3661,12 @@ def q_levene_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one pass to the (test, group) median grain (exact
     percentile over ≤11 groups), medians broadcast back onto the
-    checkpointed base, then three map-side-combinable integer sums
+    base rows, then three map-side-combinable integer sums
     per group — only k moment triples cross the wire.
     """
     c = load(spark, sf_dir, "customer")
     cents = F.round(F.col("c_acctbal") * 100, 0).cast("bigint")
-    base = c.select(
-        F.col("c_mktsegment").alias("grp"), cents.alias("cents")
-    ).localCheckpoint(eager=False)  # organic + planted + scaled legs
+    base = c.select(F.col("c_mktsegment").alias("grp"), cents.alias("cents"))
     spread = base.where(F.col("grp") == _ANOVA_SHIFT_SEG).select(
         F.lit("zz-spread").alias("grp"),
         (F.col("cents") * 3).alias("cents"),
@@ -5158,7 +5156,6 @@ def q_simpson_paradox(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             "event_type",
         )
-        .localCheckpoint(eager=False)  # organic + planted legs, one scan
     )
     organic = base.select(
         F.lit("organic").alias("variant"),
@@ -6238,7 +6235,6 @@ def q_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("h"),
             "event_type",
         )
-        .localCheckpoint(eager=False)  # three stream legs — one scan
     )
     streams = (
         base.select(
@@ -6281,7 +6277,7 @@ def q_sprt_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
         cumsum_col="llr_inc",
         rn_name="rn",
         cum_name="llr8",
-    ).localCheckpoint(eager=False)  # crossing leg + totals leg
+    )
     crossed = (
         walk.where(
             (F.col("llr8") >= _SPRT_A) | (F.col("llr8") <= -_SPRT_A)
@@ -6421,7 +6417,7 @@ def q_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
             * F.lit(1000000007).cast("bigint"),
             F.lit(_CMH_MOD),
         ).alias("h"),
-    ).localCheckpoint(eager=False)  # three scope legs — one scan
+    )
     popcount16 = sum(
         F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) for i in range(16)
     )
@@ -6725,7 +6721,6 @@ def q_quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit("b"))
             .alias("arm"),
         )
-        .localCheckpoint(eager=False)  # two scope legs — one scan
     )
     arms = base.select(
         F.lit("null").alias("scope"), "arm", "event_id", "y2"
@@ -7296,7 +7291,6 @@ def q_tail_dependence(spark: SparkSession, sf_dir: str) -> DataFrame:
                 hbase.bitwiseXOR(F.shiftright(hbase, 16)), F.lit(1000000)
             ).alias("y_ind"),
         )
-        .localCheckpoint(eager=False)  # two scope legs — one scan
     )
     scoped = base.select(
         F.lit("dependent").alias("scope"),
@@ -7434,7 +7428,7 @@ def q_meta_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.pmod(F.col("event_id"), F.lit(_META_K)).alias("stratum"),
         F.round(F.col("value") * 100, 0).cast("bigint").alias("y2"),
         (h == 0).cast("int").alias("t"),
-    ).localCheckpoint(eager=False)  # two scope legs — one scan
+    )
     scoped = base.select(
         F.lit("organic").alias("scope"), "stratum", "t", "y2"
     ).unionByName(
@@ -7618,7 +7612,6 @@ def q_ht_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
                 hbase.bitwiseXOR(F.shiftright(hbase, 16)), F.lit(1000000)
             ).alias("u"),
         )
-        .localCheckpoint(eager=False)  # totals + two design legs
     )
     t = base.agg(
         F.sum("y2").cast("bigint").alias("true2"),

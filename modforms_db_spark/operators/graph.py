@@ -288,7 +288,6 @@ def triangle_close(edges: DataFrame) -> DataFrame:
             F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("b"),
             F.when(fwd, F.col("dv")).otherwise(F.col("du")).alias("db"),
         )
-        .localCheckpoint(eager=False)  # reused 3× (two wedge legs + probe)
     )
     l2 = oriented.select(
         "a", F.col("b").alias("c"), F.col("db").alias("dc")
@@ -551,9 +550,7 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ_v deg(v)², bounded by orienting on the low-degree endpoint at
     power-law scale; degrees and the anti-join are key-partitioned
     aggregates. Top-20 via TakeOrdered."""
-    counts = cosupply_pair_counts(spark, sf_dir).localCheckpoint(
-        eager=False
-    )  # feeds both the mean and the cut
+    counts = cosupply_pair_counts(spark, sf_dir)
     tot = counts.agg(
         F.sum("cnt").cast("bigint").alias("ti"),
         F.count(F.lit(1)).alias("np"),

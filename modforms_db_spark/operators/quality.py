@@ -1237,9 +1237,7 @@ def q_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
     then all ranking/threshold work happens on the m-row battery
     frame (m = streams under test), free at any corpus size.
     """
-    e = load(spark, sf_dir, "events").select(
-        "event_type", F.dayofmonth("ts").alias("d")
-    ).localCheckpoint(eager=False)  # organic + planted-burst legs
+    e = load(spark, sf_dir, "events").select("event_type", F.dayofmonth("ts").alias("d"))
     burst = e.where(
         (F.col("event_type") == "purchase") & (F.col("d") <= 6)
     ).select(F.lit("zz-burst").alias("event_type"), "d")
@@ -1376,7 +1374,7 @@ def q_outlier_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the threshold and the MAX.
 
     Scale: one pass to 6 moment rows (map-side combined), broadcast
-    back onto the checkpointed base for the per-row score — the same
+    back onto the base rows for the per-row score — the same
     shape scores billions of rows; only moment tuples shuffle.
     """
     base = load(spark, sf_dir, "lineitem").select(
@@ -1384,7 +1382,7 @@ def q_outlier_mahalanobis(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("l_quantity").cast("bigint").alias("x"),
         F.round("l_extendedprice", 0).cast("bigint").alias("y"),
         "l_orderkey",
-    ).localCheckpoint(eager=False)  # organic + planted legs
+    )
     spiked = base.where(F.col("l_orderkey") % _MAHA_SPIKE_MOD == 0).select(
         F.lit("planted").alias("test"), "g", "x", (F.col("y") * 7).alias("y")
     )
@@ -2261,7 +2259,7 @@ def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("c_tot").over(wc) - F.col("c_tot"))
         .cast("bigint")
         .alias("cum_before"),
-    ).localCheckpoint(eager=False)  # rank-sum join + tie leg
+    )
     rg = (
         cnts.join(cum, ["scope", "v"])
         .groupBy("scope", "g")
@@ -2936,7 +2934,6 @@ def q_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             .otherwise(F.lit("b"))
             .alias("arm"),
         )
-        .localCheckpoint(eager=False)  # two scope legs — one scan
     )
     scoped = base.select(F.lit("null").alias("scope"), "arm", "y2").unionByName(
         base.select(
@@ -2978,7 +2975,7 @@ def q_wasserstein_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         cumsum_col="cb",
         rn_name="rn",
         cum_name="cum_b",
-    ).localCheckpoint(eager=False)  # self-join for LEAD + totals
+    )
     totals = ranked.groupBy("scope").agg(
         F.sum("ca").cast("bigint").alias("n_a"),
         F.sum("cb").cast("bigint").alias("n_b"),

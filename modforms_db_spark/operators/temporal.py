@@ -357,9 +357,6 @@ def q_rollup_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.date_trunc("hour", "ts").alias("bucket"), "event_type"
         )
         .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sv"))
-        # the "persist the hourly partials" the docstring promises —
-        # without it the 3-way emit union re-scans the facts per grain
-        .localCheckpoint(eager=False)
     )
     daily = (
         hourly.groupBy(
@@ -1831,7 +1828,6 @@ def q_changepoint_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (
         e.groupBy(F.date_trunc("day", "ts").alias("day"))
         .agg(F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=False)  # mean + cusum both read it
     )
     base = daily.agg(F.round(F.avg("n"), 10).alias("mu"))
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -2314,7 +2310,6 @@ def q_downsample_ltob(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("bigint")
             .alias("v4")
         )
-        .localCheckpoint(eager=False)  # bucket stats + point scoring
     )
     bk = (
         daily.groupBy(
@@ -3225,11 +3220,7 @@ def q_markov_prediction_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     transitions; one events scan feeds both halves via the split
     filter on the transition grain.
     """
-    base = (
-        load(spark, sf_dir, "events")
-        .select("user_id", "ts", "event_id", "event_type")
-        .localCheckpoint(eager=False)  # organic + zz-cycle legs, one scan
-    )
+    base = load(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
     cyc = F.element_at(
         F.array(*[F.lit(t) for t in ["click", "error", "purchase", "signup", "view"]]),
         (F.dayofmonth(F.col("ts").cast("date")) % 5 + 1).cast("int"),
@@ -3891,7 +3882,6 @@ def q_cronbach_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.round(r4(F.sum("value")) * 100, 0).cast("bigint").alias("v2")
         )
-        .localCheckpoint(eager=False)  # grid spine legs + value join
     )
     types = daily.select("event_type").distinct()
     days = daily.select("d").distinct()
@@ -4069,7 +4059,6 @@ def q_granger_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.round(r4(F.sum("value")) * 10000, 0).cast("bigint").alias("v4")
         )
-        .localCheckpoint(eager=False)
     )
     types = daily.select("event_type").distinct()
     days = daily.select("d").distinct()
@@ -4243,7 +4232,6 @@ def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.round(r4(F.sum("value")) * 10000, 0).cast("bigint").alias("v4")
         )
-        .localCheckpoint(eager=False)
     )
     streams = daily.select(
         F.col("event_type").alias("stream"), "d", "v4"
@@ -4396,7 +4384,6 @@ def q_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.round(r4(F.sum("value")) * 10000, 0).cast("bigint").alias("v4")
         )
-        .localCheckpoint(eager=False)
     )
     types = daily.select("event_type").distinct()
     days = daily.select("d").distinct()
@@ -4404,7 +4391,6 @@ def q_friedman_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         types.crossJoin(days)
         .join(daily, ["event_type", "d"], "left")
         .select("event_type", "d", F.coalesce("v4", F.lit(0)).alias("v4"))
-        .localCheckpoint(eager=False)  # organic + planted legs
     )
     streams = (
         grid.select(
@@ -4582,7 +4568,6 @@ def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.round(r4(F.sum("value")) * 10000, 0).cast("bigint").alias("v4")
         )
-        .localCheckpoint(eager=False)  # three stream legs — one scan
     )
     ramp = F.col("v4") + F.col("d") * F.lit(1000000000000).cast("bigint")
     zig = F.col("v4") + (F.col("d") % 2) * F.lit(1000000000000).cast("bigint")
@@ -5143,7 +5128,6 @@ def q_event_study(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.round(r4(F.sum("value")) * 10000, 0).cast("bigint").alias("v4")
         )
-        .localCheckpoint(eager=False)  # two scope legs — one scan
     )
     ev = list(_ES_EVENT_DAYS)
     plant = (
@@ -5544,7 +5528,6 @@ def q_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.round(r4(F.avg("value")) * 100, 0).cast("bigint").alias("m2")
         )
-        .localCheckpoint(eager=False)  # organic + walk legs — one scan
     )
     w_cum = (
         Window.partitionBy("event_type")
@@ -5563,7 +5546,6 @@ def q_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("cum2").alias("x"),
             )
         )
-        .localCheckpoint(eager=False)  # stats + centered legs
     )
     stats = streams.groupBy("stream").agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),

@@ -1279,7 +1279,7 @@ def q_consistent_hash_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 6), 16, 10)
         .cast("bigint")
         .alias("kpos"),
-    ).localCheckpoint(eager=False)  # both ring joins, one scan
+    )
 
     def vnodes(shards: int):
         rows = [

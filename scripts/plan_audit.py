@@ -24,8 +24,7 @@ join or an unpartitioned window. Checks, per executed-plan tree:
                   (band offsets <=32 rows, k-sized aggregates, ...).
   dup_scan        The same parquet table scanned more than once in one
                   plan — a branch off an un-checkpointed grain silently
-                  re-reads the fact table (review rounds 3-4 each found
-                  one of these by hand; this automates the grep).
+                  re-reads the fact table.
 
     python scripts/plan_audit.py [sf_dir] [--json out.json] [--only regex]
 
@@ -50,9 +49,9 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # name -> reason. An entry here is a conscious, reviewed exception —
-# new findings must either be fixed or argued into this dict.
-# (Round-6 triage, VERDICT r5 item 1: every entry carries its reason;
-# shared rationales are factored into the _R_* constants below.)
+# new findings must either be fixed or argued into this dict. Every
+# entry carries its reason; shared rationales are factored into the
+# _R_* constants below.
 ALLOW_ROW_UDF = {
     "q_udf_python": "the operator's contract IS the row-at-a-time Python "
     "UDF API (slow-path demo; its pandas twin q_udf_pandas_scalar is the "
@@ -433,7 +432,7 @@ def _window_findings(plan: str) -> list[str]:
     """Window-family operator lines with an empty partition spec whose
     input is not already top-k-bounded.
 
-    Bracket-group counting is unreliable here (round-5 lesson):
+    Bracket-group counting is unreliable here:
     WindowGroupLimit prints  [partSpec], [orderSpec], fn, k, mode  —
     2 groups even when partitioned — and a partitioned-but-unordered
     Window prints  [fns], [partSpec]  — also 2 groups. Instead, parse
@@ -452,10 +451,10 @@ def _window_findings(plan: str) -> list[str]:
         if body.startswith("WindowGroupLimit "):
             # Partitioned WGL prints [partSpec], [orderSpec], …; but
             # TreeNode.argString OMITS empty Seqs, so a GLOBAL WGL
-            # prints its ORDER spec as the first bracket group (round-6
-            # review finding — an empty-first-group check alone is dead
-            # code). Global iff the first group is missing, empty, or
-            # is itself an order spec (args carry ASC/DESC NULLS).
+            # prints its ORDER spec as the first bracket group, so an
+            # empty-first-group check alone never fires. Global iff the
+            # first group is missing, empty, or is itself an order spec
+            # (args carry ASC/DESC NULLS).
             groups = _top_level_groups(body)
             if (
                 not groups

@@ -3,12 +3,11 @@
 shipped scale factor.
 
 An oracle-parity check on an always-empty query passes vacuously
-(empty == empty) and exercises none of the query's logic — the failure
-mode behind the round-3 q_fuzzy_name_join finding and the round-4
-q_outlier_iqr / q_max_drawdown fixes. Run this after adding operators;
-any name listed for ALL SFs needs either data-grounded inputs or
-deterministic planted ground truth (see those queries' docstrings for
-the house pattern).
+(empty == empty) and exercises none of the query's logic. Run this
+after adding operators; any name listed for ALL SFs needs either
+data-grounded inputs or deterministic planted ground truth (see the
+docstrings of `q_outlier_iqr`, `q_max_drawdown` and
+`q_fuzzy_name_join` for the house pattern).
 
     python scripts/vacuity_audit.py [sf_dir ...]
 

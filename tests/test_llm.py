@@ -1333,65 +1333,6 @@ def test_fuzzy_apply_rep_graph_labels_match_expanded_graph(spark):
     assert new == old, (len(new), len(old))
 
 
-def test_kmeans_packed_assign_matches_krow_api(spark):
-    """`kmeans_assign` (k-row centroid frame, the public API the IVF
-    family and tests use) and `_kmeans_assign_packed` (the fit loop's
-    1-row form) are the same function by construction — pin it, so a
-    future edit to one can't silently drift the other."""
-    from modforms_db_spark.llm.similarity import (
-        _emb,
-        _kmeans_assign_packed,
-        _pack_centroids,
-        kmeans_assign,
-    )
-    from pyspark.sql import Window
-
-    qv = _emb(spark, SF_DIR).select(
-        "vec_id",
-        F.transform(
-            "emb", lambda x: F.round(x.cast("double") * 1000, 0).cast("bigint")
-        ).alias("qe"),
-    )
-    cents = (
-        qv.orderBy("vec_id")
-        .limit(3)
-        .select(
-            F.row_number().over(Window.orderBy("vec_id")).alias("cluster"),
-            F.col("qe").alias("c_qe"),
-        )
-    )
-    a = sorted(
-        map(tuple, kmeans_assign(qv, cents).select("vec_id", "cluster", "d2q6").collect())
-    )
-    b = sorted(
-        map(
-            tuple,
-            _kmeans_assign_packed(qv, _pack_centroids(cents))
-            .select("vec_id", "cluster", "d2q6")
-            .collect(),
-        )
-    )
-    assert a == b
-
-
-def test_kmeans_assign_empty_centroids_returns_zero_rows(spark):
-    """kmeans_assign with an empty centroid frame returns ZERO rows (the
-    pre-r9 k-row-crossJoin contract; r9 ADVICE flagged the packed form
-    emitting every vector with null cluster)."""
-    from modforms_db_spark.llm.similarity import _emb, kmeans_assign
-
-    qv = _emb(spark, SF_DIR).select(
-        "vec_id",
-        F.transform(
-            "emb", lambda x: F.round(x.cast("double") * 1000, 0).cast("bigint")
-        ).alias("qe"),
-    )
-    empty = qv.limit(0).select(
-        F.lit(1).alias("cluster"), F.col("qe").alias("c_qe")
-    )
-    assert kmeans_assign(qv, empty).count() == 0
-
-
 def test_star_halve_emits_canonical_rows_without_recanonicalization(spark):
     """r10 lean `_star_halve` contract: every emitted row is already
     (a, b) with a > b — the old trailing greatest/least was a provable

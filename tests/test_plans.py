@@ -297,32 +297,6 @@ def test_domain_mix_broadcasts_weights_and_budget(spark):
     assert "SortMergeJoin" not in plan, plan
 
 
-def test_kmeans_assign_broadcasts_centroids(spark):
-    """Each Lloyd iteration must broadcast the k-row centroid table —
-    the vector side never shuffles for assignment."""
-    from pyspark.sql import functions as F
-
-    from modforms_db_spark.llm.similarity import _emb, kmeans_assign
-
-    vecs = _emb(spark, SF_DIR).select(
-        "vec_id",
-        F.transform(
-            "emb", lambda x: F.round(x.cast("double") * 1000, 0).cast("bigint")
-        ).alias("qe"),
-    )
-    cents = vecs.orderBy("vec_id").limit(8).select(
-        F.lit(1).alias("cluster"), F.col("qe").alias("c_qe")
-    )
-    plan = (
-        kmeans_assign(vecs, cents)
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "BroadcastNestedLoopJoin" in plan, plan
-    assert "SortMergeJoin" not in plan, plan
-
-
 def test_substring_dedup_dedupes_windows_before_shuffle(spark):
     """Per-doc window dedup must happen inside the projection
     (array_distinct BEFORE the explode), so the keyed shuffle carries
@@ -743,3 +717,28 @@ def test_pca_matvec_runs_on_packed_row_no_joins(spark):
     assert "Join" not in plan and "Exchange" not in plan
     # and the result is still the 64-dim loading vector
     assert df.count() == 64
+
+
+def test_unpinned_builders_run_no_job(spark):
+    """Building `q_eval_leakage` or `q_sprt_monitor` runs no Spark job:
+    neither builder pins a frame with `localCheckpoint`, so nothing
+    executes until the caller collects. The two tables are read first,
+    outside the group, because a table's first read may infer its
+    schema with a job of its own."""
+    from modforms_db_spark.io import load
+
+    sc = spark.sparkContext
+    reg = get_registry()
+    for table in ("documents", "events"):
+        load(spark, SF_DIR, table)
+    jobs = {}
+    for name in ("q_eval_leakage", "q_sprt_monitor"):
+        group = f"lazy-build-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            reg[name].builder(spark, SF_DIR)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+        jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert jobs == {"q_eval_leakage": 0, "q_sprt_monitor": 0}, jobs
