@@ -22,28 +22,3 @@ from modforms_db_spark.registry import REGISTRY, get_queries, get_oracle_sql
 __all__ = ["REGISTRY", "get_queries", "get_oracle_sql"]
 __version__ = "0.1.0"
 
-
-def api():
-    """Reusable building blocks, importable without dragging in the full
-    registry: the primitives behind the registered queries that a user
-    would compose over their OWN tables (the registered queries bind them
-    to the driver fixtures).
-
-    Returns a dict of the stable helpers::
-
-        get_spark, prep       — session factory / runtime-conf pinning
-        load                  — schema-checked parquet reader
-        jaccard_pairs         — pairwise set-Jaccard with df-cap skew knob
-        minhash_signatures    — 32-perm MinHash signatures
-    """
-    from modforms_db_spark.io import load
-    from modforms_db_spark.llm.dedup import jaccard_pairs, minhash_signatures
-    from modforms_db_spark.session import get_spark, prep
-
-    return {
-        "get_spark": get_spark,
-        "prep": prep,
-        "load": load,
-        "jaccard_pairs": jaccard_pairs,
-        "minhash_signatures": minhash_signatures,
-    }

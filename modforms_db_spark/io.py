@@ -98,7 +98,7 @@ def _load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def spread(df: DataFrame, n: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition to full parallelism before compute-heavy
     per-row work (tokenization, hashing, shingling).
 
@@ -113,6 +113,4 @@ def spread(df: DataFrame, n: int | None = None) -> DataFrame:
     (signatures, shingle explosion), where even there the shuffled bytes
     are a rounding error next to the fan-out they parallelize.
     """
-    if n is None:
-        n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n)
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)

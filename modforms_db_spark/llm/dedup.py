@@ -24,7 +24,7 @@ from __future__ import annotations
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from modforms_db_spark import cache, session
@@ -172,30 +172,11 @@ _JACCARD_ORACLE = f"""
 """
 
 
-def jaccard_pairs(
-    toks: DataFrame, threshold: float, max_df: int | None = None
-) -> DataFrame:
-    """Pairwise Jaccard core over a (doc_id, lang, tok) long table.
-
-    ``max_df`` is the 100 TB skew mitigation (SCALE.md §6): tokens
-    appearing in more than ``max_df`` documents (within lang) are dropped
-    BEFORE the self-join, bounding per-token fanout to max_df² candidate
-    rows. Denominators still use the FULL token-set sizes, so a capped
-    Jaccard is a lower bound on the true value — the cap can only lose
-    pairs whose overlap is carried by stop-tokens, never invent pairs.
-    ``max_df=None`` (the oracle-checked contract path) is exact."""
+def jaccard_pairs(toks: DataFrame, threshold: float) -> DataFrame:
+    """Exact pairwise Jaccard core over a (doc_id, lang, tok) long table."""
     sizes = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    joinable = toks
-    if max_df is not None:
-        df_counts = toks.groupBy("lang", "tok").agg(
-            F.count(F.lit(1)).alias("df")
-        )
-        joinable = toks.join(
-            df_counts.where(F.col("df") <= max_df).select("lang", "tok"),
-            ["lang", "tok"],
-        )
-    a = joinable.alias("a")
-    b = joinable.alias("b")
+    a = toks.alias("a")
+    b = toks.alias("b")
     inter = (
         a.join(
             b,
@@ -228,10 +209,9 @@ def jaccard_pairs(
 def q_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact pairwise Jaccard ≥ 0.8 on distinct-token sets within lang.
     Threshold applied to the ROUNDED value so the boundary can't flip
-    between engines. Exact (no df cap) — the skew-capped variant is
-    :func:`jaccard_pairs` with ``max_df`` set, unit-tested separately."""
+    between engines. Exact: no document-frequency cap."""
     d = load(spark, sf_dir, "documents")
-    return jaccard_pairs(_distinct_tokens(d), 0.8, max_df=None)
+    return jaccard_pairs(_distinct_tokens(d), 0.8)
 
 
 _NGRAM_ORACLE = f"""
@@ -418,32 +398,6 @@ def _perm_hash(i: int):
     MUST be one-arg — a two-parameter lambda makes transform pass the
     array INDEX as the second argument, silently replacing the seed."""
     return lambda t: F.xxhash64(F.lit(i), t)
-
-def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, lang, sig: array<bigint>) — 32 min-hashes per doc.
-
-    Permutations are simulated with xxhash64(seed, token); min over the
-    doc's distinct tokens per seed, computed per-row with
-    `array_min(transform(...))` — pure projection, NO explode and NO
-    shuffle (the naive explode+groupBy form shuffles every token; this
-    form never moves a row). Input is `spread()` first (io.spread)."""
-    d = spread(load(spark, sf_dir, "documents"))
-    # Distinct-token array projected ONCE to a named column: as a bare
-    # expression it would be re-evaluated as the input of each of the 32
-    # transforms (32 split+distinct passes per row).
-    toks = d.select(
-        "doc_id", "lang", F.array_distinct(F.split("text", " ")).alias("toks")
-    )
-    return toks.select(
-        "doc_id",
-        "lang",
-        F.array(
-            *[
-                F.array_min(F.transform(F.col("toks"), _perm_hash(i)))
-                for i in range(_N_PERM)
-            ]
-        ).alias("sig"),
-    )
 
 
 # Names perfbench reads: trace.py counts builds by this store's len(),
@@ -826,34 +780,21 @@ _COMPONENTS_EDGE_SQL = f"""
 """
 
 
-def _star_halve(edges: DataFrame, large: bool) -> DataFrame:
-    """One large-star (or small-star) pass (Kiveris et al., "Connected
-    Components in MapReduce and Beyond"). ``edges`` is canonical
-    (a > b, no self-loops). Per node u with neighborhood Γ(u) and
-    m = min(Γ(u) ∪ {u}):
+def _star_halve(edges: DataFrame) -> DataFrame:
+    """One small-star pass (Kiveris et al., "Connected Components in
+    MapReduce and Beyond"). ``edges`` is canonical (a > b, no
+    self-loops). Per node u with neighborhood Γ(u) and
+    m = min(Γ(u) ∪ {u}), small-star rewires every smaller neighbor AND u
+    itself to m: emit (v, m) ∀v∈Γ⁺(u), v≤u, v≠m. It preserves
+    connectivity; alternated with large-star (inlined in
+    `connected_components`) it converges to per-component stars in
+    O(log n) rounds, each pass = one agg + one join on node id.
 
-    - large-star rewires every LARGER neighbor to m: emit (v, m) ∀v∈Γ(u), v>u
-    - small-star rewires every smaller neighbor AND u itself to m:
-      emit (v, m) ∀v∈Γ⁺(u), v≤u, v≠m
-
-    Both preserve connectivity; their alternation converges to per-
-    component stars in O(log n) rounds, each pass = one agg + one join
-    on node id (the same primitives as everything else here, so AQE /
-    skew handling apply).
-
-    r10 lean form (measured with the per-halve checkpoint in
-    `connected_components`: CC over the 290 k-edge rep graph 2.3–3.6 s
-    → 1.7–1.8 s at sf0.1, labels and round count identical):
-
-    - ``sym`` is one ``explode(array(struct…))`` over the edge frame
-      instead of a two-scan union — the upstream is read once per pass.
-    - The output is emitted as ``(v, m)`` / ``(u, m)`` directly, no
-      trailing greatest/least re-canonicalization: m = min(Γ(u) ∪ {u})
-      ≤ every emitted partner (large: m ≤ u < v; small: m ≤ v resp.
-      m ≤ u, with the a = b equalities filtered), so every emitted row
-      is already (big, small). The old greatest/least was a provable
-      no-op that also defeated exchange-reuse canonicalization between
-      the two halves' replicated subtrees."""
+    ``sym`` is one ``explode(array(struct…))`` over the edge frame, so
+    the upstream is read once per pass. Rows are emitted as
+    ``(v, m)`` / ``(u, m)`` with no greatest/least re-canonicalization:
+    m ≤ v resp. m ≤ u, and the a = b rows are filtered, so every emitted
+    row is already (big, small)."""
     sym = edges.select(
         F.explode(
             F.array(
@@ -867,17 +808,12 @@ def _star_halve(edges: DataFrame, large: bool) -> DataFrame:
         .agg(F.min("v").alias("mv"))
         .select("u", F.least("u", "mv").alias("m"))
     )
-    j = sym.join(mn, "u")
-    if large:
-        out = j.where(F.col("v") > F.col("u")).select(
-            F.col("v").alias("a"), F.col("m").alias("b")
-        )
-    else:
-        out = (
-            j.where(F.col("v") < F.col("u"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .union(mn.select(F.col("u").alias("a"), F.col("m").alias("b")))
-        )
+    out = (
+        sym.join(mn, "u")
+        .where(F.col("v") < F.col("u"))
+        .select(F.col("v").alias("a"), F.col("m").alias("b"))
+        .union(mn.select(F.col("u").alias("a"), F.col("m").alias("b")))
+    )
     return out.where(F.col("a") != F.col("b")).distinct()
 
 
@@ -971,8 +907,7 @@ def connected_components(
         # LSH rep pairs: distinct candidates joined through unique-key
         # group tables) skip this shuffle; duplicates would not break
         # the algorithm, and _star_halve's trailing .distinct() absorbs
-        # them after the first halve — they pad round 1 only (r8
-        # ADVICE correction).
+        # them after the first halve — they pad round 1 only.
         e = e.distinct()
     # Lazy: the canonicalized edge set materializes inside the collect
     # attempt below; when that does not fit, the rounds read the
@@ -984,22 +919,18 @@ def connected_components(
     if tbl is not None:
         return spark.createDataFrame(_min_label_table(tbl)), 0
 
-    # r11 fused convergence test (guide §2.4; VERDICT r10 item 3): the
-    # star-forest conditions — (i) no chain: no node is both an edge's
-    # big side and another's small side, (ii) no duplicate center: no
-    # big side carries two edges — are both per-NODE predicates over
-    # exactly the symmetrized stream the large-star pass aggregates
-    # anyway. So the round's groupBy(u) agg computes min(v) for the
-    # halve PLUS a-side/total counts for the test, and the test is one
-    # filter + isEmpty over that (lazily checkpointed) per-node frame
-    # instead of the r10 semi-join + dup-agg pair (3 extra exchanges
-    # per round). Equivalence: chain ⟺ ∃ node with a_cnt ≥ 1 and
-    # b_cnt ≥ 1 (it is some y's a and some x's b ⟺ x.b = y.a); dup ⟺
-    # a_cnt > 1. Testing BEFORE the halve (while, not do-while) is now
-    # free — the tested aggregate IS the halve's own input — and an
-    # already-converged input reports rounds=0 (its fixpoint needs no
-    # alternation; the r10 do-while paid one identity halve to learn
-    # the same thing).
+    # Fused convergence test: the star-forest conditions — (i) no chain:
+    # no node is both an edge's big side and another's small side, (ii)
+    # no duplicate center: no big side carries two edges — are both
+    # per-NODE predicates over exactly the symmetrized stream the
+    # large-star pass aggregates anyway. So the round's groupBy(u) agg
+    # computes min(v) for the halve PLUS a-side/total counts for the
+    # test, and the test is one filter + isEmpty over that (lazily
+    # checkpointed) per-node frame. Equivalence: chain ⟺ ∃ node with
+    # a_cnt ≥ 1 and b_cnt ≥ 1 (it is some y's a and some x's b ⟺
+    # x.b = y.a); dup ⟺ a_cnt > 1. The test runs BEFORE the halve, on
+    # the halve's own input, so an already-converged input reports
+    # rounds=0.
     rounds = 0
     while True:
         # Defensive bound: the alternation provably converges in
@@ -1039,16 +970,14 @@ def connected_components(
         )
         if viol.isEmpty():
             break
-        # Large-star from the aggregate already in hand (identical
-        # emission rule to _star_halve(large=True): m = min(Γ(u) ∪ {u})
-        # ≤ u < v, so rows are canonical), then the small-star pass.
-        # Checkpoint BETWEEN the halves (r10): the small-star reads a
-        # materialized LogicalRDD instead of inlining the large-star
-        # subtree three times. All checkpoints lazy (r11): the ONE
-        # action per round is the next iteration's isEmpty, which
-        # materializes the halves and truncates their lineage at job
-        # end — identical labels and round counts verified on the rep
-        # graph and the contract graphs.
+        # Large-star from the aggregate already in hand: rewire every
+        # LARGER neighbor v of u to m = min(Γ(u) ∪ {u}) ≤ u < v, so rows
+        # are canonical; then the small-star pass. The checkpoint
+        # BETWEEN the halves makes the small-star read a materialized
+        # LogicalRDD instead of inlining the large-star subtree three
+        # times. All checkpoints are lazy: the ONE action per round is
+        # the next iteration's isEmpty, which materializes the halves and
+        # truncates their lineage at job end.
         mn = mn_ext.select("u", F.least("u", "mv").alias("m"))
         large = (
             sym.join(mn, "u")
@@ -1057,19 +986,18 @@ def connected_components(
             .where(F.col("a") != F.col("b"))
             .distinct()
         )
-        e = _star_halve(
-            large.localCheckpoint(eager=False), large=False
-        ).localCheckpoint(eager=False)
+        e = _star_halve(large.localCheckpoint(eager=False)).localCheckpoint(
+            eager=False
+        )
         rounds += 1
-    # No trailing distinct (r11): at the converged star forest the union
-    # below is duplicate-free BY the invariants the forest test just
-    # checked — arm-1 rows (a, b) have doc_id ≠ component (a ≠ b per
-    # edge) while arm-2 rows (b, b) have doc_id = component, so the arms
-    # can never collide; within arm 1 the duplicate-center test passed
-    # (each a carries exactly one edge) so its rows are unique; arm 2 is
-    # explicitly distinct. The old outer .distinct() was one full
-    # exchange+agg every consumer paid for a provable no-op. The labels
-    # are checkpointed once here, so consumers do not re-run the union.
+    # No trailing distinct: at the converged star forest the union below
+    # is duplicate-free BY the invariants the forest test just checked —
+    # arm-1 rows (a, b) have doc_id ≠ component (a ≠ b per edge) while
+    # arm-2 rows (b, b) have doc_id = component, so the arms can never
+    # collide; within arm 1 the duplicate-center test passed (each a
+    # carries exactly one edge) so its rows are unique; arm 2 is
+    # explicitly distinct. The labels are checkpointed once here, so
+    # consumers do not re-run the union.
     labels = e.select(F.col("a").alias("doc_id"), F.col("b").alias("component")).union(
         e.select(F.col("b").alias("doc_id"), F.col("b").alias("component")).distinct()
     )
@@ -1952,6 +1880,20 @@ _MHA_SIG_SQL = ", ".join(
 )
 
 
+def _mha_sig() -> Column:
+    """`_MHA_SIG_SQL` on Spark: the md5 MinHash signature of the ``toks``
+    column, one lexicographic min per permutation. F.transform calls
+    each one-argument lambda at once, so it sees this iteration's ``i``."""
+    return F.array(
+        *[
+            F.array_min(
+                F.transform("toks", lambda t: F.md5(F.concat(F.lit(f"p{i} "), t)))
+            )
+            for i in range(_MHA_PERM)
+        ]
+    )
+
+
 @register(
     "q_minhash_accuracy",
     oracle=f"""
@@ -1995,33 +1937,25 @@ def q_minhash_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEXICOGRAPHIC min over the doc's distinct tokens — fixed-width
     lowercase hex, so string order ≡ numeric order; the estimate
     matches/32 is an exact dyadic rational. (The production pipeline's
-    `minhash_signatures` uses xxhash64 — JVM-only, hence its rows-only
-    twins; md5 here buys the full SQL oracle at audit-only cost.)
+    signature in `_lsh_groups_rep_pairs` uses xxhash64 — JVM-only, hence
+    its rows-only twins; md5 here buys the full SQL oracle at audit-only
+    cost.)
 
     Scale: signatures are per-row projections (array_min over
-    transform — no explode, no shuffle; `minhash_signatures`'s own
-    discipline); the signature frame materializes ONCE
-    (localCheckpoint) and self-joins on the consecutive-id key — a
-    linear pair count by construction, vs the quadratic exact-Jaccard
-    contract rows."""
+    transform — no explode, no shuffle, like the LSH signature); the
+    signature frame materializes ONCE (localCheckpoint) and self-joins
+    on the consecutive-id key — a linear pair count by construction, vs
+    the quadratic exact-Jaccard contract rows."""
     d = spread(load(spark, sf_dir, "documents"))
     toks = d.select(
         "doc_id", F.array_distinct(F.split("text", " ")).alias("toks")
     )
 
-    def _md5_perm(i: int):
-        return lambda t: F.md5(F.concat(F.lit(f"p{i} "), t))
-
     s = toks.select(
         "doc_id",
         "toks",
         F.size("toks").cast("bigint").alias("n"),
-        F.array(
-            *[
-                F.array_min(F.transform(F.col("toks"), _md5_perm(i)))
-                for i in range(_MHA_PERM)
-            ]
-        ).alias("sig"),
+        _mha_sig().alias("sig"),
     ).localCheckpoint(eager=False)  # both sides of the pair join
     a, b = s.alias("a"), s.alias("b")
     p = a.join(b, F.col("b.doc_id") == F.col("a.doc_id") + 1).select(
@@ -2140,18 +2074,10 @@ def q_lsh_pr_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = spread(load(spark, sf_dir, "documents"))
     t = d.select("doc_id", F.array_distinct(F.split("text", " ")).alias("toks"))
 
-    def _md5_perm(i: int):
-        return lambda tk: F.md5(F.concat(F.lit(f"p{i} "), tk))
-
     s = t.select(
         "doc_id",
         F.size("toks").cast("bigint").alias("n"),
-        F.array(
-            *[
-                F.array_min(F.transform(F.col("toks"), _md5_perm(i)))
-                for i in range(_MHA_PERM)
-            ]
-        ).alias("sig"),
+        _mha_sig().alias("sig"),
     )
     bands = s.select(
         "doc_id",
@@ -2514,19 +2440,11 @@ def q_minhash_bbit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.array_distinct(F.split("text", " ")).alias("toks")
     )
 
-    def _md5_perm(i: int):
-        return lambda t: F.md5(F.concat(F.lit(f"p{i} "), t))
-
     s = toks.select(
         "doc_id",
         "toks",
         F.size("toks").cast("bigint").alias("n"),
-        F.array(
-            *[
-                F.array_min(F.transform(F.col("toks"), _md5_perm(i)))
-                for i in range(_MHA_PERM)
-            ]
-        ).alias("sig"),
+        _mha_sig().alias("sig"),
     ).localCheckpoint(eager=False)  # both sides of the pair join
     a, b = s.alias("a"), s.alias("b")
 

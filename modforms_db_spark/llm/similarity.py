@@ -244,27 +244,23 @@ def ivf_cell_cs(e: DataFrame, c: DataFrame) -> DataFrame:
     return e.crossJoin(F.broadcast(c)).select("vec_id", "cid", cs.alias("cs"))
 
 
-def ivf_rank_cells(
-    e: DataFrame, n_cent: int = 16, carry: tuple[str, ...] = ()
-) -> DataFrame:
-    """IVF coarse-quantizer ranking shared by the ANN scale paths
-    (`q_sim_ivf_topk`'s probe leg, `q_knn_classify_ann`): every vector
-    scored against the ``n_cent`` seed centroids by rounded cosine,
-    ranked per vector (centroid-id tiebreak). ``e`` must carry
-    (vec_id, emb, nrm); returns ``(vec_id, emb, nrm, *carry, cid, cs,
-    rn)`` — rn = 1 is the cell assignment, rn ≤ nprobe the probe set.
+def ivf_rank_cells(e: DataFrame) -> DataFrame:
+    """IVF coarse-quantizer ranking for the ANN classifier
+    (`q_knn_classify_ann`): every vector scored against the 16 seed
+    centroids (:func:`ivf_centroids`) by rounded cosine, ranked per
+    vector (centroid-id tiebreak). ``e`` must carry (vec_id, emb, nrm,
+    label); returns ``(vec_id, emb, nrm, label, cid, cs, rn)`` — rn = 1
+    is the cell assignment, rn ≤ nprobe the probe set.
 
-    Round-5 shape (judge item 3): the window ranks the NARROW
-    :func:`ivf_cell_cs` frame — 3 scalar columns — and the embedding
-    payload is re-attached afterwards by an equi-join on vec_id. The
-    round-4 form carried (emb, nrm, carry) THROUGH the window, shuffling
-    every vector n_cent times; now a vector crosses the wire once, in
-    the keyed re-join."""
-    rk = ivf_cell_cs(e, ivf_centroids(e, n_cent))
+    The window ranks the NARROW :func:`ivf_cell_cs` frame — 3 scalar
+    columns — and the embedding payload is re-attached afterwards by an
+    equi-join on vec_id, so a vector crosses the wire once, in the keyed
+    re-join, instead of once per centroid."""
+    rk = ivf_cell_cs(e, ivf_centroids(e))
     wa = Window.partitionBy("vec_id").orderBy(F.desc("cs"), F.asc("cid"))
     return e.join(
         rk.withColumn("rn", F.row_number().over(wa)), "vec_id"
-    ).select("vec_id", "emb", "nrm", *carry, "cid", "cs", "rn")
+    ).select("vec_id", "emb", "nrm", "label", "cid", "cs", "rn")
 
 
 _IVF_COS = "round(list_cosine_similarity(e.emb, c.cemb), 4)"
@@ -670,7 +666,7 @@ def q_knn_classify_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     Prediction agreement vs the exact form is measured and floor-pinned
     in tests."""
     e = _emb(spark, sf_dir).withColumn("nrm", _norm("emb"))
-    ranked = ivf_rank_cells(e, carry=("label",)).localCheckpoint(
+    ranked = ivf_rank_cells(e).localCheckpoint(
         eager=False
     )  # TWO consumers (assignment + probe) — without the checkpoint the
     # cell-score crossJoin, window, and vec_id re-join all execute twice

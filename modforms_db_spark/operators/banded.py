@@ -3,7 +3,7 @@
 The scale-safe replacement for ``Window.orderBy(...)`` with no partition
 (a single-task global sort): band rows by VALUE RANGE, run the window
 per band in parallel, then shift each band by offsets computed on the
-band GRAIN (≤ ``n_bands`` rows per group — a trivially small window).
+band GRAIN (≤ ``N_BANDS`` rows per group — a trivially small window).
 
 Exactness argument: the band id is a monotone function of the leading
 order column (floor of an affine map; fp subtraction/multiplication by a
@@ -49,7 +49,6 @@ def with_banded_order(
     cumsum_col: str | None = None,
     rn_name: str = "rn",
     cum_name: str = "cum",
-    n_bands: int = N_BANDS,
     checkpoint_input: bool = True,
 ) -> DataFrame:
     """Return ``df`` plus a global (per ``group_cols``) row number
@@ -84,8 +83,8 @@ def with_banded_order(
     frac = (F.col("_mfdb_mx") - v) if descending else (v - F.col("_mfdb_mn"))
     band = F.when(span <= 0, F.lit(0)).otherwise(
         F.least(
-            F.lit(n_bands - 1),
-            F.floor(frac.cast("double") / span.cast("double") * n_bands),
+            F.lit(N_BANDS - 1),
+            F.floor(frac.cast("double") / span.cast("double") * N_BANDS),
         )
     )
     d = d.withColumn(_BAND, band.cast("int")).drop("_mfdb_mn", "_mfdb_mx")
@@ -187,22 +186,14 @@ def _div_small_quotient(a: Column, b: Column) -> Column:
     return F.when(r < 0, q0 - 1).when(r >= b, q0 + 1).otherwise(q0)
 
 
-def with_abc_class(
-    df: DataFrame,
-    value_col: str,
-    key_col: str,
-    *,
-    a_bound: float = 0.8,
-    b_bound: float = 0.95,
-    abc_name: str = "abc",
-) -> DataFrame:
+def with_abc_class(df: DataFrame, value_col: str, key_col: str) -> DataFrame:
     """ABC (Pareto) classification over ``value_col`` (a 2-dp-rounded
     double): quantize to EXACT integer cents, banded cumulative sum in
     (value DESC, key) order, class from the 4-dp-rounded
-    strictly-before cumulative share (< a_bound → A, < b_bound → B,
+    strictly-before cumulative share (< 0.8 → A, < 0.95 → B,
     else C). One definition shared by `q_pareto_abc_scaled` and
     `q_abc_xyz` so the cents/rounding/threshold contract cannot drift
-    between them. Adds ``abc_name``; drops the internal columns."""
+    between them. Adds ``abc``; drops the internal columns."""
     d = df.withColumn(
         "_mfdb_cents", F.round(F.col(value_col) * 100).cast("bigint")
     ).localCheckpoint(eager=False)
@@ -225,9 +216,9 @@ def with_abc_class(
     return (
         ranked.crossJoin(F.broadcast(tot))
         .withColumn(
-            abc_name,
-            F.when(share_before < a_bound, "A")
-            .when(share_before < b_bound, "B")
+            "abc",
+            F.when(share_before < 0.8, "A")
+            .when(share_before < 0.95, "B")
             .otherwise("C"),
         )
         .drop("_mfdb_cents", "_mfdb_rn", "_mfdb_cum", "_mfdb_tot")

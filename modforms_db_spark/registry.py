@@ -76,7 +76,6 @@ def register(
     name: str,
     oracle: str | None,
     priority: str = "P1",
-    doc: str = "",
     tags: tuple[str, ...] = (),
 ) -> Callable[[Builder], Builder]:
     def deco(fn: Builder) -> Builder:
@@ -93,7 +92,7 @@ def register(
             builder=pinned,
             oracle=oracle,
             priority=priority,
-            doc=doc or (fn.__doc__ or "").strip().splitlines()[0] if (doc or fn.__doc__) else "",
+            doc=fn.__doc__.strip().splitlines()[0] if fn.__doc__ else "",
             tags=tags,
             module=fn.__module__,
         )

@@ -25,7 +25,7 @@ from modforms_db_spark.io import load
 from modforms_db_spark.oracle_dialect import R, R2, R4
 from modforms_db_spark.parity import r4
 from modforms_db_spark.registry import register
-from modforms_db_spark.session import scratch, scratch_root
+from modforms_db_spark.session import scratch
 
 
 @register(
@@ -435,18 +435,6 @@ def q_sink_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def compacted_file_counts(spark: SparkSession) -> tuple[int, int]:
-    """(fragmented, compacted) data-file counts from the session's last
-    `q_sink_compaction` run — test hook proving the rewrite collapsed
-    the layout."""
-    import glob
-
-    root = scratch_root(spark, "sinks")
-    frag = glob.glob(os.path.join(root, "events_fragmented", "*", "*.parquet"))
-    comp = glob.glob(os.path.join(root, "events_compacted", "*", "*.parquet"))
-    return len(frag), len(comp)
-
-
 @register(
     "q_sink_sorted_pruning",
     oracle=f"""
@@ -498,12 +486,12 @@ def q_sink_sorted_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def zvalue(a: F.Column, b: F.Column, bits: int = 16) -> F.Column:
-    """Morton/Z-order interleave of the low `bits` bits of two
+def zvalue(a: F.Column, b: F.Column) -> F.Column:
+    """Morton/Z-order interleave of the low 16 bits of two
     non-negative integer columns — a JVM-side codegen expression (no
     UDF): z = Σᵢ bitᵢ(a)·4ⁱ + bitᵢ(b)·2·4ⁱ."""
     z = F.lit(0).cast("bigint")
-    for i in range(bits):
+    for i in range(16):
         z = z + (
             F.shiftleft(F.shiftright(a.cast("bigint"), i) % 2, 2 * i)
             + F.shiftleft(F.shiftright(b.cast("bigint"), i) % 2, 2 * i + 1)

@@ -115,15 +115,21 @@ def _stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _run_available_now(spark: SparkSession, writer) -> None:
+    """Start the configured ``writer`` (a DataStreamWriter) with an
+    availableNow trigger and wait until it has processed every available
+    input, all under ``_STREAM_CONF``."""
+    with scoped_conf(spark, _STREAM_CONF):
+        writer.trigger(availableNow=True).start().awaitTermination()
+
+
 def _run_to_table(sdf_writer, name: str, spark: SparkSession) -> DataFrame:
     """Run an availableNow stream into a memory sink named ``name`` and
     return the sink's rows. The sink's temp view is dropped once the
     frame is taken (the frame keeps the rows), so repeated runs do not
     pile up views that hold rows on the driver."""
     try:
-        with scoped_conf(spark, _STREAM_CONF):
-            q = sdf_writer.queryName(name).trigger(availableNow=True).start()
-            q.awaitTermination()
+        _run_available_now(spark, sdf_writer.queryName(name))
         return spark.table(name)
     finally:
         spark.catalog.dropTempView(name)
@@ -237,17 +243,14 @@ def q_stream_late(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n"))
             .select(F.col("w.start").alias("ws"), "event_type", "n")
         )
-        with scoped_conf(spark, _STREAM_CONF):
-            q = (
-                agg.writeStream.foreachBatch(
-                    lambda df, _bid: emitted.append(df.toPandas())
-                )
-                .outputMode("append")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+        _run_available_now(
+            spark,
+            agg.writeStream.foreachBatch(
+                lambda df, _bid: emitted.append(df.toPandas())
             )
-            q.awaitTermination()
+            .outputMode("append")
+            .option("checkpointLocation", ckpt),
+        )
 
     _publish(p1, "recent.parquet")
     _run_once()
@@ -443,14 +446,12 @@ def q_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         os.symlink(nxt, tmp_link)
         os.replace(tmp_link, cur_path)
 
-    with scoped_conf(spark, _STREAM_CONF):
-        q = (
-            events.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", os.path.join(store_dir, "_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    _run_available_now(
+        spark,
+        events.writeStream.foreachBatch(merge_batch).option(
+            "checkpointLocation", os.path.join(store_dir, "_ckpt")
+        ),
+    )
     return spark.read.schema(_UPSERT_STORE_SCHEMA).parquet(
         os.path.join(store_dir, "current")
     )
@@ -672,15 +673,12 @@ def q_stream_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("recursiveFileLookup", "true")
             .parquet(src)
         )
-        with scoped_conf(spark, _STREAM_CONF):
-            q = (
-                stream.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ck)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        _run_available_now(
+            spark,
+            stream.writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ck),
+        )
 
     run_once()  # processes half_a, commits offsets + output
     e.where(F.col("event_id") % 2 == 1).write.parquet(os.path.join(src, "half_b"))

@@ -200,35 +200,6 @@ def test_ngram_dedup_is_order_sensitive_subset(spark):
         assert r.d1 < r.d2
 
 
-def test_jaccard_df_cap_bounds_fanout_but_keeps_real_dups(spark):
-    """The max_df skew cap (SCALE.md §6): a stop-token shared by every doc
-    must not generate candidate pairs once capped, while genuine near-dups
-    (overlap carried by rare tokens) survive with their jac a lower bound
-    on the uncapped value."""
-    from modforms_db_spark.llm.dedup import jaccard_pairs
-
-    rows = [
-        # docs 1/2: near-dups via rare tokens; all docs share stop-token "the"
-        (1, "en", ["the", "alpha", "beta", "gamma", "delta"]),
-        (2, "en", ["the", "alpha", "beta", "gamma", "epsilon"]),
-        # docs 3/4: overlap ONLY via the stop-token
-        (3, "en", ["the", "zeta"]),
-        (4, "en", ["the", "eta"]),
-    ]
-    toks = (
-        spark.createDataFrame(rows, "doc_id long, lang string, toks array<string>")
-        .select("doc_id", "lang", __import__("pyspark").sql.functions.explode("toks").alias("tok"))
-    )
-    uncapped = {(r.d1, r.d2): r.jac for r in jaccard_pairs(toks, 0.0).collect()}
-    capped = {(r.d1, r.d2): r.jac for r in jaccard_pairs(toks, 0.0, max_df=3).collect()}
-    # Stop-token-only pair disappears under the cap; the real pair survives.
-    assert (3, 4) in uncapped and (3, 4) not in capped
-    assert (1, 2) in capped
-    # Capped jac is a lower bound on the true value.
-    for p, j in capped.items():
-        assert j <= uncapped[p]
-
-
 def test_embedding_dedup_symmetric_and_bounded(spark):
     rows = get_registry()["q_dedup_embedding"].builder(spark, SF_DIR).collect()
     for r in rows:
@@ -1334,11 +1305,11 @@ def test_fuzzy_apply_rep_graph_labels_match_expanded_graph(spark):
 
 
 def test_star_halve_emits_canonical_rows_without_recanonicalization(spark):
-    """r10 lean `_star_halve` contract: every emitted row is already
-    (a, b) with a > b — the old trailing greatest/least was a provable
-    no-op (m = min(Γ(u) ∪ {u}) is ≤ every emitted partner) and its
-    removal must never surface a reversed pair. Exercised on a graph
-    with chains, a clique, and reversed input orientations."""
+    """`_star_halve` contract: every emitted row is already (a, b) with
+    a > b — m = min(Γ(u) ∪ {u}) is ≤ every emitted partner, so no
+    greatest/least re-canonicalization is needed and no reversed pair
+    may surface. Exercised on a graph with chains, a clique, and
+    reversed input orientations."""
     from modforms_db_spark.llm.dedup import _star_halve
 
     edges = spark.createDataFrame(
@@ -1347,8 +1318,5 @@ def test_star_halve_emits_canonical_rows_without_recanonicalization(spark):
     ).select(
         F.greatest("d1", "d2").alias("a"), F.least("d1", "d2").alias("b")
     ).where(F.col("a") != F.col("b"))
-    for large in (True, False):
-        out = _star_halve(edges, large=large)
-        assert out.where(F.col("a") <= F.col("b")).isEmpty(), (
-            "non-canonical row from _star_halve(large=%s)" % large
-        )
+    out = _star_halve(edges)
+    assert out.where(F.col("a") <= F.col("b")).isEmpty()

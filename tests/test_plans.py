@@ -218,28 +218,11 @@ def test_aqe_splits_skewed_join_partition(spark):
                 spark.conf.set(k, v)
 
 
-def test_minhash_signatures_are_shuffle_free(spark):
-    """The 32-permutation MinHash signature computation must be a pure
-    projection (array_min over transform) — no explode, and no Exchange
-    beyond the single round-robin input spread (io.spread). The naive
-    explode+groupBy form shuffles every token of the corpus keyed on
-    token; at 100 TB that's the widest shuffle in the whole dedup
-    pipeline, and it is entirely avoidable."""
-    from modforms_db_spark.llm.dedup import minhash_signatures
-
-    df = minhash_signatures(spark, SF_DIR)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Exchange") <= 1, plan
-    assert "RoundRobinPartitioning" in plan or "Exchange" not in plan, plan
-    assert "hashpartitioning" not in plan, plan  # no keyed shuffle
-    assert "Generate" not in plan, plan  # no explode either
-
-
 def test_simhash_fingerprints_are_shuffle_free(spark):
     """The 64-bit SimHash fold must be a pure projection (one aggregate
     lambda over the token array) — no explode, and no Exchange beyond
-    the round-robin input spread, same argument as the MinHash
-    signatures."""
+    the round-robin input spread: the naive explode+groupBy form
+    shuffles every token of the corpus keyed on token."""
     from modforms_db_spark.llm.dedup import _simhash_fp
 
     df = _simhash_fp(spark, SF_DIR)
@@ -376,7 +359,7 @@ def test_ann_twins_never_cartesian(spark):
     from modforms_db_spark.llm.similarity import _emb, _norm, ivf_rank_cells
 
     e = _emb(spark, SF_DIR).withColumn("nrm", _norm("emb"))
-    ranked = ivf_rank_cells(e, carry=("label",))
+    ranked = ivf_rank_cells(e)
     plan = ranked._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastNestedLoopJoin" in plan and "BroadcastExchange" in plan
     assert "CartesianProduct" not in plan

@@ -135,6 +135,40 @@ def test_no_registered_builder_calls_prep():
     assert callers == []
 
 
+def test_every_engine_function_is_registered_or_referenced():
+    """Every top-level function under ``modforms_db_spark/`` is a
+    registered builder or is named somewhere in the engine or in
+    ``__spark_entry__.py``; the one exception is the label-propagation
+    reference the tests check ``connected_components`` against. Reads
+    source only."""
+    import ast
+    import pathlib
+
+    def is_register(dec):
+        return isinstance(dec, ast.Call) and getattr(dec.func, "id", None) == "register"
+
+    engine = sorted(pathlib.Path(REPO, "modforms_db_spark").rglob("*.py"))
+    defs, named = [], set()
+    for path in [*engine, pathlib.Path(REPO, "__spark_entry__.py")]:
+        for stmt in ast.parse(path.read_text()).body:
+            own = stmt.name if isinstance(stmt, ast.FunctionDef) else None
+            if own and path in engine and not any(
+                is_register(d) for d in stmt.decorator_list
+            ):
+                defs.append(f"{path.relative_to(REPO)}:{own}")
+            names = set()
+            for n in ast.walk(stmt):
+                if isinstance(n, ast.Name):
+                    names.add(n.id)
+                elif isinstance(n, ast.Attribute):
+                    names.add(n.attr)
+                elif isinstance(n, ast.alias):
+                    names.add(n.name.rsplit(".", 1)[-1])
+            named |= names - {own}  # a function naming itself is not a use
+    unused = [d for d in defs if d.rsplit(":", 1)[1] not in named]
+    assert unused == ["modforms_db_spark/llm/dedup.py:components_label_prop"]
+
+
 def _jvm_input_args(spark) -> list[str]:
     mx = spark.sparkContext._jvm.java.lang.management.ManagementFactory
     return list(mx.getRuntimeMXBean().getInputArguments())

@@ -140,13 +140,24 @@ def test_winnow_short_doc_selects_global_min(spark, tmp_path):
     assert len(out) == 1
 
 
-def test_compaction_collapses_files_losslessly(spark, ddb):
-    from modforms_db_spark.sources.sinks import compacted_file_counts
+def _compacted_file_counts(spark) -> tuple[int, int]:
+    """(fragmented, compacted) data-file counts from the session's last
+    `q_sink_compaction` run."""
+    import glob
 
+    from modforms_db_spark.session import scratch_root
+
+    root = scratch_root(spark, "sinks")
+    frag = glob.glob(os.path.join(root, "events_fragmented", "*", "*.parquet"))
+    comp = glob.glob(os.path.join(root, "events_compacted", "*", "*.parquet"))
+    return len(frag), len(comp)
+
+
+def test_compaction_collapses_files_losslessly(spark, ddb):
     from tests.conftest import assert_parity
 
     assert_parity(spark, ddb, "q_sink_compaction")
-    frag, comp = compacted_file_counts(spark)
+    frag, comp = _compacted_file_counts(spark)
     n_types = 5
     assert comp == n_types, (frag, comp)
     assert frag > comp, (frag, comp)
