@@ -220,11 +220,11 @@ def q_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def ivf_centroids(e: DataFrame, n_cent: int = 16) -> DataFrame:
+def ivf_centroids(e: DataFrame) -> DataFrame:
     """The IVF coarse quantizer's centroid table: the vectors with
-    vec_id < n_cent (a deterministic stand-in for sampled k-means
+    vec_id < 16 (a deterministic stand-in for sampled k-means
     centers). Tiny by construction — always the broadcast side."""
-    return e.where(F.col("vec_id") < n_cent).select(
+    return e.where(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("cid"),
         F.col("emb").alias("cemb"),
         F.col("nrm").alias("cnrm"),
